@@ -97,3 +97,82 @@ def test_wap_branch_dml_on_every_backend(kind, spark, tmp_path):
     # plain read resolves to main again
     ids = {r.id for r in cat.sql("SELECT id FROM wap").collect()}
     assert 99 in ids and 7777 not in ids, kind
+
+
+# -- the pointer protocol every metastore catalog shares -------------------
+
+POINTER_BACKENDS = ["jdbc", "nessie", "hive", "glue", "dynamodb"]
+
+
+def _df(spark, lo, hi):
+    return spark.createDataFrame(
+        [(i, f"r{i}") for i in range(lo, hi)], "id BIGINT, v STRING"
+    ).coalesce(1)
+
+
+def _count(cat, name):
+    return cat.load_table(name).to_df().count()
+
+
+@pytest.mark.parametrize("kind", POINTER_BACKENDS)
+def test_document_above_pointer_is_invisible(kind, spark, tmp_path):
+    import os
+
+    from iceberg_geo_poc_spark.table import metadata as MD
+
+    cat = _make_catalog(kind, spark, tmp_path)
+    t = cat.create_table("inv", "id BIGINT, v STRING")
+    t.append(_df(spark, 0, 3))  # pointer at v1
+    be = MD.backend_for(t.location)
+    orphan = os.path.join(t.location, "metadata", "v2.metadata.json")
+    with open(orphan, "wb") as f:
+        f.write(b'{"torn": "never committed"}')
+    assert not be.exists(orphan), kind
+    with pytest.raises(FileNotFoundError):
+        be.read(orphan)
+    assert MD.read_metadata(t.location).version == 1, kind
+    assert _count(cat, "inv") == 3, kind
+
+
+@pytest.mark.parametrize("kind", POINTER_BACKENDS)
+def test_replayed_or_skipped_version_loses(kind, spark, tmp_path):
+    import os
+
+    from iceberg_geo_poc_spark.table import metadata as MD
+
+    cat = _make_catalog(kind, spark, tmp_path)
+    t = cat.create_table("rep", "id BIGINT, v STRING")
+    t.append(_df(spark, 0, 3))  # pointer at v1
+    be = MD.backend_for(t.location)
+    mdir = os.path.join(t.location, "metadata")
+    before = sorted(os.listdir(mdir))
+    for n in (0, 1, 3):  # replays of committed versions, and a skip
+        path = os.path.join(mdir, f"v{n}.metadata.json")
+        assert not be.put_if_absent(path, b"{}"), (kind, n)
+    assert sorted(os.listdir(mdir)) == before, kind
+    assert MD.read_metadata(t.location).version == 1, kind
+
+
+@pytest.mark.parametrize("kind", POINTER_BACKENDS)
+def test_snapshot_clone_commits_independently(kind, spark, tmp_path):
+    cat = _make_catalog(kind, spark, tmp_path)
+    cat.create_table("src", "id BIGINT, v STRING").append(_df(spark, 0, 5))
+    clone = cat.snapshot_table("src", "dst")
+    assert clone.location != cat.load_table("src").location, kind
+    clone.append(_df(spark, 5, 8))
+    assert (_count(cat, "src"), _count(cat, "dst")) == (5, 8), kind
+    cat.load_table("src").append(_df(spark, 100, 102))
+    assert (_count(cat, "src"), _count(cat, "dst")) == (7, 8), kind
+
+
+@pytest.mark.parametrize("kind", POINTER_BACKENDS)
+def test_renamed_table_keeps_location_and_commits(kind, spark, tmp_path):
+    cat = _make_catalog(kind, spark, tmp_path)
+    t = cat.create_table("before", "id BIGINT, v STRING")
+    t.append(_df(spark, 0, 4))
+    cat.rename_table("before", "after")
+    moved = cat.load_table("after")
+    assert moved.location == t.location, kind
+    moved.append(_df(spark, 4, 6))
+    assert _count(cat, "after") == 6, kind
+    assert not cat.table_exists("before"), kind
