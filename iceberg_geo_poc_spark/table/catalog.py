@@ -51,7 +51,22 @@ class Catalog:
         columns require parquet (the reference's geometry writers are
         Parquet-only, SURVEY §1.2); avro tables (pure-Python OCF codec +
         Python DataSource, table/avro_format.py) are unpartitioned."""
-        location = self._table_location(name)
+        return self._create_at(
+            self._table_location(name), name, schema_ddl, partition_by,
+            geometry_columns, properties, file_format,
+        )
+
+    def _create_at(
+        self,
+        location: str,
+        name: str,
+        schema_ddl: str,
+        partition_by: list[tuple[str, str]] | None = None,
+        geometry_columns: dict[str, str] | None = None,
+        properties: dict[str, str] | None = None,
+        file_format: str = "parquet",
+    ) -> Table:
+        """``create_table`` at an explicit location (the v0 commit)."""
         if MD.table_exists_at(location):
             raise ValueError(f"table {name} already exists")
         fmt_prop = (properties or {}).get("write.format.default")
@@ -109,16 +124,13 @@ class Catalog:
         refresh, and every commit refuses.  The serializable-scan shape —
         hand a worker a metadata file path and it sees a frozen view
         regardless of concurrent commits."""
-        import json as _json
-        import re as _re
+        from iceberg_geo_poc_spark.table.pointer_catalog import metadata_version
 
-        m = _re.search(r"v(\d+)\.metadata\.json$", metadata_file)
-        if not m:
+        version = metadata_version(metadata_file)
+        if version is None:
             raise ValueError(f"not a metadata file path: {metadata_file!r}")
-        doc = _json.loads(
-            MD.backend_for(metadata_file).read(metadata_file)
-        )
-        meta = MD.TableMetadata.from_json(doc, int(m.group(1)))
+        doc = json.loads(MD.backend_for(metadata_file).read(metadata_file))
+        meta = MD.TableMetadata.from_json(doc, version)
         t = Table(meta, self.spark)
         t._static = True
         return t

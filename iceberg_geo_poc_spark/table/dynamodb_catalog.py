@@ -33,25 +33,23 @@ Scale: one consistent GetItem + one conditional UpdateItem per commit,
 never data volume; DynamoDB serializes writers per item key, so a hot
 table throttles only itself (the reference's documented posture).
 
-Reads share ``glue_catalog.GlueCommitBackend``'s pointer-redirect
-logic (uuid-suffixed metadata documents, older versions resolved by
-bounded glob) — only entry resolution and the write path differ.
+Like Glue, the store has no lock around the swap, so metadata documents
+are uuid-suffixed (``pointer_catalog`` resolves older versions by a
+bounded glob).
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 import threading
 import uuid
 
 from pyspark.sql import SparkSession
 
-from iceberg_geo_poc_spark.table import metadata as MD
-from iceberg_geo_poc_spark.table.catalog import Catalog
-from iceberg_geo_poc_spark.table.glue_catalog import GlueCommitBackend
-from iceberg_geo_poc_spark.table.jdbc_catalog import _V_RE, _split_metadata_path
-from iceberg_geo_poc_spark.table.table import Table
+from iceberg_geo_poc_spark.table.pointer_catalog import (
+    PointerCatalog,
+    PointerCommitBackend,
+    split_metadata_path,
+)
 
 COL_IDENTIFIER = "identifier"
 COL_NAMESPACE = "namespace"
@@ -205,102 +203,66 @@ class DynamoService:
             return [dict(v) for v in self._items.values()]
 
 
-class DynamoCommitBackend(GlueCommitBackend):
-    """CommitBackend arbitrating through the item's
-    ``p.metadata_location`` with the uuid-version conditional update
-    (reference DynamoDbTableOperations.doCommit/persistTable).  Reads
-    (pointer redirect, old-version glob) inherit from the Glue
-    backend; only entry resolution and the conditional write differ."""
+def _item_location(row: dict) -> str | None:
+    split = split_metadata_path(row.get(METADATA_LOCATION_PROP) or "")
+    return split[0] if split else None
+
+
+class DynamoCommitBackend(PointerCommitBackend):
+    """Pointer backend over the item's ``p.metadata_location``: the swap
+    is UpdateItem conditional on the uuid version the committer read, or
+    PutItem with attribute_not_exists(v) for a first commit (reference
+    DynamoDbTableOperations.doCommit/persistTable)."""
+
+    unique_documents = True
+    lost_race = (ConditionalCheckFailed,)
 
     def __init__(self, service: DynamoService, warehouse: str):
         self.service = service
         self.warehouse = warehouse.rstrip("/")
 
-    def _entry_for_location(
-        self, location: str
-    ) -> tuple[tuple[str, str] | None, dict | None]:
-        db, name = self._ident_of(location)
-        row = self.service.get_item(f"{db}.{name}", db)
-        if row is not None:
-            ptr = row.get(METADATA_LOCATION_PROP)
-            split = _split_metadata_path(ptr) if ptr else None
-            if split is not None and split[0] == location:
+    def _entry_for_location(self, location: str):
+        # items carry no location attribute: it is the pointer's directory
+        try:
+            db, name = self._ident_of(location)
+        except ValueError:
+            pass  # registered from outside the warehouse: scan below
+        else:
+            row = self.service.get_item(f"{db}.{name}", db)
+            if row is not None and _item_location(row) == location:
                 return (db, name), row
-        # renamed tables keep their location: derive each item's
-        # location from its pointer (bounded reverse scan)
+        # renamed tables keep their location: bounded reverse scan
         for row in self.service.scan():
-            ptr = row.get(METADATA_LOCATION_PROP)
-            split = _split_metadata_path(ptr) if ptr else None
-            if split is not None and split[0] == location:
-                ns = row[COL_NAMESPACE]
+            if _item_location(row) == location:
                 ident = row[COL_IDENTIFIER]
-                return (ns, ident.split(".", 1)[1] if "." in ident else ident), row
+                return (row[COL_NAMESPACE], ident.split(".", 1)[-1]), row
         return None, None
 
-    def _pointer(self, location: str) -> str | None:
-        _, row = self._entry_for_location(location)
-        if row is None:
-            return None
-        return row.get(METADATA_LOCATION_PROP)
-
-    def put_if_absent(self, path: str, payload: bytes) -> bool:
-        split = _split_metadata_path(path)
-        vm = _V_RE.match(split[1]) if split else None
-        if vm is None:
-            return MD.PosixLinkBackend().put_if_absent(path, payload)
-        location, n = split[0], int(vm.group(1))
-        ident, row = self._entry_for_location(location)
-        if ident is None:
-            ident, row = self._ident_of(location), None
-        db, name = ident
-        # the SHARED _persist protocol (doc write, replay check, orphan
-        # cleanup on any failed pointer write) with the Dynamo hooks
-        return self._persist(db, name, location, n, row, payload, path,
-                             conditional=True)
-
-    # -- the three store-specific hooks of the shared protocol ----------------
-
-    _LOST_RACE = (ConditionalCheckFailed,)
-
-    def _entry_pointer(self, row: dict | None) -> str | None:
+    def _entry_pointer(self, row):
         return row.get(METADATA_LOCATION_PROP) if row else None
 
-    def _pointer_params(self, doc_path: str, ptr: str | None) -> dict:
-        updates = {METADATA_LOCATION_PROP: doc_path}
-        if ptr:
-            updates[PREVIOUS_METADATA_LOCATION_PROP] = ptr
-        return updates
-
-    def _check_entry(self, db: str, name: str, row: dict) -> None:
-        pass  # DynamoDB items carry no table_type discriminator
-
-    def _commit_pointer(
-        self,
-        db: str,
-        name: str,
-        location: str,
-        row: dict | None,
-        params: dict,
-        conditional: bool,
-    ) -> None:
+    def _swap(self, location, ident, row, doc, held) -> bool:
         if row is None:
-            self.service.put_item(
-                {COL_IDENTIFIER: f"{db}.{name}", COL_NAMESPACE: db, **params}
-            )
-        else:
-            self.service.update_item(
-                row[COL_IDENTIFIER],
-                row[COL_NAMESPACE],
-                params,
-                expected_version=row[COL_VERSION],
-            )
+            db, name = self._ident_of(location)
+            self.service.put_item({
+                COL_IDENTIFIER: f"{db}.{name}", COL_NAMESPACE: db,
+                METADATA_LOCATION_PROP: doc,
+            })
+            return True
+        updates = {METADATA_LOCATION_PROP: doc}
+        if row.get(METADATA_LOCATION_PROP):
+            updates[PREVIOUS_METADATA_LOCATION_PROP] = row[METADATA_LOCATION_PROP]
+        self.service.update_item(
+            row[COL_IDENTIFIER], row[COL_NAMESPACE], updates,
+            expected_version=row[COL_VERSION],
+        )
+        return True
 
 
-class DynamoDbCatalog(Catalog):
+class DynamoDbCatalog(PointerCatalog):
     """Catalog over the in-process DynamoDB item store (reference
     DynamoDbCatalog): namespaces as NAMESPACE-sentinel items, tables
-    as items with p.-prefixed properties, ATOMIC transactional rename,
-    and the full base Catalog surface on top."""
+    as items with p.-prefixed properties, ATOMIC transactional rename."""
 
     def __init__(
         self,
@@ -308,23 +270,50 @@ class DynamoDbCatalog(Catalog):
         spark: SparkSession,
         service: DynamoService | None = None,
     ):
-        super().__init__(warehouse, spark)
         self.service = service or DynamoService()
-        self.backend = DynamoCommitBackend(self.service, warehouse)
-        MD.register_commit_backend(warehouse.rstrip("/") + "/", self.backend)
+        super().__init__(
+            warehouse, spark, DynamoCommitBackend(self.service, warehouse)
+        )
         if self.service.get_item(NAMESPACE_SENTINEL, "default") is None:
             self.create_namespace("default")
 
-    @staticmethod
-    def _ident(name: str) -> tuple[str, str]:
-        if "." in name:
-            db, tbl = name.split(".", 1)
-            return db, tbl
-        return "default", name
-
-    def _table_location(self, name: str) -> str:
+    def _item(self, name: str) -> dict | None:
         db, tbl = self._ident(name)
-        return os.path.join(self.warehouse, db, tbl)
+        return self.service.get_item(f"{db}.{tbl}", db)
+
+    # -- pointer-catalog hooks ---------------------------------------------
+
+    def _table_pointer(self, name: str) -> str | None:
+        row = self._item(name)
+        return (row or {}).get(METADATA_LOCATION_PROP) or None
+
+    def _put_entry(self, name: str, location: str, ptr: str | None) -> bool:
+        db, tbl = self._ident(name)
+        if ptr is None:
+            # the v0 commit CREATES the item (persistTable's PutItem branch)
+            if self.service.get_item(NAMESPACE_SENTINEL, db) is None:
+                raise KeyError(f"namespace {db!r} not found")
+            if self._item(name) is not None:
+                raise ValueError(f"table {name} already exists")
+            return False
+        try:
+            self.service.put_item({
+                COL_IDENTIFIER: f"{db}.{tbl}", COL_NAMESPACE: db,
+                METADATA_LOCATION_PROP: ptr,
+            })
+        except ConditionalCheckFailed:
+            raise ValueError(f"table {name} already exists") from None
+        return True
+
+    def _drop_entry(self, name: str) -> str:
+        row = self._item(name)
+        if row is None:
+            raise FileNotFoundError(f"table {name} not found in DynamoDb")
+        self.service.delete_item(
+            row[COL_IDENTIFIER], row[COL_NAMESPACE],
+            expected_version=row[COL_VERSION],
+        )
+        return _item_location(row) or self._table_location(name)
 
     # -- namespaces -------------------------------------------------------------
 
@@ -370,31 +359,7 @@ class DynamoDbCatalog(Catalog):
             NAMESPACE_SENTINEL, namespace, expected_version=row[COL_VERSION]
         )
 
-    # -- tables -----------------------------------------------------------------
-
-    def create_table(self, name: str, schema_ddl: str, **kwargs) -> Table:
-        db, tbl = self._ident(name)
-        if self.service.get_item(NAMESPACE_SENTINEL, db) is None:
-            raise KeyError(f"namespace {db!r} not found")
-        if self.service.get_item(f"{db}.{tbl}", db) is not None:
-            raise ValueError(f"table {name} already exists")
-        # the v0 commit CREATES the item (persistTable's PutItem branch)
-        return super().create_table(name, schema_ddl, **kwargs)
-
-    def load_table(self, name: str) -> Table:
-        db, tbl = self._ident(name)
-        row = self.service.get_item(f"{db}.{tbl}", db)
-        if row is None or not row.get(METADATA_LOCATION_PROP):
-            raise FileNotFoundError(f"table {name} not found in DynamoDb")
-        location = _split_metadata_path(row[METADATA_LOCATION_PROP])[0]
-        return Table(MD.read_metadata(location), self.spark)
-
-    table = load_table
-
-    def table_exists(self, name: str) -> bool:
-        db, tbl = self._ident(name)
-        row = self.service.get_item(f"{db}.{tbl}", db)
-        return row is not None and bool(row.get(METADATA_LOCATION_PROP))
+    # -- table listing and rename ----------------------------------------------
 
     def list_tables(self, namespace: str = "default") -> list[str]:
         out = []
@@ -433,69 +398,6 @@ class DynamoDbCatalog(Catalog):
                 ("put", dest),
             ]
         )
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        db, tbl = self._ident(name)
-        row = self.service.get_item(f"{db}.{tbl}", db)
-        if row is None:
-            raise FileNotFoundError(f"table {name} not found in DynamoDb")
-        ptr = row.get(METADATA_LOCATION_PROP)
-        split = _split_metadata_path(ptr) if ptr else None
-        loc = split[0] if split else self._table_location(name)
-        self.service.delete_item(
-            f"{db}.{tbl}", db, expected_version=row[COL_VERSION]
-        )
-        if purge:
-            shutil.rmtree(loc, ignore_errors=True)
-        else:
-            shutil.rmtree(os.path.join(loc, "metadata"), ignore_errors=True)
-
-    # DynamoDbCatalog.registerTable
-    def register_table(self, name: str, metadata_location: str) -> Table:
-        db, tbl = self._ident(name)
-        self.service.put_item(
-            {
-                COL_IDENTIFIER: f"{db}.{tbl}",
-                COL_NAMESPACE: db,
-                METADATA_LOCATION_PROP: metadata_location,
-            }
-        )
-        return self.load_table(name)
-
-    def snapshot_table(self, source: str, dest: str) -> Table:
-        """Zero-copy clone under the item-pointer protocol (same shape
-        as the Glue/Hive overrides)."""
-        sdb, stbl = self._ident(source)
-        src = self.service.get_item(f"{sdb}.{stbl}", sdb)
-        if src is None or not src.get(METADATA_LOCATION_PROP):
-            raise FileNotFoundError(f"table {source} not found in DynamoDb")
-        src_loc = _split_metadata_path(src[METADATA_LOCATION_PROP])[0]
-        dest_loc = self._table_location(dest)
-        ddb, dtbl = self._ident(dest)
-        os.makedirs(dest_loc)
-        shutil.copytree(
-            MD.metadata_dir(src_loc), MD.metadata_dir(dest_loc),
-            dirs_exist_ok=True,
-        )
-        ptr = os.path.join(
-            MD.metadata_dir(dest_loc),
-            os.path.basename(src[METADATA_LOCATION_PROP]),
-        )
-        self.service.put_item(
-            {
-                COL_IDENTIFIER: f"{ddb}.{dtbl}",
-                COL_NAMESPACE: ddb,
-                METADATA_LOCATION_PROP: ptr,
-            }
-        )
-        meta = MD.read_metadata(dest_loc)
-        meta.location = dest_loc
-        meta.properties = dict(
-            meta.properties,
-            **{"snapshot-source": source, "gc.enabled": "false"},
-        )
-        MD.write_new_metadata(meta, meta.version)
-        return self.load_table(dest)
 
 
 # -- DynamoDB lock manager (reference aws/dynamodb/DynamoDbLockManager.java

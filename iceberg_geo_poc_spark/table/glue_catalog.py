@@ -46,19 +46,16 @@ dropNamespace``.
 
 from __future__ import annotations
 
-import glob as _glob
-import os
-import shutil
 import threading
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-from iceberg_geo_poc_spark.table import metadata as MD
-from iceberg_geo_poc_spark.table.catalog import Catalog
-from iceberg_geo_poc_spark.table.jdbc_catalog import _V_RE, _split_metadata_path
-from iceberg_geo_poc_spark.table.nessie_catalog import _VU_RE
-from iceberg_geo_poc_spark.table.table import Table
+from iceberg_geo_poc_spark.table.pointer_catalog import (
+    PointerCatalog,
+    PointerCommitBackend,
+)
 
 METADATA_LOCATION_PROP = "metadata_location"
 PREVIOUS_METADATA_LOCATION_PROP = "previous_metadata_location"
@@ -206,17 +203,22 @@ class GlueService:
             ]
 
 
-class GlueCommitBackend(MD.CommitBackend):
-    """CommitBackend arbitrating through the Glue entry's
-    ``metadata_location`` parameter with the versionId conditional
-    update (reference GlueTableOperations.doCommit/persistGlueTable).
+class GlueCommitBackend(PointerCommitBackend):
+    """Pointer backend over the Glue entry's ``metadata_location``
+    parameter: the swap is the versionId-conditional UpdateTable
+    (reference GlueTableOperations.doCommit/persistGlueTable), or
+    CreateTable for a first commit.
 
-    Metadata documents are uuid-suffixed (``v{N}-{uuid}.metadata.json``)
-    because there is NO lock to make a canonical-name write safe: two
-    racers both write their candidate document, then exactly one
-    conditional UpdateTable wins and the loser's file is an invisible
-    orphan — the same posture as the Nessie backend and as the real
-    reference, whose metadata filenames always embed a UUID."""
+    There is NO lock to make a canonical-name write safe, so documents
+    are uuid-suffixed: two racers both write their candidate, exactly one
+    conditional update wins and the loser's candidate is removed — the
+    posture of the real reference, whose metadata file names always embed
+    a UUID."""
+
+    unique_documents = True
+    # reference ConcurrentModificationException / AlreadyExistsException
+    # -> CommitFailedException
+    lost_race = (ConcurrentModification, EntityAlreadyExists)
 
     def __init__(self, service: GlueService, warehouse: str, lock_manager=None):
         self.service = service
@@ -228,279 +230,88 @@ class GlueCommitBackend(MD.CommitBackend):
         # lockManager == null"); without one, the versionId IS the CAS
         self.lock_manager = lock_manager
 
-    def _ident_of(self, location: str) -> tuple[str, str]:
-        if not (location == self.warehouse
-                or location.startswith(self.warehouse + "/")):
-            raise ValueError(
-                f"Glue backend cannot derive a table identity for "
-                f"{location!r}: it is outside the configured warehouse "
-                f"{self.warehouse!r}"
-            )
-        rel = location[len(self.warehouse):].strip("/")
-        parts = [p for p in rel.split("/") if p]
-        if len(parts) == 1:
-            parts = ["default"] + parts
-        return parts[0], ".".join(parts[1:])
-
-    def _entry_for_location(
-        self, location: str
-    ) -> tuple[tuple[str, str] | None, dict | None]:
+    def _entry_for_location(self, location: str):
         try:
             db, name = self._ident_of(location)
         except ValueError:
-            # out-of-warehouse location: only the reverse scan below
-            # can resolve it (an already-registered entry, e.g. one
-            # imported with an explicit location)
-            db = name = None
-        if db is not None:
+            pass  # out-of-warehouse: only a registered entry can match
+        else:
             t = self.service.get_table(db, name)
             if t is not None and t["location"] == location:
                 return (db, name), t
         # renamed tables keep their location: bounded reverse scan
-        for (d, n), entry in self.service.items():
+        for ident, entry in self.service.items():
             if entry["location"] == location:
-                return (d, n), entry
+                return ident, entry
         return None, None
 
-    def _pointer(self, location: str) -> str | None:
-        _, t = self._entry_for_location(location)
-        if t is None:
-            return None
-        return t["parameters"].get(METADATA_LOCATION_PROP)
+    def _entry_pointer(self, entry):
+        return entry["parameters"].get(METADATA_LOCATION_PROP) if entry else None
+
+    @contextmanager
+    def _swap_guard(self, location: str):
+        ident, entry = self._entry_for_location(location)
+        # a FIRST commit creates the entry (persistGlueTable's createTable
+        # branch): its identity derives from the location
+        ident = ident or self._ident_of(location)
+        if self.lock_manager is None:
+            yield ident, self._checked(ident, entry), True
+            return
+        # commitLockEntityId = "db.tbl"; ownerId = the new metadata
+        # location (reference lock(newMetadataLocation))
+        entity = ".".join(ident)
+        owner = f"{location}:{uuid.uuid4().hex[:8]}"
+        if not self.lock_manager.acquire(entity, owner):
+            raise RuntimeError(
+                f"Fail to acquire lock {entity} to commit new metadata "
+                f"under {location}"
+            )
+        try:
+            # re-read UNDER the lock, then commit without the versionId
+            # precondition — the lock is the arbitration.  An entry that
+            # vanished between the reads (concurrent drop) is not
+            # committed from the stale copy
+            entry = self._entry_for_location(location)[1]
+            yield ident, self._checked(ident, entry), False
+        finally:
+            self.lock_manager.release(entity, owner)
 
     @staticmethod
-    def _version_of(ptr: str | None) -> int | None:
-        if ptr is None:
-            return None
-        m = _VU_RE.match(os.path.basename(ptr))
-        return int(m.group(1)) if m else None
-
-    # -- CommitBackend surface ----------------------------------------------
-
-    def read(self, path: str) -> bytes:
-        split = _split_metadata_path(path)
-        if split is not None:
-            location, leaf = split
-            if leaf == "version-hint.text":
-                v = self._version_of(self._pointer(location))
-                if v is None:
-                    raise FileNotFoundError(path)
-                return str(v).encode()
-            vm = _V_RE.match(leaf)
-            if vm:
-                ptr = self._pointer(location)
-                v = self._version_of(ptr)
-                if v is None or int(vm.group(1)) > v:
-                    raise FileNotFoundError(path)
-                if int(vm.group(1)) == v:
-                    # current version resolves THROUGH the pointer: the
-                    # document carries a uuid suffix the canonical name
-                    # doesn't know
-                    with open(ptr, "rb") as f:
-                        return f.read()
-                # older versions: canonical names were never written;
-                # bounded glob for the uuid-suffixed document.  Glue
-                # has no branches, so multiple same-N documents can
-                # only be crash orphans — AMBIGUITY REFUSES rather
-                # than risking an uncommitted doc (code-review r14;
-                # every in-process failure path already removes its
-                # candidate, so this guards process crashes only)
-                if not os.path.exists(path):
-                    hits = _glob.glob(
-                        os.path.join(
-                            os.path.dirname(path),
-                            f"v{int(vm.group(1))}-*.metadata.json",
-                        )
-                    )
-                    if len(hits) == 1:
-                        with open(hits[0], "rb") as f:
-                            return f.read()
-        with open(path, "rb") as f:
-            return f.read()
-
-    def exists(self, path: str) -> bool:
-        split = _split_metadata_path(path)
-        if split is not None:
-            location, leaf = split
-            if leaf == "version-hint.text":
-                return self._pointer(location) is not None
-            vm = _V_RE.match(leaf)
-            if vm:
-                v = self._version_of(self._pointer(location))
-                if v is None or int(vm.group(1)) > v:
-                    return False
-                return (
-                    int(vm.group(1)) == v
-                    or os.path.exists(path)
-                    or len(
-                        _glob.glob(
-                            os.path.join(
-                                os.path.dirname(path),
-                                f"v{int(vm.group(1))}-*.metadata.json",
-                            )
-                        )
-                    )
-                    == 1
-                )
-        return os.path.exists(path)
-
-    def put_if_absent(self, path: str, payload: bytes) -> bool:
-        split = _split_metadata_path(path)
-        vm = _V_RE.match(split[1]) if split else None
-        if vm is None:
-            return MD.PosixLinkBackend().put_if_absent(path, payload)
-        location, n = split[0], int(vm.group(1))
-        ident, entry = self._entry_for_location(location)
-        if ident is None:
-            # FIRST commit: the Glue entry is created BY the commit
-            # (reference persistGlueTable's createTable branch), not
-            # beforehand — derive the identity from the location
-            ident, entry = self._ident_of(location), None
-        db, name = ident
-        if self.lock_manager is not None:
-            # commitLockEntityId = "db.tbl"; ownerId = the new metadata
-            # location (reference lock(newMetadataLocation))
-            owner = f"{path}:{uuid.uuid4().hex[:8]}"
-            if not self.lock_manager.acquire(f"{db}.{name}", owner):
-                raise RuntimeError(
-                    f"Fail to acquire lock {db}.{name} to commit new "
-                    f"metadata at {path}"
-                )
-            try:
-                # re-read UNDER the lock, then commit without the
-                # versionId precondition — the lock is the arbitration.
-                # An entry that VANISHED between the reads (concurrent
-                # drop) must not be committed from the stale copy: the
-                # re-read result replaces it unconditionally
-                _, entry = self._entry_for_location(location)
-                return self._persist(db, name, location, n, entry, payload,
-                                     path, conditional=False)
-            finally:
-                self.lock_manager.release(f"{db}.{name}", owner)
-        return self._persist(db, name, location, n, entry, payload, path,
-                             conditional=True)
-
-    # -- the shared commit protocol (also the Dynamo backend's, which
-    # overrides only the three hooks below) -----------------------------------
-
-    # exceptions meaning "a racer won; engine retry" (reference
-    # ConcurrentModificationException / AlreadyExistsException ->
-    # CommitFailedException)
-    _LOST_RACE: tuple = (ConcurrentModification, EntityAlreadyExists)
-
-    def _entry_pointer(self, entry: dict | None) -> str | None:
-        return (
-            entry["parameters"].get(METADATA_LOCATION_PROP) if entry else None
-        )
-
-    def _pointer_params(self, doc_path: str, ptr: str | None) -> dict:
-        """Store-specific pointer attributes for the committed doc."""
-        params = {
-            TABLE_TYPE_PROP: ICEBERG_TABLE_TYPE,
-            METADATA_LOCATION_PROP: doc_path,
-        }
-        if ptr:
-            params[PREVIOUS_METADATA_LOCATION_PROP] = ptr
-        return params
-
-    def _check_entry(self, db: str, name: str, entry: dict) -> None:
-        """Pre-write validation (reference checkIfTableIsIceberg runs
-        BEFORE persist) — raising here must not leak a document."""
-        if entry["parameters"].get(METADATA_LOCATION_PROP) and entry[
-            "parameters"
-        ].get(TABLE_TYPE_PROP, "").upper() != ICEBERG_TABLE_TYPE:
+    def _checked(ident, entry):
+        """checkIfTableIsIceberg, BEFORE any document is written."""
+        if entry is not None and entry["parameters"].get(
+            METADATA_LOCATION_PROP
+        ) and entry["parameters"].get(TABLE_TYPE_PROP, "").upper() != (
+            ICEBERG_TABLE_TYPE
+        ):
             raise ValueError(
-                f"Glue table {db}.{name} is not an iceberg table "
+                f"Glue table {'.'.join(ident)} is not an iceberg table "
                 f"(type={entry['parameters'].get(TABLE_TYPE_PROP)})"
             )
+        return entry
 
-    def _commit_pointer(
-        self,
-        db: str,
-        name: str,
-        location: str,
-        entry: dict | None,
-        params: dict,
-        conditional: bool,
-    ) -> None:
-        """The store-specific conditional write."""
+    def _swap(self, location, ident, entry, doc, conditional) -> bool:
+        params = {TABLE_TYPE_PROP: ICEBERG_TABLE_TYPE, METADATA_LOCATION_PROP: doc}
         if entry is None:
             self.service.create_table(
-                db, name, parameters=params, location=location
+                *ident, parameters=params, location=location
             )
-        else:
-            merged = dict(entry["parameters"])
-            merged.update(params)
-            self.service.update_table(
-                db, name, merged,
-                version_id=entry["version_id"] if conditional else None,
-            )
-
-    def _persist(
-        self,
-        db: str,
-        name: str,
-        location: str,
-        n: int,
-        entry: dict | None,
-        payload: bytes,
-        path: str,
-        conditional: bool,
-    ) -> bool:
-        # validate FIRST (reference checkIfTableIsIceberg precedes the
-        # commit): a rejected entry leaks no document, and a
-        # non-Iceberg entry's pointer must not silently read as
-        # version-None in the replay check below
-        if entry is not None:
-            self._check_entry(db, name, entry)
-        ptr = self._entry_pointer(entry)
-        cur_v = self._version_of(ptr)
-        expect = -1 if cur_v is None else cur_v
-        if n != expect + 1:
-            return False  # replay of an old version / racer already won
-        # uuid-suffixed candidate document: invisible until the
-        # conditional update points at it, never clobbers a racer's
-        doc_path = os.path.join(
-            os.path.dirname(path), f"v{n}-{uuid.uuid4().hex[:8]}.metadata.json"
-        )
-        os.makedirs(os.path.dirname(doc_path), exist_ok=True)
-        with open(doc_path, "wb") as f:
-            f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
-        params = self._pointer_params(doc_path, ptr)
-        try:
-            self._commit_pointer(db, name, location, entry, params,
-                                 conditional)
             return True
-        except BaseException as e:
-            # ANY failed pointer write orphans the candidate document —
-            # remove it so the old-version resolution can never surface
-            # an uncommitted doc (reference cleanupMetadataAndUnlock)
-            try:
-                os.remove(doc_path)
-            except OSError:
-                pass
-            if isinstance(e, self._LOST_RACE):
-                return False  # racer won; engine retry
-            raise  # unexpected (e.g. entity dropped concurrently)
-
-    def put(self, path: str, payload: bytes) -> None:
-        split = _split_metadata_path(path)
-        if split is not None and split[1] == "version-hint.text":
-            return  # the Glue parameter IS the hint
-        MD.PosixLinkBackend().put(path, payload)
-
-    def delete(self, path: str) -> None:
-        MD.PosixLinkBackend().delete(path)
+        ptr = self._entry_pointer(entry)
+        if ptr:
+            params[PREVIOUS_METADATA_LOCATION_PROP] = ptr
+        self.service.update_table(
+            *ident, dict(entry["parameters"], **params),
+            version_id=entry["version_id"] if conditional else None,
+        )
+        return True
 
 
-class GlueCatalog(Catalog):
+class GlueCatalog(PointerCatalog):
     """Catalog over the in-process Glue service (reference
     GlueCatalog.java): databases as namespaces, entries with the
     metadata_location parameter and ICEBERG table_type, rename as a
-    non-atomic create-then-drop that keeps the pointer, and the full
-    base Catalog surface (DDL, procedures, SQL dispatcher) on top."""
+    non-atomic create-then-drop that keeps the pointer."""
 
     def __init__(
         self,
@@ -509,25 +320,58 @@ class GlueCatalog(Catalog):
         service: GlueService | None = None,
         lock_manager=None,
     ):
-        super().__init__(warehouse, spark)
         self.service = service or GlueService()
-        self.backend = GlueCommitBackend(
+        super().__init__(warehouse, spark, GlueCommitBackend(
             self.service, warehouse, lock_manager=lock_manager
-        )
-        MD.register_commit_backend(warehouse.rstrip("/") + "/", self.backend)
+        ))
         if "default" not in self.service.list_databases():
             self.service.create_database("default")
 
-    @staticmethod
-    def _ident(name: str) -> tuple[str, str]:
-        if "." in name:
-            db, tbl = name.split(".", 1)
-            return db, tbl
-        return "default", name
+    # -- pointer-catalog hooks ---------------------------------------------
 
-    def _table_location(self, name: str) -> str:
+    def _table_pointer(self, name: str) -> str | None:
+        t = self.service.get_table(*self._ident(name))
+        if t is None or not t["parameters"].get(METADATA_LOCATION_PROP):
+            return None
+        # checkIfTableIsIceberg: a non-iceberg Glue table is, for
+        # Iceberg, the same as no table (NoSuchIcebergTableException)
+        if t["parameters"].get(TABLE_TYPE_PROP, "").upper() != ICEBERG_TABLE_TYPE:
+            raise FileNotFoundError(
+                f"Glue table {name} is not an iceberg table "
+                f"(type={t['parameters'].get(TABLE_TYPE_PROP)})"
+            )
+        return t["parameters"][METADATA_LOCATION_PROP]
+
+    def _put_entry(self, name: str, location: str, ptr: str | None) -> bool:
         db, tbl = self._ident(name)
-        return os.path.join(self.warehouse, db, tbl)
+        if ptr is None:
+            # the v0 commit CREATES the Glue entry (persistGlueTable's
+            # createTable branch) — nothing to pre-create here
+            if self.service.get_table(db, tbl) is not None:
+                raise ValueError(f"table {name} already exists")
+            if db not in self.service.list_databases():
+                raise EntityNotFound(f"database {db!r} not found")
+            return False
+        try:
+            self.service.create_table(
+                db, tbl,
+                parameters={
+                    TABLE_TYPE_PROP: ICEBERG_TABLE_TYPE,
+                    METADATA_LOCATION_PROP: ptr,
+                },
+                location=location,
+            )
+        except EntityAlreadyExists:
+            raise ValueError(f"table {name} already exists") from None
+        return True
+
+    def _drop_entry(self, name: str) -> str:
+        db, tbl = self._ident(name)
+        t = self.service.get_table(db, tbl)
+        if t is None:
+            raise FileNotFoundError(f"table {name} not found in Glue")
+        self.service.delete_table(db, tbl)
+        return t["location"] or self._table_location(name)
 
     # -- namespaces = Glue databases ------------------------------------------
 
@@ -552,46 +396,7 @@ class GlueCatalog(Catalog):
     def drop_namespace(self, namespace: str) -> None:
         self.service.delete_database(namespace)
 
-    # -- table registry --------------------------------------------------------
-
-    def create_table(self, name: str, schema_ddl: str, **kwargs) -> Table:
-        db, tbl = self._ident(name)
-        if self.service.get_table(db, tbl) is not None:
-            raise ValueError(f"table {name} already exists")
-        if db not in self.service.list_databases():
-            raise EntityNotFound(f"database {db!r} not found")
-        # the v0 commit CREATES the Glue entry (persistGlueTable's
-        # createTable branch) — nothing to pre-create here
-        return super().create_table(name, schema_ddl, **kwargs)
-
-    def load_table(self, name: str) -> Table:
-        db, tbl = self._ident(name)
-        t = self.service.get_table(db, tbl)
-        if t is None or not t["parameters"].get(METADATA_LOCATION_PROP):
-            raise FileNotFoundError(f"table {name} not found in Glue")
-        # checkIfTableIsIceberg: a non-iceberg Glue table is, for
-        # Iceberg, the same as no table (NoSuchIcebergTableException)
-        if t["parameters"].get(TABLE_TYPE_PROP, "").upper() != ICEBERG_TABLE_TYPE:
-            raise FileNotFoundError(
-                f"Glue table {name} is not an iceberg table "
-                f"(type={t['parameters'].get(TABLE_TYPE_PROP)})"
-            )
-        location = _split_metadata_path(
-            t["parameters"][METADATA_LOCATION_PROP]
-        )[0]
-        return Table(MD.read_metadata(location), self.spark)
-
-    table = load_table
-
-    def table_exists(self, name: str) -> bool:
-        db, tbl = self._ident(name)
-        t = self.service.get_table(db, tbl)
-        return (
-            t is not None
-            and bool(t["parameters"].get(METADATA_LOCATION_PROP))
-            and t["parameters"].get(TABLE_TYPE_PROP, "").upper()
-            == ICEBERG_TABLE_TYPE
-        )
+    # -- table listing and rename ----------------------------------------------
 
     def list_tables(self, namespace: str = "default") -> list[str]:
         out = []
@@ -630,71 +435,3 @@ class GlueCatalog(Catalog):
             # rollback: delete the renamed destination
             self.service.delete_table(ndb, ntbl)
             raise
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        db, tbl = self._ident(name)
-        t = self.service.get_table(db, tbl)
-        if t is None:
-            raise FileNotFoundError(f"table {name} not found in Glue")
-        self.service.delete_table(db, tbl)
-        loc = t["location"] or self._table_location(name)
-        if purge:
-            shutil.rmtree(loc, ignore_errors=True)
-        else:
-            # deviation (documented, same as JDBC/Hive): clear metadata
-            # so the name-derived location is reusable
-            shutil.rmtree(os.path.join(loc, "metadata"), ignore_errors=True)
-
-    # GlueCatalog.registerTable: adopt an existing metadata document
-    def register_table(self, name: str, metadata_location: str) -> Table:
-        import json as _json
-
-        db, tbl = self._ident(name)
-        doc = _json.loads(open(metadata_location, "rb").read())
-        self.service.create_table(
-            db, tbl,
-            parameters={
-                TABLE_TYPE_PROP: ICEBERG_TABLE_TYPE,
-                METADATA_LOCATION_PROP: metadata_location,
-            },
-            location=doc["location"],
-        )
-        return self.load_table(name)
-
-    def snapshot_table(self, source: str, dest: str) -> Table:
-        """Zero-copy clone under the Glue-pointer protocol (same shape
-        as the JDBC/Hive overrides: the entry must exist, pointing at
-        the copied current version, BEFORE the location-rewriting
-        commit runs)."""
-        sdb, stbl = self._ident(source)
-        src = self.service.get_table(sdb, stbl)
-        if src is None or not src["parameters"].get(METADATA_LOCATION_PROP):
-            raise FileNotFoundError(f"table {source} not found in Glue")
-        src_loc = src["location"]
-        dest_loc = self._table_location(dest)
-        ddb, dtbl = self._ident(dest)
-        os.makedirs(dest_loc)
-        shutil.copytree(
-            MD.metadata_dir(src_loc), MD.metadata_dir(dest_loc),
-            dirs_exist_ok=True,
-        )
-        ptr = os.path.join(
-            MD.metadata_dir(dest_loc),
-            os.path.basename(src["parameters"][METADATA_LOCATION_PROP]),
-        )
-        self.service.create_table(
-            ddb, dtbl,
-            parameters={
-                TABLE_TYPE_PROP: ICEBERG_TABLE_TYPE,
-                METADATA_LOCATION_PROP: ptr,
-            },
-            location=dest_loc,
-        )
-        meta = MD.read_metadata(dest_loc)
-        meta.location = dest_loc
-        meta.properties = dict(
-            meta.properties,
-            **{"snapshot-source": source, "gc.enabled": "false"},
-        )
-        MD.write_new_metadata(meta, meta.version)
-        return self.load_table(dest)

@@ -35,18 +35,20 @@ reference's known HMS throughput property).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
 import time
-import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 from iceberg_geo_poc_spark.table import metadata as MD
-from iceberg_geo_poc_spark.table.catalog import Catalog
-from iceberg_geo_poc_spark.table.jdbc_catalog import _V_RE, _split_metadata_path
-from iceberg_geo_poc_spark.table.table import Table
+from iceberg_geo_poc_spark.table.pointer_catalog import (
+    PointerCatalog,
+    PointerCommitBackend,
+)
 
 METADATA_LOCATION_PROP = "metadata_location"
 PREVIOUS_METADATA_LOCATION_PROP = "previous_metadata_location"
@@ -147,6 +149,14 @@ class HiveMetastoreService:
         with self._lock:
             return sorted(t for d, t in self._tables if d == db)
 
+    def items(self) -> list[tuple[tuple[str, str], dict]]:
+        with self._lock:
+            return [
+                (key, {"location": t["location"],
+                       "parameters": dict(t["parameters"])})
+                for key, t in self._tables.items()
+            ]
+
     # -- locks (reference MetastoreLock / HMS LockState machine) --------------
 
     def _evict_expired(self, key: tuple[str, str]) -> None:
@@ -204,11 +214,13 @@ class HiveMetastoreService:
                 self._queues[key].remove(lock_id)
 
 
-class HiveCommitBackend(MD.CommitBackend):
-    """CommitBackend arbitrating through the HMS ``metadata_location``
-    parameter under the metastore's exclusive table lock (reference
-    HiveTableOperations.doCommit).  Readers resolve versions from the
-    parameter; a crashed writer's orphan document is invisible."""
+class HiveCommitBackend(PointerCommitBackend):
+    """Pointer backend over the HMS ``metadata_location`` parameter: the
+    swap runs under the metastore's exclusive table lock (reference
+    HiveTableOperations.doCommit), with the canonical document written
+    under that lock."""
+
+    lost_race = (LockException,)  # lost the lock mid-commit
 
     def __init__(self, service: HiveMetastoreService, warehouse: str):
         self.service = service
@@ -218,44 +230,29 @@ class HiveCommitBackend(MD.CommitBackend):
         self.acquire_timeout = 30.0
         self.poll_interval = 0.005
 
-    def _ident_of(self, location: str) -> tuple[str, str]:
-        rel = location[len(self.warehouse):].strip("/")
-        parts = [p for p in rel.split("/") if p]
-        if len(parts) == 1:
-            parts = ["default"] + parts
-        return parts[0], ".".join(parts[1:])
-
-    def _entry_for_location(self, location: str) -> tuple[tuple[str, str] | None, dict | None]:
-        db, tbl = self._ident_of(location)
-        t = self.service.get_table(db, tbl)
-        if t is not None and t["location"] == location:
-            return (db, tbl), t
+    def _entry_for_location(self, location: str):
+        try:
+            db, tbl = self._ident_of(location)
+        except ValueError:
+            pass  # registered from outside the warehouse: scan below
+        else:
+            t = self.service.get_table(db, tbl)
+            if t is not None and t["location"] == location:
+                return (db, tbl), t
         # renamed tables keep their location: bounded reverse scan
-        with self.service._lock:
-            for (d, n), entry in self.service._tables.items():
-                if entry["location"] == location:
-                    return (d, n), {
-                        "location": entry["location"],
-                        "parameters": dict(entry["parameters"]),
-                    }
+        for ident, entry in self.service.items():
+            if entry["location"] == location:
+                return ident, entry
         return None, None
 
-    def _pointer(self, location: str) -> str | None:
-        _, t = self._entry_for_location(location)
-        if t is None:
-            return None
-        return t["parameters"].get(METADATA_LOCATION_PROP)
+    def _entry_pointer(self, entry):
+        return entry["parameters"].get(METADATA_LOCATION_PROP) if entry else None
 
-    @staticmethod
-    def _version_of(ptr: str | None) -> int | None:
-        if ptr is None:
-            return None
-        m = _V_RE.match(os.path.basename(ptr))
-        return int(m.group(1)) if m else None
-
-    def _acquire(self, db: str, tbl: str) -> int:
-        """Poll lock -> check_lock until ACQUIRED (reference
-        MetastoreLock.acquireLock WAITING loop)."""
+    @contextmanager
+    def _locked(self, db: str, tbl: str):
+        """Hold the exclusive table lock: poll lock -> check_lock until
+        ACQUIRED (reference MetastoreLock.acquireLock WAITING loop),
+        unlock in a finally; yields the lock id."""
         lid, state = self.service.lock(db, tbl)
         deadline = time.monotonic() + self.acquire_timeout
         while state == "WAITING":
@@ -267,105 +264,43 @@ class HiveCommitBackend(MD.CommitBackend):
             time.sleep(self.poll_interval)
             self.service.heartbeat(lid)
             state = self.service.check_lock(lid)
-        return lid
-
-    # -- CommitBackend surface ----------------------------------------------
-
-    def read(self, path: str) -> bytes:
-        split = _split_metadata_path(path)
-        if split is not None:
-            location, leaf = split
-            if leaf == "version-hint.text":
-                v = self._version_of(self._pointer(location))
-                if v is None:
-                    raise FileNotFoundError(path)
-                return str(v).encode()
-            vm = _V_RE.match(leaf)
-            if vm:
-                v = self._version_of(self._pointer(location))
-                if v is None or int(vm.group(1)) > v:
-                    raise FileNotFoundError(path)
-        with open(path, "rb") as f:
-            return f.read()
-
-    def exists(self, path: str) -> bool:
-        split = _split_metadata_path(path)
-        if split is not None:
-            location, leaf = split
-            if leaf == "version-hint.text":
-                return self._pointer(location) is not None
-            vm = _V_RE.match(leaf)
-            if vm:
-                v = self._version_of(self._pointer(location))
-                return (
-                    v is not None
-                    and int(vm.group(1)) <= v
-                    and os.path.exists(path)
-                )
-        return os.path.exists(path)
-
-    def put_if_absent(self, path: str, payload: bytes) -> bool:
-        split = _split_metadata_path(path)
-        vm = _V_RE.match(split[1]) if split else None
-        if vm is None:
-            return MD.PosixLinkBackend().put_if_absent(path, payload)
-        location, n = split[0], int(vm.group(1))
-        ident, entry = self._entry_for_location(location)
-        if ident is None:
-            raise FileNotFoundError(
-                f"no metastore entry for location {location!r}; create "
-                f"tables through HiveCatalog.create_table"
-            )
-        db, tbl = ident
-        lid = self._acquire(db, tbl)
         try:
-            # re-read UNDER the lock; base-location CAS (reference
-            # HiveTableOperations: baseMetadataLocation equality check)
-            entry = self.service.get_table(db, tbl)
-            ptr = entry["parameters"].get(METADATA_LOCATION_PROP)
-            cur_v = self._version_of(ptr)
-            expect = -1 if cur_v is None else cur_v
-            if n != expect + 1:
-                return False  # concurrent commit moved the pointer
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-            with open(tmp, "wb") as f:
-                f.write(payload)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, path)  # under the table lock: no clobber
-            # lock.ensureActive() before persisting (reference): a lock
-            # that expired mid-commit must NOT alter the entry — another
-            # committer may already hold the table
-            self.service.heartbeat(lid)
-            params = dict(entry["parameters"])
-            params[PREVIOUS_METADATA_LOCATION_PROP] = ptr or ""
-            params[METADATA_LOCATION_PROP] = path
-            self.service.alter_table(db, tbl, params)
-            return True
-        except LockException:
-            return False  # lost the lock mid-commit: treat as lost race
+            yield lid
         finally:
             try:
                 self.service.unlock(lid)
             except LockException:
                 pass
 
-    def put(self, path: str, payload: bytes) -> None:
-        split = _split_metadata_path(path)
-        if split is not None and split[1] == "version-hint.text":
-            return  # the HMS parameter IS the hint
-        MD.PosixLinkBackend().put(path, payload)
+    @contextmanager
+    def _swap_guard(self, location: str):
+        ident, _ = self._entry_for_location(location)
+        if ident is None:
+            raise FileNotFoundError(
+                f"no metastore entry for location {location!r}; create "
+                f"tables through HiveCatalog.create_table"
+            )
+        with self._locked(*ident) as lid:
+            # re-read UNDER the lock: the base-location check (reference
+            # HiveTableOperations baseMetadataLocation equality) runs on it
+            yield ident, self.service.get_table(*ident), lid
 
-    def delete(self, path: str) -> None:
-        MD.PosixLinkBackend().delete(path)
+    def _swap(self, location, ident, entry, doc, lid) -> bool:
+        # lock.ensureActive() before persisting (reference): a lock that
+        # expired mid-commit must NOT alter the entry — another committer
+        # may already hold the table
+        self.service.heartbeat(lid)
+        params = dict(entry["parameters"])
+        params[PREVIOUS_METADATA_LOCATION_PROP] = self._entry_pointer(entry) or ""
+        params[METADATA_LOCATION_PROP] = doc
+        self.service.alter_table(*ident, params)
+        return True
 
 
-class HiveCatalog(Catalog):
+class HiveCatalog(PointerCatalog):
     """Catalog over the in-process metastore (reference HiveCatalog):
     databases as namespaces, table entries with the metadata_location
-    parameter, rename keeps the location, and the full base Catalog
-    surface (DDL, procedures, SQL dispatcher) rides on top."""
+    parameter, rename keeps the location, VIRTUAL_VIEW entries as views."""
 
     def __init__(
         self,
@@ -373,23 +308,37 @@ class HiveCatalog(Catalog):
         spark: SparkSession,
         service: HiveMetastoreService | None = None,
     ):
-        super().__init__(warehouse, spark)
         self.service = service or HiveMetastoreService()
-        self.backend = HiveCommitBackend(self.service, warehouse)
-        MD.register_commit_backend(warehouse.rstrip("/") + "/", self.backend)
+        super().__init__(
+            warehouse, spark, HiveCommitBackend(self.service, warehouse)
+        )
         if "default" not in self.service.list_databases():
             self.service.create_database("default")
 
-    @staticmethod
-    def _ident(name: str) -> tuple[str, str]:
-        if "." in name:
-            db, tbl = name.split(".", 1)
-            return db, tbl
-        return "default", name
+    # -- pointer-catalog hooks ---------------------------------------------
 
-    def _table_location(self, name: str) -> str:
+    def _table_pointer(self, name: str) -> str | None:
+        t = self.service.get_table(*self._ident(name))
+        if t is None or t["parameters"].get("table_type") == "VIRTUAL_VIEW":
+            return None
+        return t["parameters"].get(METADATA_LOCATION_PROP) or None
+
+    def _put_entry(self, name: str, location: str, ptr: str | None) -> bool:
+        # with a NULL pointer the v0 commit fills it under the table lock
+        # (reference: newTable + AlreadyExists when the location is set)
+        self.service.create_table_entry(
+            *self._ident(name), location,
+            parameters={METADATA_LOCATION_PROP: ptr} if ptr else None,
+        )
+        return True
+
+    def _drop_entry(self, name: str) -> str:
         db, tbl = self._ident(name)
-        return os.path.join(self.warehouse, db, tbl)
+        t = self.service.get_table(db, tbl)
+        if t is None:
+            raise FileNotFoundError(f"table {name} not found in metastore")
+        self.service.drop_table_entry(db, tbl)
+        return t["location"]
 
     # -- namespaces = databases ----------------------------------------------
 
@@ -414,45 +363,7 @@ class HiveCatalog(Catalog):
     def drop_namespace(self, namespace: str) -> None:
         self.service.drop_database(namespace)
 
-    # -- table registry --------------------------------------------------------
-
-    def create_table(self, name: str, schema_ddl: str, **kwargs) -> Table:
-        db, tbl = self._ident(name)
-        location = self._table_location(name)
-        # entry first with a NULL pointer: the v0 commit CAS-fills it
-        # under the table lock (reference: newTable + AlreadyExists when
-        # the location parameter is already set)
-        self.service.create_table_entry(db, tbl, location)
-        try:
-            return super().create_table(name, schema_ddl, **kwargs)
-        except BaseException:
-            self.service.drop_table_entry(db, tbl)
-            raise
-
-    def load_table(self, name: str) -> Table:
-        db, tbl = self._ident(name)
-        t = self.service.get_table(db, tbl)
-        if (
-            t is None
-            or not t["parameters"].get(METADATA_LOCATION_PROP)
-            or t["parameters"].get("table_type") == "VIRTUAL_VIEW"
-        ):
-            raise FileNotFoundError(f"table {name} not found in metastore")
-        location = _split_metadata_path(
-            t["parameters"][METADATA_LOCATION_PROP]
-        )[0]
-        return Table(MD.read_metadata(location), self.spark)
-
-    table = load_table
-
-    def table_exists(self, name: str) -> bool:
-        db, tbl = self._ident(name)
-        t = self.service.get_table(db, tbl)
-        return (
-            t is not None
-            and bool(t["parameters"].get(METADATA_LOCATION_PROP))
-            and t["parameters"].get("table_type") != "VIRTUAL_VIEW"
-        )
+    # -- table listing and rename ----------------------------------------------
 
     def list_tables(self, namespace: str = "default") -> list[str]:
         out = []
@@ -463,69 +374,7 @@ class HiveCatalog(Catalog):
         return out
 
     def rename_table(self, old: str, new: str) -> None:
-        odb, otbl = self._ident(old)
-        ndb, ntbl = self._ident(new)
-        self.service.rename_table(odb, otbl, ndb, ntbl)
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        db, tbl = self._ident(name)
-        t = self.service.get_table(db, tbl)
-        if t is None:
-            raise FileNotFoundError(f"table {name} not found in metastore")
-        self.service.drop_table_entry(db, tbl)
-        if purge:
-            shutil.rmtree(t["location"], ignore_errors=True)
-        else:
-            # deviation (documented, same as JDBC): clear metadata so
-            # the name-derived location is reusable
-            shutil.rmtree(
-                os.path.join(t["location"], "metadata"), ignore_errors=True
-            )
-
-    # HiveCatalog.registerTable: adopt an existing metadata document
-    def register_table(self, name: str, metadata_location: str) -> Table:
-        import json as _json
-
-        db, tbl = self._ident(name)
-        doc = _json.loads(open(metadata_location, "rb").read())
-        self.service.create_table_entry(
-            db, tbl, doc["location"],
-            parameters={METADATA_LOCATION_PROP: metadata_location},
-        )
-        return self.load_table(name)
-
-    def snapshot_table(self, source: str, dest: str) -> Table:
-        """Zero-copy clone under the HMS-pointer protocol (same shape
-        as the JDBC/Nessie overrides: the entry must exist, pointing at
-        the copied current version, BEFORE the location-rewriting
-        commit runs)."""
-        sdb, stbl = self._ident(source)
-        src = self.service.get_table(sdb, stbl)
-        if src is None or not src["parameters"].get(METADATA_LOCATION_PROP):
-            raise FileNotFoundError(f"table {source} not found in metastore")
-        src_loc = src["location"]
-        dest_loc = self._table_location(dest)
-        ddb, dtbl = self._ident(dest)
-        os.makedirs(dest_loc)
-        shutil.copytree(
-            MD.metadata_dir(src_loc), MD.metadata_dir(dest_loc),
-            dirs_exist_ok=True,
-        )
-        ptr = os.path.join(
-            MD.metadata_dir(dest_loc),
-            os.path.basename(src["parameters"][METADATA_LOCATION_PROP]),
-        )
-        self.service.create_table_entry(
-            ddb, dtbl, dest_loc, parameters={METADATA_LOCATION_PROP: ptr}
-        )
-        meta = MD.read_metadata(dest_loc)
-        meta.location = dest_loc
-        meta.properties = dict(
-            meta.properties,
-            **{"snapshot-source": source, "gc.enabled": "false"},
-        )
-        MD.write_new_metadata(meta, meta.version)
-        return self.load_table(dest)
+        self.service.rename_table(*self._ident(old), *self._ident(new))
 
     # -- views (reference HiveViewOperations: a VIRTUAL_VIEW metastore
     # entry whose metadata_location parameter points at the view's
@@ -538,39 +387,25 @@ class HiveCatalog(Catalog):
             return None
         return t
 
-    def _view_doc(self, name: str) -> dict:
-        import json as _json
-
+    def _view_log(self, name: str) -> list[dict]:
         t = self._view_entry(name)
         if t is None:
             raise KeyError(f"view {name} not found")
         with open(t["parameters"][METADATA_LOCATION_PROP]) as f:
-            return _json.load(f)
+            return json.load(f)["versions"]
 
     def create_view(self, name: str, sql_text: str, replace: bool = False) -> None:
-        import json as _json
-
         db, vname = self._ident(name)
         entry = self._view_entry(name)
         if entry is not None and not replace:
             raise ValueError(f"view {name} already exists")
-        versions: list[dict] = []
-        if entry is not None:
-            with open(entry["parameters"][METADATA_LOCATION_PROP]) as f:
-                versions = _json.load(f)["versions"]
-        versions = versions + [{"sql": sql_text, "at": MD.now_ms()}]
-        doc_dir = os.path.join(self.warehouse, "_views", db, vname)
-        os.makedirs(doc_dir, exist_ok=True)
-        path = os.path.join(
-            doc_dir, f"v{len(versions)}-{uuid.uuid4().hex[:8]}.metadata.json"
+        path = self._write_view_doc(
+            name, entry and entry["parameters"][METADATA_LOCATION_PROP], sql_text
         )
-        with open(path, "w") as f:
-            _json.dump({"name": name, "versions": versions}, f, indent=1)
         # commit under the SAME exclusive lock protocol table commits
         # use; re-check the base pointer under the lock (replace race:
         # exactly one winner, the loser's document is an orphan)
-        lid = self.backend._acquire(db, vname)
-        try:
+        with self.backend._locked(db, vname) as lid:
             cur = self._view_entry(name)
             cur_ptr = (
                 cur["parameters"][METADATA_LOCATION_PROP] if cur else None
@@ -585,7 +420,7 @@ class HiveCatalog(Catalog):
             self.service.heartbeat(lid)
             if cur is None:
                 self.service.create_table_entry(
-                    db, vname, doc_dir,
+                    db, vname, os.path.dirname(path),
                     parameters={
                         "table_type": "VIRTUAL_VIEW",
                         METADATA_LOCATION_PROP: path,
@@ -600,43 +435,17 @@ class HiveCatalog(Catalog):
                         METADATA_LOCATION_PROP: path,
                     },
                 )
-        finally:
-            try:
-                self.service.unlock(lid)
-            except LockException:
-                pass
 
     def list_views(self) -> list[str]:
-        out = []
-        with self.service._lock:
-            items = list(self.service._tables.items())
-        for (db, n), entry in items:
-            if entry["parameters"].get("table_type") == "VIRTUAL_VIEW":
-                out.append(n if db == "default" else f"{db}.{n}")
-        return sorted(out)
-
-    def view_sql(self, name: str, version: int | None = None) -> str:
-        vs = self._view_doc(name)["versions"]
-        return vs[-1 if version is None else version]["sql"]
-
-    def view_versions(self, name: str) -> list[dict]:
-        return list(self._view_doc(name)["versions"])
-
-    def load_view(self, name: str, version: int | None = None):
-        sql_text = self.view_sql(name, version)
-        db, _ = self._ident(name)
-        for tname in self.list_tables(db):
-            self.load_table(f"{db}.{tname}").to_df().createOrReplaceTempView(
-                tname
-            )
-        return self.spark.sql(sql_text)
+        return sorted(
+            n if db == "default" else f"{db}.{n}"
+            for (db, n), entry in self.service.items()
+            if entry["parameters"].get("table_type") == "VIRTUAL_VIEW"
+        )
 
     def drop_view(self, name: str) -> None:
         db, vname = self._ident(name)
         if self._view_entry(name) is None:
             raise KeyError(f"view {name} not found")
         self.service.drop_table_entry(db, vname)
-        shutil.rmtree(
-            os.path.join(self.warehouse, "_views", db, vname),
-            ignore_errors=True,
-        )
+        shutil.rmtree(self._view_dir(name), ignore_errors=True)

@@ -30,31 +30,19 @@ sqlite transaction, which serializes writers across PROCESSES via the
 database file lock — the document write happens under that lock so a
 losing writer can never clobber the winner's document.
 
-Integration: ``JdbcCommitBackend`` implements the engine's
-``CommitBackend`` seam (exactly how the REST catalog plugs in,
-``rest_catalog.ServiceCommitBackend``), so every ``Table`` commit,
-refresh, and time-travel read arbitrates through the database row with
-zero changes to the table machinery.  Readers resolve the version hint
-from the pointer (never from the filesystem), so a crashed writer's
-orphan document below a half-finished commit is invisible — the next
-committer simply overwrites it under the write lock.
-
-Data files, manifests and the metadata documents themselves stay on the
-shared filesystem; the DATABASE holds only pointers — the reference's
-split exactly, and the right one at 100 TB (the DB sees one tiny CAS
-per commit, never data volume).
-
-Deviation (documented): ``drop_table`` always clears the table's
-``metadata/`` directory so the name-derived location is reusable;
-``purge=True`` additionally removes data.  The reference leaves files
-behind on a plain drop and strands the location.
+The pointer protocol itself (pointer-as-hint, invisible documents above
+the pointer, replay refusal) is ``pointer_catalog``'s; this module adds
+the sqlite schema, the row lookup and the CAS above.  Data files,
+manifests and the metadata documents stay on the shared filesystem; the
+DATABASE holds only pointers — the reference's split exactly, and the
+right one at 100 TB (the DB sees one tiny CAS per commit, never data
+volume).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import sqlite3
 import uuid
@@ -63,34 +51,19 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 from iceberg_geo_poc_spark.table import metadata as MD
-from iceberg_geo_poc_spark.table.catalog import Catalog
-from iceberg_geo_poc_spark.table.table import Table
+from iceberg_geo_poc_spark.table.pointer_catalog import (
+    PointerCatalog,
+    PointerCommitBackend,
+)
 
 # the reference's namespace-exists marker (JdbcUtil.NAMESPACE_EXISTS_PROPERTY)
 _NS_EXISTS_KEY = "exists"
 
-_V_RE = re.compile(r"^v(\d+)\.metadata\.json$")
 
-
-def _split_metadata_path(path: str):
-    """``<location>/metadata/<leaf>`` -> (location, leaf) or None."""
-    head, leaf = os.path.split(path)
-    base, meta = os.path.split(head)
-    if meta != "metadata":
-        return None
-    return base, leaf
-
-
-class JdbcCommitBackend(MD.CommitBackend):
-    """CommitBackend arbitrating metadata versions through the
-    ``iceberg_tables`` pointer row (CAS UPDATE under BEGIN IMMEDIATE).
-
-    Path routing: ``version-hint.text`` reads resolve the version from
-    the DB pointer (writes are no-ops — the row IS the hint);
-    ``v{N}.metadata.json`` existence/readability is gated on
-    ``N <= pointer version``; every other path (retention floor marker,
-    DV sidecars routed through the backend) passes through to the
-    filesystem untouched."""
+class JdbcCommitBackend(PointerCommitBackend):
+    """Pointer backend over the ``iceberg_tables`` row: the swap is the
+    CAS UPDATE, run under BEGIN IMMEDIATE together with the canonical
+    document write."""
 
     def __init__(self, db_path: str, catalog_name: str = "default"):
         self.db_path = db_path
@@ -152,138 +125,57 @@ class JdbcCommitBackend(MD.CommitBackend):
         c.execute("PRAGMA journal_mode=WAL")
         return c
 
-    # -- pointer helpers -----------------------------------------------------
+    # -- pointer-protocol hooks --------------------------------------------
 
-    def _pointer(self, c: sqlite3.Connection, location: str):
+    def _entry_for_location(self, location: str, c=None):
+        if c is None:
+            with self.db() as c:
+                return self._entry_for_location(location, c)
         row = c.execute(
-            "SELECT metadata_location FROM iceberg_tables"
-            " WHERE catalog_name = ? AND location = ?",
+            "SELECT table_namespace, table_name, metadata_location"
+            " FROM iceberg_tables WHERE catalog_name = ? AND location = ?",
             (self.catalog_name, location),
         ).fetchone()
-        if row is None:
-            return None, False
-        return row[0], True
+        return (None, None) if row is None else ((row[0], row[1]), row[2])
 
-    @staticmethod
-    def _version_of(metadata_location: str | None) -> int | None:
-        if metadata_location is None:
-            return None
-        m = _V_RE.match(os.path.basename(metadata_location))
-        return int(m.group(1)) if m else None
+    def _entry_pointer(self, entry):
+        return entry  # the entry IS the metadata_location column
 
-    # -- CommitBackend surface -------------------------------------------
-
-    def read(self, path: str) -> bytes:
-        split = _split_metadata_path(path)
-        if split is not None:
-            location, leaf = split
-            if leaf == "version-hint.text":
-                with self.db() as c:
-                    ptr, _ = self._pointer(c, location)
-                v = self._version_of(ptr)
-                if v is None:
-                    raise FileNotFoundError(path)
-                return str(v).encode()
-            vm = _V_RE.match(leaf)
-            if vm:
-                with self.db() as c:
-                    ptr, _ = self._pointer(c, location)
-                v = self._version_of(ptr)
-                # documents above the pointer are uncommitted (a crashed
-                # writer's orphan): invisible to every reader
-                if v is None or int(vm.group(1)) > v:
-                    raise FileNotFoundError(path)
-        with open(path, "rb") as f:
-            return f.read()
-
-    def exists(self, path: str) -> bool:
-        split = _split_metadata_path(path)
-        if split is not None:
-            location, leaf = split
-            if leaf == "version-hint.text":
-                with self.db() as c:
-                    ptr, _ = self._pointer(c, location)
-                return ptr is not None
-            vm = _V_RE.match(leaf)
-            if vm:
-                with self.db() as c:
-                    ptr, _ = self._pointer(c, location)
-                v = self._version_of(ptr)
-                return v is not None and int(vm.group(1)) <= v and os.path.exists(path)
-        return os.path.exists(path)
-
-    def put_if_absent(self, path: str, payload: bytes) -> bool:
-        split = _split_metadata_path(path)
-        vm = _V_RE.match(split[1]) if split else None
-        if vm is None:
-            # non-versioned artifacts keep plain if-absent semantics
-            return MD.PosixLinkBackend().put_if_absent(path, payload)
-        location, n = split[0], int(vm.group(1))
-        c = self._conn()
-        try:
-            # BEGIN IMMEDIATE takes the database write lock NOW: the
-            # validate -> write-document -> CAS sequence is serialized
-            # against every other committer, across processes
+    @contextmanager
+    def _swap_guard(self, location: str):
+        # BEGIN IMMEDIATE takes the database write lock NOW: the
+        # validate -> write-document -> CAS sequence is serialized
+        # against every other committer, across processes.  Closing
+        # without COMMIT rolls back.
+        with self.db() as c:
             c.execute("BEGIN IMMEDIATE")
-            ptr, row_exists = self._pointer(c, location)
-            if not row_exists:
-                c.execute("ROLLBACK")
+            ident, ptr = self._entry_for_location(location, c)
+            if ident is None:
                 raise FileNotFoundError(
                     f"no iceberg_tables row for location {location!r}; "
                     f"create tables through JdbcCatalog.create_table"
                 )
-            cur_v = self._version_of(ptr)
-            expect = -1 if cur_v is None else cur_v
-            if n != expect + 1:
-                c.execute("ROLLBACK")
-                return False  # lost the race (or replaying an old version)
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-            with open(tmp, "wb") as f:
-                f.write(payload)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, path)  # under the write lock: no clobber race
-            if ptr is None:
-                got = c.execute(
-                    "UPDATE iceberg_tables SET metadata_location = ?,"
-                    " previous_metadata_location = NULL"
-                    " WHERE catalog_name = ? AND location = ?"
-                    " AND metadata_location IS NULL",
-                    (path, self.catalog_name, location),
-                )
-            else:
-                # the reference's exact CAS (JdbcTableOperations.doCommit)
-                got = c.execute(
-                    "UPDATE iceberg_tables SET metadata_location = ?,"
-                    " previous_metadata_location = ?"
-                    " WHERE catalog_name = ? AND location = ?"
-                    " AND metadata_location = ?",
-                    (path, ptr, self.catalog_name, location, ptr),
-                )
-            if got.rowcount != 1:
-                c.execute("ROLLBACK")
-                return False
+            yield ident, ptr, c
             c.execute("COMMIT")
-            return True
-        finally:
-            c.close()
 
-    def put(self, path: str, payload: bytes) -> None:
-        split = _split_metadata_path(path)
-        if split is not None and split[1] == "version-hint.text":
-            return  # the pointer row IS the hint
-        MD.PosixLinkBackend().put(path, payload)
+    def _swap(self, location, ident, ptr, doc, c) -> bool:
+        # the reference's exact CAS (JdbcTableOperations.doCommit)
+        got = c.execute(
+            "UPDATE iceberg_tables SET metadata_location = ?,"
+            " previous_metadata_location = ?"
+            " WHERE catalog_name = ? AND location = ?"
+            " AND metadata_location IS ?",
+            (doc, ptr, self.catalog_name, location, ptr),
+        )
+        return got.rowcount == 1
 
-    def delete(self, path: str) -> None:
-        MD.PosixLinkBackend().delete(path)
 
-
-class JdbcCatalog(Catalog):
+class JdbcCatalog(PointerCatalog):
     """Catalog whose table registry and commit arbitration live in a SQL
-    database (reference JdbcCatalog).  Inherits the full Catalog surface
-    (DDL, procedures, views, branches, SQL dispatcher); adds namespaces,
-    rename, and DB-backed listing."""
+    database (reference JdbcCatalog).  Adds namespaces, rename, DB-backed
+    listing and DB-pointer views to the pointer-catalog core."""
+
+    _nested_namespaces = True
 
     def __init__(
         self,
@@ -292,45 +184,21 @@ class JdbcCatalog(Catalog):
         db_path: str | None = None,
         catalog_name: str = "jdbc",
     ):
-        super().__init__(warehouse, spark)
         self.catalog_name = catalog_name
-        self.backend = JdbcCommitBackend(
+        super().__init__(warehouse, spark, JdbcCommitBackend(
             db_path or os.path.join(warehouse, "jdbc_catalog.db"), catalog_name
-        )
-        MD.register_commit_backend(warehouse.rstrip("/") + "/", self.backend)
+        ))
         self.create_namespace("default", if_not_exists=True)
 
-    # -- identifier plumbing ---------------------------------------------
-
-    @staticmethod
-    def _ident(name: str) -> tuple[str, str]:
-        if "." in name:
-            ns, tbl = name.rsplit(".", 1)
-            return ns, tbl
-        return "default", name
-
-    def _table_location(self, name: str) -> str:
-        ov = getattr(self, "_loc_override", None)
-        if ov and name in ov:
-            return ov[name]
-        ns, tbl = self._ident(name)
-        return os.path.join(self.warehouse, ns, tbl)
-
-    def _fresh_location(self, name: str) -> str:
+    def _new_location(self, name: str) -> str:
         """Name-derived location, uniquified when another table already
         holds it — after ``rename_table`` the renamed table KEEPS its
         old location (reference behavior: locations are independent of
         names), so a new table under the vacated name must not share the
         directory (two tables sharing one metadata/ log would corrupt
         each other; code-review r12)."""
-        ns, tbl = self._ident(name)
-        base = os.path.join(self.warehouse, ns, tbl)
-        with self.backend.db() as c:
-            taken = c.execute(
-                "SELECT 1 FROM iceberg_tables WHERE catalog_name = ?"
-                " AND location = ? LIMIT 1",
-                (self.catalog_name, base),
-            ).fetchone()
+        base = self._table_location(name)
+        taken = self.backend._entry_for_location(base)[0] is not None
         return base if not taken else f"{base}_{uuid.uuid4().hex[:8]}"
 
     def _row(self, name: str):
@@ -343,6 +211,48 @@ class JdbcCatalog(Catalog):
                 (self.catalog_name, ns, tbl),
             ).fetchone()
 
+    def _has_namespace(self, c: sqlite3.Connection, namespace: str) -> bool:
+        return c.execute(
+            "SELECT 1 FROM iceberg_namespace_properties"
+            " WHERE catalog_name = ? AND namespace = ? LIMIT 1",
+            (self.catalog_name, namespace),
+        ).fetchone() is not None
+
+    # -- pointer-catalog hooks ---------------------------------------------
+
+    def _table_pointer(self, name: str) -> str | None:
+        row = self._row(name)
+        return row[1] if row else None
+
+    def _put_entry(self, name: str, location: str, ptr: str | None) -> bool:
+        ns, tbl = self._ident(name)
+        with self.backend.db() as c:
+            if not self._has_namespace(c, ns):
+                raise KeyError(f"namespace {ns!r} not found")
+            try:
+                # a NULL pointer is CAS-filled by the v0 commit
+                c.execute(
+                    "INSERT INTO iceberg_tables VALUES"
+                    " (?, ?, ?, ?, NULL, 'TABLE', ?)",
+                    (self.catalog_name, ns, tbl, ptr, location),
+                )
+            except sqlite3.IntegrityError:
+                raise ValueError(f"table {name} already exists") from None
+        return True
+
+    def _drop_entry(self, name: str) -> str:
+        row = self._row(name)
+        if row is None:
+            raise FileNotFoundError(f"table {name} not found in catalog")
+        ns, tbl = self._ident(name)
+        with self.backend.db() as c:
+            c.execute(
+                "DELETE FROM iceberg_tables WHERE catalog_name = ?"
+                " AND table_namespace = ? AND table_name = ?",
+                (self.catalog_name, ns, tbl),
+            )
+        return row[0]
+
     # -- namespaces (reference JdbcCatalog namespace surface) -------------
 
     def create_namespace(
@@ -354,12 +264,7 @@ class JdbcCatalog(Catalog):
         props = dict(properties or {})
         props.setdefault(_NS_EXISTS_KEY, "true")
         with self.backend.db() as c:
-            have = c.execute(
-                "SELECT 1 FROM iceberg_namespace_properties"
-                " WHERE catalog_name = ? AND namespace = ? LIMIT 1",
-                (self.catalog_name, namespace),
-            ).fetchone()
-            if have:
+            if self._has_namespace(c, namespace):
                 if if_not_exists:
                     return
                 raise ValueError(f"namespace {namespace!r} already exists")
@@ -423,56 +328,6 @@ class JdbcCatalog(Catalog):
                 (self.catalog_name, namespace),
             )
 
-    # -- table registry ----------------------------------------------------
-
-    def create_table(self, name: str, schema_ddl: str, **kwargs) -> Table:
-        ns, tbl = self._ident(name)
-        location = self._fresh_location(name)
-        self._loc_override = {**getattr(self, "_loc_override", {}), name: location}
-        with self.backend.db() as c:
-            have_ns = c.execute(
-                "SELECT 1 FROM iceberg_namespace_properties"
-                " WHERE catalog_name = ? AND namespace = ? LIMIT 1",
-                (self.catalog_name, ns),
-            ).fetchone()
-            if not have_ns:
-                raise KeyError(f"namespace {ns!r} not found")
-            try:
-                # row first, pointer NULL: the v0 commit below CAS-fills it
-                c.execute(
-                    "INSERT INTO iceberg_tables VALUES"
-                    " (?, ?, ?, NULL, NULL, 'TABLE', ?)",
-                    (self.catalog_name, ns, tbl, location),
-                )
-            except sqlite3.IntegrityError:
-                raise ValueError(f"table {name} already exists") from None
-        # a previous drop leaves the name-derived location reusable only
-        # if stale metadata is gone (documented deviation)
-        try:
-            return super().create_table(name, schema_ddl, **kwargs)
-        except BaseException:
-            with self.backend.db() as c:  # undo the registration
-                c.execute(
-                    "DELETE FROM iceberg_tables WHERE catalog_name = ?"
-                    " AND table_namespace = ? AND table_name = ?",
-                    (self.catalog_name, ns, tbl),
-                )
-            raise
-        finally:
-            self._loc_override.pop(name, None)
-
-    def load_table(self, name: str) -> Table:
-        row = self._row(name)
-        if row is None or row[1] is None:
-            raise FileNotFoundError(f"table {name} not found in catalog")
-        return Table(MD.read_metadata(row[0]), self.spark)
-
-    table = load_table
-
-    def table_exists(self, name: str) -> bool:
-        row = self._row(name)
-        return row is not None and row[1] is not None
-
     def list_tables(self, namespace: str = "default") -> list[str]:
         with self.backend.db() as c:
             rows = c.execute(
@@ -489,12 +344,7 @@ class JdbcCatalog(Catalog):
         ons, otbl = self._ident(old)
         nns, ntbl = self._ident(new)
         with self.backend.db() as c:
-            have_ns = c.execute(
-                "SELECT 1 FROM iceberg_namespace_properties"
-                " WHERE catalog_name = ? AND namespace = ? LIMIT 1",
-                (self.catalog_name, nns),
-            ).fetchone()
-            if not have_ns:
+            if not self._has_namespace(c, nns):
                 raise KeyError(f"namespace {nns!r} not found")
             try:
                 got = c.execute(
@@ -507,25 +357,6 @@ class JdbcCatalog(Catalog):
                 raise ValueError(f"table {new} already exists") from None
             if got.rowcount != 1:
                 raise FileNotFoundError(f"table {old} not found in catalog")
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        row = self._row(name)
-        if row is None:
-            raise FileNotFoundError(f"table {name} not found in catalog")
-        location = row[0]
-        ns, tbl = self._ident(name)
-        with self.backend.db() as c:
-            c.execute(
-                "DELETE FROM iceberg_tables WHERE catalog_name = ?"
-                " AND table_namespace = ? AND table_name = ?",
-                (self.catalog_name, ns, tbl),
-            )
-        if purge:
-            shutil.rmtree(location, ignore_errors=True)
-        else:
-            # deviation (documented): clear metadata so the name-derived
-            # location is reusable; data files stay for external readers
-            shutil.rmtree(os.path.join(location, "metadata"), ignore_errors=True)
 
     # -- views: DB pointer rows (reference JdbcViewOperations,
     # core/.../jdbc/JdbcViewOperations.java:1-206 + JdbcUtil V1
@@ -549,32 +380,19 @@ class JdbcCatalog(Catalog):
             ).fetchone()
         return row[0] if row else None
 
-    def _view_doc(self, name: str) -> dict:
+    def _view_log(self, name: str) -> list[dict]:
         ptr = self._view_ptr(name)
         if ptr is None:
             raise KeyError(f"view {name} not found")
         with open(ptr) as f:
-            return json.load(f)
+            return json.load(f)["versions"]
 
     def create_view(self, name: str, sql_text: str, replace: bool = False) -> None:
         ns, vname = self._ident(name)
         ptr = self._view_ptr(name)
         if ptr is not None and not replace:
             raise ValueError(f"view {name} already exists")
-        versions: list[dict] = []
-        if ptr is not None:
-            with open(ptr) as f:
-                versions = json.load(f)["versions"]
-        versions = versions + [{"sql": sql_text, "at": MD.now_ms()}]
-        doc_dir = os.path.join(self.warehouse, "_views", ns, vname)
-        os.makedirs(doc_dir, exist_ok=True)
-        # unique document name: two racing replacers write DIFFERENT
-        # files; only the CAS winner's becomes current
-        path = os.path.join(
-            doc_dir, f"v{len(versions)}-{uuid.uuid4().hex[:8]}.metadata.json"
-        )
-        with open(path, "w") as f:
-            json.dump({"name": name, "versions": versions}, f, indent=1)
+        path = self._write_view_doc(name, ptr, sql_text)
         c = self.backend._conn()
         try:
             c.execute("BEGIN IMMEDIATE")
@@ -615,19 +433,6 @@ class JdbcCatalog(Catalog):
             ).fetchall()
         return [n if ns == "default" else f"{ns}.{n}" for ns, n in rows]
 
-    def view_sql(self, name: str, version: int | None = None) -> str:
-        doc = self._view_doc(name)
-        return doc["versions"][-1 if version is None else version]["sql"]
-
-    def view_versions(self, name: str) -> list[dict]:
-        return self._view_doc(name)["versions"]
-
-    def load_view(self, name: str, version: int | None = None):
-        sql_text = self.view_sql(name, version)
-        for tname in self.list_tables():
-            self.load_table(tname).to_df().createOrReplaceTempView(tname)
-        return self.spark.sql(sql_text)
-
     def drop_view(self, name: str) -> None:
         ns, vname = self._ident(name)
         with self.backend.db() as c:
@@ -638,71 +443,4 @@ class JdbcCatalog(Catalog):
             )
             if got.rowcount != 1:
                 raise KeyError(f"view {name} not found")
-        shutil.rmtree(
-            os.path.join(self.warehouse, "_views", ns, vname),
-            ignore_errors=True,
-        )
-
-    def snapshot_table(self, source: str, dest: str) -> Table:
-        """Zero-copy clone under the DB-pointer protocol: the base
-        implementation copies metadata on the FILESYSTEM and re-reads
-        it, but JDBC readers resolve versions from the pointer row — so
-        the clone must be registered (row pointing at the copied
-        current version) BEFORE the location-rewriting commit runs
-        (code-review r12)."""
-        src_row = self._row(source)
-        if src_row is None or src_row[1] is None:
-            raise FileNotFoundError(f"table {source} not found in catalog")
-        src_loc = src_row[0]
-        ns, tbl = self._ident(dest)
-        dest_loc = self._fresh_location(dest)
-        cur_v = self.backend._version_of(src_row[1])
-        os.makedirs(dest_loc)
-        shutil.copytree(
-            MD.metadata_dir(src_loc),
-            MD.metadata_dir(dest_loc),
-            dirs_exist_ok=True,
-        )
-        ptr = os.path.join(
-            MD.metadata_dir(dest_loc), f"v{cur_v}.metadata.json"
-        )
-        with self.backend.db() as c:
-            try:
-                c.execute(
-                    "INSERT INTO iceberg_tables VALUES"
-                    " (?, ?, ?, ?, NULL, 'TABLE', ?)",
-                    (self.catalog_name, ns, tbl, ptr, dest_loc),
-                )
-            except sqlite3.IntegrityError:
-                shutil.rmtree(dest_loc, ignore_errors=True)
-                raise ValueError(f"table {dest} already exists") from None
-        meta = MD.read_metadata(dest_loc)
-        meta.location = dest_loc
-        meta.properties = dict(
-            meta.properties,
-            **{"snapshot-source": source, "gc.enabled": "false"},
-        )
-        MD.write_new_metadata(meta, meta.version)
-        return self.load_table(dest)
-
-    # JdbcCatalog.registerTable: adopt an existing metadata document
-    def register_table(self, name: str, metadata_location: str) -> Table:
-        ns, tbl = self._ident(name)
-        doc = json.loads(open(metadata_location, "rb").read())
-        location = doc["location"]
-        vm = _V_RE.match(os.path.basename(metadata_location))
-        if vm is None:
-            raise ValueError(
-                f"metadata file name must be v{{N}}.metadata.json: "
-                f"{metadata_location!r}"
-            )
-        with self.backend.db() as c:
-            try:
-                c.execute(
-                    "INSERT INTO iceberg_tables VALUES"
-                    " (?, ?, ?, ?, NULL, 'TABLE', ?)",
-                    (self.catalog_name, ns, tbl, metadata_location, location),
-                )
-            except sqlite3.IntegrityError:
-                raise ValueError(f"table {name} already exists") from None
-        return self.load_table(name)
+        shutil.rmtree(self._view_dir(name), ignore_errors=True)

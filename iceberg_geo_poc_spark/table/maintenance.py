@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from dataclasses import dataclass
 
 import pandas as pd
@@ -557,34 +556,26 @@ def delete_reachable_files(location: str, dry_run: bool = False) -> dict:
     posture as expire_snapshots.  Returns per-category counts.
     """
     from iceberg_geo_poc_spark.table.fileio import io_for
+    from iceberg_geo_poc_spark.table.pointer_catalog import metadata_version
 
     _fio = io_for(location)
     mdir = MD.metadata_dir(location)
     if not _fio.listdir(mdir):
         raise FileNotFoundError(f"no table metadata under {location}")
-    # numeric version sort: lexicographic would put v10 before v2, so the
-    # gc.enabled guard would be read from whatever version happens to sort
-    # last instead of the actual latest metadata
-    versions = sorted(
-        (
-            f for f in _fio.listdir(mdir)
-            if re.match(r"v(\d+)\.metadata\.json$", f)
-        ),
-        key=lambda f: int(re.match(r"v(\d+)", f).group(1)),
+    # every document, canonical or uuid-suffixed (metastore catalogs
+    # name theirs v{N}-{uuid8}.metadata.json)
+    versions = [f for f in _fio.listdir(mdir) if metadata_version(f) is not None]
+    # the guard reflects the CURRENT document only (the one the pointer
+    # names) — a table that set gc.enabled=false later must stay protected
+    gc_enabled = (
+        str(MD.read_metadata(location).properties.get("gc.enabled", "true"))
+        .lower() != "false"
     )
     data_files: set[str] = set()
     manifests: set[str] = set()
     stats_files: set[str] = set()
-    gc_enabled = True
     for v in versions:
         doc = json.loads(_fio.read_bytes(os.path.join(mdir, v)))
-        # the guard reflects the LATEST version's properties only — a
-        # table that set gc.enabled=false later must stay protected
-        if v == versions[-1]:
-            gc_enabled = (
-                str(doc.get("properties", {}).get("gc.enabled", "true")).lower()
-                != "false"
-            )
         for s in doc.get("snapshots", []):
             for rel in s.get("manifests") or [s["manifest"]]:
                 mpath = os.path.join(location, rel)

@@ -34,36 +34,28 @@ and metadata documents stay on the shared filesystem; the DAG holds
 POINTERS, so a commit is one small CAS regardless of table size —
 the property that matters at 100 TB.
 
-Deviation (documented, same as JdbcCatalog): ``drop_table`` clears the
-table's ``metadata/`` directory so the name-derived location is
-reusable; a renamed table keeps its location (reverse lookup maps the
-location back to its key).
+A renamed table keeps its location (reverse lookup maps the location
+back to its key).  ``drop_table`` clears the table's ``metadata/``
+directory only when no reference still sees the key.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-import os
-import shutil
 import threading
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-import re
-
 from iceberg_geo_poc_spark.table import metadata as MD
-from iceberg_geo_poc_spark.table.catalog import Catalog
-from iceberg_geo_poc_spark.table.jdbc_catalog import _V_RE, _split_metadata_path
-from iceberg_geo_poc_spark.table.table import Table
-
-# pointer documents carry a uuid suffix (real Iceberg's
-# <version>-<uuid>.metadata.json form): two catalog branches advancing
-# the SAME table to the same version number write DIFFERENT files, and
-# each branch's content pointer names its own — no clobbering across
-# divergent histories
-_VU_RE = re.compile(r"^v(\d+)(?:-[0-9a-f]{8})?\.metadata\.json$")
+from iceberg_geo_poc_spark.table.pointer_catalog import (
+    PointerCatalog,
+    PointerCommitBackend,
+    metadata_version,
+    split_metadata_path,
+)
 
 
 class NessieConflict(MD.CommitConflict):
@@ -234,61 +226,50 @@ class NessieService:
             return out
 
 
-class NessieCommitBackend(MD.CommitBackend):
-    """CommitBackend arbitrating metadata versions through Nessie
-    content entries on the backend's CURRENT reference (reference
-    NessieTableOperations.doCommit: load records the commit id, commit
-    CASes against it).  Same path routing as the JDBC backend:
-    version-hint reads resolve from the content pointer, ``v{N}`` docs
-    above the pointer are invisible orphans, everything else passes
-    through to the filesystem."""
+class NessieCommitBackend(PointerCommitBackend):
+    """Pointer backend over Nessie content entries on the backend's
+    CURRENT reference (reference NessieTableOperations.doCommit: load
+    records the commit id, commit CASes against it).
+
+    Documents carry a uuid suffix (real Iceberg's
+    ``<version>-<uuid>.metadata.json`` form): two catalog branches
+    advancing the SAME table to the same version number write DIFFERENT
+    files, and each branch's content pointer names its own."""
+
+    unique_documents = True
+    lost_race = (NessieConflict,)
 
     def __init__(self, service: NessieService, warehouse: str):
         self.service = service
         self.warehouse = warehouse.rstrip("/")
         self.ref = "main"
 
-    # -- key plumbing -------------------------------------------------------
-
-    def _derived_key(self, location: str) -> str:
-        rel = location[len(self.warehouse):].strip("/")
-        parts = [p for p in rel.split("/") if p]
-        if len(parts) == 1:
-            parts = ["default"] + parts
-        return ".".join(parts)
-
-    def _key_for_location(self, location: str) -> str | None:
-        """Location -> content key at the current ref: the name-derived
-        key fast path, else a bounded reverse scan (a RENAMED table
-        keeps its location under the old name-derived path)."""
-        k = self._derived_key(location)
-        c = self.service.get_content(self.ref, k)
-        if c is not None and c.get("metadataLocation", "").startswith(
-            location + "/"
-        ):
-            return k
-        for key, content in self.service.get_entries(self.ref).items():
-            if content.get("type") != "ICEBERG_TABLE":
-                continue
-            if content.get("metadataLocation", "").startswith(location + "/"):
-                return key
-        return None
-
-    def _pointer(self, location: str) -> tuple[str | None, str | None]:
-        key = self._key_for_location(location)
-        if key is None:
-            return None, None
-        c = self.service.get_content(self.ref, key)
-        return (c or {}).get("metadataLocation"), key
+    def _entry_for_location(self, location: str):
+        """(key, content) at the current ref: the name-derived key fast
+        path, else a bounded reverse scan (a RENAMED table keeps its
+        location under the old name-derived path)."""
+        try:
+            key = ".".join(self._ident_of(location))
+        except ValueError:
+            pass  # registered from outside the warehouse: scan below
+        else:
+            c = self.service.get_content(self.ref, key)
+            if c is not None and self._location_of(c) == location:
+                return key, c
+        for key, c in self.service.get_entries(self.ref).items():
+            if c.get("type") == "ICEBERG_TABLE" and self._location_of(c) == location:
+                return key, c
+        return None, None
 
     @staticmethod
-    def _version_of(ptr: str | None) -> int | None:
-        if ptr is None:
-            return None
-        m = _VU_RE.match(os.path.basename(ptr))
-        return int(m.group(1)) if m else None
+    def _location_of(content: dict) -> str | None:
+        split = split_metadata_path(content.get("metadataLocation") or "")
+        return split[0] if split else None
 
-    def _history_doc(self, location: str, n: int) -> str | None:
+    def _entry_pointer(self, content):
+        return (content or {}).get("metadataLocation")
+
+    def _older_doc(self, location: str, n: int) -> str | None:
         """Resolve metadata version ``n`` of ``location`` through THIS
         REF'S commit history (newest-first DAG walk): divergent
         branches legitimately write same-numbered documents into one
@@ -303,139 +284,42 @@ class NessieCommitBackend(MD.CommitBackend):
             while h is not None and h in svc._commits:
                 for v in svc._commits[h]["ops"].values():
                     ptr = (v or {}).get("metadataLocation")
-                    if not ptr or self._version_of(ptr) != n:
-                        continue
-                    sp = _split_metadata_path(ptr)
-                    if sp is not None and sp[0] == location:
+                    if metadata_version(ptr) == n and self._location_of(v) == location:
                         return ptr
                 h = svc._commits[h]["parent"]
         return None
 
-    # -- CommitBackend surface ----------------------------------------------
-
-    def read(self, path: str) -> bytes:
-        split = _split_metadata_path(path)
-        if split is not None:
-            location, leaf = split
-            if leaf == "version-hint.text":
-                ptr, _ = self._pointer(location)
-                v = self._version_of(ptr)
-                if v is None:
-                    raise FileNotFoundError(path)
-                return str(v).encode()
-            vm = _V_RE.match(leaf)
-            if vm:
-                ptr, _ = self._pointer(location)
-                v = self._version_of(ptr)
-                if v is None or int(vm.group(1)) > v:
-                    raise FileNotFoundError(path)
-                if int(vm.group(1)) == v:
-                    # the CURRENT version resolves through the pointer:
-                    # the document carries a uuid suffix the canonical
-                    # name doesn't know (divergent-branch safety)
-                    with open(ptr, "rb") as f:
-                        return f.read()
-                # OLDER versions: the canonical v{N} name was never
-                # written under this backend (every document is
-                # uuid-suffixed), so a reader pinned to a previous
-                # metadata version (static-table posture) resolves
-                # through THIS ref's commit history — never a glob,
-                # which could surface a DIVERGENT branch's same-
-                # numbered document (code-review r14)
-                if not os.path.exists(path):
-                    hist = self._history_doc(location, int(vm.group(1)))
-                    if hist is not None:
-                        with open(hist, "rb") as f:
-                            return f.read()
-        with open(path, "rb") as f:
-            return f.read()
-
-    def exists(self, path: str) -> bool:
-        split = _split_metadata_path(path)
-        if split is not None:
-            location, leaf = split
-            if leaf == "version-hint.text":
-                ptr, _ = self._pointer(location)
-                return ptr is not None
-            vm = _V_RE.match(leaf)
-            if vm:
-                ptr, _ = self._pointer(location)
-                v = self._version_of(ptr)
-                if v is None or int(vm.group(1)) > v:
-                    return False
-                return (
-                    int(vm.group(1)) == v
-                    or os.path.exists(path)
-                    or self._history_doc(location, int(vm.group(1)))
-                    is not None
-                )
-        return os.path.exists(path)
-
-    def put_if_absent(self, path: str, payload: bytes) -> bool:
-        split = _split_metadata_path(path)
-        vm = _V_RE.match(split[1]) if split else None
-        if vm is None:
-            return MD.PosixLinkBackend().put_if_absent(path, payload)
-        location, n = split[0], int(vm.group(1))
+    @contextmanager
+    def _swap_guard(self, location: str):
+        # the expected head is read BEFORE the pointer: the hash-CAS
+        # commit then refuses if this key moved since
         head = self.service.get_reference(self.ref)["hash"]
-        ptr, key = self._pointer(location)
-        cur_v = self._version_of(ptr)
-        expect = -1 if cur_v is None else cur_v
-        if n != expect + 1:
-            return False  # replay of an old version / racer already won
-        if key is None:
-            key = self._derived_key(location)
-            content_id = str(uuid.uuid4())
-        else:
-            content_id = (
-                self.service.get_content(self.ref, key) or {}
-            ).get("id") or str(uuid.uuid4())
-        # uuid-suffixed document (invisible until the commit points at
-        # it, and never clobbered by another branch writing the same
-        # version number), then the hash-CAS commit decides the winner
-        doc_path = os.path.join(
-            os.path.dirname(path),
-            f"v{n}-{uuid.uuid4().hex[:8]}.metadata.json",
+        key, content = self._entry_for_location(location)
+        yield key, content, head
+
+    def _swap(self, location, key, content, doc, head) -> bool:
+        key = key or ".".join(self._ident_of(location))
+        self.service.commit(
+            self.ref,
+            head,
+            {key: {
+                "type": "ICEBERG_TABLE",
+                "id": (content or {}).get("id") or str(uuid.uuid4()),
+                "metadataLocation": doc,
+            }},
+            meta={"message": f"commit {key} v{metadata_version(doc)}",
+                  "iceberg.operation": "commit"},
         )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{doc_path}.tmp"
-        with open(tmp, "wb") as f:
-            f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, doc_path)
-        try:
-            self.service.commit(
-                self.ref,
-                head,
-                {key: {
-                    "type": "ICEBERG_TABLE",
-                    "id": content_id,
-                    "metadataLocation": doc_path,
-                }},
-                meta={"message": f"commit {key} v{n}",
-                      "iceberg.operation": "commit"},
-            )
-            return True
-        except NessieConflict:
-            os.unlink(doc_path)  # orphan of a lost race
-            return False
-
-    def put(self, path: str, payload: bytes) -> None:
-        split = _split_metadata_path(path)
-        if split is not None and split[1] == "version-hint.text":
-            return  # the content pointer IS the hint
-        MD.PosixLinkBackend().put(path, payload)
-
-    def delete(self, path: str) -> None:
-        MD.PosixLinkBackend().delete(path)
+        return True
 
 
-class NessieCatalog(Catalog):
+class NessieCatalog(PointerCatalog):
     """Catalog whose registry is a Nessie commit DAG (reference
-    NessieCatalog).  Inherits the full Catalog surface; adds
-    catalog-level branches/tags, atomic multi-op rename, and
-    content-backed namespaces/views."""
+    NessieCatalog).  Adds catalog-level branches/tags, atomic multi-op
+    rename, and content-backed namespaces/views to the pointer-catalog
+    core."""
+
+    _nested_namespaces = True
 
     def __init__(
         self,
@@ -444,11 +328,11 @@ class NessieCatalog(Catalog):
         service: NessieService | None = None,
         ref: str = "main",
     ):
-        super().__init__(warehouse, spark)
         self.service = service or NessieService()
-        self.backend = NessieCommitBackend(self.service, warehouse)
+        super().__init__(
+            warehouse, spark, NessieCommitBackend(self.service, warehouse)
+        )
         self.backend.ref = ref
-        MD.register_commit_backend(warehouse.rstrip("/") + "/", self.backend)
         if self.service.get_content(ref, "default") is None:
             self.create_namespace("default", if_not_exists=True)
 
@@ -484,22 +368,52 @@ class NessieCatalog(Catalog):
     def ref_log(self, name: str | None = None) -> list[dict]:
         return self.service.log(name or self.ref)
 
-    # -- identifier plumbing -------------------------------------------------
-
-    @staticmethod
-    def _ident(name: str) -> tuple[str, str]:
-        if "." in name:
-            ns, tbl = name.rsplit(".", 1)
-            return ns, tbl
-        return "default", name
-
-    def _table_location(self, name: str) -> str:
-        ns, tbl = self._ident(name)
-        return os.path.join(self.warehouse, ns, tbl)
-
     def _key(self, name: str) -> str:
-        ns, tbl = self._ident(name)
-        return f"{ns}.{tbl}"
+        return ".".join(self._ident(name))
+
+    def _commit(self, ops: dict, message: str) -> None:
+        head = self.service.get_reference(self.ref)["hash"]
+        self.service.commit(self.ref, head, ops, meta={"message": message})
+
+    # -- pointer-catalog hooks ---------------------------------------------
+
+    def _table_pointer(self, name: str) -> str | None:
+        c = self.service.get_content(self.ref, self._key(name))
+        if c is None or c.get("type") != "ICEBERG_TABLE":
+            return None
+        return c["metadataLocation"]
+
+    def _put_entry(self, name: str, location: str, ptr: str | None) -> bool:
+        ns, _ = self._ident(name)
+        if self.service.get_content(self.ref, ns) is None:
+            raise KeyError(f"namespace {ns!r} not found")
+        if self.service.get_content(self.ref, self._key(name)) is not None:
+            raise ValueError(f"table {name} already exists")
+        if ptr is None:
+            return False  # the v0 commit puts the content
+        self._commit(
+            {self._key(name): {
+                "type": "ICEBERG_TABLE",
+                "id": str(uuid.uuid4()),
+                "metadataLocation": ptr,
+            }},
+            f"register {name}",
+        )
+        return True
+
+    def _drop_entry(self, name: str) -> str:
+        ptr = self._table_pointer(name)
+        if ptr is None:
+            raise FileNotFoundError(f"table {name} not found on ref {self.ref!r}")
+        self._commit({self._key(name): None}, f"drop {name}")
+        return split_metadata_path(ptr)[0]
+
+    def _still_referenced(self, name: str, location: str) -> bool:
+        # other refs still resolve their pinned documents
+        return any(
+            self.service.get_content(r, self._key(name)) is not None
+            for r in self.service._refs
+        )
 
     # -- namespaces (content entries, reference NessieIcebergClient
     # createNamespace: a commit Put of a NAMESPACE content) ------------------
@@ -514,13 +428,10 @@ class NessieCatalog(Catalog):
             if if_not_exists:
                 return
             raise ValueError(f"namespace {namespace!r} already exists")
-        head = self.service.get_reference(self.ref)["hash"]
-        self.service.commit(
-            self.ref,
-            head,
+        self._commit(
             {namespace: {"type": "NAMESPACE", "id": str(uuid.uuid4()),
                          "properties": dict(properties or {})}},
-            meta={"message": f"create namespace {namespace}"},
+            f"create namespace {namespace}",
         )
 
     def list_namespaces(self) -> list[str]:
@@ -541,12 +452,10 @@ class NessieCatalog(Catalog):
     ) -> None:
         props = self.namespace_properties(namespace)
         props.update(updates)
-        head = self.service.get_reference(self.ref)["hash"]
         cur = self.service.get_content(self.ref, namespace)
-        self.service.commit(
-            self.ref, head,
+        self._commit(
             {namespace: dict(cur, properties=props)},
-            meta={"message": f"alter namespace {namespace}"},
+            f"alter namespace {namespace}",
         )
 
     def drop_namespace(self, namespace: str) -> None:
@@ -562,38 +471,9 @@ class NessieCatalog(Catalog):
             raise ValueError(
                 f"namespace {namespace!r} is not empty ({len(inside)} keys)"
             )
-        head = self.service.get_reference(self.ref)["hash"]
-        self.service.commit(
-            self.ref, head, {namespace: None},
-            meta={"message": f"drop namespace {namespace}"},
-        )
+        self._commit({namespace: None}, f"drop namespace {namespace}")
 
-    # -- table registry ------------------------------------------------------
-
-    def create_table(self, name: str, schema_ddl: str, **kwargs) -> Table:
-        ns, _tbl = self._ident(name)
-        if self.service.get_content(self.ref, ns) is None:
-            raise KeyError(f"namespace {ns!r} not found")
-        if self.service.get_content(self.ref, self._key(name)) is not None:
-            raise ValueError(f"table {name} already exists")
-        # stale metadata under a reused name-derived location would make
-        # the v0 claim a replay — the drop deviation guarantees it's gone
-        return super().create_table(name, schema_ddl, **kwargs)
-
-    def load_table(self, name: str) -> Table:
-        c = self.service.get_content(self.ref, self._key(name))
-        if c is None or c.get("type") != "ICEBERG_TABLE":
-            raise FileNotFoundError(
-                f"table {name} not found on ref {self.ref!r}"
-            )
-        split = _split_metadata_path(c["metadataLocation"])
-        return Table(MD.read_metadata(split[0]), self.spark)
-
-    table = load_table
-
-    def table_exists(self, name: str) -> bool:
-        c = self.service.get_content(self.ref, self._key(name))
-        return c is not None and c.get("type") == "ICEBERG_TABLE"
+    # -- table listing and rename ----------------------------------------------
 
     def list_tables(self, namespace: str = "default") -> list[str]:
         out = []
@@ -618,98 +498,9 @@ class NessieCatalog(Catalog):
             raise FileNotFoundError(f"table {old} not found on ref {self.ref!r}")
         if self.service.get_content(self.ref, self._key(new)) is not None:
             raise ValueError(f"table {new} already exists")
-        head = self.service.get_reference(self.ref)["hash"]
-        self.service.commit(
-            self.ref, head,
-            {self._key(old): None, self._key(new): c},
-            meta={"message": f"rename {old} -> {new}"},
+        self._commit(
+            {self._key(old): None, self._key(new): c}, f"rename {old} -> {new}"
         )
-
-    def drop_table(self, name: str, purge: bool = False) -> None:
-        c = self.service.get_content(self.ref, self._key(name))
-        if c is None:
-            raise FileNotFoundError(f"table {name} not found on ref {self.ref!r}")
-        location = _split_metadata_path(c["metadataLocation"])[0]
-        head = self.service.get_reference(self.ref)["hash"]
-        self.service.commit(
-            self.ref, head, {self._key(name): None},
-            meta={"message": f"drop {name}"},
-        )
-        if purge:
-            shutil.rmtree(location, ignore_errors=True)
-        else:
-            # deviation (documented): clear metadata so the name-derived
-            # location is reusable on THIS ref; other refs still resolve
-            # their pinned documents... which this would break — so the
-            # metadata dir is only cleared when NO other ref sees the key
-            still_visible = any(
-                self.service.get_content(r, self._key(name)) is not None
-                for r in self.service._refs
-            )
-            if not still_visible:
-                shutil.rmtree(
-                    os.path.join(location, "metadata"), ignore_errors=True
-                )
-
-    # NessieCatalog.registerTable: adopt an existing metadata document
-    def register_table(self, name: str, metadata_location: str) -> Table:
-        ns, _tbl = self._ident(name)
-        if self.service.get_content(self.ref, ns) is None:
-            raise KeyError(f"namespace {ns!r} not found")
-        if self.service.get_content(self.ref, self._key(name)) is not None:
-            raise ValueError(f"table {name} already exists")
-        head = self.service.get_reference(self.ref)["hash"]
-        self.service.commit(
-            self.ref, head,
-            {self._key(name): {
-                "type": "ICEBERG_TABLE",
-                "id": str(uuid.uuid4()),
-                "metadataLocation": metadata_location,
-            }},
-            meta={"message": f"register {name}"},
-        )
-        return self.load_table(name)
-
-    def snapshot_table(self, source: str, dest: str) -> Table:
-        """Zero-copy clone under the content-pointer protocol: copy the
-        source's metadata documents and commit a content row whose
-        pointer names the copied current version (same shape as the
-        JDBC override — readers resolve from the pointer, so the row
-        must exist before the location-rewriting commit)."""
-        c = self.service.get_content(self.ref, self._key(source))
-        if c is None or c.get("type") != "ICEBERG_TABLE":
-            raise FileNotFoundError(f"table {source} not found on ref {self.ref!r}")
-        src_loc = _split_metadata_path(c["metadataLocation"])[0]
-        dest_loc = self._table_location(dest)
-        if os.path.exists(dest_loc):
-            raise ValueError(f"table {dest} already exists")
-        os.makedirs(dest_loc)
-        shutil.copytree(
-            MD.metadata_dir(src_loc), MD.metadata_dir(dest_loc),
-            dirs_exist_ok=True,
-        )
-        ptr = os.path.join(
-            MD.metadata_dir(dest_loc),
-            os.path.basename(c["metadataLocation"]),
-        )
-        head = self.service.get_reference(self.ref)["hash"]
-        self.service.commit(
-            self.ref, head,
-            {self._key(dest): {
-                "type": "ICEBERG_TABLE",
-                "id": str(uuid.uuid4()),
-                "metadataLocation": ptr,
-            }},
-            meta={"message": f"snapshot {source} -> {dest}"},
-        )
-        meta = MD.read_metadata(dest_loc)
-        meta.location = dest_loc
-        meta.properties = dict(
-            meta.properties,
-            **{"snapshot-source": source, "gc.enabled": "false"},
-        )
-        MD.write_new_metadata(meta, meta.version)
-        return self.load_table(dest)
 
     # -- views (content-backed, reference NessieViewOperations) --------------
 
@@ -720,22 +511,20 @@ class NessieCatalog(Catalog):
             raise ValueError(f"view {name} already exists")
         versions = list((cur or {}).get("versions") or [])
         versions.append({"sql": sql_text, "at": MD.now_ms()})
-        head = self.service.get_reference(self.ref)["hash"]
-        self.service.commit(
-            self.ref, head,
+        self._commit(
             {key: {
                 "type": "ICEBERG_VIEW",
                 "id": (cur or {}).get("id") or str(uuid.uuid4()),
                 "versions": versions,
             }},
-            meta={"message": f"{'replace' if cur else 'create'} view {name}"},
+            f"{'replace' if cur else 'create'} view {name}",
         )
 
-    def _view_content(self, name: str) -> dict:
+    def _view_log(self, name: str) -> list[dict]:
         c = self.service.get_content(self.ref, self._key(name) + "@view")
         if c is None or c.get("type") != "ICEBERG_VIEW":
             raise KeyError(f"view {name} not found")
-        return c
+        return c["versions"]
 
     def list_views(self) -> list[str]:
         out = []
@@ -747,32 +536,8 @@ class NessieCatalog(Catalog):
             out.append(v if ns == "default" else ident)
         return sorted(out)
 
-    def view_sql(self, name: str, version: int | None = None) -> str:
-        vs = self._view_content(name)["versions"]
-        return vs[-1 if version is None else version]["sql"]
-
-    def view_versions(self, name: str) -> list[dict]:
-        return list(self._view_content(name)["versions"])
-
-    def load_view(self, name: str, version: int | None = None):
-        sql_text = self.view_sql(name, version)
-        # register EVERY table on the ref under its bare name (view SQL
-        # references tables unqualified, whatever their namespace)
-        for k, c in self.service.get_entries(self.ref).items():
-            if c.get("type") != "ICEBERG_TABLE":
-                continue
-            split = _split_metadata_path(c["metadataLocation"])
-            Table(
-                MD.read_metadata(split[0]), self.spark
-            ).to_df().createOrReplaceTempView(k.rpartition(".")[2])
-        return self.spark.sql(sql_text)
-
     def drop_view(self, name: str) -> None:
         key = self._key(name) + "@view"
         if self.service.get_content(self.ref, key) is None:
             raise KeyError(f"view {name} not found")
-        head = self.service.get_reference(self.ref)["hash"]
-        self.service.commit(
-            self.ref, head, {key: None},
-            meta={"message": f"drop view {name}"},
-        )
+        self._commit({key: None}, f"drop view {name}")

@@ -41,8 +41,10 @@ import threading
 from pyspark.sql import SparkSession
 
 from iceberg_geo_poc_spark.table import metadata as MD
-from iceberg_geo_poc_spark.table.jdbc_catalog import _split_metadata_path
-from iceberg_geo_poc_spark.table.nessie_catalog import _VU_RE
+from iceberg_geo_poc_spark.table.pointer_catalog import (
+    metadata_version,
+    split_metadata_path,
+)
 from iceberg_geo_poc_spark.table.table import Table
 
 _READ_ONLY = "SnowflakeCatalog does not currently support {}"
@@ -220,19 +222,12 @@ class SnowflakeCatalog:
         pin to it (SnowflakeTableOperations.doRefresh ->
         refreshFromMetadataLocation).  The returned table is read-only:
         Snowflake is the writer of record."""
-        import os as _os
-
         ptr = self._metadata_location(name)
-        split = _split_metadata_path(ptr)
-        if split is None:
-            raise ValueError(f"not a metadata document path: {ptr!r}")
-        # the shared uuid-suffixed version pattern (one source of truth
-        # with the document-writing backends)
-        m = _VU_RE.match(_os.path.basename(ptr))
-        if not m:
+        version = metadata_version(ptr)
+        if split_metadata_path(ptr) is None or version is None:
             raise ValueError(f"not a metadata document path: {ptr!r}")
         doc = json.loads(MD.backend_for(ptr).read(ptr))
-        meta = MD.TableMetadata.from_json(doc, int(m.group(1)))
+        meta = MD.TableMetadata.from_json(doc, version)
         t = Table(meta, self.spark)
         t._static = _READ_ONLY.format(
             "modifying tables (resolve-only; Snowflake is the writer "

@@ -176,3 +176,57 @@ def test_renamed_table_keeps_location_and_commits(kind, spark, tmp_path):
     moved.append(_df(spark, 4, 6))
     assert _count(cat, "after") == 6, kind
     assert not cat.table_exists("before"), kind
+
+
+@pytest.mark.parametrize("kind", ["jdbc", "hive", "nessie"])
+def test_load_view_binds_its_own_namespace(kind, spark, tmp_path):
+    """A view's unqualified table names resolve in the view's namespace,
+    not in ``default`` and not in whichever namespace wrote last."""
+    cat = _make_catalog(kind, spark, tmp_path)
+    cat.create_namespace("ns1")
+    cat.create_namespace("zz")
+    cat.create_table("ns1.t", "id BIGINT, v STRING")
+    cat.create_table("t", "id BIGINT, v STRING").append(_df(spark, 0, 7))
+    cat.create_table("zz.t", "id BIGINT, v STRING").append(_df(spark, 0, 11))
+    cat.load_table("ns1.t").append(_df(spark, 0, 3))
+    cat.create_view("ns1.v", "SELECT id FROM t")
+    assert cat.load_view("ns1.v").count() == 3, kind
+    cat.create_view("dv", "SELECT id FROM t")
+    assert cat.load_view("dv").count() == 7, kind
+
+
+@pytest.mark.parametrize("kind", ["glue", "nessie"])
+def test_static_load_of_uuid_suffixed_pointer_document(kind, spark, tmp_path):
+    from iceberg_geo_poc_spark.table import metadata as MD
+    from iceberg_geo_poc_spark.table.pointer_catalog import split_metadata_path
+
+    cat = _make_catalog(kind, spark, tmp_path)
+    t = cat.create_table("st", "id BIGINT, v STRING")
+    t.append(_df(spark, 0, 4))
+    if kind == "glue":
+        ptr = cat.service.get_table("default", "st")["parameters"][
+            "metadata_location"
+        ]
+    else:
+        ptr = cat.service.get_content(cat.ref, "default.st")["metadataLocation"]
+    assert split_metadata_path(ptr)[0] == t.location
+    assert not ptr.endswith("/v1.metadata.json"), "expected a uuid suffix"
+    cat.load_table("st").append(_df(spark, 4, 6))
+    pinned = cat.load_static_table(ptr)
+    assert pinned.meta.version == 1
+    assert pinned.to_df().count() == 4
+    assert MD.read_metadata(t.location).version == 2
+
+
+def test_purge_dry_run_refuses_glue_snapshot_clone(spark, tmp_path):
+    """The clone references its source's data files (gc.enabled=false):
+    the purge guard must be read from the clone's current document, which
+    a Glue clone names ``v{N}-{uuid8}.metadata.json``."""
+    from iceberg_geo_poc_spark.table.maintenance import delete_reachable_files
+
+    cat = _make_catalog("glue", spark, tmp_path)
+    cat.create_table("src", "id BIGINT, v STRING").append(_df(spark, 0, 5))
+    clone = cat.snapshot_table("src", "dst")
+    with pytest.raises(ValueError, match="gc.enabled=false"):
+        delete_reachable_files(clone.location, dry_run=True)
+    assert _count(cat, "src") == 5

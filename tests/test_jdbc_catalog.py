@@ -190,16 +190,41 @@ def test_snapshot_table_under_jdbc(spark, cat):
 
 
 def test_register_table_adopts_metadata(spark, cat, tmp_path):
-    t = cat.create_table("t7", "a BIGINT, b STRING")
+    """An adopted table's reads and commits follow the ADOPTER's row:
+    the location is routed to this catalog's backend, so its pointer is
+    the one read and advanced."""
+    from iceberg_geo_poc_spark.table import Catalog
+
+    plain = Catalog(str(tmp_path / "plainwh"), spark)
+    t = plain.create_table("t7", "a BIGINT, b STRING")
     t.append(_df(spark, 0, 6))
     mpath = os.path.join(t.location, "metadata", "v1.metadata.json")
-    cat2 = JdbcCatalog(
-        str(tmp_path / "wh2"), spark,
-        db_path=str(tmp_path / "other.db"), catalog_name="adopter",
-    )
-    got = cat2.register_table("adopted", mpath)
+    got = cat.register_table("adopted", mpath)
     assert got.to_df().count() == 6
-    assert cat2.table_exists("adopted")
+    assert cat.table_exists("adopted")
+    assert cat._row("adopted") == (t.location, mpath)
+    cat.load_table("adopted").append(_df(spark, 6, 9))
+    loc, ptr = cat._row("adopted")
+    assert ptr == os.path.join(loc, "metadata", "v2.metadata.json")
+    assert cat.load_table("adopted").to_df().count() == 9
+    assert MD.read_metadata(t.location).version == 2
+
+
+def test_register_table_refuses_location_of_another_catalog(spark, cat, tmp_path):
+    """A location another catalog arbitrates cannot be adopted: commit
+    routing is by location, so the adopter's row would never be read."""
+    other = JdbcCatalog(
+        str(tmp_path / "wh2"), spark,
+        db_path=str(tmp_path / "other.db"), catalog_name="owner",
+    )
+    t = other.create_table("t7", "a BIGINT, b STRING")
+    t.append(_df(spark, 0, 6))
+    mpath = os.path.join(t.location, "metadata", "v1.metadata.json")
+    with pytest.raises(ValueError, match="another catalog"):
+        cat.register_table("adopted", mpath)
+    assert not cat.table_exists("adopted")
+    t.append(_df(spark, 6, 10))
+    assert other.load_table("t7").to_df().count() == 10
 
 
 def test_namespace_ddl_statements(spark, cat):
