@@ -83,7 +83,7 @@ BENCH_QUERIES = [
     # irregular-polygon kernel (_fast_polypoly_predicate)
     ("geo_diamond_join", "geo_diamond_join_counts"),
     # MIXED-vertex-count polygon join: same geometry as the diamond join
-    # but ragged WKB, so the kernel takes _polys_packed_ragged.
+    # but ragged WKB, so the kernel takes _polys_ragged_core.
     # CONTRACT (driver-run ratio, the only stable measurement): ragged
     # <= 1.8x diamond.  Driver history: 1.63x (r5), 1.71x (r6), 2.01x
     # (r7, VIOLATED) — the drift was genuine extra edge work in the

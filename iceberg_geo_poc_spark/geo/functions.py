@@ -1,18 +1,23 @@
-"""Geo scalar functions as Arrow-batched pandas UDFs.
+"""Geo scalar functions as Arrow-batched Spark UDFs.
 
 The reference deliberately keeps scalar geo functions out of the table
 format and defers to an engine library via an SPI (reference
 spark/v3.5/spark/src/main/java/org/apache/iceberg/spark/geo/spi/
 GeospatialLibrary.java:25-36); this module is our engine library.  The
 function set covers what the reference's tests exercise plus envelope
-math used by its metrics writer (SURVEY §2.7): st_point,
-st_geomfromtext/wkb/geojson, st_astext/asbinary/asgeojson,
-st_intersects, st_covers, st_within, st_contains, st_buffer,
-st_envelope, st_centroid, st_x/st_y/st_xmin/st_ymin/st_xmax/st_ymax,
-st_area, st_length, st_distance, st_hilbert.
+math used by its metrics writer (SURVEY §2.7).  ``spark.sql`` sees
+the 27 functions in ``_SQL_FUNCTIONS``: st_point, st_makeenvelope,
+st_geomfromtext/wkb/geojson, st_astext/asgeojson,
+st_x/st_y/st_xmin/st_ymin/st_xmax/st_ymax, st_area, st_length,
+st_isempty, st_intersects, st_covers, st_within, st_contains,
+st_disjoint, st_distance, st_dwithin, st_buffer, st_envelope,
+st_centroid, st_hilbert.
 
-Column representation: BinaryType carrying standard WKB.  All UDFs are
-``pandas_udf`` (Arrow batch transfer); nothing here is row-at-a-time.
+Column representation: BinaryType carrying standard WKB.  Every UDF is
+Arrow-batched.  Functions with a vectorized fast path (constructors,
+coordinate/bounds accessors, predicates, distance, the fused pair
+kernels) are ``arrow_udf`` over ``pa.Array``; the per-row rest
+(codecs, st_area, st_buffer, st_hilbert, ...) are ``pandas_udf``.
 """
 
 from __future__ import annotations
@@ -58,64 +63,15 @@ def _decode_series(s: pd.Series) -> list:
 # two numpy float64 arrays with one frombuffer.  Anything non-point (or a
 # non-rectangular literal) falls back to the generic kernel, so semantics
 # are unchanged — this is a physical fast path, not a semantic fork.
-
-_POINT_HEADER = b"\x01\x01\x00\x00\x00"
-
-
-def _points_xy(s):
-    """(x, y, valid) numpy views if every non-null value is plain point WKB."""
-    if _is_arrow(s):
-        return _points_xy_a(s)
-    arr = s.to_numpy(dtype=object, copy=False)
-    n = len(arr)
-    mask = np.zeros(n, dtype=bool)
-    chunks = []
-    for i, v in enumerate(arr):
-        if v is None:
-            continue
-        if len(v) == 21 and bytes(v[:5]) == _POINT_HEADER:
-            mask[i] = True
-            chunks.append(bytes(v))
-        else:
-            return None
-    x = np.full(n, np.nan)
-    y = np.full(n, np.nan)
-    if chunks:
-        xy = np.frombuffer(b"".join(chunks), dtype=[("h", "V5"), ("x", "<f8"), ("y", "<f8")])
-        x[mask] = xy["x"]
-        y[mask] = xy["y"]
-    return x, y, mask
-
-
-def _const_geometry(s):
-    """Decoded geometry if the whole batch is one identical literal."""
-    if _is_arrow(s):
-        return _const_geometry_a(s)
-    if len(s) == 0:
-        return None
-    v0 = s.iloc[0]
-    if v0 is None:
-        return None
-    v0 = bytes(v0)
-    for v in s.to_numpy(dtype=object, copy=False):
-        if v is None or bytes(v) != v0:
-            return None
-    return geometry_from_wkb(v0)
-
-
-# -- Arrow-buffer accessors (the arrow_udf hot path) -------------------------
 #
-# pandas_udf hands every BinaryType batch to Python as an object-dtype
-# Series — one heap-allocated ``bytes`` per row on the way in, and the
-# packers immediately re-concatenate them (``b"".join``) into the
-# contiguous buffer Arrow ALREADY had.  arrow_udf (Spark 4.1) hands the
-# raw ``pa.Array`` instead, whose (validity, offsets, data) buffers map
-# straight onto the numpy views the vectorized kernels consume: zero
-# per-row Python objects cross the boundary in either direction (a
-# binary column is one data buffer plus an offsets array; re-slicing it
-# is offset arithmetic, not byte copying).  Every accessor below mirrors
-# its pandas twin exactly; the predicate/builder UDFs dispatch on input
-# type so the pandas path (tests, internal callers) is unchanged.
+# The accessors read Arrow buffers directly: arrow_udf (Spark 4.1) hands
+# the kernel the raw ``pa.Array``, whose (validity, offsets, data)
+# buffers map straight onto the numpy views the vectorized kernels
+# consume.  No per-row Python object crosses the boundary in either
+# direction (a binary column is one data buffer plus an offsets array;
+# re-slicing it is offset arithmetic, not byte copying).  Every accessor
+# takes a pa.(Large)BinaryArray or ChunkedArray and returns None when
+# its batch shape does not apply.
 
 
 def _bin_views(arr):
@@ -224,12 +180,10 @@ def _var_binary(raw, offsets, valid=None):
 _POINT_HEADER_ARR = np.frombuffer(b"\x01\x01\x00\x00\x00", dtype=np.uint8)
 
 
-def _is_arrow(x) -> bool:
-    return isinstance(x, (pa.Array, pa.ChunkedArray))
-
-
-def _points_xy_a(s):
-    """Arrow twin of _points_xy: (x, y, valid) or None."""
+def _points_xy(s):
+    """(x, y, valid) numpy arrays if every non-null value is plain point
+    WKB, else None.  x and y are both NaN at null and empty rows; a
+    point with one NaN coordinate is empty, as in the scalar kernel."""
     v = _bin_views(s)
     if v is None:
         return None
@@ -249,11 +203,14 @@ def _points_xy_a(s):
             return None
         x[mask] = np.ascontiguousarray(mat[:, 5:13]).view("<f8").ravel()
         y[mask] = np.ascontiguousarray(mat[:, 13:21]).view("<f8").ravel()
+        empty = np.isnan(x) | np.isnan(y)
+        x[empty] = y[empty] = np.nan
     return x, y, mask
 
 
-def _const_geometry_a(s):
-    """Arrow twin of _const_geometry (None on any null, like pandas)."""
+def _const_geometry(s):
+    """Decoded geometry if the whole batch is one identical non-null
+    literal, else None."""
     v = _bin_views(s)
     if v is None:
         return None
@@ -284,19 +241,11 @@ def _rect_bounds(g):
     return b
 
 
-def _wrap_bool(res: np.ndarray, mask, like):
-    """Package a predicate result (bool array + validity mask) in the
-    container matching the input: pd.Series of object bools/None for
-    pandas inputs (the historical contract, kept for tests and internal
-    callers), pa.Array for arrow inputs."""
-    if _is_arrow(like):
-        if mask is None:
-            return pa.array(res)
-        return pa.array(res, type=pa.bool_(), mask=~np.asarray(mask, dtype=bool))
-    out = pd.Series(res.astype(object))
-    if mask is not None:
-        out[~mask] = None
-    return out
+def _wrap_bool(res: np.ndarray, mask) -> pa.Array:
+    """A predicate result (bool array + validity mask) as a pa.Array."""
+    if mask is None:
+        return pa.array(res)
+    return pa.array(res, type=pa.bool_(), mask=~np.asarray(mask, dtype=bool))
 
 
 def _fast_rect_predicate(name: str, a, b):
@@ -333,7 +282,7 @@ def _fast_rect_predicate(name: str, a, b):
             res = strict if swapped else None
         if res is None:
             return None
-        return _wrap_bool(res, mask, a)
+        return _wrap_bool(res, mask)
     return None
 
 
@@ -404,68 +353,6 @@ def st_asgeojson_udf(wkb: pd.Series) -> pd.Series:
     )
 
 
-def _coord_accessor(wkb: pd.Series, idx: int) -> pd.Series:
-    pts = _points_xy(wkb)
-    if pts is not None:
-        return pd.Series(pts[idx])
-    out = np.full(len(wkb), np.nan)
-    for i, v in enumerate(wkb):
-        if v is None:
-            continue
-        g = geometry_from_wkb(v)
-        if isinstance(g, G.Point) and not g.is_empty():
-            out[i] = g.x if idx == 0 else g.y
-    return pd.Series(out)
-
-
-@pandas_udf(DoubleType())
-def st_x_udf(wkb: pd.Series) -> pd.Series:
-    return _coord_accessor(wkb, 0)
-
-
-@pandas_udf(DoubleType())
-def st_y_udf(wkb: pd.Series) -> pd.Series:
-    return _coord_accessor(wkb, 1)
-
-
-def _bounds_accessor(wkb: pd.Series, idx: int) -> pd.Series:
-    pts = _points_xy(wkb)
-    if pts is not None:
-        # a point's bbox is itself: idx 0/2 -> x, 1/3 -> y
-        return pd.Series(pts[idx % 2])
-    pk = _polys_packed(wkb)
-    if pk is not None:
-        return pd.Series((pk.bx0, pk.by0, pk.bx1, pk.by1)[idx])
-    out = np.full(len(wkb), np.nan)
-    for i, v in enumerate(wkb):
-        if v is None:
-            continue
-        b = geometry_from_wkb(v).bounds
-        if b is not None:
-            out[i] = b[idx]
-    return pd.Series(out)
-
-
-@pandas_udf(DoubleType())
-def st_xmin_udf(wkb: pd.Series) -> pd.Series:
-    return _bounds_accessor(wkb, 0)
-
-
-@pandas_udf(DoubleType())
-def st_ymin_udf(wkb: pd.Series) -> pd.Series:
-    return _bounds_accessor(wkb, 1)
-
-
-@pandas_udf(DoubleType())
-def st_xmax_udf(wkb: pd.Series) -> pd.Series:
-    return _bounds_accessor(wkb, 2)
-
-
-@pandas_udf(DoubleType())
-def st_ymax_udf(wkb: pd.Series) -> pd.Series:
-    return _bounds_accessor(wkb, 3)
-
-
 _BOUNDS_TYPE = StructType(
     [
         StructField("xmin", DoubleType()),
@@ -476,10 +363,10 @@ _BOUNDS_TYPE = StructType(
 )
 
 
-def _bounds_cols(wkb) -> dict:
-    """All four envelope bounds as numpy columns (pandas or arrow
-    input; points hit the vectorized numpy path; other shapes decode
-    once, not four times)."""
+def _bounds_cols(wkb: pa.Array) -> dict:
+    """All four envelope bounds as numpy columns, NaN where a row has
+    none (null or empty).  Points, rectangles and polygons hit the
+    vectorized paths; other shapes decode once, not four times."""
     pts = _points_xy(wkb)
     if pts is not None:
         x, y, _mask = pts
@@ -492,10 +379,9 @@ def _bounds_cols(wkb) -> dict:
     if pk is not None:
         # any-polygon batch: bboxes fall out of the packed decode
         return {"xmin": pk.bx0, "ymin": pk.by0, "xmax": pk.bx1, "ymax": pk.by1}
-    rows = wkb.to_pandas() if _is_arrow(wkb) else wkb
-    n = len(rows)
+    n = len(wkb)
     cols = {k: np.full(n, np.nan) for k in ("xmin", "ymin", "xmax", "ymax")}
-    for i, v in enumerate(rows):
+    for i, v in enumerate(wkb.to_pylist()):
         if v is None:
             continue
         b = geometry_from_wkb(v).bounds
@@ -504,10 +390,58 @@ def _bounds_cols(wkb) -> dict:
     return cols
 
 
+# The accessor UDFs below return float64 arrays built with
+# from_pandas=True, so NaN («no such coordinate») maps to null.
+
+
+def _coord_arrow(wkb: pa.Array, idx: int) -> pa.Array:
+    """x (idx 0) or y (idx 1) of each point row; null for null, empty
+    and non-point rows."""
+    pts = _points_xy(wkb)
+    if pts is not None:
+        return pa.array(pts[idx], from_pandas=True)
+    out = np.full(len(wkb), np.nan)
+    for i, v in enumerate(wkb.to_pylist()):
+        if v is None:
+            continue
+        g = geometry_from_wkb(v)
+        if isinstance(g, G.Point) and not g.is_empty():
+            out[i] = g.x if idx == 0 else g.y
+    return pa.array(out, from_pandas=True)
+
+
+@arrow_udf(DoubleType())
+def st_x_udf(wkb: pa.Array) -> pa.Array:
+    return _coord_arrow(wkb, 0)
+
+
+@arrow_udf(DoubleType())
+def st_y_udf(wkb: pa.Array) -> pa.Array:
+    return _coord_arrow(wkb, 1)
+
+
+@arrow_udf(DoubleType())
+def st_xmin_udf(wkb: pa.Array) -> pa.Array:
+    return pa.array(_bounds_cols(wkb)["xmin"], from_pandas=True)
+
+
+@arrow_udf(DoubleType())
+def st_ymin_udf(wkb: pa.Array) -> pa.Array:
+    return pa.array(_bounds_cols(wkb)["ymin"], from_pandas=True)
+
+
+@arrow_udf(DoubleType())
+def st_xmax_udf(wkb: pa.Array) -> pa.Array:
+    return pa.array(_bounds_cols(wkb)["xmax"], from_pandas=True)
+
+
+@arrow_udf(DoubleType())
+def st_ymax_udf(wkb: pa.Array) -> pa.Array:
+    return pa.array(_bounds_cols(wkb)["ymax"], from_pandas=True)
+
+
 def _bounds_struct(wkb: pa.Array) -> pa.Array:
     cols = _bounds_cols(wkb)
-    # from_pandas=True: NaN («no bounds») maps to null, exactly as the
-    # historical pandas_udf DataFrame conversion did
     return pa.StructArray.from_arrays(
         [
             pa.array(cols[k], from_pandas=True)
@@ -616,9 +550,6 @@ def _poly_locate_vec(poly, px: np.ndarray, py: np.ndarray) -> np.ndarray:
     return out
 
 
-_RECT_WKB_HEADER = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
-
-
 def _rects_minmax(raw):
     """(xmin, ymin, xmax, ymax) per row of an (m, 93) rect-WKB payload
     matrix, or None when any row is not an axis-aligned rectangle."""
@@ -646,8 +577,11 @@ _RECT_HEADER_ARR = np.frombuffer(
 )
 
 
-def _rects_bounds_a(s):
-    """Arrow twin of _rects_bounds."""
+def _rects_bounds(s):
+    """(x0, y0, x1, y1, valid) numpy arrays if every non-null value is a
+    single-ring 5-point polygon WKB forming an axis-aligned rectangle —
+    the st_makeenvelope / envelope() output shape.  93 fixed bytes per
+    value, so a whole batch decodes with one gather like points."""
     v = _bin_views(s)
     if v is None:
         return None
@@ -674,39 +608,7 @@ def _rects_bounds_a(s):
     return x0, y0, x1, y1, mask
 
 
-def _rects_bounds(s):
-    """(x0, y0, x1, y1, valid) numpy arrays if every non-null value is a
-    single-ring 5-point polygon WKB forming an axis-aligned rectangle —
-    the st_makeenvelope / envelope() output shape.  93 fixed bytes per
-    value, so a whole batch decodes with one frombuffer like points."""
-    if _is_arrow(s):
-        return _rects_bounds_a(s)
-    arr = s.to_numpy(dtype=object, copy=False)
-    n = len(arr)
-    mask = np.zeros(n, dtype=bool)
-    chunks = []
-    for i, v in enumerate(arr):
-        if v is None:
-            continue
-        if len(v) == 93 and bytes(v[:13]) == _RECT_WKB_HEADER:
-            mask[i] = True
-            chunks.append(bytes(v))
-        else:
-            return None
-    x0 = np.full(n, np.nan)
-    y0 = np.full(n, np.nan)
-    x1 = np.full(n, np.nan)
-    y1 = np.full(n, np.nan)
-    if chunks:
-        raw = np.frombuffer(b"".join(chunks), dtype=np.uint8).reshape(-1, 93)
-        mm = _rects_minmax(raw)
-        if mm is None:
-            return None
-        x0[mask], y0[mask], x1[mask], y1[mask] = mm
-    return x0, y0, x1, y1, mask
-
-
-def _fast_rect_rect_predicate(name: str, a: pd.Series, b: pd.Series):
+def _fast_rect_rect_predicate(name: str, a: pa.Array, b: pa.Array):
     """Vectorized rectangle-vs-rectangle evaluation (both sides columns,
     no constant needed) — the envelope-join workload.  For axis-aligned
     rectangles the kernel's semantics reduce to closed-interval bbox
@@ -735,10 +637,10 @@ def _fast_rect_rect_predicate(name: str, a: pd.Series, b: pd.Series):
         res = a_covers_b
     else:  # within
         res = (bx0 <= ax0) & (by0 <= ay0) & (bx1 >= ax1) & (by1 >= ay1)
-    return _wrap_bool(res, ma & mb, a)
+    return _wrap_bool(res, ma & mb)
 
 
-def _fast_poly_predicate(name: str, a: pd.Series, b: pd.Series):
+def _fast_poly_predicate(name: str, a: pa.Array, b: pa.Array):
     """Vectorized point-column vs constant (multi)polygon evaluation;
     None when the batch shape doesn't apply.  Covers the polygon-window
     workloads the rect fast path can't (concave shells, holes), with
@@ -779,7 +681,7 @@ def _fast_poly_predicate(name: str, a: pd.Series, b: pd.Series):
                 res = ((loc == 1) & valid) if swapped else None
             if res is None:
                 return None
-        return _wrap_bool(res, mask, a)
+        return _wrap_bool(res, mask)
     return None
 
 
@@ -849,43 +751,34 @@ def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
 _POLY_TYPE_BYTES = b"\x03\x00\x00\x00"
 
 
-_MPOLY_TYPE_BYTES = b"\x06\x00\x00\x00"
+def _no_rings(pk: _PackedPolys) -> _PackedPolys:
+    """pk with empty vertex and edge tables: a batch without rings."""
+    zero = np.zeros(0, dtype=np.int64)
+    pk.vx = pk.vy = pk.ex0 = pk.ey0 = pk.ex1 = pk.ey1 = np.zeros(0)
+    pk.hvx = pk.hvy = np.zeros(0)
+    pk.v_start = pk.e_start = pk.vrow = zero
+    pk.hv_start = pk.hvrow = zero
+    pk.e0s = pk.e1s = pk.es = pk.vs = pk.hvs = np.zeros(0)
+    return pk
 
 
-def _polys_packed(s: pd.Series) -> _PackedPolys | None:
-    """Pack a WKB series; None unless every non-null row is a (closed,
+def _polys_packed(s) -> _PackedPolys | None:
+    """Pack a WKB batch; None unless every non-null row is a (closed,
     little-endian, ≥4-points-per-ring) Polygon or MultiPolygon.
 
-    No per-row Python beyond the initial bytes() materialization: the
-    ragged header walk runs as a vectorized cursor machine
-    (``_polys_packed_ragged``), and bboxes / edge tables / shell-vertex
-    tables are derived with flat vector ops (reduceat over row blocks) —
-    no per-row numpy calls, which would dominate at small polygons per
-    row.
+    No per-row Python: the ragged header walk runs as a vectorized
+    cursor machine (``_polys_ragged_core``) over the Arrow data buffer,
+    and bboxes / edge tables / shell-vertex tables are derived with flat
+    vector ops (reduceat over row blocks) — no per-row numpy calls,
+    which would dominate at small polygons per row.
 
     Uniform fast path: when every non-null row has the SAME byte length
     and the fixed single-ring header (the overwhelmingly common case for
     CONSTRUCTED geometries — envelopes, fixed-radius diamonds/buffers,
-    grid cells), even the cursor machine is skipped: one join + one
-    reshape + one template compare.  Packing is ~99% of polygon-join
+    grid cells), even the cursor machine is skipped: one reshape of the
+    data buffer + one template compare.  Packing is ~99% of polygon-join
     kernel time, so this is the knob that matters (measured 50.8 of
     51.0 ms per 10k-pair batch)."""
-    if _is_arrow(s):
-        return _polys_packed_a(s)
-    arr = s.to_numpy(dtype=object, copy=False)
-    n = len(arr)
-    pk = _PackedPolys(n)
-    fast = _polys_packed_uniform(arr, n, pk)
-    if fast is not None:
-        return fast
-    return _polys_packed_ragged(arr, n, pk)
-
-
-def _polys_packed_a(s) -> "_PackedPolys | None":
-    """Arrow twin of _polys_packed: uniform batches reshape the data
-    buffer directly; mixed-size batches feed the SAME ragged cursor
-    machine through buffer views — no per-row bytes objects, no
-    b''.join of what Arrow already stores contiguously."""
     v = _bin_views(s)
     if v is None:
         return None
@@ -896,13 +789,7 @@ def _polys_packed_a(s) -> "_PackedPolys | None":
     vrows = np.arange(n, dtype=np.int64) if valid is None else np.nonzero(valid)[0]
     m = len(vrows)
     if m == 0:
-        zero = np.zeros(0, dtype=np.int64)
-        pk.vx = pk.vy = pk.ex0 = pk.ey0 = pk.ex1 = pk.ey1 = np.zeros(0)
-        pk.hvx = pk.hvy = np.zeros(0)
-        pk.v_start = pk.e_start = pk.vrow = zero
-        pk.hv_start = pk.hvrow = zero
-        pk.e0s = pk.e1s = pk.es = pk.vs = pk.hvs = np.zeros(0)
-        return pk
+        return _no_rings(pk)
     vlens = lens[vrows]
     if (vlens < 9).any():
         return None
@@ -942,8 +829,13 @@ def _polys_packed_a(s) -> "_PackedPolys | None":
     return _polys_ragged_core(pk, n, data, off, row_end, vrows)
 
 
-def _polys_packed_ragged(arr, n: int, pk: _PackedPolys) -> "_PackedPolys | None":
-    """Vectorized pack for mixed-size Polygon/MultiPolygon batches.
+def _polys_ragged_core(
+    pk: "_PackedPolys", n: int, u8: np.ndarray, off: np.ndarray,
+    row_end: np.ndarray, nn_local: np.ndarray,
+) -> "_PackedPolys | None":
+    """The ragged cursor machine over a flat byte buffer: ``u8`` holds
+    the non-null rows' payloads contiguously in row order, delimited by
+    ``off``/``row_end``; ``nn_local`` maps them to batch positions.
 
     The WKB header walk is data-dependent (each ring's offset depends on
     the previous ring's point count), so it cannot be a single gather —
@@ -952,35 +844,7 @@ def _polys_packed_ragged(arr, n: int, pk: _PackedPolys) -> "_PackedPolys | None"
     little-endian reads done as four fancy-indexed gathers.  Rounds =
     max tokens per row (1 for simple polygons, parts+rings for
     multipolygons), so the per-batch Python cost is O(max_complexity),
-    not O(rows × rings) — the closure of VERDICT r4 "What's wrong #2"."""
-    nn_local = np.nonzero(~pd.isna(arr))[0]
-    zero = np.zeros(0, dtype=np.int64)
-    if not len(nn_local):
-        pk.vx = pk.vy = pk.ex0 = pk.ey0 = pk.ex1 = pk.ey1 = np.zeros(0)
-        pk.hvx = pk.hvy = np.zeros(0)
-        pk.v_start = pk.e_start = pk.vrow = zero
-        pk.hv_start = pk.hvrow = zero
-        pk.e0s = pk.e1s = pk.es = pk.vs = pk.hvs = np.zeros(0)
-        return pk
-    bufs = [bytes(arr[i]) for i in nn_local]
-    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
-    if (lens < 9).any():
-        return None
-    u8 = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-    ends_all = np.cumsum(lens)
-    return _polys_ragged_core(pk, n, u8, ends_all - lens, ends_all, nn_local)
-
-
-def _polys_ragged_core(
-    pk: "_PackedPolys", n: int, u8: np.ndarray, off: np.ndarray,
-    row_end: np.ndarray, nn_local: np.ndarray,
-) -> "_PackedPolys | None":
-    """The ragged cursor machine over a flat byte buffer: ``u8`` holds
-    the non-null rows' payloads contiguously in row order, delimited by
-    ``off``/``row_end``; ``nn_local`` maps them to batch positions.
-    Shared verbatim by the pandas path (which concatenates bytes) and
-    the arrow path (which passes the Arrow data buffer's views)."""
-    zero = np.zeros(0, dtype=np.int64)
+    not O(rows × rings)."""
     lens = row_end - off
     nrows = len(off)
 
@@ -1055,12 +919,7 @@ def _polys_ragged_core(
     if (cur != row_end).any():  # trailing bytes: not our WKB shape
         return None
     if not ring_row_l:
-        pk.vx = pk.vy = pk.ex0 = pk.ey0 = pk.ex1 = pk.ey1 = np.zeros(0)
-        pk.hvx = pk.hvy = np.zeros(0)
-        pk.v_start = pk.e_start = pk.vrow = zero
-        pk.hv_start = pk.hvrow = zero
-        pk.e0s = pk.e1s = pk.es = pk.vs = pk.hvs = np.zeros(0)
-        return pk
+        return _no_rings(pk)
     l_row = np.concatenate(ring_row_l)
     l_npts = np.concatenate(ring_npts_l)
     l_shell = np.concatenate(ring_shell_l)
@@ -1141,42 +1000,6 @@ def _drop_collinear_vertices(coords: np.ndarray, rn: np.ndarray):
     keep_pts = np.ones(total, dtype=bool)
     keep_pts[idx[drop]] = False
     return coords[keep_pts], rn - dropped_per_ring
-
-
-def _polys_packed_uniform(arr, n: int, pk: _PackedPolys) -> "_PackedPolys | None":
-    """Vectorized pack for batches where every non-null row is a
-    single-ring polygon of identical byte length; None = no fast path
-    (caller falls back to the per-row walk)."""
-    vals = [v for v in arr if v is not None]
-    if not vals:
-        return None
-    L = len(vals[0])
-    npts, rem = divmod(L - 13, 16)
-    if rem or npts < 4:
-        return None
-    for v in vals:
-        if len(v) != L:
-            return None
-    joined = b"".join(bytes(v) for v in vals)
-    m = len(vals)
-    u8 = np.frombuffer(joined, dtype=np.uint8).reshape(m, L)
-    hdr = np.frombuffer(
-        b"\x01" + _POLY_TYPE_BYTES
-        + (1).to_bytes(4, "little") + int(npts).to_bytes(4, "little"),
-        dtype=np.uint8,
-    )
-    if not (u8[:, :13] == hdr).all():
-        return None
-    coords = np.ascontiguousarray(u8[:, 13:]).view("<f8").reshape(-1, 2)
-    if m == n:
-        rr = np.arange(n, dtype=np.int64)
-    else:
-        rr = np.fromiter(
-            (i for i, v in enumerate(arr) if v is not None), dtype=np.int64, count=m
-        )
-    rn = np.full(m, npts, dtype=np.int64)
-    pk.ok[rr] = True
-    return _polys_finish(pk, coords, rr, rn, n)
 
 
 def _polys_finish(
@@ -1491,7 +1314,7 @@ def _blocked_rows(rows: np.ndarray, cost: np.ndarray):
     return [b for b in np.split(rows, cuts) if len(b)]
 
 
-def _fast_polypoly_predicate(name: str, a: pd.Series, b: pd.Series):
+def _fast_polypoly_predicate(name: str, a: pa.Array, b: pa.Array):
     """Vectorized polygon-column × polygon-column predicates
     (intersects / disjoint / covers / within / contains).  None when the
     batch isn't all single Polygons on both sides."""
@@ -1529,7 +1352,7 @@ def _fast_polypoly_predicate(name: str, a: pd.Series, b: pd.Series):
             cost = pb.v_cnt * pa.e_cnt + pa.e_cnt * pb.e_cnt + pa.hv_cnt * pb.e_cnt
             for blk in _blocked_rows(cand, cost):
                 res |= _polypoly_covers_rows(pa, pb, blk)
-        return _wrap_bool(res, both, a)
+        return _wrap_bool(res, both)
     n = pa.n
     inter = np.zeros(n, dtype=bool)
     both = pa.ok & pb.ok
@@ -1562,12 +1385,11 @@ def _fast_polypoly_predicate(name: str, a: pd.Series, b: pd.Series):
             for blk in _blocked_rows(rest, cost_e):
                 inter |= _edges_intersect_any(pa, pb, blk)
     res = inter if name == "intersects" else ~inter
-    return _wrap_bool(res, both, a)
+    return _wrap_bool(res, both)
 
 
 def _predicate_fast(method: str, a, b):
-    """Chain of vectorized fast paths; None when no shape applies.
-    Inputs may be pd.Series OR pa.Array — accessors dispatch."""
+    """Chain of vectorized fast paths; None when no shape applies."""
     fast = _fast_rect_predicate(method, a, b)
     if fast is None:
         fast = _fast_rect_rect_predicate(method, a, b)
@@ -1578,7 +1400,7 @@ def _predicate_fast(method: str, a, b):
     return fast
 
 
-def _predicate_generic(method: str, a: pd.Series, b: pd.Series) -> list:
+def _predicate_generic(method: str, a: pa.Array, b: pa.Array) -> pa.Array:
     """Per-pair kernel calls, with a per-batch decode cache so constant
     literals / low-cardinality columns decode once."""
     cache: dict = {}
@@ -1591,12 +1413,21 @@ def _predicate_generic(method: str, a: pd.Series, b: pd.Series) -> list:
         return g
 
     out = []
-    for av, bv in zip(a, b):
+    for av, bv in zip(a.to_pylist(), b.to_pylist()):
         if av is None or bv is None:
             out.append(None)
         else:
             out.append(getattr(dec(av), method)(dec(bv)))
-    return out
+    return pa.array(out, type=pa.bool_())
+
+
+def _pair_predicate(name: str, a: pa.Array, b: pa.Array) -> pa.Array:
+    """st_<name>(a, b): the vectorized fast paths, and for exotic shapes
+    the scalar kernel per row."""
+    res = _predicate_fast(name, a, b)
+    if res is None:
+        res = _predicate_generic(name, a, b)
+    return res
 
 
 def _binary_predicate(name: str):
@@ -1604,14 +1435,7 @@ def _binary_predicate(name: str):
 
     @arrow_udf(BooleanType())
     def _udf(a: pa.Array, b: pa.Array) -> pa.Array:
-        fast = _predicate_fast(method, a, b)
-        if fast is not None:
-            return fast
-        # exotic shapes: decode per row through the scalar kernel
-        return pa.array(
-            _predicate_generic(method, a.to_pandas(), b.to_pandas()),
-            type=pa.bool_(),
-        )
+        return _pair_predicate(method, a, b)
 
     return _udf
 
@@ -1624,8 +1448,7 @@ st_disjoint_udf = _binary_predicate("disjoint")
 
 
 def _distance_fast(a, b):
-    """Vectorized distance fast paths (pandas or arrow inputs); None
-    when no shape applies."""
+    """Vectorized distance fast paths; None when no shape applies."""
     # fast path: point column vs constant point literal -> vectorized hypot
     for pts_side, const_side in ((a, b), (b, a)):
         g = _const_geometry(const_side)
@@ -1656,13 +1479,12 @@ def st_distance_udf(a: pa.Array, b: pa.Array) -> pa.Array:
 
 
 def _distance_arrow(a: pa.Array, b: pa.Array) -> pa.Array:
-    # from_pandas=True: NaN maps to null, exactly as the historical
-    # pandas_udf Series conversion did
+    # from_pandas=True: NaN maps to null
     fast = _distance_fast(a, b)
     if fast is not None:
         return pa.array(fast, from_pandas=True)
     out = []
-    for av, bv in zip(a.to_pandas(), b.to_pandas()):
+    for av, bv in zip(a.to_pylist(), b.to_pylist()):
         if av is None or bv is None:
             out.append(np.nan)
         else:
@@ -1739,38 +1561,11 @@ def st_makeenvelope_udf(
     return _makeenvelope_arrow(xmin, ymin, xmax, ymax)
 
 
-def st_diamond_builder(cx: pd.Series, cy: pd.Series, r: pd.Series) -> pd.Series:
-    """Rotated-square (L1-ball) polygon WKB around each center —
-    vectorized batch assembly: the output is a fixed 93-byte single-ring
-    5-point polygon per row, so the whole batch is one uint8 matrix
-    with a float64 view for the coordinates (no per-row WKB writer)."""
-    n = len(cx)
-    out = np.zeros((n, 93), dtype=np.uint8)
-    out[:, :13] = np.frombuffer(_RECT_WKB_HEADER, dtype=np.uint8)
-    coords = out[:, 13:].view("<f8").reshape(n, 5, 2)
-    cxa = cx.to_numpy(dtype="float64", na_value=np.nan)
-    cya = cy.to_numpy(dtype="float64", na_value=np.nan)
-    ra = r.to_numpy(dtype="float64", na_value=np.nan)
-    coords[:, 0, 0] = cxa + ra
-    coords[:, 0, 1] = cya
-    coords[:, 1, 0] = cxa
-    coords[:, 1, 1] = cya + ra
-    coords[:, 2, 0] = cxa - ra
-    coords[:, 2, 1] = cya
-    coords[:, 3, 0] = cxa
-    coords[:, 3, 1] = cya - ra
-    coords[:, 4] = coords[:, 0]
-    valid = ~(np.isnan(cxa) | np.isnan(cya) | np.isnan(ra))
-    raw = out.tobytes()
-    return pd.Series(
-        [raw[i * 93 : (i + 1) * 93] if valid[i] else None for i in range(n)],
-        dtype=object,
-    )
-
-
 def _diamond_arrow(cx: pa.Array, cy: pa.Array, r: pa.Array) -> pa.Array:
-    """Arrow-native st_diamond_builder: same 93-byte rows, assembled
-    straight from the Arrow float buffers into one flat output buffer."""
+    """Rotated-square (L1-ball) polygon WKB around each center: a fixed
+    93-byte single-ring 5-point polygon per row, so the whole batch is
+    one uint8 matrix with a float64 view for the coordinates, assembled
+    straight from the Arrow float buffers (no per-row WKB writer)."""
     cxa, cm = _f64_np(cx)
     cya, ym = _f64_np(cy)
     ra, rm = _f64_np(r)
@@ -1801,58 +1596,16 @@ def st_diamond(cx, cy, r) -> Column:
     return st_diamond_udf(_c(cx), _c(cy), _c(r))
 
 
-def st_subdivided_diamond_builder(
-    cx: pd.Series, cy: pd.Series, r: pd.Series, k: pd.Series
-) -> pd.Series:
+def _subdiv_arrow(
+    cx: pa.Array, cy: pa.Array, r: pa.Array, k: pa.Array
+) -> pa.Array:
     """Diamond WKB with each edge split into ``k`` collinear segments —
     geometrically IDENTICAL to st_diamond (extra vertices lie on the
     edges) but with per-row vertex count 4k+1 and varied byte length:
     the workload shape that exercises the ragged (mixed-size) vectorized
-    polygon pack instead of the uniform fast path.  Assembly is
-    vectorized per distinct k (k is a small-cardinality knob)."""
-    n = len(cx)
-    cxa = cx.to_numpy(dtype="float64", na_value=np.nan)
-    cya = cy.to_numpy(dtype="float64", na_value=np.nan)
-    ra = r.to_numpy(dtype="float64", na_value=np.nan)
-    ka = k.to_numpy(dtype="float64", na_value=np.nan)
-    out: list = [None] * n
-    valid = ~(np.isnan(cxa) | np.isnan(cya) | np.isnan(ra) | np.isnan(ka))
-    kv = np.where(valid, ka, 1).astype(np.int64)
-    for kk in np.unique(kv[valid]):
-        rows = np.nonzero(valid & (kv == kk))[0]
-        m = len(rows)
-        npts = 4 * int(kk) + 1
-        nbytes = 13 + npts * 16
-        buf = np.zeros((m, nbytes), dtype=np.uint8)
-        buf[:, 0] = 1
-        buf[:, 1:5] = np.frombuffer(_POLY_TYPE_BYTES, dtype=np.uint8)
-        buf[:, 5:9] = np.frombuffer((1).to_bytes(4, "little"), dtype=np.uint8)
-        buf[:, 9:13] = np.frombuffer(
-            int(npts).to_bytes(4, "little"), dtype=np.uint8
-        )
-        coords = buf[:, 13:].view("<f8").reshape(m, npts, 2)
-        corners = np.array([(1.0, 0.0), (0.0, 1.0), (-1.0, 0.0), (0.0, -1.0)])
-        t = (np.arange(int(kk)) / float(kk))[None, :, None]  # (1,k,1)
-        # edge j: corner_j + t * (corner_{j+1} - corner_j), t in [0,1)
-        nxt = np.roll(corners, -1, axis=0)
-        unit = (
-            corners[:, None, :] + t * (nxt[:, None, :] - corners[:, None, :])
-        ).reshape(-1, 2)  # (4k, 2) unit-diamond perimeter points
-        cc = np.stack([cxa[rows], cya[rows]], axis=1)[:, None, :]
-        coords[:, : 4 * int(kk), :] = cc + ra[rows][:, None, None] * unit[None]
-        coords[:, -1, :] = coords[:, 0, :]
-        raw = buf.tobytes()
-        for j, i in enumerate(rows):
-            out[i] = raw[j * nbytes : (j + 1) * nbytes]
-    return pd.Series(out, dtype=object)
-
-
-def _subdiv_arrow(
-    cx: pa.Array, cy: pa.Array, r: pa.Array, k: pa.Array
-) -> pa.Array:
-    """Arrow-native st_subdivided_diamond_builder: per-row byte lengths
-    vary with k, so rows assemble into one flat buffer at cumsum
-    offsets — still vectorized per distinct k, still no per-row bytes."""
+    polygon pack instead of the uniform fast path.  Rows assemble into
+    one flat buffer at cumsum offsets, vectorized per distinct k (k is
+    a small-cardinality knob); no per-row bytes."""
     cxa, _ = _f64_np(cx)
     cya, _ = _f64_np(cy)
     ra, _ = _f64_np(r)
@@ -1902,51 +1655,13 @@ def st_subdivided_diamond(cx, cy, r, k) -> Column:
     return _subdiv_diamond_udf(_c(cx), _c(cy), _c(r), _c(k))
 
 
-def st_annulus_builder(
-    cx: pd.Series, cy: pd.Series, r_outer: pd.Series, r_inner: pd.Series
-) -> pd.Series:
+def _annulus_arrow(
+    cx: pa.Array, cy: pa.Array, r_outer: pa.Array, r_inner: pa.Array
+) -> pa.Array:
     """L1-annulus WKB: diamond shell of radius r_outer with a diamond
     HOLE of radius r_inner — a two-ring Polygon, the holed-geometry
     workload for the vectorized multi-ring pack.  Fixed 177-byte layout
     per row, assembled as one uint8 matrix like st_diamond."""
-    n = len(cx)
-    nbytes = 13 + 5 * 16 + 4 + 5 * 16
-    buf = np.zeros((n, nbytes), dtype=np.uint8)
-    buf[:, 0] = 1
-    buf[:, 1:5] = np.frombuffer(_POLY_TYPE_BYTES, dtype=np.uint8)
-    buf[:, 5:9] = np.frombuffer((2).to_bytes(4, "little"), dtype=np.uint8)
-    buf[:, 9:13] = np.frombuffer((5).to_bytes(4, "little"), dtype=np.uint8)
-    hole_hdr = 13 + 5 * 16
-    buf[:, hole_hdr : hole_hdr + 4] = np.frombuffer(
-        (5).to_bytes(4, "little"), dtype=np.uint8
-    )
-    cxa = cx.to_numpy(dtype="float64", na_value=np.nan)
-    cya = cy.to_numpy(dtype="float64", na_value=np.nan)
-    ro = r_outer.to_numpy(dtype="float64", na_value=np.nan)
-    ri = r_inner.to_numpy(dtype="float64", na_value=np.nan)
-    for start, rr in ((13, ro), (hole_hdr + 4, ri)):
-        coords = buf[:, start : start + 80].view("<f8").reshape(n, 5, 2)
-        coords[:, 0, 0] = cxa + rr
-        coords[:, 0, 1] = cya
-        coords[:, 1, 0] = cxa
-        coords[:, 1, 1] = cya + rr
-        coords[:, 2, 0] = cxa - rr
-        coords[:, 2, 1] = cya
-        coords[:, 3, 0] = cxa
-        coords[:, 3, 1] = cya - rr
-        coords[:, 4] = coords[:, 0]
-    valid = ~(np.isnan(cxa) | np.isnan(cya) | np.isnan(ro) | np.isnan(ri))
-    raw = buf.tobytes()
-    return pd.Series(
-        [raw[i * nbytes : (i + 1) * nbytes] if valid[i] else None for i in range(n)],
-        dtype=object,
-    )
-
-
-def _annulus_arrow(
-    cx: pa.Array, cy: pa.Array, r_outer: pa.Array, r_inner: pa.Array
-) -> pa.Array:
-    """Arrow-native st_annulus_builder (fixed 177-byte two-ring rows)."""
     cxa, _ = _f64_np(cx)
     cya, _ = _f64_np(cy)
     ro, _ = _f64_np(r_outer)
@@ -2005,17 +1720,6 @@ def st_annulus(cx, cy, r_outer, r_inner) -> Column:
 # physical fusion only: bytes and kernel are byte-shared with the
 # composed form, so results are identical by construction (asserted by
 # tests/test_geo_fused_pair.py against the composed UDFs).
-
-
-def _pair_predicate(name: str, a: pa.Array, b: pa.Array) -> pa.Array:
-    """The exact dispatch st_<name>_udf performs, over built arrays."""
-    res = _predicate_fast(name, a, b)
-    if res is None:
-        res = pa.array(
-            _predicate_generic(name, a.to_pandas(), b.to_pandas()),
-            type=pa.bool_(),
-        )
-    return res
 
 
 @arrow_udf(BooleanType())
@@ -2277,7 +1981,7 @@ def st_envelope_aggr(df, geom_col: str, group_cols: list[str] | None = None):
     """Aggregate bounding envelope per group (the Sedona ST_Envelope_Aggr
     the reference defers to via its GeospatialLibrary SPI,
     spark/.../geo/spi/GeospatialLibrary.java).  ONE vectorized bounds
-    pass (the st_xmin..st_ymax pandas UDF, Arrow-batched) then plain
+    pass (``st_bounds_udf``, all four bounds per decode) then plain
     codegen min/max partial aggregation — the same shape the engine's
     write path uses for manifest bbox metrics
     (core/.../havasu/GeometryFieldMetrics.java:58-88).

@@ -432,7 +432,7 @@ def geo_ragged_poly_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     are subdivided into a per-row number of collinear segments (vertex
     counts 4k+1 for k = 1 + key % 2 / % 3), so every batch has varied
     WKB byte lengths and the vectorized kernel takes the RAGGED pack
-    (geo/functions.py _polys_packed_ragged) instead of the uniform
+    (geo/functions.py _polys_ragged_core) instead of the uniform
     fast path — the workload VERDICT r4 flagged as interpreter-bound.
     The small k range keeps the total vertex work comparable to
     geo_diamond_join_counts, so the bench ratio between the two isolates
@@ -454,7 +454,7 @@ def geo_ragged_poly_join_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fused ragged pair kernel: both subdivided-diamond WKB builds (per-
     # row vertex counts 4k+1) and the RAGGED pack + predicate in one
-    # ArrowEvalPython node — the workload still runs _polys_packed_ragged
+    # ArrowEvalPython node — the workload still runs _polys_ragged_core
     # on varied byte lengths, exactly as the composed form did
     j = grid_spatial_join(
         pts, cells, cell_size=6.0,

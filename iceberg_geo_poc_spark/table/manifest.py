@@ -319,14 +319,6 @@ def compute_bboxes(spark, paths: list[str], geo_fields: dict[str, str], df=None)
     """
     import pyspark.sql.functions as F
 
-    from iceberg_geo_poc_spark.geo.functions import (
-        convert_encoding_udf,
-        st_xmax_udf,
-        st_xmin_udf,
-        st_ymax_udf,
-        st_ymin_udf,
-    )
-
     if not geo_fields or not paths:
         return {}
     if df is None:
@@ -334,18 +326,7 @@ def compute_bboxes(spark, paths: list[str], geo_fields: dict[str, str], df=None)
             F.col("_metadata.file_path").alias("__file"),
             *geo_fields.keys(),
         )
-    aggs = []
-    for col, enc in geo_fields.items():
-        wkb = F.col(col) if enc in ("ewkb", "wkb") else convert_encoding_udf(enc, "wkb")(
-            F.col(col)
-        )
-        aggs += [
-            F.min(st_xmin_udf(wkb)).alias(f"{col}__xmin"),
-            F.min(st_ymin_udf(wkb)).alias(f"{col}__ymin"),
-            F.max(st_xmax_udf(wkb)).alias(f"{col}__xmax"),
-            F.max(st_ymax_udf(wkb)).alias(f"{col}__ymax"),
-        ]
-    rows = df.groupBy("__file").agg(*aggs).collect()
+    rows = _bbox_frame(df, geo_fields).collect()
     out: dict[str, dict] = {}
     for row in rows:
         d = row.asDict()
@@ -356,6 +337,37 @@ def compute_bboxes(spark, paths: list[str], geo_fields: dict[str, str], df=None)
             bboxes[col] = None if any(v is None for v in vals) else [float(v) for v in vals]
         out[path] = bboxes
     return out
+
+
+def _bbox_frame(df, geo_fields: dict[str, str]):
+    """The per-file bbox aggregate behind :func:`compute_bboxes`: each
+    geometry column is decoded ONCE into an envelope struct
+    (``st_bounds_once_udf``, the single-evaluation instance, so
+    projection collapse cannot clone the decode per extracted field),
+    then codegen min/max over its fields — the one-envelope-per-geometry
+    shape of the reference's metrics writer
+    (core/.../havasu/GeometryFieldMetrics.java:58-88)."""
+    import pyspark.sql.functions as F
+
+    from iceberg_geo_poc_spark.geo.functions import (
+        convert_encoding_udf,
+        st_bounds_once_udf,
+    )
+
+    bounds, aggs = [], []
+    for i, (col, enc) in enumerate(geo_fields.items()):
+        wkb = F.col(col) if enc in ("ewkb", "wkb") else convert_encoding_udf(enc, "wkb")(
+            F.col(col)
+        )
+        bounds.append(st_bounds_once_udf(wkb).alias(f"__bounds{i}"))
+        b = F.col(f"__bounds{i}")
+        aggs += [
+            F.min(b.getField("xmin")).alias(f"{col}__xmin"),
+            F.min(b.getField("ymin")).alias(f"{col}__ymin"),
+            F.max(b.getField("xmax")).alias(f"{col}__xmax"),
+            F.max(b.getField("ymax")).alias(f"{col}__ymax"),
+        ]
+    return df.select("__file", *bounds).groupBy("__file").agg(*aggs)
 
 
 def _strip_scheme(p: str) -> str:

@@ -246,13 +246,63 @@ def test_hilbert_adjacent_cells_adjacent_indexes():
     assert (steps == 1).all()
 
 
+# -- vectorized kernels vs the scalar kernel --------------------------------
+#
+# The vectorized kernels take pa.Array batches, exactly as the arrow_udf
+# wrappers receive them.  _layouts() yields one column in every Arrow
+# layout a batch can arrive in, so buffer offsets, validity bitmaps,
+# chunking and 64-bit offsets are all checked against the scalar kernel.
+
+
+def _bin(values):
+    import pyarrow as pa
+
+    return pa.array(values, type=pa.binary())
+
+
+def _layouts(values):
+    """{layout: column}: plain binary, a slice (offset != 0) of a longer
+    array padded with a null and a garbage row, a two-chunk
+    ChunkedArray, and large_binary."""
+    import pyarrow as pa
+
+    n = len(values)
+    plain = _bin(values)
+    padded = _bin([None, b"\x00"] + list(values) + [None])
+    return {
+        "binary": plain,
+        "sliced": padded.slice(2, n),
+        "chunked": pa.chunked_array([plain.slice(0, n // 2), plain.slice(n // 2)]),
+        "large_binary": pa.array(values, type=pa.large_binary()),
+    }
+
+
+def _assert_bounds_match(col, wkbs):
+    """_bounds_cols, and the packed-polygon bboxes when the pack accepts
+    the batch, agree row by row with the scalar kernel's bounds."""
+    from iceberg_geo_poc_spark.geo import functions as GF
+
+    cols = GF._bounds_cols(col)
+    got = list(zip(cols["xmin"], cols["ymin"], cols["xmax"], cols["ymax"]))
+    pk = GF._polys_packed(col)
+    if pk is not None:
+        assert np.array_equal(
+            np.column_stack([pk.bx0, pk.by0, pk.bx1, pk.by1]), np.array(got),
+            equal_nan=True,
+        )
+    for i, w in enumerate(wkbs):
+        want = None if w is None else geometry_from_wkb(w).bounds
+        if want is None:
+            assert np.isnan(got[i]).all(), (i, got[i])
+        else:
+            assert got[i] == want, (i, got[i], want)
+
+
 def test_fast_poly_predicate_matches_kernel():
     """The vectorized point-vs-polygon path must agree with the scalar
     kernel on every predicate, including boundary points, holes, concave
     shells, NaN (empty) points, and nulls."""
     import random
-
-    import pandas as pd
 
     from iceberg_geo_poc_spark.geo import functions as GF
     from iceberg_geo_poc_spark.geo.wkb import geometry_to_wkb
@@ -277,33 +327,42 @@ def test_fast_poly_predicate_matches_kernel():
     from iceberg_geo_poc_spark.geo.geometry import Point
 
     wkbs = [geometry_to_wkb(Point(x, y)) for x, y in pts] + [None]
-    for g in (poly, multi):
-        glit = geometry_to_wkb(g)
-        a = pd.Series(wkbs, dtype=object)
-        b = pd.Series([glit] * len(wkbs), dtype=object)
-        for name, col_receiver in (
-            ("intersects", True), ("disjoint", True), ("within", True),
-            ("covers", False), ("contains", False),
-        ):
-            if col_receiver:
-                got = GF._fast_poly_predicate(name, a, b)
+    scalar = [None if w is None else geometry_from_wkb(w) for w in wkbs]
+    for layout, a in _layouts(wkbs).items():
+        # the point accessor and _bounds_cols agree with the scalar points
+        x, y, mask = GF._points_xy(a)
+        for i, p in enumerate(scalar):
+            assert mask[i] == (p is not None), (layout, i)
+            if p is None or p.is_empty():
+                assert np.isnan(x[i]) and np.isnan(y[i]), (layout, i)
             else:
-                got = GF._fast_poly_predicate(name, b, a)
-            assert got is not None, f"fast path refused {name}"
-            for i, w in enumerate(wkbs):
-                if w is None:
-                    assert got[i] is None
-                    continue
-                from iceberg_geo_poc_spark.geo.wkb import geometry_from_wkb
-
-                p = geometry_from_wkb(w)
-                want = (
-                    getattr(p, name)(g) if col_receiver else getattr(g, name)(p)
-                )
-                assert bool(got[i]) == want, (
-                    f"{name} receiver={'pt' if col_receiver else 'poly'} "
-                    f"pt={pts[i]}: fast={got[i]} kernel={want}"
-                )
+                assert (x[i], y[i]) == (p.x, p.y), (layout, i)
+        _assert_bounds_match(a, wkbs)
+        for g in (poly, multi):
+            glit = geometry_to_wkb(g)
+            b = _layouts([glit] * len(wkbs))[layout]
+            for name, col_receiver in (
+                ("intersects", True), ("disjoint", True), ("within", True),
+                ("covers", False), ("contains", False),
+            ):
+                if col_receiver:
+                    got = GF._fast_poly_predicate(name, a, b)
+                else:
+                    got = GF._fast_poly_predicate(name, b, a)
+                assert got is not None, f"fast path refused {name}"
+                got = got.to_pylist()
+                for i, p in enumerate(scalar):
+                    if p is None:
+                        assert got[i] is None
+                        continue
+                    want = (
+                        getattr(p, name)(g) if col_receiver else getattr(g, name)(p)
+                    )
+                    assert bool(got[i]) == want, (
+                        f"{layout} {name} "
+                        f"receiver={'pt' if col_receiver else 'poly'} "
+                        f"pt={pts[i]}: fast={got[i]} kernel={want}"
+                    )
 
 
 def test_fast_rect_rect_predicate_matches_kernel():
@@ -311,8 +370,6 @@ def test_fast_rect_rect_predicate_matches_kernel():
     with the scalar kernel: overlapping, touching, contained, disjoint,
     and identical rectangles."""
     import random
-
-    import pandas as pd
 
     from iceberg_geo_poc_spark.geo import functions as GF
     from iceberg_geo_poc_spark.geo.geometry import box
@@ -336,24 +393,33 @@ def test_fast_rect_rect_predicate_matches_kernel():
         (r, box(11, 0, 20, 10)),   # disjoint
         (box(2, 2, 8, 8), r),      # nested, reversed
     ]
-    a = pd.Series([geometry_to_wkb(p[0]) for p in pairs] + [None], dtype=object)
-    b = pd.Series([geometry_to_wkb(p[1]) for p in pairs] + [geometry_to_wkb(r)], dtype=object)
-    for name in ("intersects", "disjoint", "covers", "within", "contains"):
-        got = GF._fast_rect_rect_predicate(name, a, b)
-        assert got is not None
-        assert got.iloc[len(pairs)] is None  # null row stays null
-        for i, (ga, gb) in enumerate(pairs):
-            want = getattr(ga, name)(gb)
-            assert bool(got.iloc[i]) == want, (
-                f"{name} pair {i}: {ga.bounds} vs {gb.bounds}: "
-                f"fast={got.iloc[i]} kernel={want}"
-            )
+    wa = [geometry_to_wkb(p[0]) for p in pairs] + [None]
+    wb = [geometry_to_wkb(p[1]) for p in pairs] + [geometry_to_wkb(r)]
+    la, lb = _layouts(wa), _layouts(wb)
+    for layout in la:
+        a, b = la[layout], lb[layout]
+        # the rectangle accessor takes every layout; bounds match
+        assert GF._rects_bounds(a) is not None, layout
+        assert GF._rects_bounds(b) is not None, layout
+        _assert_bounds_match(a, wa)
+        _assert_bounds_match(b, wb)
+        for name in ("intersects", "disjoint", "covers", "within", "contains"):
+            got = GF._fast_rect_rect_predicate(name, a, b)
+            assert got is not None
+            got = got.to_pylist()
+            assert got[len(pairs)] is None  # null row stays null
+            for i, (ga, gb) in enumerate(pairs):
+                want = getattr(ga, name)(gb)
+                assert bool(got[i]) == want, (
+                    f"{layout} {name} pair {i}: {ga.bounds} vs {gb.bounds}: "
+                    f"fast={got[i]} kernel={want}"
+                )
     # non-rect polygon on either side must refuse (falls to generic path)
     from iceberg_geo_poc_spark.geo.wkt import geometry_from_wkt
 
     tri = geometry_to_wkb(geometry_from_wkt("POLYGON ((0 0, 5 0, 3 4, 0 0))"))
-    mixed = pd.Series([geometry_to_wkb(r), tri], dtype=object)
-    rects = pd.Series([geometry_to_wkb(r)] * 2, dtype=object)
+    mixed = _bin([geometry_to_wkb(r), tri])
+    rects = _bin([geometry_to_wkb(r)] * 2)
     assert GF._fast_rect_rect_predicate("intersects", mixed, rects) is None
 
 
@@ -393,8 +459,6 @@ def test_fast_polypoly_predicate_matches_kernel():
     rotated, concave, and far-apart polygons, plus nulls."""
     import random
 
-    import pandas as pd
-
     from iceberg_geo_poc_spark.geo import functions as GF
     from iceberg_geo_poc_spark.geo.geometry import Polygon
     from iceberg_geo_poc_spark.geo.wkb import geometry_from_wkb, geometry_to_wkb
@@ -425,19 +489,30 @@ def test_fast_polypoly_predicate_matches_kernel():
         (sq, far), (donut, in_hole), (in_hole, donut), (donut, spans_hole),
         (sq, sq),
     ]
-    a = pd.Series([geometry_to_wkb(p) for p, _ in pairs] + [None], dtype=object)
-    b = pd.Series([geometry_to_wkb(q) for _, q in pairs] + [geometry_to_wkb(sq)],
-                  dtype=object)
-    for name in ("intersects", "disjoint", "covers", "within", "contains"):
-        got = GF._fast_polypoly_predicate(name, a, b)
-        assert got is not None, f"polypoly fast path refused {name}"
-        assert got[len(pairs)] is None  # null in -> null out
-        for i, (p, q) in enumerate(pairs):
-            want = getattr(p, name)(q)
-            assert bool(got[i]) == want, (
-                f"{name} pair {i}: fast={got[i]} kernel={want} "
-                f"a={p.shell[:3]}... b={q.shell[:3]}..."
-            )
+    wa = [geometry_to_wkb(p) for p, _ in pairs] + [None]
+    wb = [geometry_to_wkb(q) for _, q in pairs] + [geometry_to_wkb(sq)]
+    want = {
+        name: [getattr(p, name)(q) for p, q in pairs]
+        for name in ("intersects", "disjoint", "covers", "within", "contains")
+    }
+    la, lb = _layouts(wa), _layouts(wb)
+    for layout in la:
+        a, b = la[layout], lb[layout]
+        # the polygon pack takes every layout; bounds match
+        assert GF._polys_packed(a) is not None, layout
+        _assert_bounds_match(a, wa)
+        _assert_bounds_match(b, wb)
+        for name in want:
+            got = GF._fast_polypoly_predicate(name, a, b)
+            assert got is not None, f"polypoly fast path refused {name}"
+            got = got.to_pylist()
+            assert got[len(pairs)] is None  # null in -> null out
+            for i, (p, q) in enumerate(pairs):
+                assert bool(got[i]) == want[name][i], (
+                    f"{layout} {name} pair {i}: fast={got[i]} "
+                    f"kernel={want[name][i]} "
+                    f"a={p.shell[:3]}... b={q.shell[:3]}..."
+                )
 
 
 def test_fast_polypoly_multipolygon_matches_kernel():
@@ -446,8 +521,6 @@ def test_fast_polypoly_multipolygon_matches_kernel():
     kernel; covers-family falls back to the scalar kernel for multi-part
     batches (geometry._covers is per-part, the pooled tables are not)."""
     import random
-
-    import pandas as pd
 
     from iceberg_geo_poc_spark.geo import functions as GF
     from iceberg_geo_poc_spark.geo.geometry import MultiPolygon, Polygon
@@ -484,14 +557,12 @@ def test_fast_polypoly_multipolygon_matches_kernel():
     in_gap = Polygon([(3, 0.5), (4, 0.5), (4, 1.5), (3, 1.5), (3, 0.5)])
     spanning = Polygon([(1, 0.5), (6, 0.5), (6, 1.5), (1, 1.5), (1, 0.5)])
     pairs += [(two, inside1), (two, in_gap), (two, spanning), (two, two)]
-    a = pd.Series([geometry_to_wkb(p) for p, _ in pairs] + [None], dtype=object)
-    b = pd.Series(
-        [geometry_to_wkb(q) for _, q in pairs] + [geometry_to_wkb(inside1)],
-        dtype=object,
-    )
+    a = _bin([geometry_to_wkb(p) for p, _ in pairs] + [None])
+    b = _bin([geometry_to_wkb(q) for _, q in pairs] + [geometry_to_wkb(inside1)])
     for name in ("intersects", "disjoint"):
         got = GF._fast_polypoly_predicate(name, a, b)
         assert got is not None, f"multipolygon fast path refused {name}"
+        got = got.to_pylist()
         assert got[len(pairs)] is None
         for i, (p, q) in enumerate(pairs):
             want = getattr(p, name)(q)
@@ -500,34 +571,34 @@ def test_fast_polypoly_multipolygon_matches_kernel():
     # MultiPolygon wrappers still vectorize
     assert GF._fast_polypoly_predicate("covers", a, b) is None
     one = MultiPolygon([Polygon([(0, 0), (4, 0), (4, 4), (0, 4), (0, 0)])])
-    aa = pd.Series([geometry_to_wkb(one)], dtype=object)
-    bb = pd.Series([geometry_to_wkb(inside1)], dtype=object)
+    aa = _bin([geometry_to_wkb(one)])
+    bb = _bin([geometry_to_wkb(inside1)])
     got = GF._fast_polypoly_predicate("covers", aa, bb)
-    assert got is not None and bool(got[0])
+    assert got is not None and bool(got.to_pylist()[0])
 
 
 def test_subdivided_diamond_and_annulus_builders():
     """st_subdivided_diamond emits ragged-but-identical geometry (extra
     vertices on the edges); st_annulus emits a two-ring holed polygon —
     and BOTH run through the vectorized pack, not the scalar fallback."""
-    import pandas as pd
+    import pyarrow as pa
 
     from iceberg_geo_poc_spark.geo import functions as GF
     from iceberg_geo_poc_spark.geo.wkb import geometry_from_wkb
 
-    cx = pd.Series([0.0, 10.0, None])
-    cy = pd.Series([0.0, 5.0, 1.0])
-    sub = GF.st_subdivided_diamond_builder(
-        cx, cy, pd.Series([2.0, 3.0, 1.0]), pd.Series([1, 4, 2])
-    )
+    cx = pa.array([0.0, 10.0, None])
+    cy = pa.array([0.0, 5.0, 1.0])
+    sub = GF._subdiv_arrow(
+        cx, cy, pa.array([2.0, 3.0, 1.0]), pa.array([1, 4, 2])
+    ).to_pylist()
     assert sub[2] is None
     g0, g1 = geometry_from_wkb(sub[0]), geometry_from_wkb(sub[1])
     assert len(g0.shell) == 5 and len(g1.shell) == 17  # 4k+1 vertices
     # subdivision preserves the region: same bbox, same point membership
     assert g1.intersects(geometry_from_wkb(sub[1]))
-    ann = GF.st_annulus_builder(
-        cx[:2], cy[:2], pd.Series([4.0, 4.0]), pd.Series([2.0, 2.0])
-    )
+    ann = GF._annulus_arrow(
+        cx[:2], cy[:2], pa.array([4.0, 4.0]), pa.array([2.0, 2.0])
+    ).to_pylist()
     a0 = geometry_from_wkb(ann[0])
     assert len(a0.holes) == 1
     from iceberg_geo_poc_spark.geo.geometry import Point
@@ -535,21 +606,22 @@ def test_subdivided_diamond_and_annulus_builders():
     assert not a0.intersects(Point(0.0, 0.0))  # center is in the hole
     assert a0.intersects(Point(3.0, 0.0))  # ring interior
     # the ragged vectorized pack accepts both shapes (no scalar fallback)
-    mixed = pd.Series(list(sub[:2]) + list(ann), dtype=object)
+    mixed = _bin(sub[:2] + ann)
     pk = GF._polys_packed(mixed)
     assert pk is not None and pk.ok.all()
     assert list(pk.hv_cnt) == [0, 0, 4, 4]  # annuli carry hole vertices
     # end-to-end parity of the vectorized intersects on this mixed batch
-    probe = GF.st_diamond_builder(
-        pd.Series([0.0] * 4), pd.Series([0.0] * 4), pd.Series([0.5] * 4)
+    probe = GF._diamond_arrow(
+        pa.array([0.0] * 4), pa.array([0.0] * 4), pa.array([0.5] * 4)
     )
     got = GF._fast_polypoly_predicate("intersects", mixed, probe)
     assert got is not None
+    mixed, probe = mixed.to_pylist(), probe.to_pylist()
     want = [
         geometry_from_wkb(mixed[i]).intersects(geometry_from_wkb(probe[i]))
         for i in range(4)
     ]
-    assert [bool(v) for v in got] == want
+    assert [bool(v) for v in got.to_pylist()] == want
 
 
 def test_polys_packed_never_raises_on_garbage():
@@ -557,8 +629,6 @@ def test_polys_packed_never_raises_on_garbage():
     bytes (truncations, bit flips, random noise) must make it DECLINE
     to the scalar kernel, never crash or mis-pack."""
     import random
-
-    import pandas as pd
 
     from iceberg_geo_poc_spark.geo import functions as GF
     from iceberg_geo_poc_spark.geo.geometry import Polygon
@@ -583,8 +653,7 @@ def test_polys_packed_never_raises_on_garbage():
             cases.append(valid[:cut] + b"\xff" * rng.randrange(4))
     for chunk_start in range(0, len(cases), 32):
         batch = cases[chunk_start : chunk_start + 32]
-        s = pd.Series(batch, dtype=object)
-        pk = GF._polys_packed(s)  # must not raise
+        pk = GF._polys_packed(_bin(batch))  # must not raise
         if pk is None:
             continue
         # accepted batch: every ok row must round-trip through the
@@ -601,16 +670,14 @@ def test_polys_packed_never_raises_on_garbage():
 
 def test_fast_polypoly_refuses_mixed_batches():
     """Non-polygon rows must push the whole batch to the generic kernel."""
-    import pandas as pd
-
     from iceberg_geo_poc_spark.geo import functions as GF
     from iceberg_geo_poc_spark.geo.geometry import Point, Polygon
     from iceberg_geo_poc_spark.geo.wkb import geometry_to_wkb
 
     sq = geometry_to_wkb(Polygon([(0, 0), (1, 0), (1, 1), (0, 1), (0, 0)]))
     pt = geometry_to_wkb(Point(0.5, 0.5))
-    a = pd.Series([sq, pt], dtype=object)
-    b = pd.Series([sq, sq], dtype=object)
+    a = _bin([sq, pt])
+    b = _bin([sq, sq])
     assert GF._fast_polypoly_predicate("intersects", a, b) is None
     # and unknown predicates are refused outright
     assert GF._fast_polypoly_predicate("touches", b, b) is None
@@ -625,7 +692,6 @@ def test_ragged_collinear_drop_agrees_with_scalar_kernel():
     import random
 
     import numpy as np
-    import pandas as pd
 
     from iceberg_geo_poc_spark.geo import functions as GF
     from iceberg_geo_poc_spark.geo.wkb import geometry_from_wkb
@@ -670,10 +736,11 @@ def test_ragged_collinear_drop_agrees_with_scalar_kernel():
                 rng.randrange(3, 7), rng.randrange(1, 4),
             )
         )
-    sa, sb = pd.Series(wa, dtype=object), pd.Series(wb, dtype=object)
+    sa, sb = _bin(wa), _bin(wb)
     for pred in ("intersects", "covers", "within"):
         fast = GF._fast_polypoly_predicate(pred, sa, sb)
         assert fast is not None
+        fast = fast.to_pylist()
         for i, (a, b) in enumerate(zip(wa, wb)):
             want = getattr(geometry_from_wkb(a), pred)(geometry_from_wkb(b))
             assert fast[i] == want, (pred, i)

@@ -58,6 +58,30 @@ def test_sql_registration(spark, geo_df):
     assert abs(got.buf_area - 3.14159) < 0.01
 
 
+_ACCESSORS = ("st_x", "st_y", "st_xmin", "st_ymin", "st_xmax", "st_ymax")
+_ACCESSOR_CASES = {
+    # input SQL -> (x, y, xmin, ymin, xmax, ymax)
+    "point": ("st_geomfromtext('POINT (1 2)')", (1.0, 2.0, 1.0, 2.0, 1.0, 2.0)),
+    "polygon": (
+        "st_geomfromtext('POLYGON ((0 0, 4 0, 4 3, 0 3, 0 0))')",
+        (None, None, 0.0, 0.0, 4.0, 3.0),
+    ),
+    "point_empty": ("st_geomfromtext('POINT EMPTY')", (None,) * 6),
+    "null": ("CAST(NULL AS BINARY)", (None,) * 6),
+}
+
+
+@pytest.mark.parametrize("case", list(_ACCESSOR_CASES))
+def test_sql_accessor_null_semantics(spark, case):
+    """x/y of a non-point, bounds of an empty geometry and any accessor
+    of NULL are NULL (never NaN)."""
+    register_geo_functions(spark)
+    geom, want = _ACCESSOR_CASES[case]
+    cols = ", ".join(f"{f}(g) AS {f}" for f in _ACCESSORS)
+    row = spark.sql(f"SELECT {cols} FROM (SELECT {geom} AS g)").collect()[0]
+    assert tuple(row[f] for f in _ACCESSORS) == want
+
+
 def test_st_hilbert_column(spark, geo_df):
     got = geo_df.select("id", st_hilbert("geom", 10).alias("h")).collect()
     assert all(r.h is not None and r.h >= 0 for r in got)

@@ -67,6 +67,43 @@ def test_collect_aggr_assembles_once(spark):
     assert all(abs(rows[g]["area"] - 5.0) < 1e-9 for g in rows)
 
 
+def test_manifest_bbox_decodes_each_geometry_once(spark):
+    """The per-file manifest bbox aggregate decodes each geometry column
+    through exactly ONE bounds UDF call, whatever its encoding, and
+    min/max over that one envelope give the file's bbox."""
+    from iceberg_geo_poc_spark.geo.functions import st_makeenvelope, st_point
+    from iceberg_geo_poc_spark.table.manifest import _bbox_frame
+
+    df = spark.range(8).select(
+        (F.col("id") % 2).cast("string").alias("__file"),
+        st_point(F.col("id").cast("double"), -F.col("id").cast("double")).alias("pt"),
+        st_makeenvelope(
+            F.col("id").cast("double"),
+            F.lit(0.0),
+            F.col("id").cast("double") + 0.5,
+            F.lit(1.0),
+        ).alias("cell"),
+        F.concat(
+            F.lit("POINT ("), F.col("id").cast("string"), F.lit(" 3)")
+        ).alias("txt"),
+    )
+    out = _bbox_frame(df, {"pt": "wkb", "cell": "wkb", "txt": "wkt"})
+    plan = _plan(out)
+    # three geometry columns, three decodes (each column needs one)
+    assert plan.count("st_bounds_once_udf(") == 3, plan
+    rows = {r["__file"]: r for r in out.collect()}
+    # file "0" holds ids 0, 2, 4, 6; file "1" holds 1, 3, 5, 7
+    assert [rows["0"][f"pt__{k}"] for k in ("xmin", "ymin", "xmax", "ymax")] == [
+        0.0, -6.0, 6.0, 0.0,
+    ]
+    assert [rows["1"][f"cell__{k}"] for k in ("xmin", "ymin", "xmax", "ymax")] == [
+        1.0, 0.0, 7.5, 1.0,
+    ]
+    assert [rows["1"][f"txt__{k}"] for k in ("xmin", "ymin", "xmax", "ymax")] == [
+        1.0, 3.0, 7.0, 3.0,
+    ]
+
+
 def test_kmeans_centroids_flat_lineage(spark, emb):
     """Per-round localCheckpoint: the returned centroids' plan is rooted
     at a checkpoint scan, not the 3^iters-branch Lloyd lineage."""
