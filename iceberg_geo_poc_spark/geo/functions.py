@@ -16,8 +16,8 @@ st_centroid, st_hilbert.
 Column representation: BinaryType carrying standard WKB.  Every UDF is
 Arrow-batched.  Functions with a vectorized fast path (constructors,
 coordinate/bounds accessors, predicates, distance, the fused pair
-kernels) are ``arrow_udf`` over ``pa.Array``; the per-row rest
-(codecs, st_area, st_buffer, st_hilbert, ...) are ``pandas_udf``.
+kernels, the st_hilbert key) are ``arrow_udf`` over ``pa.Array``; the
+per-row rest (codecs, st_area, st_buffer, ...) are ``pandas_udf``.
 """
 
 from __future__ import annotations
@@ -44,13 +44,13 @@ from iceberg_geo_poc_spark.geo import geometry as G
 from iceberg_geo_poc_spark.geo.encoding import decode as decode_enc
 from iceberg_geo_poc_spark.geo.encoding import encode as encode_enc
 from iceberg_geo_poc_spark.geo.geojson import geometry_to_geojson
-from iceberg_geo_poc_spark.geo.hilbert import DEFAULT_BOUNDS, hilbert_index_geoms
+from iceberg_geo_poc_spark.geo.hilbert import (
+    DEFAULT_BOUNDS,
+    check_hilbert_params,
+    hilbert_index_xy,
+)
 from iceberg_geo_poc_spark.geo.wkb import geometry_from_wkb, geometry_to_wkb
 from iceberg_geo_poc_spark.geo.wkt import geometry_from_wkt, geometry_to_wkt
-
-
-def _decode_series(s: pd.Series) -> list:
-    return [None if v is None else geometry_from_wkb(v) for v in s]
 
 
 # -- vectorized fast paths -------------------------------------------------
@@ -1840,28 +1840,55 @@ def st_centroid_udf(wkb: pd.Series) -> pd.Series:
 
 
 # -- hilbert ---------------------------------------------------------------
+#
+# The Hilbert write key: envelope centres from the vectorized bounds pass
+# (_bounds_cols), then one numpy curve evaluation per batch.  The Column
+# API binds resolution and extent in the closure of a ONE-argument
+# kernel: Spark runs a Python UDF in the same ArrowEvalPython node as the
+# UDF producing its input (st_point, say) only when it has exactly one
+# argument, so literal parameter columns would cost a second Python
+# worker round trip per task.
 
-@pandas_udf(LongType())
-def st_hilbert_udf(
-    wkb: pd.Series,
-    resolution: pd.Series,
-    minx: pd.Series,
-    miny: pd.Series,
-    maxx: pd.Series,
-    maxy: pd.Series,
-) -> pd.Series:
-    if len(wkb) == 0:
-        return pd.Series([], dtype="Int64")
-    res = int(resolution.iloc[0])
-    bounds = (
-        float(minx.iloc[0]),
-        float(miny.iloc[0]),
-        float(maxx.iloc[0]),
-        float(maxy.iloc[0]),
+
+def _hilbert_arrow(wkb: pa.Array, resolution: int, bounds) -> pa.Array:
+    """Hilbert index of each row's envelope centre; null for null,
+    empty and out-of-extent rows."""
+    b = _bounds_cols(wkb)
+    idx = hilbert_index_xy(
+        (b["xmin"] + b["xmax"]) / 2.0,
+        (b["ymin"] + b["ymax"]) / 2.0,
+        resolution,
+        bounds,
     )
-    geoms = _decode_series(wkb)
-    idx = hilbert_index_geoms(geoms, res, bounds)
-    return pd.Series(idx).astype("Int64").where(pd.Series(idx) >= 0, None)
+    return pa.array(idx, type=pa.int64(), mask=idx < 0)
+
+
+@arrow_udf(LongType())
+def st_hilbert_udf(
+    wkb: pa.Array,
+    resolution: pa.Array,
+    minx: pa.Array,
+    miny: pa.Array,
+    maxx: pa.Array,
+    maxy: pa.Array,
+) -> pa.Array:
+    """SQL form ``st_hilbert(geom, res, minx, miny, maxx, maxy)``; the
+    parameters are literals, read from the batch's first row."""
+    if len(wkb) == 0:
+        return pa.array([], type=pa.int64())
+    res = resolution[0].as_py()
+    bounds = tuple(float(c[0].as_py()) for c in (minx, miny, maxx, maxy))
+    return _hilbert_arrow(wkb, res, bounds)
+
+
+def _hilbert_kernel(resolution, bounds):
+    res, ext = check_hilbert_params(resolution, bounds)
+
+    @arrow_udf(LongType())
+    def _hilbert(wkb: pa.Array) -> pa.Array:
+        return _hilbert_arrow(wkb, res, ext)
+
+    return _hilbert
 
 
 # -- column-level API ------------------------------------------------------
@@ -1911,14 +1938,10 @@ def st_makeenvelope(xmin, ymin, xmax, ymax) -> Column:
 def st_hilbert(
     geom, resolution: int, bounds: tuple[float, float, float, float] = DEFAULT_BOUNDS
 ) -> Column:
-    return st_hilbert_udf(
-        _c(geom),
-        F.lit(resolution),
-        F.lit(bounds[0]),
-        F.lit(bounds[1]),
-        F.lit(bounds[2]),
-        F.lit(bounds[3]),
-    )
+    """Hilbert index (LongType) of the geometry's envelope centre over
+    ``bounds``; NULL for null, empty and out-of-extent geometries.  Bad
+    parameters raise ValueError here, on the driver."""
+    return _hilbert_kernel(resolution, bounds)(_c(geom))
 
 
 def _c(v) -> Column:

@@ -16,9 +16,10 @@ The reference's curve comes from uzaygezen's CompactHilbertCurve; the
 test contract is *locality properties only*, not bit-equality
 (reference api/src/test/java/org/apache/iceberg/transforms/TestHilbert.java:60-83),
 so this uses the classic Hilbert d2xy/xy2d mapping, vectorized with
-numpy for pandas-UDF batches.  Physical partition values are therefore
-not byte-portable to the reference — documented non-goal (SURVEY §7
-watch-list 2).
+numpy over whole Arrow batches (``geo.functions.st_hilbert`` feeds it
+the envelope centres of a batch in one call).  Physical partition
+values are therefore not byte-portable to the reference — documented
+non-goal (SURVEY §7 watch-list 2).
 """
 
 from __future__ import annotations
@@ -27,6 +28,35 @@ import numpy as np
 
 DEFAULT_BOUNDS = (-180.0, -90.0, 180.0, 90.0)
 MAX_RESOLUTION = 30  # 2 bits/level * 30 = 60 bits < int64
+
+
+def check_hilbert_params(
+    resolution: int, bounds: tuple[float, float, float, float] = DEFAULT_BOUNDS
+) -> tuple[int, tuple[float, float, float, float]]:
+    """Validated ``(resolution, bounds)``; ValueError otherwise.
+
+    The resolution must be an integer in [1, MAX_RESOLUTION].  The
+    extent (minx, miny, maxx, maxy) must be finite with min < max on
+    both axes, and its grid scale (2^res - 1) / (max - min) finite and
+    non-zero: a degenerate extent would divide by zero inside an
+    executor task, an infinite one would give every point the same key
+    and an inverted one would make every key NULL.
+    """
+    res = int(resolution)
+    if res != resolution or not 1 <= res <= MAX_RESOLUTION:
+        raise ValueError(
+            f"hilbert resolution must be an integer in [1,{MAX_RESOLUTION}],"
+            f" got {resolution!r}"
+        )
+    minx, miny, maxx, maxy = (float(b) for b in bounds)
+    cells = float((1 << res) - 1)
+    for lo, hi in ((minx, maxx), (miny, maxy)):
+        # NaN fails lo < hi; an infinite or overflowing extent gives scale 0
+        if not (lo < hi and 0.0 < cells / (hi - lo) < np.inf):
+            raise ValueError(
+                f"hilbert bounds must be finite with min < max, got {bounds!r}"
+            )
+    return res, (minx, miny, maxx, maxy)
 
 
 def hilbert_index_xy(
@@ -38,11 +68,10 @@ def hilbert_index_xy(
     """Vectorized Hilbert curve index of float coordinate arrays.
 
     Returns an int64 array with -1 marking NULL (NaN or out-of-bounds
-    input); callers translate -1 to SQL NULL.
+    input); callers translate -1 to SQL NULL.  Bad parameters raise
+    ValueError (:func:`check_hilbert_params`).
     """
-    if not 1 <= resolution <= MAX_RESOLUTION:
-        raise ValueError(f"hilbert resolution must be in [1,{MAX_RESOLUTION}]")
-    minx, miny, maxx, maxy = bounds
+    resolution, (minx, miny, maxx, maxy) = check_hilbert_params(resolution, bounds)
     n = np.int64(1) << resolution
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
@@ -84,22 +113,3 @@ def hilbert_d_from_cells(gx: np.ndarray, gy: np.ndarray, resolution: int) -> np.
         gx, gy = np.where(swap, gy_f, gx_f), np.where(swap, gx_f, gy_f)
         s >>= 1
     return d
-
-
-def hilbert_index_geoms(
-    geoms,
-    resolution: int,
-    bounds: tuple[float, float, float, float] = DEFAULT_BOUNDS,
-) -> np.ndarray:
-    """Hilbert index of an iterable of Geometry|None via envelope centers."""
-    xs = np.empty(len(geoms), dtype=np.float64)
-    ys = np.empty(len(geoms), dtype=np.float64)
-    for i, g in enumerate(geoms):
-        if g is None or g.is_empty():
-            xs[i] = np.nan
-            ys[i] = np.nan
-        else:
-            xmin, ymin, xmax, ymax = g.bounds
-            xs[i] = (xmin + xmax) / 2.0
-            ys[i] = (ymin + ymax) / 2.0
-    return hilbert_index_xy(xs, ys, resolution, bounds)

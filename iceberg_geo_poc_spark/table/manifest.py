@@ -307,13 +307,21 @@ def float_columns(df) -> list[str]:
     ]
 
 
-def compute_bboxes(spark, paths: list[str], geo_fields: dict[str, str], df=None):
+def compute_bboxes(
+    spark,
+    paths: list[str],
+    geo_fields: dict[str, str],
+    df=None,
+    schema_ddl: str | None = None,
+):
     """Per-file geometry bboxes via one distributed aggregation.
 
     ``df`` overrides the source scan (it must carry ``__file`` plus the
     geometry columns) — the modular-encryption write path passes its
     decrypting read here, so encrypted geo tables get the same manifest
-    bbox metrics as plain ones.
+    bbox metrics as plain ones.  ``schema_ddl`` is the schema the files
+    were written with; given it, the scan skips Spark's schema-inference
+    job (files of unknown writers leave it None).
 
     Returns {file_path: {geo_col: [xmin,ymin,xmax,ymax] | None}}.
     """
@@ -322,7 +330,8 @@ def compute_bboxes(spark, paths: list[str], geo_fields: dict[str, str], df=None)
     if not geo_fields or not paths:
         return {}
     if df is None:
-        df = spark.read.parquet(*paths).select(
+        reader = spark.read.schema(schema_ddl) if schema_ddl else spark.read
+        df = reader.parquet(*paths).select(
             F.col("_metadata.file_path").alias("__file"),
             *geo_fields.keys(),
         )

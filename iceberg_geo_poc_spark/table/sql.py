@@ -140,6 +140,11 @@ def _partition_term(term: str) -> tuple[str, str]:
     if fn in ("year", "years", "month", "months", "day", "days", "hour", "hours"):
         return parts[0], fn.rstrip("s")
     if fn == "hilbert":
+        if len(parts) not in (1, 2, 6):
+            raise SqlError(
+                f"hilbert needs (column[, res]) or (column, minx, miny, maxx,"
+                f" maxy, res): {term!r}"
+            )
         col = parts[0]
         res = int(parts[1]) if len(parts) > 1 else 10
         if len(parts) == 6:

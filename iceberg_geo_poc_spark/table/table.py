@@ -824,7 +824,9 @@ class Table:
             # no cheap footer API for ORC under pyarrow: one distributed
             # per-file aggregation supplies the same manifest stats
             stats = M.harvest_stats_spark(self.spark, paths, fmt, self.meta.schema_ddl)
-        bboxes = M.compute_bboxes(self.spark, paths, self.geo_fields)
+        bboxes = M.compute_bboxes(
+            self.spark, paths, self.geo_fields, schema_ddl=self.meta.schema_ddl
+        )
         # nan_value_counts for float/double columns (reference
         # Metrics.java nanValueCounts / FloatFieldMetrics.java).  The
         # parquet footer already *signals* NaN presence exactly

@@ -7,7 +7,8 @@ hilbert[res,minx,miny,maxx,maxy]).  Each transform yields:
 
 - ``spark_column(col)``  — the Catalyst expression that computes the
   partition value at write time (JVM-side for everything except
-  hilbert, which is the vectorized pandas UDF);
+  hilbert, which is the vectorized one-argument ``arrow_udf`` kernel
+  of ``geo.functions.st_hilbert``);
 - ``parse_path_value``   — typed value from the hive-style directory
   name that ``partitionBy`` produced.
 
@@ -26,7 +27,7 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-from iceberg_geo_poc_spark.geo.hilbert import DEFAULT_BOUNDS
+from iceberg_geo_poc_spark.geo.hilbert import DEFAULT_BOUNDS, check_hilbert_params
 
 
 @dataclass(frozen=True)
@@ -229,10 +230,13 @@ def parse_transform(spec: str) -> Transform:
     if base == "void":
         return Void()
     if base == "hilbert":
-        res = int(args[0]) if args else 10
-        bounds = DEFAULT_BOUNDS
-        if len(args) == 5:
-            bounds = tuple(float(a) for a in args[1:])
+        if len(args) not in (0, 1, 5):
+            raise ValueError(
+                f"hilbert takes [res] or [res,minx,miny,maxx,maxy], got {spec!r}"
+            )
+        res, bounds = check_hilbert_params(
+            int(args[0]) if args else 10, args[1:] or DEFAULT_BOUNDS
+        )
         return Hilbert(resolution=res, bounds=bounds)
     raise ValueError(f"unknown transform {base!r}")
 

@@ -29,7 +29,7 @@ from iceberg_geo_poc_spark.geo import (
     geometry_to_wkt,
 )
 from iceberg_geo_poc_spark.geo.geojson import geometry_from_geojson, geometry_to_geojson
-from iceberg_geo_poc_spark.geo.hilbert import hilbert_index_geoms, hilbert_index_xy
+from iceberg_geo_poc_spark.geo.hilbert import DEFAULT_BOUNDS, hilbert_index_xy
 
 
 SAMPLES = [
@@ -177,6 +177,22 @@ def test_area_distance_centroid():
 
 # -- hilbert properties (F3) -----------------------------------------------
 
+def hilbert_index_geoms(geoms, resolution, bounds=DEFAULT_BOUNDS):
+    """Per-geometry reference for the Arrow Hilbert kernel: the index of
+    each Geometry|None's envelope centre, -1 for NULL."""
+    xs = np.empty(len(geoms), dtype=np.float64)
+    ys = np.empty(len(geoms), dtype=np.float64)
+    for i, g in enumerate(geoms):
+        if g is None or g.is_empty():
+            xs[i] = np.nan
+            ys[i] = np.nan
+        else:
+            xmin, ymin, xmax, ymax = g.bounds
+            xs[i] = (xmin + xmax) / 2.0
+            ys[i] = (ymin + ymax) / 2.0
+    return hilbert_index_xy(xs, ys, resolution, bounds)
+
+
 def _idx(x, y, res=10):
     return int(hilbert_index_xy(np.array([x]), np.array([y]), res)[0])
 
@@ -207,6 +223,61 @@ def test_hilbert_custom_extent():
     assert idx[0] >= 0
     idx2 = hilbert_index_xy(np.array([-10.0]), np.array([-10.0]), 10, (0, 0, 1000, 1000))
     assert idx2[0] == -1
+
+
+_INF = float("inf")
+_BAD_EXTENTS = {
+    "degenerate_x": (0.0, 0.0, 0.0, 10.0),
+    "degenerate_y": (0.0, 5.0, 10.0, 5.0),
+    "inverted": (10.0, 0.0, 0.0, 10.0),
+    "infinite": (-_INF, -90.0, _INF, 90.0),
+    "nan": (0.0, 0.0, float("nan"), 10.0),
+    "overflowing_width": (-1e308, 0.0, 1e308, 10.0),
+}
+
+
+@pytest.mark.parametrize("bounds", list(_BAD_EXTENTS.values()), ids=list(_BAD_EXTENTS))
+def test_hilbert_refuses_bad_extent(bounds):
+    """A degenerate extent used to divide by zero inside the task, an
+    infinite one gave every point the same key and an inverted one made
+    every key NULL; all are refused up front."""
+    with pytest.raises(ValueError, match="hilbert bounds"):
+        hilbert_index_xy(np.array([1.0]), np.array([1.0]), 10, bounds)
+
+
+@pytest.mark.parametrize("res", [0, 31, 10.5])
+def test_hilbert_refuses_bad_resolution(res):
+    with pytest.raises(ValueError, match="hilbert resolution"):
+        hilbert_index_xy(np.array([1.0]), np.array([1.0]), res)
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        "hilbert[10,0,0,10]",  # four arguments: used to fall back to world bounds
+        "hilbert[10,0,0]",
+        "hilbert[10,0,0,0,10]",
+        "hilbert[10,10,0,0,10]",
+        "hilbert[10,0,0,inf,10]",
+        "hilbert[0]",
+        "hilbert[31]",
+    ],
+)
+def test_parse_transform_refuses_bad_hilbert_spec(spec):
+    from iceberg_geo_poc_spark.table.transforms import parse_transform
+
+    with pytest.raises(ValueError, match="hilbert"):
+        parse_transform(spec)
+
+
+def test_parse_transform_hilbert_specs():
+    from iceberg_geo_poc_spark.table.transforms import Hilbert, parse_transform
+
+    assert parse_transform("hilbert") == Hilbert(resolution=10)
+    assert parse_transform("hilbert[12]") == Hilbert(resolution=12)
+    assert parse_transform("hilbert[8,0,-5,1000,500]") == Hilbert(
+        resolution=8, bounds=(0.0, -5.0, 1000.0, 500.0)
+    )
 
 
 def _grid_points(res):
@@ -744,3 +815,62 @@ def test_ragged_collinear_drop_agrees_with_scalar_kernel():
         for i, (a, b) in enumerate(zip(wa, wb)):
             want = getattr(geometry_from_wkb(a), pred)(geometry_from_wkb(b))
             assert fast[i] == want, (pred, i)
+
+
+def _hilbert_batches():
+    """{batch: wkb values}: one batch per vectorized bounds path (points,
+    rectangles, packed polygons and multipolygons) plus a mixed batch
+    that takes the per-geometry fallback, with EWKB carrying an SRID,
+    POINT EMPTY, NULL, a half-NaN point and out-of-extent rows."""
+    rng = np.random.default_rng(5)
+
+    def xy():
+        return float(rng.uniform(-170, 160)), float(rng.uniform(-80, 70))
+
+    pts = [Point(*xy()) for _ in range(16)]
+    rects = []
+    polys = []
+    for _ in range(12):
+        x, y = xy()
+        rects.append(box(x, y, x + rng.uniform(0.1, 9), y + rng.uniform(0.1, 9)))
+        polys.append(Polygon([(x, y), (x + 7, y + 1), (x + 2, y + 9)]))
+    mpolys = [MultiPolygon([polys[i], polys[i + 1]]) for i in range(0, 12, 2)]
+    special = [
+        geometry_to_wkb(geometry_from_wkt("POINT EMPTY")),
+        None,
+        geometry_to_wkb(Point(float("nan"), 1.0)),
+        geometry_to_wkb(Point(200.0, 10.0)),
+    ]
+    wkb = [geometry_to_wkb(g) for g in pts + rects + polys + mpolys]
+    ewkb = [geometry_to_wkb(g, srid=4326) for g in pts[:4] + rects[:4] + mpolys[:4]]
+    return {
+        "points": [geometry_to_wkb(g) for g in pts] + special,
+        "rectangles": [geometry_to_wkb(g) for g in rects] + [None],
+        "polygons": [geometry_to_wkb(g) for g in polys + rects] + [None],
+        "multipolygons": [geometry_to_wkb(g) for g in mpolys + polys],
+        "mixed": wkb + ewkb + special
+        + [geometry_to_wkb(LineString([(0, 0), (3, 4)]))],
+    }
+
+
+@pytest.mark.parametrize(
+    "bounds", [DEFAULT_BOUNDS, (-60.0, -30.0, 90.0, 45.0)], ids=["world", "custom"]
+)
+@pytest.mark.parametrize("res", [8, 10, 12])
+@pytest.mark.parametrize("batch", list(_hilbert_batches()))
+def test_arrow_hilbert_matches_per_geometry_reference(batch, res, bounds):
+    """The st_hilbert Arrow kernel gives, in every Arrow layout, the
+    per-geometry reference's key for every row (NULL where it gives
+    -1)."""
+    from iceberg_geo_poc_spark.geo import functions as GF
+
+    values = _hilbert_batches()[batch]
+    ref = hilbert_index_geoms(
+        [None if v is None else geometry_from_wkb(v) for v in values], res, bounds
+    )
+    want = [None if k < 0 else int(k) for k in ref]
+    assert any(k is not None for k in want)
+    for layout, col in _layouts(values).items():
+        got = GF._hilbert_arrow(col, res, bounds).to_pylist()
+        assert got == want, (batch, layout)
+

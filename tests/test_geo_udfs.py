@@ -91,6 +91,52 @@ def test_st_hilbert_column(spark, geo_df):
     assert hrow.h is None
 
 
+def test_st_hilbert_refuses_bad_extent_on_driver(spark, geo_df):
+    """A bad extent fails when the column is built, not inside a task."""
+    with pytest.raises(ValueError, match="hilbert bounds"):
+        st_hilbert("geom", 10, (0.0, 0.0, 0.0, 10.0))
+    with pytest.raises(ValueError, match="hilbert resolution"):
+        st_hilbert("geom", 31)
+
+
+def test_st_hilbert_sql_form_equals_column_form(spark):
+    """The six-argument SQL st_hilbert and the Column st_hilbert share
+    one kernel: same key (or NULL) on every row."""
+    from iceberg_geo_poc_spark.geo import MultiPolygon, Polygon, geometry_from_wkt
+    from iceberg_geo_poc_spark.geo.wkb import geometry_to_wkb
+
+    tri = Polygon([(10, 10), (30, 12), (14, 40)])
+    geoms = [
+        Point(12.5, -7.25),
+        Point(170.0, 80.0),
+        box(-50, -20, -10, 5),
+        tri,
+        MultiPolygon([tri, box(60, 20, 70, 30)]),
+        geometry_from_wkt("POINT EMPTY"),
+        Point(200.0, 10.0),
+        None,
+    ]
+    rows = [
+        (i, None if g is None else bytearray(geometry_to_wkb(g)))
+        for i, g in enumerate(geoms)
+    ]
+    rows.append((len(rows), bytearray(geometry_to_wkb(tri, srid=4326))))
+    df = spark.createDataFrame(rows, "id long, g binary")
+    register_geo_functions(spark)
+    for res, bounds, sql_bounds in (
+        (10, (-180.0, -90.0, 180.0, 90.0), "-180, -90, 180, 90"),
+        (12, (-60.0, -30.0, 90.0, 45.0), "-60D, -30D, 90D, 45D"),
+    ):
+        got = df.select(
+            "id",
+            st_hilbert("g", res, bounds).alias("col"),
+            F.expr(f"st_hilbert(g, {res}, {sql_bounds})").alias("sql"),
+        ).collect()
+        assert len(got) == len(rows)
+        assert all(r.col == r.sql for r in got), got
+        assert sum(r.col is not None for r in got) >= 4, got
+
+
 def test_distance_and_covers_sql(spark, geo_df):
     register_geo_functions(spark)
     geo_df.createOrReplaceTempView("geo_pts")

@@ -132,6 +132,22 @@ def test_diamond_join_codegen_blocking(spark, sf_dir):
     assert n_arrow <= 1, f"fused pair kernel split apart ({n_arrow} ArrowEval)"
 
 
+def test_hilbert_key_chains_into_its_input_python_node(spark):
+    """st_hilbert is a one-argument kernel, so Spark chains it into the
+    ArrowEvalPython node of the st_point that feeds it: one Python
+    worker round trip per task, not two."""
+    import pyspark.sql.functions as F
+
+    from iceberg_geo_poc_spark.geo.functions import st_hilbert, st_point
+
+    df = spark.range(64).select(
+        (F.col("id") * 5.0 - 160.0).alias("x"), (F.col("id") * 2.0 - 60.0).alias("y")
+    ).select(st_hilbert(st_point("x", "y"), 12).alias("h"))
+    assert all(r.h is not None for r in df.collect())
+    plan = _plan(df)
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_spark_planning_filters_manifest_scan(spark, tmp_path):
     """Distributed planning pushes the pruning predicate into the
     manifest parquet scan (PushedFilters on the stats columns)."""

@@ -543,6 +543,22 @@ def test_unsupported_statements_raise(spark, catalog):
         catalog.sql("ALTER TABLE u1 FROBNICATE")
 
 
+def test_hilbert_partition_term_argument_count():
+    """hilbert(col[, res]) or hilbert(col, minx, miny, maxx, maxy, res);
+    any other argument count is refused, not read as hilbert[res]."""
+    from iceberg_geo_poc_spark.table.sql import _partition_term
+
+    assert _partition_term("hilbert(geom)") == ("geom", "hilbert[10]")
+    assert _partition_term("hilbert(geom, 12)") == ("geom", "hilbert[12]")
+    assert _partition_term("hilbert(geom, 0, 0, 100, 50, 8)") == (
+        "geom",
+        "hilbert[8,0,0,100,50]",
+    )
+    for term in ("hilbert(geom, 12, 0, 0)", "hilbert(geom, 0, 0, 100, 50)"):
+        with pytest.raises(SqlError, match="hilbert"):
+            _partition_term(term)
+
+
 def test_replace_partition_field(spark, catalog):
     catalog.create_table("rpf", "k BIGINT, ts TIMESTAMP")
     catalog.sql("ALTER TABLE rpf ADD PARTITION FIELD days(ts)")

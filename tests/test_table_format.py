@@ -664,6 +664,46 @@ def test_hilbert_write_order_clusters_spatially(spark, catalog):
         catalog.set_write_order("whilb", ["hilbert(id)"])
 
 
+def test_hilbert_ordered_append_job_count(spark, catalog):
+    """A Hilbert-ordered range append runs five Spark jobs, no more: the
+    manifest bbox read of the new files takes the table schema, so it
+    launches no schema-inference job of its own."""
+    t = catalog.create_table(
+        "hjobs", "id BIGINT, geom BINARY", geometry_columns={"geom": "wkb"}
+    )
+    catalog.set_write_order("hjobs", ["hilbert(geom)"], distribution_mode="range")
+    t = catalog.load_table("hjobs")
+    rows = [
+        (i, bytearray(geometry_to_wkb(Point(i * 1.1 - 160.0, (i * 7) % 150 - 75.0))))
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(rows, "id BIGINT, geom BINARY")
+    sc = spark.sparkContext
+    sc.setJobGroup("hilbert-append-jobs", "Hilbert-ordered append")
+    try:
+        t.append(df)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("hilbert-append-jobs"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert n_jobs == 5
+    # the schema-bound bbox read still gives each file its exact bbox
+    import json
+
+    import pyarrow.parquet as pq
+
+    from iceberg_geo_poc_spark.geo import geometry_from_wkb
+
+    entries = t._entries()
+    assert entries.record_count.sum() == 300
+    for row in entries.itertuples():
+        pts = [
+            geometry_from_wkb(v)
+            for v in pq.read_table(row.file_path, columns=["geom"])["geom"].to_pylist()
+        ]
+        xs, ys = [p.x for p in pts], [p.y for p in pts]
+        assert json.loads(row.bbox)["geom"] == [min(xs), min(ys), max(xs), max(ys)]
+
+
 def test_snapshot_table_zero_copy_clone(spark, catalog):
     t = catalog.create_table("snapsrc", "a BIGINT")
     t.append(spark.createDataFrame([(i,) for i in range(10)], "a BIGINT"))
