@@ -2000,6 +2000,16 @@ def convert_encoding_udf(src: str, dst: str):
     return _conv
 
 
+def as_wkb(col, enc: str | None) -> Column:
+    """A geometry column stored in encoding ``enc``, as WKB: unchanged for
+    wkb/ewkb (and for ``enc=None``, a column with no declared encoding),
+    otherwise decoded by ``convert_encoding_udf(enc, "wkb")``."""
+    col = _c(col)
+    if enc in (None, "wkb", "ewkb"):
+        return col
+    return convert_encoding_udf(enc, "wkb")(col)
+
+
 def st_envelope_aggr(df, geom_col: str, group_cols: list[str] | None = None):
     """Aggregate bounding envelope per group (the Sedona ST_Envelope_Aggr
     the reference defers to via its GeospatialLibrary SPI,

@@ -41,40 +41,6 @@ def tokenize(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def doc_bigrams(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One row per (doc_id, w1, w2) adjacent pair — array transform +
-    explode, stays in whole-stage codegen."""
-    return (
-        tokenize(docs, text_col)
-        .filter(F.size("w") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(w) - 2), "
-                    "i -> struct(w[i] AS w1, w[i + 1] AS w2))"
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", "bg.w1", "bg.w2")
-    )
-
-
-def train_bigram_lm(docs: DataFrame, text_col: str = "text"):
-    """(unigram_counts, bigram_counts, vocab_size): two groupBys.
-    Unigram counts include every token position (the conditioning
-    context counts c(w1) used by the bigram MLE)."""
-    toks = tokenize(docs, text_col).select(F.explode("w").alias("w1"))
-    uni = toks.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    big = (
-        doc_bigrams(docs, text_col)
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-    )
-    vocab = uni.count()
-    return uni, big, vocab
-
-
 def perplexity_scores(
     docs: DataFrame, text_col: str = "text", k: float = 0.1
 ) -> DataFrame:

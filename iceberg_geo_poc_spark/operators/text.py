@@ -486,85 +486,6 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame, k: int = 3, w: int = 4, text_col: str = "text"
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
-    SIGMOD 2003 — the MOSS algorithm): hash every POSITIONAL k-word
-    gram, slide a window of ``w`` consecutive gram hashes, and keep
-    each window's minimum — guaranteeing any shared run of at least
-    ``w + k - 1`` words between two documents shares a fingerprint,
-    at ~2/(w+1) the density of full k-gram fingerprinting.
-
-    Plan shape: posexplode of the gram array (no Python), a 48-bit
-    md5-prefix hash in codegen, ONE running-window min over the
-    per-doc position sort, then distinct — a single shuffle on doc_id.
-    Ties break to the LEFTMOST minimal gram by packing (hash, pos)
-    into one 60-bit key (hash*4096 + pos), so selection is total-order
-    deterministic and replayable in SQL on any engine.  Documents with
-    fewer than ``w`` grams emit no fingerprints (no partial windows).
-    """
-    from pyspark.sql import Window
-
-    parts = ", ".join(f"words[i + {j}]" for j in range(k))
-    grams = (
-        with_words(docs, text_col)
-        .filter(F.size("words") >= k)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, size(words) - {k}),"
-                    f" i -> concat_ws(' ', {parts}))"
-                )
-            ).alias("pos", "gram"),
-        )
-    )
-    hashed = grams.withColumn(
-        "key",
-        F.expr(
-            "CAST(conv(substr(md5(gram), 1, 12), 16, 10) AS BIGINT)"
-        )
-        * 4096
-        + F.col("pos"),
-    )
-    doc_w = Window.partitionBy("doc_id")
-    run = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
-    sel = (
-        hashed.withColumn("n_grams", F.count(F.lit(1)).over(doc_w))
-        .withColumn("minkey", F.min("key").over(run))
-        .filter(F.col("pos") <= F.col("n_grams") - w)
-        .select("doc_id", "minkey")
-        .distinct()
-    )
-    return sel.select(
-        "doc_id",
-        (F.col("minkey") / 4096).cast("long").alias("fp_hash"),
-        (F.col("minkey") % 4096).cast("long").alias("fp_pos"),
-    )
-
-
-def keyword_tags(
-    docs: DataFrame, lexicon: dict[str, list[str]], text_col: str = "text"
-) -> DataFrame:
-    """Domain tagging against a keyword lexicon: one row per
-    (doc, tag) with the total hit count over the tag's keywords —
-    whole-word matches via the same split the rest of the text surface
-    uses.  The lexicon is tiny by construction, so it ships as a
-    literal map and the count is one broadcast join + partial-agg
-    groupBy; corpus cost is linear."""
-    pairs = [(t, kw) for t, kws in lexicon.items() for kw in kws]
-    lex = docs.sparkSession.createDataFrame(pairs, "tag STRING, word STRING")
-    words = with_words(docs, text_col).select(
-        "doc_id", F.explode("words").alias("word")
-    )
-    return (
-        words.join(F.broadcast(lex), "word")
-        .groupBy("doc_id", "tag")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-
-
 def normalize_unicode(
     df: DataFrame, form: str = "NFC", text_col: str = "text"
 ) -> DataFrame:

@@ -324,23 +324,3 @@ def read_avro(path: str) -> tuple[list[tuple[str, str, bool]], dict[str, list]]:
             raise ValueError(f"avro: sync marker mismatch in {path}")
     return kinds, columns
 
-
-def read_avro_pandas(path: str):
-    """One OCF -> pandas DataFrame with Spark-compatible dtypes."""
-    import pandas as pd
-
-    kinds, columns = read_avro(path)
-    out = {}
-    for name, kind, _ in kinds:
-        vals = columns[name]
-        if kind in ("int", "long"):
-            out[name] = pd.array(vals, dtype="Int64")
-        elif kind in ("float", "double"):
-            out[name] = pd.array(vals, dtype="float64")
-        elif kind == "boolean":
-            out[name] = pd.array(vals, dtype="boolean")
-        elif kind == "timestamp-micros":
-            out[name] = pd.to_datetime(pd.Series(vals))
-        else:
-            out[name] = pd.Series(vals, dtype="object")
-    return pd.DataFrame(out, columns=[n for n, _, _ in kinds])

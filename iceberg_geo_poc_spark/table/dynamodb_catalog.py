@@ -410,10 +410,6 @@ COL_OWNER = "lockOwnerId"
 COL_LEASE_MS = "leaseDurationMs"
 
 
-class LockAcquireTimeout(Exception):
-    """acquire() exhausted its timeout without winning the lock."""
-
-
 class DynamoDbLockManager:
     """Lease-based distributed lock over the DynamoDB item store.
 

@@ -412,21 +412,17 @@ class SpatialPredicate(Expr):
 
     def to_spark_column(self, geo_encodings: "dict | None" = None) -> Column:
         from iceberg_geo_poc_spark.geo.functions import (
+            as_wkb,
             geo_literal,
             st_covers_udf,
             st_intersects_udf,
         )
 
         lit = geo_literal(self.value)
-        col = F.col(self.column)
-        enc = (geo_encodings or {}).get(self.column)
-        if enc and enc not in ("wkb", "ewkb"):
-            # wkt/geojson columns are STRING physically: decode to WKB
-            # first (reference readers decode by declared encoding the
-            # same way, ParquetGeometryValueReaders)
-            from iceberg_geo_poc_spark.geo.functions import convert_encoding_udf
-
-            col = convert_encoding_udf(enc, "wkb")(col)
+        # wkt/geojson columns are STRING physically: decode to WKB first
+        # (reference readers decode by declared encoding the same way,
+        # ParquetGeometryValueReaders)
+        col = as_wkb(self.column, (geo_encodings or {}).get(self.column))
         if self.op == "st_intersects":
             cond = st_intersects_udf(col, lit)
         elif self.op == "st_covers":

@@ -44,14 +44,6 @@ def estimate_size_bytes(table: Table) -> int:
     return int(ent[ent.content == "data"].file_size.sum())
 
 
-def ndv_estimate(table: Table, column: str) -> int | None:
-    """NDV from the registered statistics file (falls back to None —
-    callers treat missing stats as 'unknown', never as zero)."""
-    from iceberg_geo_poc_spark.table import statistics as ST
-
-    return ST.ndv(table, column)
-
-
 def stats_aware_join(
     left: Table,
     right: Table,

@@ -6,10 +6,13 @@ RewriteDataFilesSparkAction.java, ExpireSnapshotsSparkAction.java,
 DeleteOrphanFilesSparkAction.java) re-expressed as metadata operations
 plus plain DataFrame rewrites:
 
-- bin-pack: read small files -> coalesce to target size -> replace
-- sort: same + repartitionByRange/sortWithinPartitions (hilbert order
-  for geometry, replacing the reference's zorder strategy,
-  SparkZOrderDataRewriter.java)
+- compaction: read small files, write them back, replace.  Each
+  strategy decides only the order and the file count (``n_out``, from
+  ``target_file_size``): sort by columns, a Hilbert key for geometry,
+  or a z-value (SparkZOrderDataRewriter.java).  ``Table._write_files``
+  applies them once, in place of the table's write order.  Bin-pack
+  has no order: it coalesces to ``n_out`` and writes under the table's
+  own settings
 - expire: drop old snapshots, delete manifests + data files no longer
   reachable from any retained snapshot
 - orphans: files on disk not referenced by any snapshot manifest
@@ -30,6 +33,7 @@ from iceberg_geo_poc_spark.table.table import (
     Table,
     _list_parquet,
     _validate_files_still_live,
+    order_columns,
 )
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024
@@ -71,11 +75,19 @@ def rewrite_data_files(
 ) -> RewriteResult:
     """Compact data files (reference RewriteDataFilesProcedure).
 
-    strategy: 'binpack' | 'sort' (with sort_by) | 'hilbert' (with
-    hilbert_column) | 'zorder' (with zorder_by — the reference
-    SparkZOrderDataRewriter/SparkZOrderUDF for non-geo columns; geo
-    tables should prefer 'hilbert').  Only groups of >= min_input_files
-    under the target size are rewritten; large files are left in place.
+    strategy: 'binpack' | 'sort' (with sort_by, ``order_columns`` terms
+    such as ``"id DESC"``) | 'hilbert' (with hilbert_column) | 'zorder'
+    (with zorder_by — the reference SparkZOrderDataRewriter/SparkZOrderUDF
+    for non-geo columns; geo tables should prefer 'hilbert').  Only
+    groups of >= min_input_files under the target size are rewritten;
+    large files are left in place.
+
+    The rewrite writes ``n_out = round(input bytes / target_file_size)``
+    files (at least one).  sort/hilbert/zorder hand their order and
+    ``n_out`` to ``Table._write_files``, which range-splits and sorts
+    once and skips the table's write order.  binpack coalesces to
+    ``n_out`` and then writes under the table's settings, so a
+    range-distributed table's own split decides its file count.
     """
     entries = table._entries()
     data = entries[entries.content == "data"]
@@ -89,40 +101,26 @@ def rewrite_data_files(
     total_bytes = int(small.file_size.sum())
     n_out = max(1, round(total_bytes / target_file_size))
     if strategy == "binpack":
-        df = df.coalesce(n_out)
+        # no order of its own: coalesce, then the table's write settings
+        df, order = df.coalesce(n_out), None
     elif strategy == "sort":
         if not sort_by:
             raise ValueError("sort strategy requires sort_by")
-        df = df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(*sort_by)
+        order = order_columns(sort_by, table.geo_fields)
     elif strategy == "hilbert":
         if not hilbert_column:
             raise ValueError("hilbert strategy requires hilbert_column")
-        from iceberg_geo_poc_spark.geo.functions import st_hilbert
+        from iceberg_geo_poc_spark.geo.functions import as_wkb, st_hilbert
 
-        hsrc = F.col(hilbert_column)
         enc = table.geo_fields.get(hilbert_column)
-        if enc and enc not in ("wkb", "ewkb"):
-            from iceberg_geo_poc_spark.geo.functions import convert_encoding_udf
-
-            hsrc = convert_encoding_udf(enc, "wkb")(hsrc)
-        df = (
-            df.withColumn("__h", st_hilbert(hsrc, hilbert_resolution))
-            .repartitionByRange(n_out, "__h")
-            .sortWithinPartitions("__h")
-            .drop("__h")
-        )
+        order = [st_hilbert(as_wkb(hilbert_column, enc), hilbert_resolution)]
     elif strategy == "zorder":
         if not zorder_by or len(zorder_by) < 2:
             raise ValueError("zorder strategy requires >= 2 zorder_by columns")
-        df = (
-            df.withColumn("__z", _zvalue_column(df, zorder_by))
-            .repartitionByRange(n_out, "__z")
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
+        order = [_zvalue_column(df, zorder_by)]
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
-    new_entries = table._write_files(df)
+    new_entries = table._write_files(df, order, n_out)
 
     def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
         # MoR deletes were applied during the rewrite read, so compaction

@@ -359,16 +359,13 @@ def _bbox_frame(df, geo_fields: dict[str, str]):
     import pyspark.sql.functions as F
 
     from iceberg_geo_poc_spark.geo.functions import (
-        convert_encoding_udf,
+        as_wkb,
         st_bounds_once_udf,
     )
 
     bounds, aggs = [], []
     for i, (col, enc) in enumerate(geo_fields.items()):
-        wkb = F.col(col) if enc in ("ewkb", "wkb") else convert_encoding_udf(enc, "wkb")(
-            F.col(col)
-        )
-        bounds.append(st_bounds_once_udf(wkb).alias(f"__bounds{i}"))
+        bounds.append(st_bounds_once_udf(as_wkb(col, enc)).alias(f"__bounds{i}"))
         b = F.col(f"__bounds{i}")
         aggs += [
             F.min(b.getField("xmin")).alias(f"{col}__xmin"),

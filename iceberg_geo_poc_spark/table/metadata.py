@@ -66,17 +66,6 @@ class Snapshot:
 
 
 @dataclass
-class GeoField:
-    """Geometry column declaration: encoding + physical Spark type."""
-
-    column: str
-    encoding: str  # ewkb | wkb | wkt | geojson
-
-    def to_json(self) -> dict:
-        return {"column": self.column, "encoding": self.encoding}
-
-
-@dataclass
 class TableMetadata:
     table_uuid: str
     location: str

@@ -1539,6 +1539,7 @@ def _select(catalog, text: str):
 
 def _call(catalog, proc: str, argstr: str):
     from iceberg_geo_poc_spark.table import maintenance as X
+    from iceberg_geo_poc_spark.table.table import order_columns
 
     pos, kw = _parse_call_args(argstr)
 
@@ -1567,9 +1568,12 @@ def _call(catalog, proc: str, argstr: str):
                 kwargs["hilbert_column"] = hm.group(1)
             else:
                 strategy = "sort"
-                kwargs["sort_by"] = [
-                    c.split()[0] for c in _split_args(sort_order)
-                ]
+                try:
+                    kwargs["sort_by"] = order_columns(
+                        _split_args(sort_order), t.geo_fields
+                    )
+                except ValueError as e:
+                    raise SqlError(str(e)) from None
         if "target_file_size" in kw:
             kwargs["target_file_size"] = int(kw["target_file_size"])
         return X.rewrite_data_files(t, strategy=strategy, **kwargs)

@@ -193,15 +193,6 @@ def set_statistics(table: Table, stats_file: dict) -> None:
     _commit_metadata_update(table, mutate)
 
 
-def remove_statistics(table: Table, snapshot_id: int) -> None:
-    def mutate(meta: MD.TableMetadata) -> None:
-        meta.statistics_files = [
-            f for f in meta.statistics_files if f["snapshot-id"] != snapshot_id
-        ]
-
-    _commit_metadata_update(table, mutate)
-
-
 def statistics_files(table: Table) -> list[dict]:
     return list(table.meta.statistics_files)
 

@@ -67,6 +67,53 @@ _LINEAGE_COLS = ("_row_id", "_last_updated_sequence_number")
 _LINEAGE_DDL = ", _row_id BIGINT, _last_updated_sequence_number BIGINT"
 
 
+# sort-term modifiers -> Column sort order, with Iceberg's null defaults
+# (ASC puts nulls first, DESC puts them last)
+_SORT_MODIFIERS = {
+    ("ASC",): "asc_nulls_first",
+    ("DESC",): "desc_nulls_last",
+    ("NULLS", "FIRST"): "asc_nulls_first",
+    ("NULLS", "LAST"): "asc_nulls_last",
+    ("ASC", "NULLS", "FIRST"): "asc_nulls_first",
+    ("ASC", "NULLS", "LAST"): "asc_nulls_last",
+    ("DESC", "NULLS", "FIRST"): "desc_nulls_first",
+    ("DESC", "NULLS", "LAST"): "desc_nulls_last",
+}
+
+# order terms the write sorts by as given; any other term is a computed key
+_SORTABLE_AS_GIVEN = ("UnresolvedAttribute", "SortOrder")
+
+
+def order_columns(terms, geo_fields: dict, renames: dict | None = None) -> list:
+    """Sort-order terms as Columns.  A term is ``col [ASC|DESC] [NULLS
+    FIRST|LAST]`` or ``hilbert(geom)``, the geometry's Hilbert key at
+    resolution 12; a Column passes through.  ``renames`` maps a term's
+    column name to the name it has in the frame being sorted (the
+    table's physical -> logical names).  An unknown modifier raises
+    ValueError."""
+    ren = renames or {}
+    cols = []
+    for term in terms:
+        if not isinstance(term, str):
+            cols.append(term)
+            continue
+        name, *mods = term.split()
+        if name.startswith("hilbert(") and name.endswith(")"):
+            from iceberg_geo_poc_spark.geo.functions import as_wkb, st_hilbert
+
+            g = name[8:-1]
+            col = st_hilbert(as_wkb(ren.get(g, g), geo_fields.get(g)), 12)
+        else:
+            col = F.col(ren.get(name, name))
+        if mods:
+            how = _SORT_MODIFIERS.get(tuple(m.upper() for m in mods))
+            if how is None:
+                raise ValueError(f"unknown sort modifier in {term!r}")
+            col = getattr(col, how)()
+        cols.append(col)
+    return cols
+
+
 def _assign_row_id_blocks(entries: pd.DataFrame, base) -> pd.DataFrame:
     """Row-lineage block allocation at commit time (Iceberg v3
     TableMetadata next-row-id semantics): every data entry without a
@@ -559,8 +606,21 @@ class Table:
     def _partition_columns(self) -> list[tuple[str, PartitionField]]:
         return [(f"__p_{pf.name}", pf) for pf in self.partition_fields]
 
-    def _write_files(self, df: DataFrame) -> list[dict]:
+    def _write_files(
+        self, df: DataFrame, order: list | None = None, n_files: int | None = None
+    ) -> list[dict]:
         """Write df as data files; return entry dicts (no seq/snap).
+
+        The one place rows are distributed and sorted for a write.  With
+        ``order=None`` the table's own settings apply
+        (``write.sort-order``, ``write.distribution-mode``,
+        ``write.range-partitions``).  A given ``order`` (Columns over
+        df's column names, see ``order_columns``) replaces them:
+        rows are range-split by (partition columns, order) into
+        ``n_files`` splits (unset: Spark decides) and sorted within each
+        split; the table's order is not applied as well.  This is how
+        compaction writes its strategy's order (the reference's rewriters
+        skip the table's, ``use-table-distribution-and-ordering``).
 
         Abort hygiene (reference TestWriteAborts.java: a failed write
         must leave no stray files behind): a Spark-job or stats-harvest
@@ -577,7 +637,7 @@ class Table:
         files the previous commit's manifests still reference."""
         self._last_stage_dir = None
         try:
-            return self._write_files_impl(df)
+            return self._write_files_impl(df, order, n_files)
         except BaseException:
             stage = getattr(self, "_last_stage_dir", None)
             if stage and os.path.isdir(stage):
@@ -590,7 +650,9 @@ class Table:
             # later abort handler to find
             self._last_stage_dir = None
 
-    def _write_files_impl(self, df: DataFrame) -> list[dict]:
+    def _write_files_impl(
+        self, df: DataFrame, order: list | None, n_files: int | None
+    ) -> list[dict]:
         # write-schema validation (reference TypeUtil.validateWriteSchema
         # via SparkWrite): the incoming frame must carry exactly the
         # table's columns — a misnamed or missing column would otherwise
@@ -629,7 +691,6 @@ class Table:
         df.sparkSession.conf.set(
             "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
         )
-        df = self._to_physical(df)
         # Non-POSIX (object-store) locations: Spark's writer needs a
         # Hadoop-reachable path, so stage on local disk and upload the
         # finished files through the location's FileIO.  On a real
@@ -649,14 +710,17 @@ class Table:
                 self.meta.properties.get("schema.timestamp-ns-columns", "[]")
             )
         )
+        # partition values and the write order are computed on the frame
+        # as passed, in logical names (the names a caller's ``order``
+        # terms use); the rename to physical names comes last
+        ren = self.meta.renames
         out = df
         for cname, pf in pcols:
-            src = pf.source
-            enc = self.geo_fields.get(src)
-            if pf.transform.name == "hilbert" and enc and enc not in ("wkb", "ewkb"):
-                from iceberg_geo_poc_spark.geo.functions import convert_encoding_udf
+            src = ren.get(pf.source, pf.source)
+            if pf.transform.name == "hilbert":
+                from iceberg_geo_poc_spark.geo.functions import as_wkb
 
-                src = convert_encoding_udf(enc, "wkb")(F.col(src))
+                src = as_wkb(src, self.geo_fields.get(pf.source))
             if pf.source in ns_cols and pf.transform.name in (
                 "year",
                 "month",
@@ -669,7 +733,7 @@ class Table:
                 # zero: -1ns belongs to 1969-12-31, not 1970-01-01.
                 # (x - pmod(x, 1000)) is divisible by 1000 and DIV on it
                 # equals floorDiv, all in exact int64 arithmetic.
-                c = pf.source
+                c = src
                 out = (
                     out.withColumn(
                         tmp,
@@ -685,38 +749,40 @@ class Table:
                 continue
             out = out.withColumn(cname, pf.transform.spark_column(src))
         # write distribution & ordering (reference SparkWriteConf
-        # DistributionMode NONE/HASH/RANGE + local sort, SURVEY 4.9)
-        order = json.loads(self.meta.properties.get("write.sort-order", "[]"))
-        mode = self.meta.properties.get(
-            "write.distribution-mode", "hash" if pcols else "none"
-        )
-        order_exprs, tmp_order_cols = [], []
-        for i, o in enumerate(order):
-            if o.startswith("hilbert(") and o.endswith(")"):
-                from iceberg_geo_poc_spark.geo.functions import st_hilbert
-
-                gcol = o[8:-1]
-                src = F.col(gcol)
-                enc = self.geo_fields.get(gcol)
-                if enc and enc not in ("wkb", "ewkb"):
-                    from iceberg_geo_poc_spark.geo.functions import convert_encoding_udf
-
-                    src = convert_encoding_udf(enc, "wkb")(src)
-                c = f"__ord_{i}"
-                out = out.withColumn(c, st_hilbert(src, 12))
-                tmp_order_cols.append(c)
-                order_exprs.append(F.col(c))
-            else:
-                order_exprs.append(F.col(o))
-        part_exprs = [F.col(c) for c, _ in pcols]
-        if mode == "range" and (part_exprs or order_exprs):
+        # DistributionMode NONE/HASH/RANGE + local sort, SURVEY 4.9):
+        # the caller's order and split count, else the table's own
+        if order is None:
+            order = order_columns(
+                json.loads(self.meta.properties.get("write.sort-order", "[]")),
+                self.geo_fields,
+                ren,
+            )
+            mode = self.meta.properties.get(
+                "write.distribution-mode", "hash" if pcols else "none"
+            )
             # optional explicit range-split count: pins the number of
             # clustered output files regardless of AQE coalescing (the
             # knob that makes range clustering produce prunable files
             # even on small appends; unset -> Spark decides)
             nparts = self.meta.properties.get("write.range-partitions")
-            if nparts:
-                out = out.repartitionByRange(int(nparts), *part_exprs, *order_exprs)
+            n_files = int(nparts) if nparts else None
+        else:
+            mode = "range"
+        order_exprs, tmp_order_cols = [], []
+        for i, o in enumerate(order):
+            if o._jc.node().getClass().getSimpleName() in _SORTABLE_AS_GIVEN:
+                order_exprs.append(o)
+                continue
+            # a computed key (Hilbert, z-value) is evaluated once, into a
+            # column the range split and the local sort share
+            c = f"__ord_{i}"
+            out = out.withColumn(c, o)
+            tmp_order_cols.append(c)
+            order_exprs.append(F.col(c))
+        part_exprs = [F.col(c) for c, _ in pcols]
+        if mode == "range" and (part_exprs or order_exprs):
+            if n_files:
+                out = out.repartitionByRange(n_files, *part_exprs, *order_exprs)
             else:
                 out = out.repartitionByRange(*part_exprs, *order_exprs)
         elif mode == "hash" and part_exprs:
@@ -724,11 +790,10 @@ class Table:
             # co-locate (SparkWriteConf DistributionMode.HASH analogue)
             out = out.repartition(*part_exprs)
         if order_exprs:
-            out = out.sortWithinPartitions(
-                *[F.col(c) for c, _ in pcols], *order_exprs
-            )
-        for c in tmp_order_cols:
-            out = out.drop(c)
+            out = out.sortWithinPartitions(*part_exprs, *order_exprs)
+        if tmp_order_cols:
+            out = out.drop(*tmp_order_cols)
+        out = self._to_physical(out)
         if fmt != "parquet" and self._modular_footer_key():
             # the property names PARQUET modular encryption; an avro/orc
             # table carrying it would silently write plaintext
@@ -833,7 +898,7 @@ class Table:
         # (parquet-mr writes max=NaN), so the distributed column-pruned
         # counting job runs only over files whose footers hint NaNs —
         # zero extra Spark jobs on the common NaN-free append.
-        float_cols = M.float_columns(df)
+        float_cols = M.float_columns(self._to_physical(df))
         nan_counts: dict[str, dict[str, int]] = {}
         if float_cols:
             if fmt == "parquet":

@@ -46,6 +46,18 @@ def test_call_rewrite_with_sort_order(spark, catalog):
     assert got == list(range(30))
 
 
+def test_call_rewrite_sort_order_keeps_direction(spark, catalog):
+    import pyarrow.parquet as pq
+
+    _mk(spark, catalog, "c2d")
+    catalog.sql("CALL system.rewrite_data_files('c2d', 'sort', 'a DESC NULLS LAST')")
+    for path in catalog.load_table("c2d")._entries().file_path:
+        ids = pq.read_table(path, columns=["a"])["a"].to_pylist()
+        assert ids == sorted(ids, reverse=True)
+    with pytest.raises(SqlError, match="unknown sort modifier"):
+        catalog.sql("CALL system.rewrite_data_files('c2d', 'sort', 'a SIDEWAYS')")
+
+
 def test_call_expire_and_rollback(spark, catalog):
     t = _mk(spark, catalog, "c3")
     snaps = t.snapshots()

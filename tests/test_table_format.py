@@ -704,6 +704,70 @@ def test_hilbert_ordered_append_job_count(spark, catalog):
         assert json.loads(row.bbox)["geom"] == [min(xs), min(ys), max(xs), max(ys)]
 
 
+def _compaction_table(catalog, spark, name):
+    """A hilbert(geom)-ordered table with one range split per write and
+    three appends of scattered points: three small files whose ids are
+    not in Hilbert order."""
+    t = catalog.create_table(
+        name,
+        "id BIGINT, x DOUBLE, geom BINARY",
+        geometry_columns={"geom": "wkb"},
+        properties={"write.range-partitions": "1"},
+    )
+    catalog.set_write_order(name, ["hilbert(geom)"])
+    t = catalog.load_table(name)
+    for k in range(3):
+        rows = []
+        for i in range(k * 200, (k + 1) * 200):
+            x, y = (i * 7919) % 359 - 179.5, (i * 104729) % 169 - 84.5
+            rows.append((i, x, bytearray(geometry_to_wkb(Point(x, y)))))
+        t.append(spark.createDataFrame(rows, "id BIGINT, x DOUBLE, geom BINARY"))
+    return t
+
+
+@pytest.mark.parametrize(
+    "strategy, kwargs, n_jobs",
+    [
+        ("sort", {"sort_by": ["id"]}, 6),
+        ("hilbert", {"hilbert_column": "geom"}, 6),
+        ("zorder", {"zorder_by": ["id", "x"]}, 8),
+    ],
+)
+def test_compaction_of_ordered_table_clusters_once(
+    spark, catalog, strategy, kwargs, n_jobs
+):
+    """Compaction writes its strategy's order and its target file count
+    in one clustering step; the table's Hilbert order and its
+    write.range-partitions=1 do not override them."""
+    import pyarrow.parquet as pq
+
+    from iceberg_geo_poc_spark.table.maintenance import rewrite_data_files
+
+    t = _compaction_table(catalog, spark, f"compact_{strategy}")
+    before = sorted(t.to_df().collect())
+    # target_file_size asks for two output files
+    target = int(t._entries().file_size.sum()) // 2 + 1
+    sc = spark.sparkContext
+    group = f"compaction-jobs-{strategy}"
+    sc.setJobGroup(group, "ordered-table compaction")
+    try:
+        res = rewrite_data_files(
+            t, strategy=strategy, target_file_size=target, **kwargs
+        )
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert (res.rewritten_files, res.added_files) == (3, 2)
+    assert jobs == n_jobs
+    t = catalog.load_table(f"compact_{strategy}")
+    assert sorted(t.to_df().collect()) == before
+    assert len(t._entries()) == 2
+    if strategy == "sort":
+        for path in t._entries().file_path:
+            ids = pq.read_table(path, columns=["id"])["id"].to_pylist()
+            assert ids == sorted(ids)
+
+
 def test_snapshot_table_zero_copy_clone(spark, catalog):
     t = catalog.create_table("snapsrc", "a BIGINT")
     t.append(spark.createDataFrame([(i,) for i in range(10)], "a BIGINT"))
