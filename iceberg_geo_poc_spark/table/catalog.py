@@ -709,7 +709,7 @@ class Catalog:
                 + tuple(rest)
                 for p, (rc, fs, lower, upper, nulls, *rest) in stats.items()
             }
-        bboxes = M.compute_bboxes(self.spark, parquet_paths, t.geo_fields)
+        bboxes = M.compute_bboxes(self.spark, parquet_paths, t.meta.geo_fields)
         # imported files come from unknown writers: pyarrow strips NaN
         # from bounds without any footer signal, so NaN counts must be
         # computed unconditionally (unlike Table._write_files, which

@@ -10,9 +10,12 @@ Stats sourcing is the Spark-native split:
 - primitive min/max/null-counts come free from the Parquet footers the
   executors already wrote (harvested driver-side with pyarrow, thread
   pool over files — the analogue of reference ParquetUtil.footerMetrics);
-- geometry bboxes come from ONE distributed Spark aggregation per
-  append over just-written files, grouped by input file (the analogue
-  of write-time GeometryFieldMetrics.java:33-90 accumulation).
+- geometry bboxes (the analogue of write-time
+  GeometryFieldMetrics.java:33-90 accumulation) come from one Arrow
+  reduction, ``arrow_bbox``: on the driver over the just-written files
+  of a small write, inside the write task for modular-encrypted files;
+  a write above ``BBOX_DRIVER_MAX_BYTES`` of geometry runs one
+  distributed aggregation grouped by input file instead.
 
 Values in the JSON stats maps: numbers/strings/bools natively;
 timestamps as ISO 'YYYY-MM-DD HH:MM:SS.ffffff' strings and dates as
@@ -146,8 +149,7 @@ def harvest_footer_stats(path: str) -> tuple[int, int, dict, dict, dict, dict]:
 
     from iceberg_geo_poc_spark.table.fileio import io_for
 
-    fio = io_for(path)
-    f = pq.ParquetFile(path if fio.is_posix else fio.open_input(path))
+    f = pq.ParquetFile(_parquet_source(path))
     meta = f.metadata
     lower: dict = {}
     upper: dict = {}
@@ -199,7 +201,7 @@ def harvest_footer_stats(path: str) -> tuple[int, int, dict, dict, dict, dict]:
                     lower[name] = lo if name not in lower else min(lower[name], lo)
                 if hi is not None:
                     upper[name] = hi if name not in upper else max(upper[name], hi)
-    return meta.num_rows, fio.size(path), lower, upper, nulls, nan_hint
+    return meta.num_rows, io_for(path).size(path), lower, upper, nulls, nan_hint
 
 
 def harvest_stats(paths: list[str], max_workers: int = 16) -> dict[str, tuple]:
@@ -307,45 +309,148 @@ def float_columns(df) -> list[str]:
     ]
 
 
+# Geometry bytes (the uncompressed size of the geometry column chunks,
+# summed from the footers) up to which compute_bboxes reduces a write's
+# files on the driver.  A bound on driver work, not a tuned crossover:
+# 64 MiB is about 3M WKB points, far above a micro-batch append.
+BBOX_DRIVER_MAX_BYTES = 64 << 20
+
+_BOUNDS = ("xmin", "ymin", "xmax", "ymax")
+
+
 def compute_bboxes(
     spark,
     paths: list[str],
     geo_fields: dict[str, str],
-    df=None,
     schema_ddl: str | None = None,
 ):
-    """Per-file geometry bboxes via one distributed aggregation.
+    """Per-file geometry bboxes of parquet files:
+    {file_path: {geo_col: [xmin, ymin, xmax, ymax] | None}}.  Files
+    without rows are left out.
 
-    ``df`` overrides the source scan (it must carry ``__file`` plus the
-    geometry columns) — the modular-encryption write path passes its
-    decrypting read here, so encrypted geo tables get the same manifest
-    bbox metrics as plain ones.  ``schema_ddl`` is the schema the files
-    were written with; given it, the scan skips Spark's schema-inference
-    job (files of unknown writers leave it None).
+    Two paths give the same values:
 
-    Returns {file_path: {geo_col: [xmin,ymin,xmax,ymax] | None}}.
+    - when the files' geometry column chunks add up to at most
+      ``BBOX_DRIVER_MAX_BYTES`` uncompressed, the driver streams each
+      file's geometry columns one row group at a time through
+      :func:`arrow_bbox` and runs no Spark job.  A write of a few files
+      pays milliseconds here, against seconds for a job;
+    - above that cap, one distributed aggregation (:func:`_bbox_frame`)
+      reads the files.  It stays because it is the only path whose
+      driver work is bounded for a large write, and the tests use it as
+      the reference for the driver path.
+
+    The cap is counted in geometry bytes, not rows, because one polygon
+    can weigh as much as thousands of points.  ``schema_ddl`` is the
+    schema the files were written with; given it, the Spark path skips
+    Spark's schema-inference job (files of unknown writers leave it
+    None).
     """
-    import pyspark.sql.functions as F
-
     if not geo_fields or not paths:
         return {}
-    if df is None:
-        reader = spark.read.schema(schema_ddl) if schema_ddl else spark.read
-        df = reader.parquet(*paths).select(
-            F.col("_metadata.file_path").alias("__file"),
-            *geo_fields.keys(),
-        )
-    rows = _bbox_frame(df, geo_fields).collect()
-    out: dict[str, dict] = {}
-    for row in rows:
+    footers = _small_geo_footers(paths, geo_fields)
+    if footers is not None:
+        out: dict[str, dict] = {}
+        for p, meta in footers:
+            if not meta.num_rows:
+                continue
+            with pq.ParquetFile(_parquet_source(p), metadata=meta) as f:
+                out[p] = {
+                    c: arrow_bbox(_row_group_chunks(f, c), enc)
+                    for c, enc in geo_fields.items()
+                }
+        return out
+    import pyspark.sql.functions as F
+
+    reader = spark.read.schema(schema_ddl) if schema_ddl else spark.read
+    df = reader.parquet(*paths).select(
+        F.col("_metadata.file_path").alias("__file"),
+        *geo_fields.keys(),
+    )
+    out = {}
+    for row in _bbox_frame(df, geo_fields).collect():
         d = row.asDict()
-        path = _strip_scheme(d["__file"])
         bboxes = {}
         for col in geo_fields:
-            vals = [d[f"{col}__xmin"], d[f"{col}__ymin"], d[f"{col}__xmax"], d[f"{col}__ymax"]]
-            bboxes[col] = None if any(v is None for v in vals) else [float(v) for v in vals]
-        out[path] = bboxes
+            vals = [d[f"{col}__{k}"] for k in _BOUNDS]
+            bboxes[col] = None if None in vals else [float(v) for v in vals]
+        out[_strip_scheme(d["__file"])] = bboxes
     return out
+
+
+def _parquet_source(path: str):
+    """What pyarrow opens for ``path``: the path itself on POSIX, else
+    the FileIO's reader."""
+    from iceberg_geo_poc_spark.table.fileio import io_for
+
+    fio = io_for(path)
+    return path if fio.is_posix else fio.open_input(path)
+
+
+def _small_geo_footers(paths: list[str], geo_fields: dict[str, str]):
+    """[(path, footer)] of the files, or None as soon as their geometry
+    column chunks pass ``BBOX_DRIVER_MAX_BYTES`` uncompressed."""
+    out, total = [], 0
+    for p in paths:
+        meta = pq.read_metadata(_parquet_source(p))
+        for i in range(meta.num_row_groups):
+            rg = meta.row_group(i)
+            for j in range(rg.num_columns):
+                col = rg.column(j)
+                if col.path_in_schema in geo_fields:
+                    total += col.total_uncompressed_size
+        if total > BBOX_DRIVER_MAX_BYTES:
+            return None
+        out.append((p, meta))
+    return out
+
+
+def _row_group_chunks(f: pq.ParquetFile, col: str):
+    """Column ``col`` of an open file, one row group at a time (nothing
+    when the file lacks the column, which the Spark path reads as
+    null)."""
+    if col not in f.schema_arrow.names:
+        return
+    for i in range(f.num_row_groups):
+        yield from f.read_row_group(i, columns=[col]).column(0).chunks
+
+
+def arrow_bbox(chunks, enc: str | None) -> list[float] | None:
+    """``[xmin, ymin, xmax, ymax]`` of one geometry column stored in
+    encoding ``enc``, or None when no row has an envelope.  ``chunks``
+    are its pa.Arrays: a ChunkedArray's ``.chunks``, or one array per
+    row group.  wkt/geojson rows are re-encoded to WKB first; each
+    chunk's envelopes come from ``_bounds_cols``, the kernel of the
+    Hilbert key.  Null and empty rows reach it as NaN and are dropped,
+    and each bound reduces on its own, as the aggregate of
+    :func:`_bbox_frame` does.  Called on the driver by
+    :func:`compute_bboxes` and inside the modular-encryption write
+    task."""
+    import numpy as np
+    import pyarrow as pa
+
+    from iceberg_geo_poc_spark.geo.functions import (
+        _bounds_cols,
+        decode_enc,
+        encode_enc,
+    )
+
+    acc = [np.nan] * 4
+    reducers = (np.fmin, np.fmin, np.fmax, np.fmax)
+    for arr in chunks:
+        if not len(arr):
+            continue
+        if enc not in (None, "wkb", "ewkb"):
+            arr = pa.array(
+                [encode_enc(decode_enc(v, enc), "wkb") for v in arr.to_pylist()],
+                type=pa.binary(),
+            )
+        b = _bounds_cols(arr)
+        # fmin/fmax skip NaN: an all-NaN chunk leaves the bound as it was
+        acc = [f(a, f.reduce(b[k])) for a, f, k in zip(acc, reducers, _BOUNDS)]
+    if np.isnan(acc).any():
+        return None
+    return [float(v) for v in acc]
 
 
 def _bbox_frame(df, geo_fields: dict[str, str]):

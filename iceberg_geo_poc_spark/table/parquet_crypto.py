@@ -187,7 +187,7 @@ def _arrow_stats(tbl, fields: list[tuple[str, str]]):
 
 _ENTRY_SCHEMA = (
     "file_path string, record_count long, partition string, "
-    "lower string, upper string, nulls string, nans string"
+    "lower string, upper string, nulls string, nans string, bbox string"
 )
 
 
@@ -209,11 +209,13 @@ def write_encrypted_files(
     keys: dict[str, bytes],
     footer_key: str,
     column_keys: dict[str, list[str]] | None,
+    geo_fields: dict[str, str] | None = None,
 ) -> list[dict]:
     """Distributed modular-encrypted parquet write: one file per
-    (task, partition-tuple), hive-style dirs under ``stage``, stats
-    computed in-task from the Arrow data (no post-hoc footer harvest
-    needed).  Returns manifest entry dicts.
+    (task, partition-tuple), hive-style dirs under ``stage``, stats and
+    the bboxes of the ``geo_fields`` columns ({column: encoding})
+    computed in-task from the Arrow data (no post-hoc footer harvest or
+    decrypting read-back).  Returns manifest entry dicts.
 
     ``pcols`` is the table's ``[(derived_col_name, PartitionField)]``
     list: directory segments use the derived column name with
@@ -223,6 +225,7 @@ def write_encrypted_files(
     through the same ``transform.parse_path_value`` as the plain write
     path — so partitions/partition_stats metadata tables and partition
     pruning see identical tuples on encrypted and plain tables."""
+    from iceberg_geo_poc_spark.table.manifest import arrow_bbox  # noqa: PLC0415
     from iceberg_geo_poc_spark.table.table import _ddl_fields  # noqa: PLC0415
 
     fields = [
@@ -231,6 +234,7 @@ def write_encrypted_files(
     os.makedirs(stage, exist_ok=True)
     conf = _master_conf(keys)
     user_keys = {k: list(v) for k, v in (column_keys or {}).items()}
+    geo = geo_fields or {}
     part_cols = [c for c, _ in pcols]
     # (derived name, logical name, path-string parser) — the transform
     # dataclasses are small and pickle cleanly into the task closure
@@ -293,6 +297,7 @@ def write_encrypted_files(
             w.write_table(sub)
             w.close()
             lower, upper, nulls, nans = _arrow_stats(sub, fields)
+            bbox = {c: arrow_bbox(sub.column(c).chunks, enc) for c, enc in geo.items()}
             out_rows.append(
                 {
                     "file_path": path,
@@ -302,6 +307,7 @@ def write_encrypted_files(
                     "upper": json.dumps(upper),
                     "nulls": json.dumps(nulls),
                     "nans": json.dumps(nans),
+                    "bbox": json.dumps(bbox),
                 }
             )
         import pyarrow as pa
@@ -322,7 +328,7 @@ def write_encrypted_files(
                 "upper": r.upper,
                 "nulls": r.nulls,
                 "nans": r.nans,
-                "bbox": json.dumps({}),
+                "bbox": r.bbox,
             }
         )
     return entries

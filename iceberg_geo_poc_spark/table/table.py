@@ -89,8 +89,9 @@ def order_columns(terms, geo_fields: dict, renames: dict | None = None) -> list:
     FIRST|LAST]`` or ``hilbert(geom)``, the geometry's Hilbert key at
     resolution 12; a Column passes through.  ``renames`` maps a term's
     column name to the name it has in the frame being sorted (the
-    table's physical -> logical names).  An unknown modifier raises
-    ValueError."""
+    table's physical -> logical names); ``geo_fields`` holds the
+    geometry encodings under the frame's names (``Table.geo_fields``).
+    An unknown modifier raises ValueError."""
     ren = renames or {}
     cols = []
     for term in terms:
@@ -101,8 +102,8 @@ def order_columns(terms, geo_fields: dict, renames: dict | None = None) -> list:
         if name.startswith("hilbert(") and name.endswith(")"):
             from iceberg_geo_poc_spark.geo.functions import as_wkb, st_hilbert
 
-            g = name[8:-1]
-            col = st_hilbert(as_wkb(ren.get(g, g), geo_fields.get(g)), 12)
+            g = ren.get(name[8:-1], name[8:-1])
+            col = st_hilbert(as_wkb(g, geo_fields.get(g)), 12)
         else:
             col = F.col(ren.get(name, name))
         if mods:
@@ -173,7 +174,11 @@ class Table:
 
     @property
     def geo_fields(self) -> dict[str, str]:
-        return dict(self.meta.geo_fields)
+        """Geometry encodings keyed by LOGICAL (post-rename) column name,
+        the names predicates, scans and order terms use.  Data files and
+        manifest bboxes use the physical names of ``meta.geo_fields``."""
+        ren = self.meta.renames
+        return {ren.get(c, c): enc for c, enc in self.meta.geo_fields.items()}
 
     @property
     def file_format(self) -> str:
@@ -720,7 +725,7 @@ class Table:
             if pf.transform.name == "hilbert":
                 from iceberg_geo_poc_spark.geo.functions import as_wkb
 
-                src = as_wkb(src, self.geo_fields.get(pf.source))
+                src = as_wkb(src, self.meta.geo_fields.get(pf.source))
             if pf.source in ns_cols and pf.transform.name in (
                 "year",
                 "month",
@@ -820,7 +825,8 @@ class Table:
             # Parquet MODULAR encryption (PARQUET-1300; reference rides
             # parquet-mr's implementation of the same format feature):
             # distributed pyarrow write with per-file data keys wrapped
-            # by the registered master key, stats computed in-task.
+            # by the registered master key, stats and geometry bboxes
+            # computed in-task.
             from iceberg_geo_poc_spark.table import parquet_crypto as PC
 
             column_keys = json.loads(
@@ -836,26 +842,8 @@ class Table:
                 PC.master_keys(),
                 enc_footer_key,
                 column_keys,
+                self.meta.geo_fields,
             )
-            if self.geo_fields and entries:
-                # same post-write bbox aggregation as the plain path,
-                # sourced from the decrypting read
-                enc_paths = [e["file_path"] for e in entries]
-                src = PC.read_encrypted_df(
-                    self.spark,
-                    enc_paths,
-                    self.meta.schema_ddl,
-                    PC.master_keys(),
-                    need_pos=True,
-                ).select(
-                    F.col("__file_path").alias("__file"),
-                    *self.geo_fields.keys(),
-                )
-                enc_bboxes = M.compute_bboxes(
-                    self.spark, enc_paths, self.geo_fields, df=src
-                )
-                for e in entries:
-                    e["bbox"] = json.dumps(enc_bboxes.get(e["file_path"], {}))
             return self._finalize_staged(entries, stage, _final_dir)
         writer = out.write.format(fmt)
         if fmt == "parquet":
@@ -890,7 +878,7 @@ class Table:
             # per-file aggregation supplies the same manifest stats
             stats = M.harvest_stats_spark(self.spark, paths, fmt, self.meta.schema_ddl)
         bboxes = M.compute_bboxes(
-            self.spark, paths, self.geo_fields, schema_ddl=self.meta.schema_ddl
+            self.spark, paths, self.meta.geo_fields, schema_ddl=self.meta.schema_ddl
         )
         # nan_value_counts for float/double columns (reference
         # Metrics.java nanValueCounts / FloatFieldMetrics.java).  The

@@ -253,19 +253,24 @@ def test_encrypted_streaming_foreachbatch_sink(spark, catalog):
 
 
 def test_encrypted_geo_table_bbox_pruning(spark, catalog):
-    """Geometry columns on a modular-encrypted table: bbox manifest
-    metrics come from the decrypting read, and spatial file-skip works
-    on the sealed files."""
+    """Geometry columns on a modular-encrypted table: the write task
+    computes the bbox manifest metrics (no read-back job), they equal a
+    plain table's for the same rows, and spatial file-skip works on the
+    sealed files."""
+    import json as _json
+
     import pyspark.sql.functions as F
 
     from iceberg_geo_poc_spark.geo.functions import st_point
 
+    ddl = "id BIGINT, geom BINARY"
     t = catalog.create_table(
         "encgeo",
-        "id BIGINT, geom BINARY",
+        ddl,
         geometry_columns={"geom": "wkb"},
         properties={"write.parquet.encryption.footer-key": "k_footer"},
     )
+    plain = catalog.create_table("plaingeo", ddl, geometry_columns={"geom": "wkb"})
     df = (
         spark.range(100)
         .select(
@@ -277,14 +282,30 @@ def test_encrypted_geo_table_bbox_pruning(spark, catalog):
         )
         .repartition(4)
     )
-    t.append(df)
-    ent = t._entries()
-    import json as _json
+    sc = spark.sparkContext
+    sc.setJobGroup("enc-geo-append", "encrypted geo append")
+    try:
+        t.append(df)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("enc-geo-append"))
+    finally:
+        sc.setJobGroup(None, None)
+    assert n_jobs == 2  # the input's shuffle and the write, no read-back
+    plain.append(df)
 
-    bboxes = [
-        _json.loads(b) for b in ent[ent.content == "data"].bbox if b
-    ]
-    assert bboxes and all(b.get("geom") for b in bboxes)
+    def bboxes_by_rows(table, **read):
+        ent = table._entries()
+        return {
+            frozenset(
+                pq.ParquetFile(r.file_path, **read).read(columns=["id"])["id"].to_pylist()
+            ): _json.loads(r.bbox)
+            for r in ent[ent.content == "data"].itertuples()
+        }
+
+    enc = bboxes_by_rows(
+        t, decryption_properties=PC.decryption_properties(PC.master_keys())
+    )
+    assert len(enc) == 4 and all(b.get("geom") for b in enc.values())
+    assert enc == bboxes_by_rows(plain)
     # spatial window scan: count points in [0,2]x[0,2]
     got = (
         t.scan(where=E.st_intersects("geom", __import__("iceberg_geo_poc_spark.geo", fromlist=["box"]).box(0.0, 0.0, 2.0, 2.0)))

@@ -4,6 +4,7 @@ grammar IcebergSqlExtensions.g4:68-83)."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from iceberg_geo_poc_spark.table import Catalog, E
@@ -16,12 +17,17 @@ def catalog(spark, tmp_path):
 
 
 def _mk(spark, catalog, name, n_appends=3, rows_per=10):
+    """``n_appends`` one-file appends of ``rows_per`` rows (a, "r{a}").
+    The frames come from pandas, which Spark converts through Arrow on
+    the driver; a frame built from a list of tuples is a Python RDD,
+    and writing it costs a Python worker round trip per append."""
     t = catalog.create_table(name, "a BIGINT, b STRING")
     base = 0
     for _ in range(n_appends):
+        a = range(base, base + rows_per)
         t.append(
             spark.createDataFrame(
-                [(i, f"r{i}") for i in range(base, base + rows_per)],
+                pd.DataFrame({"a": a, "b": [f"r{i}" for i in a]}),
                 "a BIGINT, b STRING",
             ).coalesce(1)
         )

@@ -327,6 +327,35 @@ def test_rename_column_no_rewrite(spark, catalog):
     assert catalog.load_table("ren").meta.renames == {}
 
 
+def test_renamed_text_geometry_filters_and_compacts_by_new_name(spark, catalog):
+    """A renamed wkt geometry column is decoded under its new name by a
+    spatial filter, a hilbert compaction and a sort compaction on its
+    Hilbert key."""
+    from iceberg_geo_poc_spark.table.maintenance import rewrite_data_files
+
+    t = catalog.create_table("rengeo", "id BIGINT, g STRING", geometry_columns={"g": "wkt"})
+    for k in range(2):
+        t.append(
+            spark.createDataFrame(
+                [(i, f"POINT ({i % 10} {i // 10})") for i in range(k * 50, k * 50 + 50)],
+                "id BIGINT, g STRING",
+            )
+        )
+    catalog.rename_column("rengeo", "g", "shape")
+    t = catalog.load_table("rengeo")
+    assert t.geo_fields == {"shape": "wkt"}
+    window = E.st_intersects("shape", box(0, 0, 5, 5))
+    assert t.scan(window).to_df().count() == 36
+    for kwargs in (
+        {"strategy": "hilbert", "hilbert_column": "shape"},
+        {"strategy": "sort", "sort_by": ["hilbert(shape)"]},
+    ):
+        rewrite_data_files(t, min_input_files=1, target_file_size=1 << 30, **kwargs)
+        t = catalog.load_table("rengeo")
+        assert len(t._entries()) == 1
+        assert t.scan(window).to_df().count() == 36
+
+
 def test_drop_and_promote_column(spark, catalog):
     t = catalog.create_table("evo2", "a INT, b FLOAT, c STRING")
     t.append(spark.createDataFrame([(1, 1.5, "x")], "a INT, b FLOAT, c STRING"))
@@ -665,9 +694,9 @@ def test_hilbert_write_order_clusters_spatially(spark, catalog):
 
 
 def test_hilbert_ordered_append_job_count(spark, catalog):
-    """A Hilbert-ordered range append runs five Spark jobs, no more: the
-    manifest bbox read of the new files takes the table schema, so it
-    launches no schema-inference job of its own."""
+    """A Hilbert-ordered range append runs three Spark jobs, no more: the
+    manifest bboxes of a small write are reduced on the driver, so no
+    job reads the new files back."""
     t = catalog.create_table(
         "hjobs", "id BIGINT, geom BINARY", geometry_columns={"geom": "wkb"}
     )
@@ -685,8 +714,8 @@ def test_hilbert_ordered_append_job_count(spark, catalog):
         n_jobs = len(sc.statusTracker().getJobIdsForGroup("hilbert-append-jobs"))
     finally:
         sc.setJobGroup(None, None)
-    assert n_jobs == 5
-    # the schema-bound bbox read still gives each file its exact bbox
+    assert n_jobs == 3
+    # the driver-side bbox reduction gives each file its exact bbox
     import json
 
     import pyarrow.parquet as pq
@@ -728,9 +757,9 @@ def _compaction_table(catalog, spark, name):
 @pytest.mark.parametrize(
     "strategy, kwargs, n_jobs",
     [
-        ("sort", {"sort_by": ["id"]}, 6),
-        ("hilbert", {"hilbert_column": "geom"}, 6),
-        ("zorder", {"zorder_by": ["id", "x"]}, 8),
+        ("sort", {"sort_by": ["id"]}, 4),
+        ("hilbert", {"hilbert_column": "geom"}, 4),
+        ("zorder", {"zorder_by": ["id", "x"]}, 6),
     ],
 )
 def test_compaction_of_ordered_table_clusters_once(
