@@ -354,21 +354,43 @@ class TableDataSource(DataSource):
 
 
 class _FileCommit(WriterCommitMessage):
+    """One task's written file as raw stats (``manifest.write_data_file``),
+    or {} for a task without rows; the driver's commit turns them into
+    entries through ``manifest.data_entries``."""
+
     def __init__(self, entry: dict):
         self.entry = entry
 
 
+def _write_task_file(location: str, prefix: str, tbl, physical_of: dict) -> _FileCommit:
+    """Write one task's rows, renamed to physical column names, as one
+    parquet file under the table's data/ dir."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    from iceberg_geo_poc_spark.table import manifest as M
+
+    tbl = tbl.rename_columns([physical_of.get(c, c) for c in tbl.column_names])
+    path = os.path.join(location, "data", f"{prefix}-{uuid.uuid4().hex}.parquet")
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    return _FileCommit(
+        M.write_data_file(path, tbl, lambda p, t: pq.write_table(t, p))
+    )
+
+
 class _ArrowAppendWriter(DataSourceArrowWriter):
-    """Executor-side: each task streams its Arrow batches into ONE
-    parquet file under the table's data/ dir (no Spark-row loop, no
-    re-read: NaN counts tally from the batches in flight, min/max/null
-    stats harvest from the just-written footer — the same encodings
-    ``add_files`` produces).  Driver-side: ``commit`` appends the
-    collected entries through the engine's FAST-APPEND commit loop
-    (delta manifest + parent reuse, optimistic retry, row-lineage block
-    allocation) — the DataSource driver callbacks run without a
-    SparkSession, which is fine because the append commit path is pure
-    pandas/metadata.  ``abort`` deletes the staged files.
+    """Executor-side: each task writes its Arrow batches as ONE parquet
+    file under the table's data/ dir (no Spark-row loop, no re-read:
+    stats come from ``manifest.arrow_stats`` over the rows in hand, in
+    the same encodings as the footer harvest).  Driver-side: ``commit``
+    turns the files' stats into entries (``manifest.data_entries``, so
+    the table's metrics policy applies) and appends them through the
+    engine's FAST-APPEND commit loop (delta manifest + parent reuse,
+    optimistic retry, row-lineage block allocation) — the DataSource
+    driver callbacks run without a SparkSession, which is fine because
+    the append commit path is pure pandas/metadata.  ``abort`` deletes
+    the staged files.
 
     The reference's analogue is SparkWrite.asBatchAppend over DSv2
     (spark/.../source/SparkWrite.java): executors write files + collect
@@ -381,65 +403,24 @@ class _ArrowAppendWriter(DataSourceArrowWriter):
         self.overwrite = overwrite
 
     def write(self, iterator):
-        import uuid as _uuid
-
-        import numpy as np
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        path = os.path.join(
-            self.location, "data", f"ds-{_uuid.uuid4().hex}.parquet"
-        )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        writer = None
-        nan_counts: dict[str, int] = {}
-        n_rows = 0
-        for batch in iterator:
-            tbl = pa.Table.from_batches([batch])
-            if self.physical_of:
-                tbl = tbl.rename_columns(
-                    [self.physical_of.get(c, c) for c in tbl.column_names]
-                )
-            if writer is None:
-                writer = pq.ParquetWriter(path, tbl.schema)
-            for col in tbl.column_names:
-                f = tbl.schema.field(col)
-                if pa.types.is_floating(f.type):
-                    vals = tbl.column(col).to_numpy(zero_copy_only=False)
-                    nan_counts[col] = nan_counts.get(col, 0) + int(
-                        np.isnan(vals).sum()
-                    )
-            writer.write_table(tbl)
-            n_rows += len(tbl)
-        if writer is None:
+        batches = [b for b in iterator if b.num_rows]
+        if not batches:
             return _FileCommit({})  # empty task
-        writer.close()
-        from iceberg_geo_poc_spark.table import manifest as M
-
-        record_count, file_size, lower, upper, nulls, *rest = (
-            M.harvest_footer_stats(path)
+        return _write_task_file(
+            self.location, "ds", pa.Table.from_batches(batches), self.physical_of
         )
-        entry = {
-            "content": "data",
-            "file_path": path,
-            "file_size": file_size,
-            "record_count": record_count,
-            "partition": json.dumps({}),
-            "lower": json.dumps(lower),
-            "upper": json.dumps(upper),
-            "nulls": json.dumps(nulls),
-            "nans": json.dumps(nan_counts),
-            "bbox": json.dumps({}),
-        }
-        return _FileCommit(entry)
 
     def commit(self, messages):
         from iceberg_geo_poc_spark.table import manifest as M
         from iceberg_geo_poc_spark.table import metadata as MD
         from iceberg_geo_poc_spark.table.table import Table
 
-        entries = [m.entry for m in messages if m is not None and m.entry]
         meta = MD.read_metadata(self.location)
+        entries = M.data_entries(
+            [m.entry for m in messages if m is not None and m.entry], meta
+        )
         t = Table(meta, spark=None)
         if self.overwrite:
             import pandas as pd
@@ -476,7 +457,7 @@ class _StreamAppendWriter(DataSourceStreamWriter):
     skipped).  Executor tasks receive ROW iterators (the streaming
     writer API is row-based, unlike DataSourceArrowWriter) — rows
     buffer into pandas and write one parquet file per non-empty task
-    with footer-harvested stats, identical on-disk form to the batch
+    with Arrow-computed stats, identical on-disk form to the batch
     writer's output."""
 
     def __init__(self, location: str, physical_of: dict, query_token: str):
@@ -488,56 +469,21 @@ class _StreamAppendWriter(DataSourceStreamWriter):
         return f"datasource-stream:{self.query_token}"
 
     def write(self, iterator):
-        import uuid as _uuid
-
-        import numpy as np
         import pandas as pd
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         rows = [r.asDict() for r in iterator]
         if not rows:
             return _FileCommit({})
-        pdf = pd.DataFrame(rows)
-        if self.physical_of:
-            pdf = pdf.rename(columns=self.physical_of)
-        tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-        path = os.path.join(
-            self.location, "data", f"dss-{_uuid.uuid4().hex}.parquet"
-        )
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        pq.write_table(tbl, path)
-        nan_counts = {}
-        for col in tbl.column_names:
-            f = tbl.schema.field(col)
-            if pa.types.is_floating(f.type):
-                vals = tbl.column(col).to_numpy(zero_copy_only=False)
-                nan_counts[col] = int(np.isnan(vals).sum())
-        from iceberg_geo_poc_spark.table import manifest as M
-
-        record_count, file_size, lower, upper, nulls, *_rest = (
-            M.harvest_footer_stats(path)
-        )
-        return _FileCommit(
-            {
-                "content": "data",
-                "file_path": path,
-                "file_size": file_size,
-                "record_count": record_count,
-                "partition": json.dumps({}),
-                "lower": json.dumps(lower),
-                "upper": json.dumps(upper),
-                "nulls": json.dumps(nulls),
-                "nans": json.dumps(nan_counts),
-                "bbox": json.dumps({}),
-            }
-        )
+        tbl = pa.Table.from_pandas(pd.DataFrame(rows), preserve_index=False)
+        return _write_task_file(self.location, "dss", tbl, self.physical_of)
 
     def commit(self, messages, batchId: int) -> None:
+        from iceberg_geo_poc_spark.table import manifest as M
         from iceberg_geo_poc_spark.table import metadata as MD
         from iceberg_geo_poc_spark.table.table import Table
 
-        entries = [m.entry for m in messages if m is not None and m.entry]
+        files = [m.entry for m in messages if m is not None and m.entry]
         meta = MD.read_metadata(self.location)
         eid = str(int(batchId))
         for s in meta.snapshots:
@@ -547,11 +493,11 @@ class _StreamAppendWriter(DataSourceStreamWriter):
             ):
                 # epoch replay: the snapshot landed before the failure —
                 # drop this retry's re-staged files and move on
-                for e in entries:
-                    p = e.get("file_path")
-                    if p and os.path.exists(p):
-                        os.remove(p)
+                for f in files:
+                    if os.path.exists(f["file_path"]):
+                        os.remove(f["file_path"])
                 return
+        entries = M.data_entries(files, meta)
         if not entries:
             return
         t = Table(meta, spark=None)

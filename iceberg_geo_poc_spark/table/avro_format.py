@@ -6,13 +6,15 @@ Spark-first split (no spark-avro jar in this environment; the codec is
 interop-tested against the Apache Avro JVM library on Spark's
 classpath):
 
-- WRITE: ``write_avro_files`` runs one ``mapInArrow`` job — each task
-  writes its partition as one ``.avro`` container and RETURNS the
-  manifest stats row (record count, min/max/null/nan counts) computed
-  while writing, the exact write-time-metrics accumulation the
-  reference does in its Avro writers (core/.../avro/Avro.java +
-  FloatFieldMetrics.java).  Arrow batches keep NULL distinct from NaN
-  (a pandas float column would conflate them).
+- WRITE: ``write_avro_files`` hands the avro codec call to
+  ``manifest.write_files_in_task``, the in-task writer it shares with
+  the modular-encrypted parquet path: one ``mapInArrow`` job, each task
+  writes its partition as one ``.avro`` container and returns its stats
+  from ``manifest.arrow_stats``, the one Arrow stats kernel — the
+  write-time-metrics accumulation the reference does in its Avro
+  writers (core/.../avro/Avro.java + FloatFieldMetrics.java).  Arrow
+  batches keep NULL distinct from NaN (a pandas float column would
+  conflate them).
 - READ: DataSource ``igps_avro`` with one InputPartition per file;
   ``read()`` decodes on the executor and yields Arrow record batches.
   Row-oriented decode mirrors the reference, whose Avro path is
@@ -25,9 +27,6 @@ classpath):
 from __future__ import annotations
 
 import json
-import math
-import os
-import uuid
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
@@ -35,9 +34,6 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from iceberg_geo_poc_spark.table import avro_codec as AC
 
 FORMAT_NAME = "igps_avro"
-
-_FLOAT_TYPES = ("float", "double")
-_NO_BOUNDS_TYPES = ("binary",)
 
 
 def _ddl_pairs(schema_ddl: str) -> list[tuple[str, str]]:
@@ -145,82 +141,15 @@ def read_avro_df(spark, paths: list[str], schema_ddl: str, with_pos: bool = Fals
 # -- writer -----------------------------------------------------------------
 
 
-def _stats_of_arrow(tbl, fields: list[tuple[str, str]]):
-    """(lower, upper, nulls, nans) manifest stats from one arrow table —
-    NULL and NaN counted separately, NaN excluded from bounds (the
-    manifest contract, see manifest._enc_stat)."""
-    from iceberg_geo_poc_spark.table.manifest import _enc_stat
-
-    lower: dict = {}
-    upper: dict = {}
-    nulls: dict = {}
-    nans: dict = {}
-    for name, typ in fields:
-        col = tbl.column(name)
-        vals = col.to_pylist()
-        nn = [v for v in vals if v is not None]
-        nulls[name] = len(vals) - len(nn)
-        if typ in _FLOAT_TYPES:
-            nans[name] = sum(1 for v in nn if math.isnan(v))
-            nn = [v for v in nn if not math.isnan(v)]
-        if typ in _NO_BOUNDS_TYPES or not nn:
-            continue
-        lo, hi = _enc_stat(min(nn)), _enc_stat(max(nn))
-        if lo is not None:
-            lower[name] = lo
-        if hi is not None:
-            upper[name] = hi
-    return lower, upper, nulls, nans
-
-
 def write_avro_files(df, stage: str, schema_ddl: str) -> list[dict]:
-    """Distributed avro write: one container file per Spark partition,
-    stats computed in-task; returns manifest entry dicts."""
-    import pyarrow as pa
+    """Distributed avro write: one container file per Spark partition
+    through the shared in-task writer; returns the files' raw stats."""
+    from iceberg_geo_poc_spark.table.manifest import write_files_in_task
 
     fields = _ddl_pairs(schema_ddl)
-    os.makedirs(stage, exist_ok=True)
 
-    def write_task(batches: Iterator) -> Iterator:
-        chunks = [b for b in batches if b.num_rows]
-        if not chunks:
-            return
-        tbl = pa.Table.from_batches(chunks)
+    def write_file(path: str, tbl) -> None:
         columns = {name: tbl.column(name).to_pylist() for name, _ in fields}
-        path = os.path.join(stage, f"part-{uuid.uuid4().hex[:16]}.avro")
-        n = AC.write_avro(path, columns, fields)
-        lower, upper, nulls, nans = _stats_of_arrow(tbl, fields)
-        out = pa.table(
-            {
-                "file_path": [path],
-                "record_count": [n],
-                "lower": [json.dumps(lower)],
-                "upper": [json.dumps(upper)],
-                "nulls": [json.dumps(nulls)],
-                "nans": [json.dumps(nans)],
-            }
-        )
-        yield from out.to_batches()
+        AC.write_avro(path, columns, fields)
 
-    rows = df.mapInArrow(
-        write_task,
-        "file_path string, record_count long, lower string, upper string, "
-        "nulls string, nans string",
-    ).collect()
-    entries = []
-    for r in rows:
-        entries.append(
-            {
-                "content": "data",
-                "file_path": r.file_path,
-                "file_size": os.path.getsize(r.file_path),
-                "record_count": int(r.record_count),
-                "partition": json.dumps({}),
-                "lower": r.lower,
-                "upper": r.upper,
-                "nulls": r.nulls,
-                "nans": r.nans,
-                "bbox": json.dumps({}),
-            }
-        )
-    return entries
+    return write_files_in_task(df, stage, ".avro", write_file)

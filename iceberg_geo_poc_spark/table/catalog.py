@@ -696,19 +696,6 @@ class Catalog:
             t = self.load_table(name)
 
         stats = M.harvest_stats(parquet_paths)
-        if name_mapping:
-            remap = dict(name_mapping)
-            stats = {
-                p: (
-                    rc,
-                    fs,
-                    {remap.get(k, k): v for k, v in lower.items()},
-                    {remap.get(k, k): v for k, v in upper.items()},
-                    {remap.get(k, k): v for k, v in nulls.items()},
-                )
-                + tuple(rest)
-                for p, (rc, fs, lower, upper, nulls, *rest) in stats.items()
-            }
         bboxes = M.compute_bboxes(self.spark, parquet_paths, t.meta.geo_fields)
         # imported files come from unknown writers: pyarrow strips NaN
         # from bounds without any footer signal, so NaN counts must be
@@ -730,16 +717,9 @@ class Catalog:
             parquet_paths,
             [reverse.get(c, c) for c in float_cols],
         )
-        if name_mapping:
-            nan_counts = {
-                p: {name_mapping.get(k, k): v for k, v in d.items()}
-                for p, d in nan_counts.items()
-            }
-        import json as _json
-
         import pandas as pd
 
-        part_by_path: dict[str, str] = {}
+        part_by_path: dict[str, dict] = {}
         if derive_partition_values and t.partition_fields:
             import pyspark.sql.functions as F
 
@@ -775,31 +755,30 @@ class Catalog:
                         "tuples; a partition-registered import requires one "
                         "tuple per file (Iceberg layouts guarantee this)"
                     )
-                part_by_path[r["__f"]] = _json.dumps(
-                    {pf.name: r[c] for c, pf in pcols}
-                )
+                part_by_path[r["__f"]] = {pf.name: r[c] for c, pf in pcols}
 
-        entries = []
+        # harvested stats are rekeyed to table names (in-file names
+        # under a name mapping)
+        def canon(d: dict) -> dict:
+            return {(name_mapping or {}).get(k, k): v for k, v in d.items()}
+
+        files = []
         for p in parquet_paths:
-            record_count, file_size, lower, upper, nulls = stats[p][:5]
-            if record_count == 0:
-                continue
-            entries.append(
+            record_count, file_size, lower, upper, nulls, _ = stats[p]
+            files.append(
                 {
-                    "content": "data",
                     "file_path": p,
                     "file_size": file_size,
                     "record_count": record_count,
-                    "partition": part_by_path.get(p, _json.dumps({})),
-                    "lower": _json.dumps(lower),
-                    "upper": _json.dumps(upper),
-                    "nulls": _json.dumps(nulls),
-                    "nans": _json.dumps(
-                        nan_counts.get(p, {c: 0 for c in float_cols})
-                    ),
-                    "bbox": _json.dumps(bboxes.get(p, {})),
+                    "partition": part_by_path.get(p, {}),
+                    "lower": canon(lower),
+                    "upper": canon(upper),
+                    "nulls": canon(nulls),
+                    "nans": canon(nan_counts.get(p, {c: 0 for c in float_cols})),
+                    "bbox": bboxes.get(p, {}),
                 }
             )
+        entries = M.data_entries(files, t.meta)
 
         def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
             add = M.entries_dataframe(

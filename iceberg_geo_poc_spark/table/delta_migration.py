@@ -150,25 +150,15 @@ def _typed(value: str | None, sql_type: str):
 
 def _decimal_bounds(value: str, sql_type: str) -> tuple[float, float]:
     """Directionally-widened float (lower, upper) for a decimal
-    partition constant, mirroring ``manifest._dec_raw``: lower rounds
-    toward -inf, upper toward +inf, so a >15-digit decimal can never
-    misprune the inclusive scan or fool the strict evaluator."""
+    partition constant, by the footer harvest's own rule
+    (``manifest._enc_stat``): lower rounds toward -inf, upper toward
+    +inf, so a >15-digit decimal can never misprune the inclusive scan
+    or fool the strict evaluator.  The exact value comes from the
+    string, never through the 28-digit default decimal context."""
     import decimal as _decimal
 
-    from iceberg_geo_poc_spark.table.manifest import _dec_raw
-
     d = _decimal.Decimal(value)
-    t = d.as_tuple()
-    scale = max(0, -t.exponent)
-    # exact unscaled integer from the tuple — NOT d.scaleb(scale), which
-    # rounds through the default 28-significant-digit context and can
-    # move a 38-digit bound INWARD (code-review r14, reproduced)
-    unscaled = int("".join(map(str, t.digits)) or "0")
-    if t.exponent > 0:
-        unscaled *= 10 ** t.exponent
-    if t.sign:
-        unscaled = -unscaled
-    return _dec_raw(unscaled, scale, -1), _dec_raw(unscaled, scale, +1)
+    return M._enc_stat(d, -1), M._enc_stat(d, +1)
 
 
 def snapshot_delta_table(catalog, delta_path: str, dest_name: str):
@@ -209,11 +199,9 @@ def snapshot_delta_table(catalog, delta_path: str, dest_name: str):
     ]
     nan_counts = M.compute_nan_counts(catalog.spark, paths, float_cols)
 
-    entries = []
+    files = []
     for p in paths:
-        record_count, file_size, lower, upper, nulls = stats[p][:5]
-        if record_count == 0:
-            continue
+        record_count, file_size, lower, upper, nulls, _ = stats[p]
         pvals = {
             c: _typed(live[p].get(c), types[c]) for c in part_cols
         }
@@ -232,24 +220,19 @@ def snapshot_delta_table(catalog, delta_path: str, dest_name: str):
                     lower[c] = v
                     upper[c] = v
                 nulls[c] = 0
-        entries.append(
+        files.append(
             {
-                "content": "data",
                 "file_path": p,
                 "file_size": file_size,
                 "record_count": record_count,
-                "partition": json.dumps(pvals),
-                "lower": json.dumps(lower),
-                "upper": json.dumps(upper),
-                "nulls": json.dumps(nulls),
-                "nans": json.dumps(
-                    nan_counts.get(p, {c: 0 for c in float_cols})
-                ),
-                "bbox": json.dumps({}),
+                "partition": pvals,
+                "lower": lower,
+                "upper": upper,
+                "nulls": nulls,
+                "nans": nan_counts.get(p, {c: 0 for c in float_cols}),
             }
         )
-
-    import pandas as pd  # noqa: F401  (signature parity with add_files)
+    entries = M.data_entries(files, t.meta)
 
     def build(current, seq):
         add = M.entries_dataframe(

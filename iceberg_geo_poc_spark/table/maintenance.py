@@ -217,9 +217,7 @@ def rewrite_position_delete_files(
         dels.file_path.tolist(), "file_path STRING, pos BIGINT"
     )
     kept_tuples = tuples.join(F.broadcast(live), "file_path", "left_semi")
-    new_entries = table._sidecar_write(
-        kept_tuples, "posdel", "file_path STRING, pos BIGINT"
-    )
+    new_entries = table._sidecar_write(kept_tuples, "posdel")
     old_paths = set(dels.file_path)
 
     def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:

@@ -6,28 +6,39 @@ entry fields; the fork's geom_lower_bounds/geom_upper_bounds maps at
 DataFile.java:87-98).  Stored as Parquet (readable by Spark/pandas for
 metadata tables) with stats maps flattened to JSON columns.
 
-Stats sourcing is the Spark-native split:
-- primitive min/max/null-counts come free from the Parquet footers the
-  executors already wrote (harvested driver-side with pyarrow, thread
-  pool over files — the analogue of reference ParquetUtil.footerMetrics);
+Stats sourcing:
+- files Spark writes (plain parquet): primitive min/max/null-counts come
+  free from the Parquet footers (harvested driver-side with pyarrow,
+  thread pool over files — the analogue of reference
+  ParquetUtil.footerMetrics);
+- files written from Arrow inside a task (avro, modular-encrypted
+  parquet, the DataSource writers): ``arrow_stats`` over the rows just
+  written, encoded exactly as the footer harvest encodes;
 - geometry bboxes (the analogue of write-time
   GeometryFieldMetrics.java:33-90 accumulation) come from one Arrow
   reduction, ``arrow_bbox``: on the driver over the just-written files
-  of a small write, inside the write task for modular-encrypted files;
+  of a small write, inside the write task for Arrow-written files;
   a write above ``BBOX_DRIVER_MAX_BYTES`` of geometry runs one
   distributed aggregation grouped by input file instead.
 
+Whatever the source, ``data_entries`` is the one place a data file's
+raw stats become a manifest entry, under the table's metrics policy.
+
 Values in the JSON stats maps: numbers/strings/bools natively;
-timestamps as ISO 'YYYY-MM-DD HH:MM:SS.ffffff' strings and dates as
+timestamps as UTC 'YYYY-MM-DD HH:MM:SS.ffffff' strings and dates as
 'YYYY-MM-DD' (lexicographic order == chronological order, so range
-pruning against ISO-string literals stays correct).
+pruning against ISO-string literals stays correct); decimals as floats
+widened outward.
 """
 
 from __future__ import annotations
 
 import datetime
+import decimal
 import json
+import math
 import os
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
@@ -54,12 +65,17 @@ MANIFEST_COLUMNS = [
 ]
 
 
-def _enc_stat(v):
+def _enc_stat(v, direction: int):
+    """One JSON bound: ``direction`` -1 for a lower bound, +1 for an
+    upper one.  Timestamps become UTC wall clock, decimals widen
+    outward (:func:`_dec_raw`), NaN and binary give no bound."""
     if v is None:
         return None
     if isinstance(v, bool):
         return v
     if isinstance(v, datetime.datetime):
+        if v.tzinfo is not None:
+            v = v.astimezone(datetime.timezone.utc)
         return v.strftime("%Y-%m-%d %H:%M:%S.%f")
     if isinstance(v, datetime.date):
         return v.strftime("%Y-%m-%d")
@@ -71,15 +87,14 @@ def _enc_stat(v):
         # value unknown", not a usable bound.  Record it as missing
         # (the reference's write path never emits NaN bounds either:
         # MetricsUtil skips NaN when building lower/upper).
-        import math
-
         return None if math.isnan(v) else v
     if isinstance(v, (int, str)):
         return v
-    try:
-        return float(v)  # Decimal and friends
-    except (TypeError, ValueError):
-        return None
+    if isinstance(v, decimal.Decimal):
+        sign, digits, exp = v.as_tuple()
+        raw = int("".join(map(str, digits)) or "0") * 10 ** max(exp, 0)
+        return _dec_raw(-raw if sign else raw, max(-exp, 0), direction)
+    return None
 
 
 def _decimal_scale(f, name: str):
@@ -106,7 +121,6 @@ def _dec_raw(raw, scale: int, direction: int) -> float:
     file) and corrupts the STRICT all-match evaluator (a max rounded
     down lets a metadata-only delete drop a file containing survivors).
     Widening-only bounds keep pruning sound at any precision."""
-    import math
     from fractions import Fraction
 
     if isinstance(raw, bytes):
@@ -145,8 +159,6 @@ def harvest_footer_stats(path: str) -> tuple[int, int, dict, dict, dict, dict]:
     unknown origin (pyarrow strips NaN from bounds) must be counted
     unconditionally (see Catalog.add_files).
     """
-    import math
-
     from iceberg_geo_poc_spark.table.fileio import io_for
 
     f = pq.ParquetFile(_parquet_source(path))
@@ -178,8 +190,8 @@ def harvest_footer_stats(path: str) -> tuple[int, int, dict, dict, dict, dict]:
                 nan_hint[name] = nan_hint.get(name, False) or hinted
             if st.has_min_max:
                 try:
-                    lo = _enc_stat(st.min)
-                    hi = _enc_stat(st.max)
+                    lo = _enc_stat(st.min, -1)
+                    hi = _enc_stat(st.max, +1)
                 except Exception:  # noqa: BLE001
                     # pyarrow cannot materialize min/max for Spark's
                     # int-backed DECIMAL (ArrowNotImplementedError —
@@ -249,7 +261,7 @@ def harvest_stats_spark(
         path = _strip_scheme(d["__file"])
         lower, upper, nulls, nans = {}, {}, {}, {}
         for c in prim_cols:
-            lo, hi = _enc_stat(d[f"__min_{c}"]), _enc_stat(d[f"__max_{c}"])
+            lo, hi = _enc_stat(d[f"__min_{c}"], -1), _enc_stat(d[f"__max_{c}"], +1)
             if lo is not None:
                 lower[c] = lo
             if hi is not None:
@@ -451,6 +463,191 @@ def arrow_bbox(chunks, enc: str | None) -> list[float] | None:
     if np.isnan(acc).any():
         return None
     return [float(v) for v in acc]
+
+
+def arrow_stats(tbl) -> tuple[dict, dict, dict, dict]:
+    """(lower, upper, nulls, nans) of every top-level column of an Arrow
+    table, encoded as :func:`harvest_footer_stats` encodes a footer:
+    bounds through :func:`_enc_stat`, NaN counted apart and kept out of
+    the bounds, binary and nested columns with a null count only.  The
+    stats kernel of every writer that holds its rows as Arrow."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lower: dict = {}
+    upper: dict = {}
+    nulls: dict = {}
+    nans: dict = {}
+    for name, col in zip(tbl.column_names, tbl.columns):
+        nulls[name] = col.null_count
+        t = col.type
+        if pa.types.is_floating(t):
+            is_nan = pc.is_nan(col)
+            nans[name] = pc.sum(is_nan).as_py() or 0
+            col = col.filter(pc.invert(is_nan))  # drops nulls as well
+        elif not (
+            pa.types.is_integer(t)
+            or pa.types.is_decimal(t)
+            or pa.types.is_string(t)
+            or pa.types.is_large_string(t)
+            or pa.types.is_boolean(t)
+            or pa.types.is_date(t)
+            or pa.types.is_timestamp(t)
+        ):
+            continue
+        mm = pc.min_max(col)
+        lo = _enc_stat(mm["min"].as_py(), -1)
+        hi = _enc_stat(mm["max"].as_py(), +1)
+        if lo is not None:
+            lower[name] = lo
+        if hi is not None:
+            upper[name] = hi
+    return lower, upper, nulls, nans
+
+
+def write_data_file(
+    path: str, tbl, write_file, geo_fields=None, partition=None
+) -> dict:
+    """Write ``tbl`` through ``write_file(path, tbl)`` and return the
+    file's raw stats — the input of :func:`data_entries`: stats from
+    :func:`arrow_stats`, the bboxes of the ``geo_fields`` columns
+    ({column: encoding}) from :func:`arrow_bbox`."""
+    write_file(path, tbl)
+    lower, upper, nulls, nans = arrow_stats(tbl)
+    return {
+        "file_path": path,
+        "file_size": os.path.getsize(path),
+        "record_count": tbl.num_rows,
+        "partition": partition or {},
+        "lower": lower,
+        "upper": upper,
+        "nulls": nulls,
+        "nans": nans,
+        "bbox": {
+            c: arrow_bbox(tbl.column(c).chunks, enc)
+            for c, enc in (geo_fields or {}).items()
+        },
+    }
+
+
+def write_files_in_task(
+    df, stage: str, suffix: str, write_file, pcols=(), geo_fields=None
+) -> list[dict]:
+    """One ``mapInArrow`` job that writes ``df`` from inside its tasks:
+    each task splits its rows by partition tuple into hive directories
+    under ``stage`` and writes one file per tuple through
+    :func:`write_data_file`.  Returns the files' raw stats.  The write
+    path of the formats Spark has no writer for (avro, modular-encrypted
+    parquet); ``write_file(path, tbl)`` is all they add.
+
+    ``pcols`` is the table's ``[(derived_col_name, PartitionField)]``
+    list: directory segments use the derived column name with
+    hive-escaped values (a ``/`` or ``=`` in a string partition value
+    must not corrupt the path), while the partition tuple is keyed by
+    the logical field name with values parsed by the same
+    ``transform.parse_path_value`` as the Spark write path's — so
+    partition pruning and metadata tables see identical tuples."""
+    from urllib.parse import quote
+
+    os.makedirs(stage, exist_ok=True)
+    part_cols = [c for c, _ in pcols]
+    part_parse = [(c, pf.name, pf.transform) for c, pf in pcols]
+
+    def task(batches):
+        import pyarrow as pa
+
+        chunks = [b for b in batches if b.num_rows]
+        if not chunks:
+            return
+        files = []
+        for key, sub in _partition_groups(pa.Table.from_batches(chunks), part_cols):
+            d, part = stage, {}
+            if key:
+                segs = []
+                for (cname, lname, transform), v in zip(part_parse, key):
+                    s = (
+                        "__HIVE_DEFAULT_PARTITION__" if v is None
+                        else v.isoformat() if hasattr(v, "isoformat")
+                        else str(v)
+                    )
+                    segs.append(f"{cname}={quote(s, safe='')}")
+                    part[lname] = transform.parse_path_value(s)
+                d = os.path.join(stage, *segs)
+                os.makedirs(d, exist_ok=True)
+            path = os.path.join(d, f"part-{uuid.uuid4().hex[:16]}{suffix}")
+            f = write_data_file(path, sub, write_file, geo_fields, part)
+            files.append(json.dumps(f))
+        yield pa.RecordBatch.from_pydict({"file": files})
+
+    return [json.loads(r.file) for r in df.mapInArrow(task, "file string").collect()]
+
+
+def _partition_groups(tbl, part_cols: list[str]):
+    """(partition values, rows without the partition columns) per
+    distinct partition tuple of ``tbl``."""
+    if not part_cols:
+        yield [], tbl
+        return
+    import numpy as np
+
+    keys = pd.Series(list(zip(*(tbl.column(c).to_pylist() for c in part_cols))))
+    codes, uniq = pd.factorize(keys)
+    for i, key in enumerate(uniq):
+        yield list(key), tbl.take(np.nonzero(codes == i)[0]).drop_columns(part_cols)
+
+
+METRICS_MAX_COLS_PROP = "write.metadata.metrics.max-inferred-column-defaults"
+
+
+def data_entries(files: list[dict], meta) -> list[dict]:
+    """Manifest entries (no sequence number or snapshot) for written
+    data files, from their raw stats (the dicts of
+    :func:`write_data_file`; ``partition``, ``nans`` and ``bbox`` may be
+    missing).  Every producer of data entries comes through here, so the
+    table's metrics policy holds whichever writer made the file:
+
+    - only the first ``write.metadata.metrics.max-inferred-column-defaults``
+      (default 100) schema columns keep stats (reference TableProperties
+      METRICS_MAX_INFERRED_COLUMN_DEFAULTS), bounding manifest width on
+      wide tables; later columns cannot prune (conservative);
+    - per-column metrics modes (:func:`apply_metrics_modes`); a ``none``
+      column keeps no NaN count either;
+    - files without rows get no entry.  Nothing is deleted here: a
+      caller that owns an empty file removes it itself."""
+    from iceberg_geo_poc_spark.table.table import _ddl_fields
+
+    props = meta.properties
+    fields = [f.strip().split(None, 1) for f in _ddl_fields(meta.schema_ddl)]
+    kept = [n for n, _ in fields[: int(props.get(METRICS_MAX_COLS_PROP, 100))]]
+    counted = {c for c in kept if metrics_mode_for(props, c)[0] != "none"}
+    string_cols = {n for n, t in fields if t.strip().upper().startswith("STRING")}
+
+    def cap(d: dict) -> dict:
+        return {c: d[c] for c in kept if c in d}
+
+    entries = []
+    for f in files:
+        if not f["record_count"]:
+            continue
+        lower, upper, nulls = apply_metrics_modes(
+            cap(f["lower"]), cap(f["upper"]), cap(f["nulls"]), props, string_cols
+        )
+        nans = {c: v for c, v in f.get("nans", {}).items() if c in counted}
+        entries.append(
+            {
+                "content": "data",
+                "file_path": f["file_path"],
+                "file_size": f["file_size"],
+                "record_count": f["record_count"],
+                "partition": json.dumps(f.get("partition", {})),
+                "lower": json.dumps(lower),
+                "upper": json.dumps(upper),
+                "nulls": json.dumps(nulls),
+                "nans": json.dumps(nans),
+                "bbox": json.dumps(f.get("bbox", {})),
+            }
+        )
+    return entries
 
 
 def _bbox_frame(df, geo_fields: dict[str, str]):
@@ -898,8 +1095,7 @@ def apply_metrics_modes(
     lo2: dict = {}
     hi2: dict = {}
     nu2: dict = {}
-    cols = set(lower) | set(upper) | set(nulls)
-    for c in cols:
+    for c in dict.fromkeys([*lower, *upper, *nulls]):
         mode, n = metrics_mode_for(properties, c)
         if mode == "none":
             continue

@@ -19,13 +19,16 @@ AAD.  Master keys travel to executors inside the task closure
 for a KMS endpoint; a production deployment would put a KMS URL there
 instead and leave everything else unchanged.
 
-Scale posture: writes are one pyarrow ``ParquetWriter`` per task
-(mapInArrow, zero shuffle beyond the table's normal write
-distribution).  READS decrypt inside Spark's native vectorized reader:
-the bundled jvm_kms/LocalEnvelopeKmsClient.java (compiled on demand,
-loaded via ADD JAR) plugs the engine's envelope format into parquet-mr's
-PropertiesDrivenCryptoFactory, so whole-stage codegen, Catalyst column
-pruning and filter pushdown all apply and no Arrow->JVM IPC hop exists
+Scale posture: writes are one pyarrow ``ParquetWriter`` per file
+inside the in-task writer shared with the avro format
+(``manifest.write_files_in_task``: mapInArrow, zero shuffle beyond the
+table's normal write distribution), whose stats come from the one Arrow
+stats kernel, ``manifest.arrow_stats``.  READS decrypt inside Spark's
+native vectorized reader: the bundled jvm_kms/LocalEnvelopeKmsClient.java
+(compiled on demand, loaded via ADD JAR) plugs the engine's envelope
+format into parquet-mr's PropertiesDrivenCryptoFactory, so whole-stage
+codegen, Catalyst column pruning and filter pushdown all apply and no
+Arrow->JVM IPC hop exists
 — bench ``encrypted_scan_overhead_ratio`` measures ~1.0x vs the plain
 managed scan (was 3.93x on the r10 mapInArrow path).  The mapInArrow
 read remains as the fallback for FileIO-only object stores, JDK-less
@@ -46,9 +49,7 @@ decrypt through ``read_encrypted_df`` (driver row
 from __future__ import annotations
 
 import base64
-import json
 import os
-import uuid
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -145,201 +146,42 @@ def decryption_properties(keys: dict[str, bytes]):
     return factory.file_decryption_properties(conn, pe.DecryptionConfiguration())
 
 
-def _arrow_stats(tbl, fields: list[tuple[str, str]]):
-    """(lower, upper, nulls, nans) dicts from an in-memory Arrow table —
-    exact write-time metrics, same keys as manifest stats harvest."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    lower: dict = {}
-    upper: dict = {}
-    nulls: dict = {}
-    nans: dict = {}
-    for name, typ in fields:
-        if name not in tbl.column_names:
-            continue
-        col = tbl.column(name)
-        nulls[name] = int(col.null_count)
-        t = typ.strip().upper()
-        if t.startswith(("ARRAY", "MAP", "STRUCT", "BINARY")):
-            continue
-        valid = col.drop_null()
-        if len(valid) == 0:
-            continue
-        if t.startswith(("FLOAT", "DOUBLE")):
-            arr = valid.to_numpy(zero_copy_only=False).astype(float)
-            nan_ct = int(np.isnan(arr).sum())
-            nans[name] = nan_ct
-            arr = arr[~np.isnan(arr)]
-            if len(arr) == 0:
-                continue
-            lower[name] = float(arr.min())
-            upper[name] = float(arr.max())
-        else:
-            mm = pc.min_max(valid).as_py()
-            lo, hi = mm["min"], mm["max"]
-            if hasattr(lo, "isoformat"):
-                lo, hi = lo.isoformat(), hi.isoformat()
-            lower[name] = lo
-            upper[name] = hi
-    return lower, upper, nulls, nans
-
-
-_ENTRY_SCHEMA = (
-    "file_path string, record_count long, partition string, "
-    "lower string, upper string, nulls string, nans string, bbox string"
-)
-
-
-def _hive_path_str(v) -> str:
-    """A partition value's hive directory string (what Spark's
-    ``partitionBy`` would render), null -> the hive default marker."""
-    import pandas as pd
-
-    if v is None or (pd.api.types.is_scalar(v) and pd.isna(v)):
-        return "__HIVE_DEFAULT_PARTITION__"
-    return str(_json_safe(v))
-
-
 def write_encrypted_files(
     df: DataFrame,
     stage: str,
-    schema_ddl: str,
     pcols: list[tuple],
     keys: dict[str, bytes],
     footer_key: str,
     column_keys: dict[str, list[str]] | None,
     geo_fields: dict[str, str] | None = None,
 ) -> list[dict]:
-    """Distributed modular-encrypted parquet write: one file per
-    (task, partition-tuple), hive-style dirs under ``stage``, stats and
-    the bboxes of the ``geo_fields`` columns ({column: encoding})
-    computed in-task from the Arrow data (no post-hoc footer harvest or
-    decrypting read-back).  Returns manifest entry dicts.
+    """Distributed modular-encrypted parquet write through the shared
+    in-task writer (``manifest.write_files_in_task``: one file per
+    (task, partition tuple), hive-style dirs under ``stage``, stats and
+    the bboxes of the ``geo_fields`` columns computed in the task from
+    the Arrow rows, so no decrypting read-back).  What this module adds
+    is the per-file key setup and the ``ParquetWriter`` call.  Returns
+    the files' raw stats."""
+    from iceberg_geo_poc_spark.table.manifest import write_files_in_task
 
-    ``pcols`` is the table's ``[(derived_col_name, PartitionField)]``
-    list: directory segments use the derived column name with
-    hive-escaped values (a ``/`` or ``=`` in a string partition value
-    must not corrupt the path), while the recorded manifest partition
-    tuple is keyed by the LOGICAL field name with values normalized
-    through the same ``transform.parse_path_value`` as the plain write
-    path — so partitions/partition_stats metadata tables and partition
-    pruning see identical tuples on encrypted and plain tables."""
-    from iceberg_geo_poc_spark.table.manifest import arrow_bbox  # noqa: PLC0415
-    from iceberg_geo_poc_spark.table.table import _ddl_fields  # noqa: PLC0415
+    def write_file(path: str, tbl) -> None:
+        import pyarrow.parquet as pq
 
-    fields = [
-        tuple(f.strip().split(None, 1)) for f in _ddl_fields(schema_ddl)
-    ]
-    os.makedirs(stage, exist_ok=True)
-    conf = _master_conf(keys)
-    user_keys = {k: list(v) for k, v in (column_keys or {}).items()}
-    geo = geo_fields or {}
-    part_cols = [c for c, _ in pcols]
-    # (derived name, logical name, path-string parser) — the transform
-    # dataclasses are small and pickle cleanly into the task closure
-    part_parse = [(c, pf.name, pf.transform) for c, pf in pcols]
+        # complete the column->master-key map from the columns ACTUALLY
+        # written (schema + any materialized system columns): parquet
+        # leaves unlisted columns PLAINTEXT, so everything not claimed by
+        # a user key falls to the footer key — "encrypt everything" is
+        # the only shippable default
+        ck = {k: list(v) for k, v in (column_keys or {}).items()}
+        covered = {c for cols in ck.values() for c in cols}
+        rest = [c for c in tbl.schema.names if c not in covered]
+        if rest:
+            ck.setdefault(footer_key, []).extend(rest)
+        fep = encryption_properties(keys, footer_key, ck)
+        with pq.ParquetWriter(path, tbl.schema, encryption_properties=fep) as w:
+            w.write_table(tbl)
 
-    def write_task(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-
-        chunks = [b for b in batches if b.num_rows]
-        if not chunks:
-            return
-        tbl = pa.Table.from_batches(chunks)
-        groups: list[tuple[list, "pa.Table"]] = []
-        if part_cols:
-            import pandas as pd
-
-            pvals = tbl.select(part_cols).to_pandas()
-            codes, uniq = pd.factorize(
-                pd.Series(list(map(tuple, pvals.itertuples(index=False))))
-            )
-            import numpy as np
-
-            for gi, key in enumerate(uniq):
-                mask = np.nonzero(codes == gi)[0]
-                groups.append((list(key), tbl.take(mask).drop_columns(part_cols)))
-        else:
-            groups.append(([], tbl))
-        out_rows = []
-        for raw_key, sub in groups:
-            keys_local = {
-                k: base64.b64decode(v) for k, v in conf.items()
-            }
-            # complete the column->master-key map from the columns
-            # ACTUALLY written (schema + any materialized system
-            # columns): parquet leaves unlisted columns PLAINTEXT, so
-            # everything not claimed by a user key falls to the footer
-            # key — "encrypt everything" is the only shippable default
-            ck = {k: list(v) for k, v in user_keys.items()}
-            covered = {c for cols in ck.values() for c in cols}
-            rest = [c for c in sub.schema.names if c not in covered]
-            if rest:
-                ck.setdefault(footer_key, []).extend(rest)
-            fep = encryption_properties(keys_local, footer_key, ck)
-            d = stage
-            part: dict = {}
-            if raw_key:
-                from urllib.parse import quote
-
-                segs = []
-                for (cname, lname, transform), v in zip(part_parse, raw_key):
-                    s = _hive_path_str(v)
-                    segs.append(f"{cname}={quote(s, safe='')}")
-                    part[lname] = transform.parse_path_value(s)
-                d = os.path.join(stage, *segs)
-                os.makedirs(d, exist_ok=True)
-            path = os.path.join(d, f"part-{uuid.uuid4().hex[:16]}.parquet")
-            import pyarrow.parquet as pq
-
-            w = pq.ParquetWriter(path, sub.schema, encryption_properties=fep)
-            w.write_table(sub)
-            w.close()
-            lower, upper, nulls, nans = _arrow_stats(sub, fields)
-            bbox = {c: arrow_bbox(sub.column(c).chunks, enc) for c, enc in geo.items()}
-            out_rows.append(
-                {
-                    "file_path": path,
-                    "record_count": sub.num_rows,
-                    "partition": json.dumps(part),
-                    "lower": json.dumps(lower),
-                    "upper": json.dumps(upper),
-                    "nulls": json.dumps(nulls),
-                    "nans": json.dumps(nans),
-                    "bbox": json.dumps(bbox),
-                }
-            )
-        import pyarrow as pa
-
-        yield from pa.Table.from_pylist(out_rows).to_batches()
-
-    rows = df.mapInArrow(write_task, _ENTRY_SCHEMA).collect()
-    entries = []
-    for r in rows:
-        entries.append(
-            {
-                "content": "data",
-                "file_path": r.file_path,
-                "file_size": os.path.getsize(r.file_path),
-                "record_count": int(r.record_count),
-                "partition": r.partition,
-                "lower": r.lower,
-                "upper": r.upper,
-                "nulls": r.nulls,
-                "nans": r.nans,
-                "bbox": r.bbox,
-            }
-        )
-    return entries
-
-
-def _json_safe(v):
-    if hasattr(v, "item"):
-        return v.item()
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return v
+    return write_files_in_task(df, stage, ".parquet", write_file, pcols, geo_fields)
 
 
 # -- JVM-native decrypting scan ----------------------------------------------

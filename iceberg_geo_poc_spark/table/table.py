@@ -627,6 +627,12 @@ class Table:
         compaction writes its strategy's order (the reference's rewriters
         skip the table's, ``use-table-distribution-and-ordering``).
 
+        Every returned entry carries the table's metrics policy
+        (``write.metadata.metrics.*``: metrics modes and the
+        max-inferred-column cap), whichever writer produced the file —
+        Spark's parquet/ORC writer, the avro writer or the
+        modular-encrypted one: all entries come from ``M.data_entries``.
+
         Abort hygiene (reference TestWriteAborts.java: a failed write
         must leave no stray files behind): a Spark-job or stats-harvest
         failure removes the write's own staging directory before
@@ -799,7 +805,8 @@ class Table:
         if tmp_order_cols:
             out = out.drop(*tmp_order_cols)
         out = self._to_physical(out)
-        if fmt != "parquet" and self._modular_footer_key():
+        fkey = self._modular_footer_key()
+        if fmt != "parquet" and fkey:
             # the property names PARQUET modular encryption; an avro/orc
             # table carrying it would silently write plaintext
             raise NotImplementedError(
@@ -808,43 +815,38 @@ class Table:
                 "sealing of other formats"
             )
         if fmt == "avro":
-            # distributed mapInArrow write: one container per task, the
-            # manifest stats computed in-task (write-time metrics, like
-            # the reference's Avro writers) — see table/avro_format.py
+            # one mapInArrow job writes the containers and computes their
+            # stats in-task (write-time metrics, like the reference's Avro
+            # writers) — see table/avro_format.py
             from iceberg_geo_poc_spark.table import avro_format as AV
 
-            return self._finalize_staged(
-                AV.write_avro_files(out, stage, self.meta.schema_ddl),
-                stage,
-                _final_dir,
-            )
-        enc_footer_key = self.meta.properties.get(
-            "write.parquet.encryption.footer-key"
-        )
-        if fmt == "parquet" and enc_footer_key:
+            files = AV.write_avro_files(out, stage, self.meta.schema_ddl)
+        elif fkey:
             # Parquet MODULAR encryption (PARQUET-1300; reference rides
             # parquet-mr's implementation of the same format feature):
-            # distributed pyarrow write with per-file data keys wrapped
-            # by the registered master key, stats and geometry bboxes
-            # computed in-task.
+            # the same in-task writer, with per-file data keys wrapped by
+            # the registered master key
             from iceberg_geo_poc_spark.table import parquet_crypto as PC
 
-            column_keys = json.loads(
-                self.meta.properties.get(
-                    "write.parquet.encryption.column-keys", "{}"
-                )
-            )
-            entries = PC.write_encrypted_files(
+            files = PC.write_encrypted_files(
                 out,
                 stage,
-                self.meta.schema_ddl,
                 pcols,
                 PC.master_keys(),
-                enc_footer_key,
-                column_keys,
+                fkey,
+                json.loads(self.meta.properties.get(PC.PROP_COLUMN_KEYS, "{}")),
                 self.meta.geo_fields,
             )
-            return self._finalize_staged(entries, stage, _final_dir)
+        else:
+            files = self._write_spark_files(df, out, stage, fmt, pcols)
+        entries = M.data_entries(files, self.meta)
+        return self._finalize_staged(entries, stage, _final_dir)
+
+    def _write_spark_files(self, df, out, stage, fmt, pcols) -> list[dict]:
+        """Spark's own parquet/ORC writer; the raw stats of its files
+        come from the footers (ORC: one distributed aggregation), the
+        bboxes from ``M.compute_bboxes``, the NaN counts from
+        ``M.compute_nan_counts``.  Empty task outputs are removed."""
         writer = out.write.format(fmt)
         if fmt == "parquet":
             # bloom-filter passthrough (reference TableProperties
@@ -900,72 +902,26 @@ class Table:
                 # ORC stats came from a distributed agg that already
                 # counted NaNs exactly
                 nan_counts = {p: stats[p][5] for p in paths}
-        # wide-table metrics cap (reference TableProperties
-        # METRICS_MAX_INFERRED_COLUMN_DEFAULTS, default 100): min/max/null
-        # stats are kept only for the first N schema columns, bounding
-        # manifest width on 1000-column tables; later columns simply
-        # cannot prune (conservative, same as the reference)
-        max_cols = int(
-            self.meta.properties.get(
-                "write.metadata.metrics.max-inferred-column-defaults", 100
-            )
-        )
-        kept_cols = {
-            f.split()[0] for f in _ddl_fields(self.meta.schema_ddl)[:max_cols]
-        }
-
-        def _cap(d: dict) -> dict:
-            return {k: v for k, v in d.items() if k in kept_cols}
-
-        # metrics modes (reference MetricsModes.java none/counts/
-        # truncate(n)/full + UnicodeUtil.truncateStringMax): string
-        # bounds truncated per table property — pruning stays sound
-        # (bounds only widen); the stats MIN/MAX fast path refuses
-        # possibly-truncated string bounds (stats_agg.py)
-        string_cols = {
-            f.split()[0]
-            for f in _ddl_fields(self.meta.schema_ddl)
-            if f.strip().split(None, 1)[1].strip().upper().startswith("STRING")
-        }
-        none_cols = {
-            c
-            for c in kept_cols
-            if M.metrics_mode_for(self.meta.properties, c)[0] == "none"
-        }
-
-        entries = []
+        files = []
         for p in paths:
             record_count, file_size, lower, upper, nulls = stats[p][:5]
-            lower, upper, nulls = _cap(lower), _cap(upper), _cap(nulls)
-            lower, upper, nulls = M.apply_metrics_modes(
-                lower, upper, nulls, self.meta.properties, string_cols
-            )
             if record_count == 0:
                 os.remove(p)  # empty task output: not a data file
                 continue
-            part = _partition_from_path(os.path.relpath(p, stage), pcols)
-            entries.append(
+            files.append(
                 {
-                    "content": "data",
                     "file_path": p,
                     "file_size": file_size,
                     "record_count": record_count,
-                    "partition": json.dumps(part),
-                    "lower": json.dumps(lower),
-                    "upper": json.dumps(upper),
-                    "nulls": json.dumps(nulls),
-                    # 'none'-mode columns carry no NaN counts either
-                    "nans": json.dumps(
-                        {
-                            k: v
-                            for k, v in nan_counts.get(p, {}).items()
-                            if k not in none_cols
-                        }
-                    ),
-                    "bbox": json.dumps(bboxes.get(p, {})),
+                    "partition": _partition_from_path(os.path.relpath(p, stage), pcols),
+                    "lower": lower,
+                    "upper": upper,
+                    "nulls": nulls,
+                    "nans": nan_counts.get(p, {}),
+                    "bbox": bboxes.get(p, {}),
                 }
             )
-        return self._finalize_staged(entries, stage, _final_dir)
+        return files
 
     def _finalize_staged(
         self, entries: list[dict], stage: str, final_dir: str | None
@@ -1594,12 +1550,14 @@ class Table:
         return _read_parquet_any(self.spark, paths)
 
     def _sidecar_write(
-        self, df: DataFrame, content: str, ddl: str, extra: dict | None = None
+        self, df: DataFrame, content: str, extra: dict | None = None
     ) -> list[dict]:
         """Persist a delete sidecar (posdel/eqdel) and return manifest
         entries.  On modular-encrypted tables the sidecar routes through
         the encrypted pyarrow writer under the footer key — an equality
         delete carries column VALUES, which must not land plaintext.
+        Delete entries keep full stats of their own columns: the table's
+        metrics policy is about its data columns.
 
         One file per delete commit is the default (delete batches are
         small); ``write.delete.distribution-count`` > 1 keeps N writer
@@ -1615,35 +1573,32 @@ class Table:
         if fkey:
             from iceberg_geo_poc_spark.table import parquet_crypto as PC
 
-            entries = PC.write_encrypted_files(
-                df, stage, ddl, [], PC.master_keys(), fkey, None
+            files = PC.write_encrypted_files(
+                df, stage, [], PC.master_keys(), fkey, None
             )
-            for e in entries:
-                e["content"] = content
-                e.pop("nans", None)
-                if extra:
-                    e.update(extra)
-            return self._finalize_staged(entries, stage, final_dir)
-        df.write.parquet(stage)
-        entries = []
-        for p in _list_parquet(stage):
-            record_count, file_size, lower, upper, nulls = M.harvest_footer_stats(p)[:5]
-            if record_count == 0:
-                continue
-            entries.append(
-                {
-                    "content": content,
-                    "file_path": p,
-                    "file_size": file_size,
-                    "record_count": record_count,
-                    "partition": json.dumps({}),
-                    "lower": json.dumps(lower),
-                    "upper": json.dumps(upper),
-                    "nulls": json.dumps(nulls),
-                    "bbox": json.dumps({}),
-                    **(extra or {}),
-                }
-            )
+        else:
+            df.write.parquet(stage)
+            files = [
+                dict(zip(("record_count", "file_size", "lower", "upper", "nulls"),
+                         M.harvest_footer_stats(p)), file_path=p)
+                for p in _list_parquet(stage)
+            ]
+        entries = [
+            {
+                "content": content,
+                "file_path": f["file_path"],
+                "file_size": f["file_size"],
+                "record_count": f["record_count"],
+                "partition": json.dumps({}),
+                "lower": json.dumps(f["lower"]),
+                "upper": json.dumps(f["upper"]),
+                "nulls": json.dumps(f["nulls"]),
+                "bbox": json.dumps({}),
+                **(extra or {}),
+            }
+            for f in files
+            if f["record_count"]
+        ]
         return self._finalize_staged(entries, stage, final_dir)
 
     def _posdel_entries(self, matches: DataFrame) -> list[dict]:
@@ -1653,9 +1608,7 @@ class Table:
         posdel = matches.select(
             F.col("__file_path").alias("file_path"), F.col("__pos").alias("pos")
         )
-        return self._sidecar_write(
-            posdel, "posdel", "file_path STRING, pos BIGINT"
-        )
+        return self._sidecar_write(posdel, "posdel")
 
     def _stage_dir(self, kind: str) -> tuple[str, str | None]:
         """(spark-writable stage dir, object-store final dir or None).
@@ -1694,12 +1647,12 @@ class Table:
         if key_cols is None:
             idf = self.meta.properties.get("identifier-fields")
             key_cols = json.loads(idf) if idf else list(keys.columns)
-        types = dict(self._ddl_types())
-        ddl = ", ".join(f"{c} {types[c]}" for c in key_cols)
+        unknown = [c for c in key_cols if c not in self.columns()]
+        if unknown:
+            raise KeyError(f"equality-delete key columns not in table: {unknown}")
         entries = self._sidecar_write(
             keys.select(*key_cols).distinct(),
             "eqdel",
-            ddl,
             extra={"eq_cols": json.dumps(key_cols)},
         )
 

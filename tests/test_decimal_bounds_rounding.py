@@ -86,3 +86,25 @@ def test_decimal_partition_bounds_widen_property():
             assert Fraction(math.nextafter(hi, -math.inf)) <= exact
 
     check()
+
+
+def test_spark_written_wide_decimal_bounds_widen(spark, tmp_path):
+    """Spark writes DECIMAL(p>18) as FIXED_LEN_BYTE_ARRAY, whose footer
+    stats pyarrow hands over as Decimal objects; the harvest widens them
+    like the INT-backed ones instead of rounding to the nearest float
+    (100000000000000011.123 rounds UP to 1.0000000000000002e17, a lower
+    bound above the true minimum)."""
+    import json
+    from decimal import Decimal
+
+    import pandas as pd
+
+    from iceberg_geo_poc_spark.table import Catalog
+
+    lo, hi = Decimal("100000000000000011.123"), Decimal("12345678901234567890.5")
+    t = Catalog(str(tmp_path / "wh"), spark).create_table("wide", "v DECIMAL(38,3)")
+    df = spark.createDataFrame(pd.DataFrame({"v": [lo, hi]}), "v DECIMAL(38,3)")
+    t.append(df.coalesce(1))
+    row = t._entries().iloc[0]
+    assert Fraction(json.loads(row.lower)["v"]) <= Fraction(lo)
+    assert Fraction(json.loads(row.upper)["v"]) >= Fraction(hi)

@@ -77,75 +77,83 @@ def catalog(spark, tmp_path):
     return Catalog(str(tmp_path / "wh"), spark)
 
 
-def _write_sample(catalog, spark, props):
-    t = catalog.create_table(
+def _write_samples(catalog, write_each, props):
+    """The sample rows under ``props``, once per data-file writer: the
+    policy must hold whichever writer made the file."""
+    import pandas as pd
+
+    return write_each(
+        catalog,
         "mm_" + "_".join(f"{k.split('.')[-1]}_{v}" for k, v in props.items())
         .replace("(", "_").replace(")", ""),
         "id BIGINT, name STRING",
-        properties=props,
+        pd.DataFrame({"id": [1, 2, 3], "name": ["alabama", "wyoming", "montana"]}),
+        props,
     )
-    df = spark.createDataFrame(
-        [(1, "alabama"), (2, "wyoming"), (3, "montana")], "id LONG, name STRING"
-    )
-    t.append(df.coalesce(1))
-    return t
 
 
-def test_truncate_bounds_in_manifest_and_sound_scan(catalog, spark):
+def test_truncate_bounds_in_manifest_and_sound_scan(catalog, write_each):
     from iceberg_geo_poc_spark.table import E
 
-    t = _write_sample(
-        catalog, spark, {M.METRICS_DEFAULT_PROP: "truncate(3)"}
-    )
-    ent = t._entries()
-    row = ent[ent.content == "data"].iloc[0]
-    lo = json.loads(row.lower)["name"]
-    hi = json.loads(row.upper)["name"]
-    assert lo == "ala" and hi == "wyp"
-    # scan with a string predicate: widened bounds must not lose rows
-    got = sorted(
-        r["name"] for r in t.scan(where=E.ge("name", "montana")).to_df().collect()
-    )
-    assert got == ["montana", "wyoming"]
-    # numeric bounds exact
-    assert json.loads(row.lower)["id"] == 1 and json.loads(row.upper)["id"] == 3
+    for writer, t in _write_samples(
+        catalog, write_each, {M.METRICS_DEFAULT_PROP: "truncate(3)"}
+    ):
+        ent = t._entries()
+        row = ent[ent.content == "data"].iloc[0]
+        lo = json.loads(row.lower)["name"]
+        hi = json.loads(row.upper)["name"]
+        assert lo == "ala" and hi == "wyp", writer
+        # scan with a string predicate: widened bounds must not lose rows
+        got = sorted(
+            r["name"] for r in t.scan(where=E.ge("name", "montana")).to_df().collect()
+        )
+        assert got == ["montana", "wyoming"], writer
+        # numeric bounds exact
+        assert json.loads(row.lower)["id"] == 1, writer
+        assert json.loads(row.upper)["id"] == 3, writer
 
 
-def test_counts_mode_drops_bounds_keeps_nulls(catalog, spark):
-    t = _write_sample(catalog, spark, {M.METRICS_DEFAULT_PROP: "counts"})
-    row = t._entries().iloc[0]
-    assert json.loads(row.lower) == {} and json.loads(row.upper) == {}
-    assert json.loads(row.nulls)["name"] == 0
+def test_counts_mode_drops_bounds_keeps_nulls(catalog, write_each):
+    for writer, t in _write_samples(
+        catalog, write_each, {M.METRICS_DEFAULT_PROP: "counts"}
+    ):
+        row = t._entries().iloc[0]
+        assert json.loads(row.lower) == {} and json.loads(row.upper) == {}, writer
+        assert json.loads(row.nulls)["name"] == 0, writer
 
 
-def test_none_mode_drops_everything(catalog, spark):
-    t = _write_sample(catalog, spark, {M.METRICS_DEFAULT_PROP: "none"})
-    row = t._entries().iloc[0]
-    assert json.loads(row.lower) == {}
-    assert json.loads(row.upper) == {}
-    assert json.loads(row.nulls) == {}
+def test_none_mode_drops_everything(catalog, write_each):
+    for writer, t in _write_samples(
+        catalog, write_each, {M.METRICS_DEFAULT_PROP: "none"}
+    ):
+        row = t._entries().iloc[0]
+        assert json.loads(row.lower) == {}, writer
+        assert json.loads(row.upper) == {}, writer
+        assert json.loads(row.nulls) == {}, writer
 
 
-def test_stats_fastpath_refuses_truncated_string_minmax(catalog, spark):
+def test_stats_fastpath_refuses_truncated_string_minmax(catalog, write_each):
     from iceberg_geo_poc_spark.table.stats_agg import try_stats_aggregate
 
-    t = _write_sample(catalog, spark, {M.METRICS_DEFAULT_PROP: "truncate(3)"})
-    # COUNT still answerable; MIN/MAX on the truncated string must bail
-    assert try_stats_aggregate(t, ["count(*)"]) == [3]
-    assert try_stats_aggregate(t, ["min(name)"]) is None
-    assert try_stats_aggregate(t, ["max(name)"]) is None
-    # numeric MIN/MAX remain exact and answerable
-    assert try_stats_aggregate(t, ["min(id)", "max(id)"]) == [1, 3]
+    for writer, t in _write_samples(
+        catalog, write_each, {M.METRICS_DEFAULT_PROP: "truncate(3)"}
+    ):
+        # COUNT still answerable; MIN/MAX on the truncated string must bail
+        assert try_stats_aggregate(t, ["count(*)"]) == [3], writer
+        assert try_stats_aggregate(t, ["min(name)"]) is None, writer
+        assert try_stats_aggregate(t, ["max(name)"]) is None, writer
+        # numeric MIN/MAX remain exact and answerable
+        assert try_stats_aggregate(t, ["min(id)", "max(id)"]) == [1, 3], writer
 
 
-def test_full_mode_string_minmax_still_answered(catalog, spark):
+def test_full_mode_string_minmax_still_answered(catalog, write_each):
     from iceberg_geo_poc_spark.table.stats_agg import try_stats_aggregate
 
-    t = _write_sample(catalog, spark, {})
-    assert try_stats_aggregate(t, ["min(name)", "max(name)"]) == [
-        "alabama",
-        "wyoming",
-    ]
+    for writer, t in _write_samples(catalog, write_each, {}):
+        assert try_stats_aggregate(t, ["min(name)", "max(name)"]) == [
+            "alabama",
+            "wyoming",
+        ], writer
 
 
 def test_truncate_upper_bound_property():

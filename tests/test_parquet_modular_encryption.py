@@ -17,6 +17,17 @@ from iceberg_geo_poc_spark.table import parquet_crypto as PC
 
 KEY = bytes(range(16))
 COLKEY = bytes(range(16, 32))
+DDL = "id BIGINT, grp STRING, val DOUBLE"
+
+
+def _frame(spark, rows, ddl=DDL):
+    """A frame of ``rows`` built from pandas: Spark converts it on the
+    driver, where a tuple list would make a Python RDD that costs a
+    Python worker round trip per job."""
+    import pandas as pd
+
+    names = [f.split()[0] for f in ddl.split(", ")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
 
 
 @pytest.fixture()
@@ -34,15 +45,12 @@ def _mk_encrypted(spark, catalog, name, partition_by=None, column_keys=None):
         props["write.parquet.encryption.column-keys"] = json.dumps(column_keys)
     t = catalog.create_table(
         name,
-        "id BIGINT, grp STRING, val DOUBLE",
+        DDL,
         partition_by=partition_by,
         properties=props,
     )
-    df = spark.createDataFrame(
-        [(i, "ab"[i % 2], float(i) / 2) for i in range(200)],
-        "id BIGINT, grp STRING, val DOUBLE",
-    ).repartition(4)
-    t.append(df)
+    rows = [(i, "ab"[i % 2], i / 2) for i in range(200)]
+    t.append(_frame(spark, rows).repartition(4))
     return t
 
 
@@ -183,9 +191,7 @@ def test_encrypted_mor_eqdel_values_sealed(spark, catalog):
     """Equality deletes carry column VALUES: the sidecar must be
     encrypted, and the sequence-aware application still works."""
     t = _mk_encrypted(spark, catalog, "enc9")
-    t.delete_by_keys(
-        spark.createDataFrame([(5,), (7,)], "id BIGINT"), key_cols=["id"]
-    )
+    t.delete_by_keys(_frame(spark, [(5,), (7,)], "id BIGINT"), key_cols=["id"])
     got = {r.id for r in t.to_df().collect()}
     assert 5 not in got and 7 not in got and len(got) == 198
     ent = t._entries()
@@ -193,9 +199,7 @@ def test_encrypted_mor_eqdel_values_sealed(spark, catalog):
         with pytest.raises(Exception):
             pq.read_table(p)
     # rows appended AFTER the delete keep the key (sequence rule)
-    t.append(
-        spark.createDataFrame([(5, "a", 1.0)], "id BIGINT, grp STRING, val DOUBLE")
-    )
+    t.append(_frame(spark, [(5, "a", 1.0)]))
     assert 5 in {r.id for r in t.to_df().collect()}
 
 
@@ -227,11 +231,7 @@ def test_encrypted_incremental_and_changelog(spark, catalog):
 
     t = _mk_encrypted(spark, catalog, "enc12")
     s1 = t.meta.snapshots[-1].snapshot_id
-    t.append(
-        spark.createDataFrame(
-            [(1000, "z", 9.0)], "id BIGINT, grp STRING, val DOUBLE"
-        )
-    )
+    t.append(_frame(spark, [(1000, "z", 9.0)]))
     inc = incremental_read(t, from_snapshot_id=s1)
     assert [r.id for r in inc.collect()] == [1000]
     ch = changelog(t, from_snapshot_id=s1).collect()
@@ -241,9 +241,7 @@ def test_encrypted_incremental_and_changelog(spark, catalog):
 def test_encrypted_streaming_foreachbatch_sink(spark, catalog):
     """Exactly-once streaming appends land encrypted via Table.append_streaming."""
     t = _mk_encrypted(spark, catalog, "enc13")
-    df = spark.createDataFrame(
-        [(2000, "s", 1.5)], "id BIGINT, grp STRING, val DOUBLE"
-    )
+    df = _frame(spark, [(2000, "s", 1.5)])
     t.append_streaming(df, query_id="q1", epoch_id=0)
     t.append_streaming(df, query_id="q1", epoch_id=0)  # replay skipped
     assert t.to_df().where("id = 2000").count() == 1
@@ -324,12 +322,7 @@ def test_encrypted_compaction_output_stays_encrypted(spark, catalog):
     from iceberg_geo_poc_spark.table import maintenance as X
 
     t = _mk_encrypted(spark, catalog, "enc14")
-    t.append(
-        spark.createDataFrame(
-            [(500 + i, "c", 1.0) for i in range(20)],
-            "id BIGINT, grp STRING, val DOUBLE",
-        ).coalesce(1)
-    )
+    t.append(_frame(spark, [(500 + i, "c", 1.0) for i in range(20)]).coalesce(1))
     before = t.scan().total_data_files()
     X.rewrite_data_files(t, target_file_size=1 << 30)
     after = t.scan().total_data_files()
@@ -348,7 +341,7 @@ def test_encryption_property_requires_parquet(spark, catalog):
         properties={"write.parquet.encryption.footer-key": "k_footer"},
     )
     with pytest.raises(NotImplementedError, match="requires file_format"):
-        t.append(spark.createDataFrame([(1,)], "a BIGINT"))
+        t.append(spark.range(1).withColumnRenamed("id", "a"))
 
 
 def test_encrypted_schema_evolution_and_time_travel(spark, catalog):
@@ -361,11 +354,7 @@ def test_encrypted_schema_evolution_and_time_travel(spark, catalog):
     catalog.rename_column("enc15", "val", "score")
     t = catalog.load_table("enc15")
     assert t.to_df().where("score = 1.5").count() == 1
-    t.append(
-        spark.createDataFrame(
-            [(9000, "z", 7.0)], "id BIGINT, grp STRING, score DOUBLE"
-        )
-    )
+    t.append(_frame(spark, [(9000, "z", 7.0)], "id BIGINT, grp STRING, score DOUBLE"))
     assert t.to_df().count() == 201
     old = t.scan(snapshot_id=s1).to_df()
     assert old.count() == 200
@@ -378,12 +367,8 @@ def test_encrypted_zorder_compaction(spark, catalog):
     from iceberg_geo_poc_spark.table import maintenance as X
 
     t = _mk_encrypted(spark, catalog, "enc16")
-    t.append(
-        spark.createDataFrame(
-            [(300 + i, "z", float(i)) for i in range(50)],
-            "id BIGINT, grp STRING, val DOUBLE",
-        ).repartition(3)
-    )
+    rows = [(300 + i, "z", float(i)) for i in range(50)]
+    t.append(_frame(spark, rows).repartition(3))
     X.rewrite_data_files(t, strategy="sort", sort_by=["id"])
     assert t.to_df().count() == 250
     for p in t.scan().files():
@@ -419,12 +404,8 @@ def test_encrypted_partition_metadata_matches_plain(spark, catalog):
         "pmeta_plain", "id BIGINT, grp STRING, val DOUBLE",
         partition_by=[("grp", "identity")],
     )
-    plain.append(
-        spark.createDataFrame(
-            [(i, "ab"[i % 2], float(i) / 2) for i in range(200)],
-            "id BIGINT, grp STRING, val DOUBLE",
-        ).repartition(4)
-    )
+    rows = [(i, "ab"[i % 2], i / 2) for i in range(200)]
+    plain.append(_frame(spark, rows).repartition(4))
     rows_e = {
         (r.partition, r.record_count)
         for r in MT.inspect(enc, "partitions").collect()
@@ -448,12 +429,7 @@ def test_encrypted_partition_values_hive_escaped(spark, catalog):
         properties={"write.parquet.encryption.footer-key": "k_footer"},
     )
     vals = ["a/b", "c=d", "plain"]
-    t.append(
-        spark.createDataFrame(
-            [(i, vals[i % 3], float(i)) for i in range(30)],
-            "id BIGINT, grp STRING, val DOUBLE",
-        ).coalesce(1)
-    )
+    t.append(_frame(spark, [(i, vals[i % 3], float(i)) for i in range(30)]).coalesce(1))
     got = sorted(
         (r.grp, r.id) for r in t.scan().to_df().select("grp", "id").collect()
     )
@@ -462,6 +438,67 @@ def test_encrypted_partition_values_hive_escaped(spark, catalog):
     pr = t.scan(where=E.eq("grp", "a/b"))
     assert pr.to_df().count() == 10
     assert len(pr.files()) < len(t.scan().files())
+
+
+def _plain_and_encrypted(spark, catalog, name, ddl, pdf):
+    """[(table, data entry)] for the rows of ``pdf`` written as one file
+    to a plain table and to an encrypted one."""
+    out = []
+    for suffix, props in (
+        ("plain", {}),
+        ("enc", {"write.parquet.encryption.footer-key": "k_footer"}),
+    ):
+        t = catalog.create_table(f"{name}_{suffix}", ddl, properties=props)
+        t.append(spark.createDataFrame(pdf, ddl).coalesce(1))
+        ent = t._entries()
+        out.append((t, ent[ent.content == "data"].iloc[0]))
+    return out
+
+
+def test_encrypted_timestamp_bounds_match_plain(spark, catalog):
+    """Encrypted files carry timestamp bounds in the plain footer
+    harvest's encoding (UTC wall clock, 'YYYY-MM-DD HH:MM:SS.ffffff'),
+    so a range scan over an encrypted table keeps every matching file."""
+    import pandas as pd
+
+    ts = pd.to_datetime(
+        ["2024-01-01 05:00", "2024-01-01 06:00", "2024-01-01 07:00", "2024-01-01 08:00"]
+    )
+    pdf = pd.DataFrame({"id": range(4), "ts": ts})
+    (_, plain), (enc, sealed) = _plain_and_encrypted(
+        spark, catalog, "tsb", "id BIGINT, ts TIMESTAMP", pdf
+    )
+    assert (sealed.lower, sealed.upper) == (plain.lower, plain.upper)
+    want = enc.to_df().where("ts < '2024-01-01 06:30:00'").count()
+    assert want == 2
+    assert enc.scan(where=E.lt("ts", "2024-01-01 06:30:00")).to_df().count() == want
+
+
+def test_encrypted_decimal_bounds_match_plain(spark, catalog):
+    """An encrypted append with decimal columns records the bounds the
+    plain footer harvest records: floats widened outward, also for a
+    38-digit value above 2^53."""
+    import json
+    from decimal import Decimal
+    from fractions import Fraction
+
+    import pandas as pd
+
+    big = Decimal("12345678901234567.1234567891")
+    pdf = pd.DataFrame(
+        {
+            "id": [1, 2, 3],
+            "d": [Decimal("1.25"), Decimal("3.10"), None],
+            "big": [big, Decimal("-1.5"), None],
+        }
+    )
+    (_, plain), (_, sealed) = _plain_and_encrypted(
+        spark, catalog, "decb", "id BIGINT, d DECIMAL(10,2), big DECIMAL(38,10)", pdf
+    )
+    for k in ("lower", "upper", "nulls"):
+        assert sealed[k] == plain[k], k
+    assert Fraction(json.loads(sealed.upper)["big"]) >= Fraction(big)
+    assert Fraction(json.loads(sealed.upper)["d"]) >= Fraction(Decimal("3.10"))
 
 
 def test_jvm_native_decrypt_fast_path(spark, catalog):
@@ -501,10 +538,8 @@ def test_jvm_fast_path_mor_on_escaped_partition_paths(spark, catalog):
         partition_by=[("grp", "identity")],
         properties={"write.parquet.encryption.footer-key": "k_footer"},
     )
-    df = spark.createDataFrame(
-        [(i, "a b%c" if i % 2 else "plain", float(i)) for i in range(20)],
-        "id BIGINT, grp STRING, val DOUBLE",
-    ).coalesce(1)
+    rows = [(i, "a b%c" if i % 2 else "plain", float(i)) for i in range(20)]
+    df = _frame(spark, rows).coalesce(1)
     t.append(df)
     # MoR delete rides the need_pos read: positions must match files
     t.delete(E.lt("id", 5), mode="merge-on-read")

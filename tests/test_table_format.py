@@ -1094,28 +1094,33 @@ def test_nested_schema_roundtrip_and_row_ops(spark, catalog):
     assert t.to_df().filter("id = 5").select("s.b").collect()[0][0] == "z"
 
 
-def test_metrics_max_inferred_column_cap(spark, catalog):
+def test_metrics_max_inferred_column_cap(catalog, write_each):
     """write.metadata.metrics.max-inferred-column-defaults bounds stats
     to the first N schema columns (reference TableProperties
     METRICS_MAX_INFERRED_COLUMN_DEFAULTS) — later columns carry no
-    min/max and therefore cannot prune (conservative)."""
+    min/max and therefore cannot prune (conservative), whichever writer
+    made the file."""
     import json as _json
+
+    import pandas as pd
 
     from iceberg_geo_poc_spark.table import E
 
-    t = catalog.create_table(
+    ids = list(range(100))
+    for writer, t in write_each(
+        catalog,
         "metrics_cap",
         "a BIGINT, b BIGINT, c BIGINT",
-        properties={"write.metadata.metrics.max-inferred-column-defaults": "2"},
-    )
-    t.append(spark.range(100).selectExpr("id AS a", "id AS b", "id AS c").coalesce(1))
-    ent = t._entries()
-    low = _json.loads(ent.iloc[0]["lower"])
-    assert set(low) == {"a", "b"}  # c capped out
-    # pruning works on a, conservative (no skip) on c
-    assert len(t.scan(where=E.gt("a", 10**9)).files()) == 0
-    assert len(t.scan(where=E.gt("c", 10**9)).files()) == 1
-    assert t.scan(where=E.gt("c", 10**9)).to_df().count() == 0  # residual
+        pd.DataFrame({"a": ids, "b": ids, "c": ids}),
+        {"write.metadata.metrics.max-inferred-column-defaults": "2"},
+    ):
+        ent = t._entries()
+        low = _json.loads(ent.iloc[0]["lower"])
+        assert set(low) == {"a", "b"}, writer  # c capped out
+        # pruning works on a, conservative (no skip) on c
+        assert len(t.scan(where=E.gt("a", 10**9)).files()) == 0, writer
+        assert len(t.scan(where=E.gt("c", 10**9)).files()) == 1, writer
+        assert t.scan(where=E.gt("c", 10**9)).to_df().count() == 0, writer  # residual
 
 
 def test_write_schema_validation(spark, catalog):
