@@ -456,9 +456,10 @@ class _StreamAppendWriter(DataSourceStreamWriter):
     commits: snapshots carry the epoch id; replays are detected and
     skipped).  Executor tasks receive ROW iterators (the streaming
     writer API is row-based, unlike DataSourceArrowWriter) — rows
-    buffer into pandas and write one parquet file per non-empty task
-    with Arrow-computed stats, identical on-disk form to the batch
-    writer's output."""
+    buffer into one Arrow table (built straight from the rows: a pandas
+    round trip would turn NaN into NULL) and write one parquet file per
+    non-empty task with Arrow-computed stats, identical on-disk form to
+    the batch writer's output."""
 
     def __init__(self, location: str, physical_of: dict, query_token: str):
         self.location = location
@@ -469,13 +470,12 @@ class _StreamAppendWriter(DataSourceStreamWriter):
         return f"datasource-stream:{self.query_token}"
 
     def write(self, iterator):
-        import pandas as pd
         import pyarrow as pa
 
         rows = [r.asDict() for r in iterator]
         if not rows:
             return _FileCommit({})
-        tbl = pa.Table.from_pandas(pd.DataFrame(rows), preserve_index=False)
+        tbl = pa.Table.from_pylist(rows)
         return _write_task_file(self.location, "dss", tbl, self.physical_of)
 
     def commit(self, messages, batchId: int) -> None:

@@ -59,7 +59,9 @@ def schema_json(fields: list[tuple[str, str]], name: str = "row") -> str:
     for fname, spark_t in fields:
         base = spark_t.lower().strip()
         if base not in _SPARK_TO_AVRO:
-            raise ValueError(f"avro: unsupported column type {spark_t!r}")
+            raise ValueError(
+                f"avro: column {fname!r} has unsupported type {spark_t!r}"
+            )
         at, logical = _SPARK_TO_AVRO[base]
         t: object = at if logical is None else {"type": at, "logicalType": logical}
         fs.append({"name": fname, "type": ["null", t]})

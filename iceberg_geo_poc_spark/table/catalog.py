@@ -83,6 +83,8 @@ class Catalog:
                 "transforms need the parquet/orc directory writer)"
             )
         _validate_geometry_columns(schema_ddl, geometry_columns)
+        if file_format == "avro":
+            _check_avro_schema(schema_ddl)
         properties = dict(properties or {})
         _reject_modular_encryption_off_posix(location, properties)
         if file_format != "parquet":
@@ -206,6 +208,8 @@ class Catalog:
         reference's AddColumn update)."""
         t = self.load_table(name)
         t.meta.schema_ddl = f"{t.meta.schema_ddl}, {ddl}"
+        if t.file_format == "avro":
+            _check_avro_schema(t.meta.schema_ddl)
         t.meta.schema_log.append({"add-columns": ddl, "at": MD.now_ms()})
         MD.write_new_metadata(t.meta, t.meta.version)
         return t
@@ -966,6 +970,16 @@ def _reject_modular_encryption_off_posix(location: str, props: dict) -> None:
             f"(got {location!r}); use EncryptingFileIO for at-rest "
             "sealing on object stores"
         )
+
+
+def _check_avro_schema(schema_ddl: str) -> None:
+    """Avro data files are encoded by ``avro_codec`` inside the write
+    task; run its schema mapping on the driver, so a column type it
+    cannot encode fails here with a ValueError naming the column, not in
+    every append's Python worker."""
+    from iceberg_geo_poc_spark.table import avro_codec, avro_format
+
+    avro_codec.schema_json(avro_format._ddl_pairs(schema_ddl))
 
 
 def _validate_geometry_columns(schema_ddl: str, geometry_columns: dict[str, str]) -> None:

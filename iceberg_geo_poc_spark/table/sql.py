@@ -989,14 +989,10 @@ def _delete(catalog, m):
         # pre-creates it)
         t.ensure_branch(wap)
     if where is not None and _HAS_SUBQUERY_RE.search(where):
-        if wap:
-            raise SqlError(
-                "subquery DML under spark.wap.branch is unsupported"
-            )
         match, prune = _subquery_predicate(
             catalog, t, where, m.group("talias")
         )
-        return t.delete_matching(match, prune, mode=mode)
+        return t.delete_matching(match, prune, mode=mode, to_branch=wap)
     if where is None:
         expr = E.AlwaysTrue()
     else:
@@ -1024,14 +1020,10 @@ def _update(catalog, m):
     if wap:
         t.ensure_branch(wap)
     if where is not None and _HAS_SUBQUERY_RE.search(where):
-        if wap:
-            raise SqlError(
-                "subquery DML under spark.wap.branch is unsupported"
-            )
         match, prune = _subquery_predicate(
             catalog, t, where, m.group("talias")
         )
-        return t.update_matching(sets, match, prune, mode=mode)
+        return t.update_matching(sets, match, prune, mode=mode, to_branch=wap)
     expr = (
         E.AlwaysTrue()
         if where is None
@@ -2065,5 +2057,6 @@ def _merge(catalog, m: re.Match):
         matched_clauses=matched_clauses,
         not_matched_by_source_clauses=bs_clauses,
         not_matched_clauses=insert_clauses,
+        mode=t.meta.properties.get("write.merge.mode", "copy-on-write"),
         to_branch=wap,
     )

@@ -9,9 +9,11 @@ The Spark-first re-expression of the reference's table stack:
   geometry bbox, reference ManifestGroup.java:177-221 /
   InclusiveMetricsEvaluator.java) -> spark.read.parquet(pruned files)
   -> MoR delete anti-join -> residual filter
-- row-level ops  = copy-on-write rewrite of affected files only, or
-  merge-on-read position-delete files applied at read via left_anti
-  join on (_metadata.file_path, _metadata.row_index)
+- row-level ops  = one plan -> mark -> write -> commit core
+  (``Table._row_level``) for DELETE, UPDATE, MERGE and
+  overwrite-by-filter: copy-on-write rewrite of affected files only, or
+  merge-on-read position-delete / deletion-vector files applied at read
+  via left_anti join on (_metadata.file_path, _metadata.row_index)
   (vs reference SparkCopyOnWriteOperation / SparkPositionDeltaWrite)
 - commit         = optimistic metadata-version put-if-absent with
   retry (vs reference SnapshotProducer.java:369-409)
@@ -32,7 +34,7 @@ from urllib.parse import unquote
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from iceberg_geo_poc_spark.table import expressions as E
 from iceberg_geo_poc_spark.table import fileio as FIO
@@ -42,6 +44,9 @@ from iceberg_geo_poc_spark.table import vector_eval as V
 from iceberg_geo_poc_spark.table.transforms import PartitionField
 
 _MAX_COMMIT_RETRIES = 5
+
+# row-level write modes every DELETE / UPDATE / MERGE accepts
+_ROW_LEVEL_MODES = ("copy-on-write", "merge-on-read", "merge-on-read-dv")
 
 
 class ValidationException(Exception):
@@ -1028,30 +1033,22 @@ class Table:
     def overwrite(self, df: DataFrame, where: E.Expr | None = None) -> MD.Snapshot:
         """Full-table overwrite, or overwrite-by-filter (rows matching
         ``where`` are replaced by ``df``; reference SparkWrite.java:165-175
-        asOverwriteByFilter)."""
-        if where is None:
-            new = self._write_files(df)
-
-            def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
-                return M.entries_dataframe(
-                    [dict(e, sequence_number=seq, snapshot_id=0) for e in new]
-                )
-
-            return self._commit("overwrite", build, {"replaced": "all"})
-        # overwrite-by-filter = CoW delete of matching rows + append
-        delete_plan = self._plan_cow(where)
-        rewritten = self._rewrite_files(delete_plan["partial"], where)
+        asOverwriteByFilter).  Overwrite-by-filter is a copy-on-write
+        DELETE of ``where`` through the row-level core, committed with
+        ``df``'s files, so it validates and narrows exactly like one."""
+        if where is not None:
+            return self._row_level(
+                "delete", [("delete", None)], where, where,
+                add=lambda: self._write_files(df),
+            )
         new = self._write_files(df)
 
         def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
-            drop = set(delete_plan["full"]) | set(delete_plan["partial"])
-            kept = current[~current.file_path.isin(drop)]
-            add = M.entries_dataframe(
-                [dict(e, sequence_number=seq, snapshot_id=0) for e in rewritten + new]
+            return M.entries_dataframe(
+                [dict(e, sequence_number=seq, snapshot_id=0) for e in new]
             )
-            return M.concat_entries([kept, add])
 
-        return self._commit("overwrite", build)
+        return self._commit("overwrite", build, {"replaced": "all"})
 
     def dynamic_partition_overwrite(self, df: DataFrame) -> MD.Snapshot:
         """Replace exactly the partitions present in df (reference
@@ -1244,32 +1241,64 @@ class Table:
                 f"write.{op}.isolation-level=snapshot to allow it"
             )
 
-    def _rewrite_files(
-        self, paths: list[str], drop: E.Expr, entries: pd.DataFrame | None = None
-    ) -> list[dict]:
-        """Read files, drop rows matching ``drop``, write replacements.
+    def _where_mark(self, where: E.Expr):
+        """Row-local marking of an expression DELETE/UPDATE: clause 1
+        where ``coalesce(where, false)`` holds, else 0.  NOT the
+        expression-tree negation: in SQL three-valued logic a row whose
+        predicate is NULL does *not* match and must stay untouched
+        (reference semantics: Spark's ReplaceData keeps rows via the
+        same null-safe inversion of the condition)."""
+        cond = F.coalesce(where.to_spark_column(self.geo_fields), F.lit(False))
+        return lambda df: df.withColumn("__clause", F.when(cond, 1).otherwise(0))
 
-        The survivor filter is ``NOT coalesce(drop, false)`` — NOT the
-        expression-tree negation: in SQL three-valued logic ``NOT p``
-        excludes rows where ``p`` is NULL, but a row whose DELETE
-        predicate evaluates to NULL does *not* match the delete and must
-        SURVIVE the rewrite.  ``negate()`` is a set complement only for
-        2-valued predicates; using it here silently dropped NULL rows
-        from ``DELETE WHERE v != 10`` on files mixing NULLs and matches
-        (reference semantics: SparkTable/Spark's ReplaceData keeps rows
-        via the same null-safe inversion of the delete condition).
-        """
+    def _apply_clauses(self, marked: DataFrame, clauses: list[tuple]) -> DataFrame:
+        """Marked target rows (aliased ``t``, carrying lineage and
+        ``__clause``) -> the rows to write.  An update clause sets its
+        columns, a delete clause drops the row, clause 0 passes through.
+        Every row keeps its ``_row_id``; an updated row's
+        ``_last_updated_sequence_number`` goes NULL, which resolves to
+        the committing file's sequence number at read time, so it stays
+        right across commit retries."""
+        clause = F.col("__clause")
+        cols = []
+        for c in self.columns():
+            val = F.col(f"t.{c}")
+            for i, (kind, sets) in enumerate(clauses, 1):
+                if kind == "update" and c in sets:
+                    val = F.when(clause == i, _as_column(sets[c])).otherwise(val)
+            cols.append(val.alias(c))
+        seq = F.col("t._last_updated_sequence_number")
+        updated = [i for i, (kind, _) in enumerate(clauses, 1) if kind == "update"]
+        if updated:
+            seq = F.when(clause.isin(updated), F.lit(None).cast("long")).otherwise(seq)
+        deleted = [i for i, (kind, _) in enumerate(clauses, 1) if kind == "delete"]
+        if deleted:
+            marked = marked.filter(~clause.isin(deleted))
+        return marked.select(
+            *cols,
+            F.col("t._row_id").alias("_row_id"),
+            seq.alias("_last_updated_sequence_number"),
+        )
+
+    def _cow_rewrite(
+        self,
+        paths: list[str],
+        mark,
+        clauses: list[tuple],
+        entries: pd.DataFrame,
+        with_pos: bool = False,
+    ) -> list[dict]:
+        """The copy-on-write rewrite step: read ``paths`` with deletes
+        applied and lineage kept (v3 row lineage — a rewrite must not
+        reassign surviving rows' ids), mark them, and write what
+        ``_apply_clauses`` keeps."""
         if not paths:
             return []
-        # lineage read: survivors carry materialized _row_id /
-        # _last_updated_sequence_number through the rewrite (v3 row
-        # lineage — a rewrite must not reassign surviving rows' ids)
         df = self._read_files(
-            paths, with_deletes=True, with_lineage=True, entries=entries
+            paths, with_deletes=True, with_pos=with_pos, with_lineage=True,
+            entries=entries,
         )
-        cond = drop.to_spark_column(self.geo_fields)
-        kept = df.filter(~F.coalesce(cond, F.lit(False)))
-        return self._write_files(kept)
+        return self._write_files(self._apply_clauses(mark(df.alias("t")), clauses))
 
     def _touched_file_paths(self, matched_df: DataFrame) -> list[str]:
         """Runtime matched-file narrowing for copy-on-write row-level
@@ -1329,144 +1358,220 @@ class Table:
         mode: str = "copy-on-write",
         to_branch: str | None = None,
     ) -> MD.Snapshot:
-        # unconditional DELETE: plan and rewrite with always-true, but
-        # keep where=None through to the isolation validator — the
-        # unconditional form conflicts with ANY concurrent append
-        # (reference SparkRowLevelOperationBuilder wires alwaysTrue()
-        # as the conflict-detection filter when there is no condition)
-        plan_where = E.AlwaysTrue() if where is None else where
-        if mode == "merge-on-read":
-            return self._delete_mor(
-                plan_where, validate_where=where, to_branch=to_branch
-            )
-        if mode == "merge-on-read-dv":
-            if to_branch is not None:
-                raise ValueError(
-                    "deletion-vector deletes to a branch are unsupported "
-                    "(DV supersede-merging is defined against main)"
-                )
-            return self._delete_mor(plan_where, dv=True, validate_where=where)
-        bentries = self._branch_entries(to_branch)
-        plan = self._plan_cow(plan_where, entries=bentries)
-        base_seq = self.meta.last_sequence_number
-        # runtime matched-file narrowing: the inclusive stats evaluator
-        # only says a partial file MIGHT contain matches; probe which
-        # ones actually do, and rewrite only those (reference
-        # SparkCopyOnWriteScan.java:143-171).  The probe is one
-        # pushed-down filter scan over key columns; files it clears are
-        # left untouched instead of being rewritten byte-for-byte.
-        touched = plan["partial"]
-        if touched:
-            probe = self._read_files(
-                touched, with_deletes=True, with_file_path=True,
-                entries=bentries,
-            )
-            cond = plan_where.to_spark_column(self.geo_fields)
-            touched = self._touched_file_paths(
-                probe.filter(F.coalesce(cond, F.lit(False)))
-            )
-        rewritten = self._rewrite_files(touched, plan_where, entries=bentries)
+        """DELETE the rows matching ``where`` through the row-level core
+        (``_row_level``).  ``where=None`` is the unconditional form: it
+        plans and marks with always-true, and serializable isolation
+        treats ANY concurrent append as a conflict (reference
+        SparkRowLevelOperationBuilder wires alwaysTrue() as the
+        conflict-detection filter when there is no condition).  As for
+        every row-level op, the commit validates that every planned file
+        is still live and isolation under ``where``; survivors keep their
+        ``_row_id``."""
+        return self._row_level(
+            "delete", [("delete", None)], where, where, mode, to_branch
+        )
 
-        def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
-            drop = set(plan["full"]) | set(touched)
-            # liveness is validated over every file the PLAN read (the
-            # matched set was computed against them), not just the
-            # narrowed rewrite set — isolation stays as strict as the
-            # pre-narrowing posture
-            _validate_files_still_live(
-                current, set(plan["full"]) | set(plan["partial"])
-            )
-            self._validate_no_conflicting_appends(
-                current, base_seq, where, "delete"
-            )
-            kept = current[~current.file_path.isin(drop)]
-            add = M.entries_dataframe(
-                [dict(e, sequence_number=seq, snapshot_id=0) for e in rewritten]
-            )
-            return M.concat_entries([kept, add])
-
-        summary = {
-            "deleted-files": len(plan["full"]),
-            "candidate-files": len(plan["partial"]),
-            "rewritten-files": len(touched),
-            "mode": "metadata+cow" if plan["full"] and not touched else "cow",
-        }
-        return self._commit("delete", build, summary, to_branch=to_branch)
-
-    def _delete_mor(
+    def _row_level(
         self,
-        where: E.Expr,
-        dv: bool = False,
-        validate_where: E.Expr | None = "__same__",
+        op: str,
+        clauses: list[tuple],
+        prune: E.Expr | None,
+        cond: E.Expr | None,
+        mode: str = "copy-on-write",
         to_branch: str | None = None,
+        match=None,
+        mark=None,
+        add=None,
     ) -> MD.Snapshot:
-        """Merge-on-read delete: emit a position-delete file
-        (file_path, pos) for matching rows (reference
-        SparkPositionDeltaWrite.java; applied at read like
-        DeleteFilter.java:160-233).
+        """The one row-level path: DELETE, UPDATE, MERGE and
+        overwrite-by-filter all run plan -> mark -> write -> commit here.
 
-        With ``dv=True`` the delete writes DELETION VECTORS instead
-        (the Iceberg v3 form): one roaring bitmap per touched data
-        file in a Puffin sidecar, MERGED with any existing DV on the
-        same file so the "one DV per data file, new supersedes old"
-        rule holds at write time (superseded blob entries are dropped
-        in the same commit).
+        ``op`` ("delete" | "update" | "merge") names the isolation
+        property ``write.<op>.isolation-level``.  ``clauses`` is the
+        ordered list of ``("delete" | "update", sets)`` actions.
+        Marking gives every candidate row the 1-based index of the
+        clause it elects, or 0 when it stays untouched:
 
-        ``validate_where`` is the ORIGINAL user condition for the
-        isolation check (None = unconditional delete, which conflicts
-        with any concurrent append); ``where`` is the planning/matching
-        form with None already normalized to always-true."""
-        if validate_where == "__same__":
-            validate_where = where
-        bentries = self._branch_entries(to_branch)
-        plan = self._plan_cow(where, entries=bentries)
+        - neither ``match`` nor ``mark``: an expression DELETE/UPDATE,
+          ``prune`` evaluated row-locally as ``coalesce(prune, false)``;
+        - ``match(df) -> matching rows``: a join-powered predicate (SQL
+          subqueries).  Under copy-on-write its ``(__file_path,
+          __pos)`` identities are persisted once and joined back;
+          ``prune`` only narrows the candidate files;
+        - ``mark(df) -> df with __clause``: MERGE's target⋈source join
+          over the ``t``-aliased target.
+
+        ``prune`` plans the candidate files; None means the op may act
+        on any row of any file, so every file is a candidate and no
+        matched-file probe can narrow them.  ``cond`` is the isolation
+        condition (None = unconditional).  Modes:
+
+        - ``copy-on-write`` rewrites only the candidate files holding a
+          marked row (reference SparkCopyOnWriteScan.java:143-171), and
+          a pure expression DELETE drops strict full matches from
+          metadata alone (SparkTable.java:87-91);
+        - ``merge-on-read`` writes the marked rows' positions as a
+          position-delete file (SparkPositionDeltaWrite.java);
+        - ``merge-on-read-dv`` writes them as deletion vectors.
+
+        Both merge-on-read modes write updated rows as new data files.
+        ``add()`` returns extra data entries committed with the op
+        (MERGE inserts, overwrite-by-filter's new rows).
+
+        Invariants, for every op and mode: the commit validates that
+        every file the op planned against is still live, and that no
+        concurrent append might hold rows matching ``cond`` (serializable
+        isolation, unless the op's isolation level is ``snapshot``);
+        every surviving or updated row keeps its ``_row_id``."""
+        if mode not in _ROW_LEVEL_MODES:
+            raise ValueError(
+                f"unknown row-level mode {mode!r}; expected one of "
+                f"{', '.join(_ROW_LEVEL_MODES)}"
+            )
+        # 1. plan — against the branch head for branch-scoped ops
+        entries = self._branch_entries(to_branch)
+        if entries is None:
+            entries = self._entries()
         base_seq = self.meta.last_sequence_number
-        paths = plan["full"] + plan["partial"]
-        if not paths:
+        plan = {"full": [], "partial": []}
+        if clauses:
+            plan = self._plan_cow(
+                prune if prune is not None else E.AlwaysTrue(), entries
+            )
+        cands = plan["full"] + plan["partial"]
+        row_local = match is None and mark is None
+        if row_local:
+            mark = self._where_mark(prune if prune is not None else E.AlwaysTrue())
+        dropped: list[str] = []
+        touched: list[str] = []
+        deletes: list[dict] = []
+        new: list[dict] = []
+        superseded: set = set()
+        # 2-3. mark and write
+        if cands and mode == "copy-on-write":
+            # strict stats prove every row of a full match is marked when
+            # the planning predicate IS the row condition
+            full = plan["full"] if row_local else []
+            rest = plan["partial"] if row_local else cands
+            ids = hits = None
+            if match is not None:
+                ids = match(
+                    self._read_files(
+                        cands, with_deletes=True, with_pos=True, entries=entries
+                    )
+                ).select("__file_path", "__pos", F.lit(1).alias("__clause")).persist()
+                hits = ids
+                mark = lambda df: df.join(  # noqa: E731
+                    ids, ["__file_path", "__pos"], "left"
+                ).fillna(0, ["__clause"])
+            elif prune is not None and rest:
+                probe = self._read_files(
+                    rest, with_deletes=True, with_file_path=True, entries=entries
+                )
+                hits = mark(probe.alias("t")).filter(F.col("__clause") > 0)
+            try:
+                touched = (
+                    self._touched_file_paths(hits) if hits is not None else list(rest)
+                )
+                if all(kind == "delete" for kind, _ in clauses):
+                    dropped = full
+                else:
+                    touched = full + touched
+                new = self._cow_rewrite(
+                    touched, mark, clauses, entries, with_pos=ids is not None
+                )
+            finally:
+                if ids is not None:
+                    ids.unpersist()
+        elif cands:
+            updates = any(kind == "update" for kind, _ in clauses)
+            df = self._read_files(
+                cands, with_deletes=True, with_pos=True, with_lineage=updates,
+                entries=entries,
+            ).alias("t")
+            if match is not None:
+                hits = match(df).withColumn("__clause", F.lit(1))
+            else:
+                hits = mark(df).filter(F.col("__clause") > 0)
+            if updates:
+                hits = hits.persist()
+            try:
+                if mode == "merge-on-read":
+                    deletes = self._posdel_entries(hits)
+                else:
+                    deletes, superseded = self._dv_entries(hits, cands, entries)
+                if deletes and updates:
+                    new = self._write_files(self._apply_clauses(hits, clauses))
+            finally:
+                if updates:
+                    hits.unpersist()
+        inserted = add() if add is not None else []
+        # 4. commit
+        if mode == "copy-on-write":
+            mode = "metadata+cow" if dropped and not touched else "cow"
+        summary = {
+            "candidate-files": len(cands) - len(dropped),
+            "rewritten-files": len(touched),
+            "deleted-files": len(dropped),
+            "delete-files": len(deletes),
+            "mode": mode,
+        }
+        if op == "merge":
+            summary["merged-files"] = len(touched)
+            summary["inserted-files"] = len(inserted)
+        operation = "delete" if op == "delete" and add is None else "overwrite"
+        added = deletes + new + inserted
+        gone = set(dropped) | set(touched)
+        if added and not gone and not superseded:
+            # row delta: only new files, so the fast-append path writes
+            # just a delta manifest; both validations rerun per attempt
             return self._commit(
-                "delete", lambda cur, seq: cur, {"deleted-rows": 0},
+                operation,
+                summary=summary,
+                append_entries=added,
+                validate_live_paths=cands,
+                validate_isolation=(cond, op, base_seq),
                 to_branch=to_branch,
             )
-        # branch-scoped: existing delete layers resolve against the
-        # BRANCH head, not main
-        df = self._read_files(
-            paths, with_deletes=True, with_pos=True, entries=bentries
-        )
-        matches = df.filter(where.to_spark_column(self.geo_fields))
-        if dv:
-            return self._commit_dv_delete(matches, paths)
-        entries = self._posdel_entries(matches)
-        # row-delta fast commit (reference RowDelta): delta manifest with
-        # only the delete entries; liveness of the targeted files is
-        # revalidated inside the commit loop, and serializable isolation
-        # checks for concurrently-appended rows the stale plan would miss
-        return self._commit(
-            "delete",
-            summary={"delete-files": len(entries)},
-            append_entries=entries,
-            validate_live_paths=paths,
-            validate_isolation=(validate_where, "delete", base_seq),
-            to_branch=to_branch,
-        )
 
-    def _commit_dv_delete(self, matches: DataFrame, paths: list[str]) -> MD.Snapshot:
-        """Persist matched (file_path, pos) rows as deletion vectors
-        and commit, dropping the DV blobs the new ones supersede."""
+        def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
+            _validate_files_still_live(current, cands)
+            self._validate_no_conflicting_appends(current, base_seq, cond, op)
+            out = current.file_path.isin(gone)
+            if superseded:
+                out |= pd.Series(
+                    [(p, d) in superseded for p, d in zip(current.file_path, current.dv)],
+                    index=current.index,
+                )
+            add_e = M.entries_dataframe(
+                [dict(e, sequence_number=seq, snapshot_id=0) for e in added]
+            )
+            return M.concat_entries([current[~out], add_e])
+
+        return self._commit(operation, build, summary, to_branch=to_branch)
+
+    def _dv_entries(
+        self, hits: DataFrame, paths: list[str], entries: pd.DataFrame
+    ) -> tuple[list[dict], set]:
+        """Deletion-vector delete files for the marked rows ``hits``
+        (``__file_path``/``__pos``): one roaring bitmap per touched data
+        file in a Puffin sidecar, MERGED with any existing DV on the
+        same file so the "one DV per data file, new supersedes old" rule
+        holds at write time.  Returns the new entries and the
+        ``(puffin path, dv)`` keys of the entries they supersede."""
         from iceberg_geo_poc_spark.table import deletion_vectors as DVEC
 
-        ent = self._entries()
-        dv_old = ent[ent.content == "dv"]
         touched = set(paths)
         merge_rows: list[tuple[str, str, int, int]] = []
         superseded: set[tuple[str, str]] = set()
-        for r in dv_old.itertuples():
+        for r in entries[entries.content == "dv"].itertuples():
             d = json.loads(r.dv)
             if d["referenced"] in touched:
                 merge_rows.append(
                     (r.file_path, d["referenced"], int(d["offset"]), int(d["length"]))
                 )
-                superseded.add((r.file_path, d["referenced"]))
-        tuples = matches.select(
+                superseded.add((r.file_path, r.dv))
+        tuples = hits.select(
             F.col("__file_path").alias("file_path"), F.col("__pos").alias("pos")
         )
         if merge_rows:
@@ -1477,7 +1582,7 @@ class Table:
             )
         packed = DVEC.pack_tuples(tuples)
         if not packed:
-            return self._commit("delete", lambda cur, seq: cur, {"deleted-rows": 0})
+            return [], set()
         snap = self.current_snapshot()
         data, descs = DVEC.write_dv_file(
             {path: (blob, card) for path, blob, card in packed},
@@ -1490,7 +1595,7 @@ class Table:
         MD.backend_for(self.location).put(dv_path, data)
         part_of = {
             r.file_path: r.partition
-            for r in ent[ent.content == "data"].itertuples()
+            for r in entries[entries.content == "data"].itertuples()
         }
         new_entries = [
             {
@@ -1513,28 +1618,7 @@ class Table:
             }
             for d in descs
         ]
-
-        def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
-            _validate_files_still_live(current, paths)
-            if len(current) and "dv" in current.columns:
-                drop = current.apply(
-                    lambda row: row.content == "dv"
-                    and isinstance(row.dv, str)
-                    and (row.file_path, json.loads(row.dv)["referenced"])
-                    in superseded,
-                    axis=1,
-                )
-                current = current[~drop]
-            add = M.entries_dataframe(
-                [dict(e, sequence_number=seq, snapshot_id=0) for e in new_entries]
-            )
-            return M.concat_entries([current, add])
-
-        return self._commit(
-            "delete",
-            build,
-            {"dv-blobs": len(new_entries), "merged-dvs": len(merge_rows)},
-        )
+        return new_entries, superseded
 
     def _modular_footer_key(self) -> str | None:
         return self.meta.properties.get("write.parquet.encryption.footer-key")
@@ -1669,6 +1753,7 @@ class Table:
         match,
         prune: E.Expr | None = None,
         mode: str = "copy-on-write",
+        to_branch: str | None = None,
     ) -> MD.Snapshot:
         """DELETE whose predicate needs relational power beyond a
         row-local expression — subquery ``IN (SELECT …)`` / null-aware
@@ -1688,73 +1773,12 @@ class Table:
 
         Isolation is conservative: a join predicate cannot be
         stats-evaluated against concurrently appended files, so ANY
-        concurrent append conflicts (the unconditional-DELETE posture,
-        validate_where=None)."""
-        plan = self._plan_cow(prune if prune is not None else E.AlwaysTrue())
-        base_seq = self.meta.last_sequence_number
-        paths = plan["full"] + plan["partial"]
-        if not paths:
-            return self._commit(
-                "delete", lambda cur, seq: cur, {"deleted-rows": 0}
-            )
-        if mode in ("merge-on-read", "merge-on-read-dv"):
-            df = self._read_files(paths, with_deletes=True, with_pos=True)
-            matches = match(df)
-            if mode == "merge-on-read-dv":
-                return self._commit_dv_delete(matches, paths)
-            entries = self._posdel_entries(matches)
-            return self._commit(
-                "delete",
-                summary={"delete-files": len(entries)},
-                append_entries=entries,
-                validate_live_paths=paths,
-                validate_isolation=(None, "delete", base_seq),
-            )
-        # CoW: rewrite ONLY the files that contain matched rows
-        # (runtime matched-file narrowing, reference
-        # SparkCopyOnWriteScan.java:143-171); (__file_path, __pos) is
-        # the row identity the anti-join keys on
-        df = self._read_files(
-            paths, with_deletes=True, with_pos=True, with_lineage=True
-        )
-        matched = match(df).select("__file_path", "__pos").persist()
-        # bounded by candidate-file count, not matched-row count; an
-        # empty set is the no-match fast exit (e.g. never-true NOT IN
-        # over a NULL-bearing subquery) — rewrite nothing
-        touched = self._touched_file_paths(matched)
-        if not touched:
-            matched.unpersist()
-            return self._commit(
-                "delete", lambda cur, seq: cur, {"deleted-rows": 0}
-            )
-        tdf = self._read_files(
-            touched, with_deletes=True, with_pos=True, with_lineage=True
-        )
-        kept = tdf.join(
-            matched, ["__file_path", "__pos"], "left_anti"
-        ).drop("__file_path", "__pos")
-        try:
-            rewritten = self._write_files(kept)
-        finally:
-            matched.unpersist()
-
-        def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
-            # liveness over the full candidate set the match was
-            # computed against; only the touched files are replaced
-            _validate_files_still_live(current, paths)
-            self._validate_no_conflicting_appends(
-                current, base_seq, None, "delete"
-            )
-            kept_e = current[~current.file_path.isin(set(touched))]
-            add = M.entries_dataframe(
-                [dict(e, sequence_number=seq, snapshot_id=0) for e in rewritten]
-            )
-            return M.concat_entries([kept_e, add])
-
-        return self._commit(
-            "delete",
-            build,
-            {"candidate-files": len(paths), "rewritten-files": len(touched)},
+        concurrent append conflicts (the unconditional-DELETE posture).
+        Liveness of every candidate file is validated at commit, and
+        survivors keep their ``_row_id``, as for every row-level op."""
+        return self._row_level(
+            "delete", [("delete", None)], prune, None, mode, to_branch,
+            match=match,
         )
 
     def update_matching(
@@ -1763,106 +1787,14 @@ class Table:
         match,
         prune: E.Expr | None = None,
         mode: str = "copy-on-write",
+        to_branch: str | None = None,
     ) -> MD.Snapshot:
         """UPDATE with a join-powered predicate (subquery IN / NOT IN —
         reference TestUpdate's subquery cases); same ``match``/``prune``
         contract and conservative isolation as ``delete_matching``."""
-        plan = self._plan_cow(prune if prune is not None else E.AlwaysTrue())
-        base_seq = self.meta.last_sequence_number
-        paths = plan["full"] + plan["partial"]
-        if not paths:
-            return self._commit(
-                "overwrite", lambda cur, seq: cur, {"updated-rows": 0}
-            )
-        df = self._read_files(
-            paths, with_deletes=True, with_pos=True, with_lineage=True
-        )
-        if mode == "merge-on-read":
-            matches = match(df).persist()
-            try:
-                del_entries = self._posdel_entries(matches)
-                if not del_entries:
-                    return self._commit(
-                        "overwrite", lambda cur, seq: cur, {"updated-rows": 0}
-                    )
-                upd = matches.drop("__file_path", "__pos")
-                for col, newv in set_exprs.items():
-                    newc = newv if "Column" in str(type(newv)) else F.lit(newv)
-                    upd = upd.withColumn(col, newc)
-                data_entries = self._write_files(
-                    upd.select(
-                        *self.columns(),
-                        "_row_id",
-                        F.lit(None).cast("long").alias(
-                            "_last_updated_sequence_number"
-                        ),
-                    )
-                )
-            finally:
-                matches.unpersist()
-            return self._commit(
-                "overwrite",
-                summary={
-                    "delete-files": len(del_entries),
-                    "added-data-files": len(data_entries),
-                },
-                append_entries=del_entries + data_entries,
-                validate_live_paths=paths,
-                validate_isolation=(None, "update", base_seq),
-            )
-        # CoW: mark matched rows by identity, apply SET through the same
-        # when(match, new).otherwise(old) shape as the expression UPDATE.
-        # Runtime matched-file narrowing (SparkCopyOnWriteScan.java:
-        # 143-171): only files containing a matched row are re-read and
-        # rewritten; an empty touched set is the no-match fast exit.
-        matched = match(df).select(
-            "__file_path", "__pos", F.lit(True).alias("__upd_match")
-        ).persist()
-        touched = self._touched_file_paths(matched)
-        if not touched:
-            matched.unpersist()
-            return self._commit(
-                "overwrite", lambda cur, seq: cur, {"updated-rows": 0}
-            )
-        df = self._read_files(
-            touched, with_deletes=True, with_pos=True, with_lineage=True
-        )
-        df = df.join(matched, ["__file_path", "__pos"], "left").withColumn(
-            "__upd_match", F.coalesce(F.col("__upd_match"), F.lit(False))
-        )
-        for col, newv in set_exprs.items():
-            newc = newv if "Column" in str(type(newv)) else F.lit(newv)
-            df = df.withColumn(
-                col, F.when(F.col("__upd_match"), newc).otherwise(F.col(col))
-            )
-        df = df.withColumn(
-            "_last_updated_sequence_number",
-            F.when(F.col("__upd_match"), F.lit(None).cast("long")).otherwise(
-                F.col("_last_updated_sequence_number")
-            ),
-        ).drop("__upd_match", "__file_path", "__pos")
-        try:
-            rewritten = self._write_files(df)
-        finally:
-            matched.unpersist()
-
-        def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
-            # liveness over the full candidate set the match was
-            # computed against; only the touched files are replaced
-            _validate_files_still_live(current, paths)
-            self._validate_no_conflicting_appends(
-                current, base_seq, None, "update"
-            )
-            kept_e = current[~current.file_path.isin(set(touched))]
-            add = M.entries_dataframe(
-                [dict(e, sequence_number=seq, snapshot_id=0) for e in rewritten]
-            )
-            return M.concat_entries([kept_e, add])
-
-        return self._commit(
-            "overwrite",
-            build,
-            {"candidate-files": len(paths), "rewritten-files": len(touched)},
+        return self._row_level(
+            "update", [("update", set_exprs)], prune, None, mode, to_branch,
+            match=match,
         )
 
     def update(
@@ -1872,162 +1804,22 @@ class Table:
         mode: str = "copy-on-write",
         to_branch: str | None = None,
     ) -> MD.Snapshot:
-        """UPDATE. Copy-on-write rewrites only files that might contain
-        matches, applying SET via when(cond, new).otherwise(old);
-        merge-on-read emits a position delete for each matched row plus
-        a new data file with the updated rows (reference
-        SparkPositionDeltaOperation / TestMergeOnReadUpdate).
+        """UPDATE through the row-level core.  Copy-on-write rewrites the
+        files holding a matching row, applying SET via
+        when(cond, new).otherwise(old); merge-on-read deletes each
+        matched row's position and writes the updated rows as a new data
+        file (reference SparkPositionDeltaOperation /
+        TestMergeOnReadUpdate).  Updated rows keep their ``_row_id``.
 
         ``where=None`` is the unconditional form: every row updates,
         and serializable isolation treats the condition as always-true
         (any concurrent append conflicts).  ``to_branch`` scopes the
-        whole op to a branch head (WAP-branch DML)."""
-        plan_where = E.AlwaysTrue() if where is None else where
-        if mode == "merge-on-read":
-            return self._update_mor(
-                set_exprs, plan_where, validate_where=where, to_branch=to_branch
-            )
-        bentries = self._branch_entries(to_branch)
-        plan = self._plan_cow(plan_where, entries=bentries)
-        paths = plan["full"] + plan["partial"]
-        if not paths:
-            # no-match early exits still route to the WAP branch: a
-            # bare _commit would plant the no-op snapshot on main
-            return self._commit(
-                "overwrite", lambda cur, seq: cur, {"updated": 0},
-                to_branch=to_branch,
-            )
-        cond = plan_where.to_spark_column(self.geo_fields)
-        # runtime matched-file narrowing (SparkCopyOnWriteScan.java:
-        # 143-171): probe which candidates actually contain matching
-        # rows; full-match files skip the probe (strict evaluator
-        # already proved every row matches), cleared files stay put
-        touched = list(plan["full"])
-        if plan["partial"]:
-            probe = self._read_files(
-                plan["partial"], with_deletes=True, with_file_path=True,
-                entries=bentries,
-            )
-            touched += self._touched_file_paths(
-                probe.filter(F.coalesce(cond, F.lit(False)))
-            )
-        if not touched:
-            return self._commit(
-                "overwrite", lambda cur, seq: cur, {"updated": 0},
-                to_branch=to_branch,
-            )
-        df = self._read_files(
-            touched, with_deletes=True, with_lineage=True, entries=bentries
+        whole op to a branch head (WAP-branch DML).  As for every
+        row-level op, the commit validates that every planned file is
+        still live and isolation under ``where``."""
+        return self._row_level(
+            "update", [("update", set_exprs)], where, where, mode, to_branch
         )
-        # snapshot the match BEFORE set_exprs mutate the columns the
-        # predicate reads (a later `cond` reference would re-evaluate
-        # against the UPDATED values)
-        df = df.withColumn("__upd_match", F.coalesce(cond, F.lit(False)))
-        for col, newv in set_exprs.items():
-            newc = newv if hasattr(newv, "_jc") or str(type(newv)).find("Column") >= 0 else F.lit(newv)
-            df = df.withColumn(
-                col, F.when(F.col("__upd_match"), newc).otherwise(F.col(col))
-            )
-        # updated rows take the committing snapshot's sequence number: a
-        # NULL materialized value resolves to the (new) file's manifest
-        # seq at read time, which stays correct across commit retries
-        df = df.withColumn(
-            "_last_updated_sequence_number",
-            F.when(F.col("__upd_match"), F.lit(None).cast("long")).otherwise(
-                F.col("_last_updated_sequence_number")
-            ),
-        ).drop("__upd_match")
-        rewritten = self._write_files(df)
-
-        base_seq = self.meta.last_sequence_number
-
-        def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
-            # liveness over every file the plan read; rewrite set is the
-            # narrowed `touched` only
-            _validate_files_still_live(current, paths)
-            self._validate_no_conflicting_appends(
-                current, base_seq, where, "update"
-            )
-            kept = current[~current.file_path.isin(set(touched))]
-            add = M.entries_dataframe(
-                [dict(e, sequence_number=seq, snapshot_id=0) for e in rewritten]
-            )
-            return M.concat_entries([kept, add])
-
-        return self._commit(
-            "overwrite",
-            build,
-            {"candidate-files": len(paths), "rewritten-files": len(touched)},
-            to_branch=to_branch,
-        )
-
-    def _update_mor(
-        self,
-        set_exprs: dict[str, object],
-        where: E.Expr,
-        validate_where: E.Expr | None = "__same__",
-        to_branch: str | None = None,
-    ) -> MD.Snapshot:
-        if validate_where == "__same__":
-            validate_where = where
-        bentries = self._branch_entries(to_branch)
-        plan = self._plan_cow(where, entries=bentries)
-        base_seq = self.meta.last_sequence_number
-        paths = plan["full"] + plan["partial"]
-        if not paths:
-            return self._commit(
-                "overwrite", lambda cur, seq: cur, {"updated-rows": 0},
-                to_branch=to_branch,
-            )
-        df = self._read_files(
-            paths, with_deletes=True, with_pos=True, with_lineage=True,
-            entries=bentries,
-        )
-        matches = df.filter(where.to_spark_column(self.geo_fields)).persist()
-        try:
-            del_entries = self._posdel_entries(matches)
-            if not del_entries:
-                return self._commit(
-                    "overwrite", lambda cur, seq: cur, {"updated-rows": 0},
-                    to_branch=to_branch,
-                )
-            upd = matches.drop("__file_path", "__pos")
-            for col, newv in set_exprs.items():
-                newc = newv if "Column" in str(type(newv)) else F.lit(newv)
-                upd = upd.withColumn(col, newc)
-            target_cols = self.columns()
-            # the updated copies keep their _row_id (it is an UPDATE);
-            # NULL last_updated resolves to the new file's seq at read
-            data_entries = self._write_files(
-                upd.select(
-                    *target_cols,
-                    "_row_id",
-                    F.lit(None).cast("long").alias(
-                        "_last_updated_sequence_number"
-                    ),
-                )
-            )
-        finally:
-            matches.unpersist()
-
-        # row-delta fast commit: position deletes reference (file_path,
-        # pos) of the planned files — if a concurrent compaction rewrote
-        # any of them the deletes would point at dead paths while the
-        # compacted copy kept the old rows, so the commit loop revalidates
-        # liveness before every attempt (reference RowDelta
-        # validateDataFilesExist).
-        return self._commit(
-            "overwrite",
-            summary={
-                "delete-files": len(del_entries),
-                "added-data-files": len(data_entries),
-            },
-            append_entries=del_entries + data_entries,
-            validate_live_paths=paths,
-            validate_isolation=(validate_where, "update", base_seq),
-            to_branch=to_branch,
-        )
-
     def merge(
         self,
         source: DataFrame,
@@ -2044,11 +1836,17 @@ class Table:
         to_branch: str | None = None,
     ) -> MD.Snapshot:
         """MERGE INTO as engine API (SQL MERGE needs a JVM catalog;
-        SURVEY §2.4 documents the API form).  Copy-on-write: only files
-        whose key ranges overlap the source's key ranges are rewritten;
-        merge-on-read: matched rows become position deletes (+ a new
-        data file when updating) and no data file is rewritten
-        (reference TestMergeOnReadMerge).  Cardinality: an error is
+        SURVEY §2.4 documents the API form), run through the row-level
+        core.  Files whose key ranges overlap the source's are the
+        candidates.  Copy-on-write rewrites only the candidates holding
+        a row some clause acts on; merge-on-read turns those rows into
+        position deletes or deletion vectors (+ a new data file when
+        updating) and rewrites no data file (reference
+        TestMergeOnReadMerge).  Updated rows keep their ``_row_id`` in
+        every mode, and the commit validates that every candidate file
+        is still live and isolation under the source key-range
+        predicate (unconditional with by-source clauses).
+        Cardinality: an error is
         raised only when a TARGET row matches multiple source rows and
         a matched clause exists (reference TestMerge.java:882);
         duplicate source keys that match nothing legally insert
@@ -2144,17 +1942,13 @@ class Table:
                         "MERGE cardinality violation: a target row matches "
                         "multiple source rows"
                     )
-        if mode == "merge-on-read":
-            return self._merge_mor(
-                source, on_pairs, matched_clauses, insert_clauses, bs_clauses,
-                to_branch=to_branch,
-            )
-
         # prune candidate files by source key min/max (broadcast-collected);
-        # by-source clauses can touch ANY target row, so they disable both
-        # the file pruning and the key-range conflict predicate
-        key_pred: E.Expr = E.AlwaysTrue()
+        # by-source clauses can touch ANY target row, so they leave no
+        # predicate: no file pruning, no narrowing probe and an
+        # unconditional conflict check
+        key_pred: E.Expr | None = None
         if not bs_clauses:
+            key_pred = E.AlwaysTrue()
             bounds = source.agg(
                 *[F.min(s).alias(f"min_{s}") for s in s_on],
                 *[F.max(s).alias(f"max_{s}") for s in s_on],
@@ -2163,174 +1957,53 @@ class Table:
                 lo, hi = bounds[f"min_{sc}"], bounds[f"max_{sc}"]
                 if lo is not None:
                     key_pred = key_pred & E.ge(tc, _plain(lo)) & E.le(tc, _plain(hi))
-        bentries = self._branch_entries(to_branch)
-        plan = self._plan_cow(key_pred, entries=bentries)
-        candidates = plan["full"] + plan["partial"]
+        # one target⋈source join marks every target row: matched clauses
+        # elect over matched rows, by-source clauses over unmatched ones.
+        # An explicit never-null column tells them apart (a key-only
+        # source has no other column to test).  Matched clauses may
+        # reference source-only columns (e.g. s.op), so they join the
+        # FULL source; a by-source-only MERGE joins DISTINCT keys so
+        # duplicate source keys cannot fan out target rows
+        src = source if matched_clauses else source.select(*s_on).distinct()
+        src = src.withColumn("__s_exists", F.lit(True)).alias("s")
 
-        target_cols = self.columns()
-
-        rewritten: list[dict] = []
-        rewrite_paths: list[str] = []
-        if candidates and (matched_clauses or bs_clauses):
-            # runtime matched-file narrowing (reference
-            # SparkCopyOnWriteScan.java:143-171): a keys-only semi-join
-            # probe finds the files that actually contain matched rows,
-            # and ONLY those are re-read and rewritten — an unclustered
-            # merge key no longer forces a full-table rewrite.
-            # By-source clauses act on UNmatched rows in any candidate
-            # file, so they disable narrowing (as they already disable
-            # the key-range pruning above).
-            rewrite_paths = list(candidates)
-            if not bs_clauses:
-                probe = self._read_files(
-                    candidates, with_deletes=True, with_file_path=True,
-                    entries=bentries,
-                )
-                src_keys = source.select(*s_on).distinct()
-                for tc, sc in on_pairs:
-                    if tc != sc:
-                        src_keys = src_keys.withColumnRenamed(sc, tc)
-                rewrite_paths = self._touched_file_paths(
-                    probe.select(*t_on, "__file_path").join(
-                        src_keys, on=t_on, how="left_semi"
-                    )
-                )
-        if rewrite_paths:
-            tgt = self._read_files(
-                rewrite_paths, with_deletes=True, with_lineage=True,
-                entries=bentries,
-            )
-            # explicit never-null probe: a key-only source has no non-key
-            # column to test, and join keys are ambiguous after the join.
-            # matched clauses may reference source-only columns (e.g.
-            # s.op), so they join the FULL source; a by-source-only MERGE
-            # joins DISTINCT keys so duplicate source keys cannot fan out
-            # pass-through target rows
-            if matched_clauses:
-                src_probed = source.withColumn("__s_exists", F.lit(True))
-            else:
-                src_probed = (
-                    source.select(*s_on)
-                    .distinct()
-                    .withColumn("__s_exists", F.lit(True))
-                )
-            marked = tgt.alias("t").join(
-                src_probed.alias("s"), on=_on_condition(on_pairs), how="left"
-            )
-            matched = F.col("s.__s_exists").isNotNull()
-            # first-match clause election (reference: clauses evaluate in
-            # order; a matched row satisfying no condition passes through);
-            # by-source clauses elect independently over UNmatched rows
-            marked = marked.withColumn(
-                "__clause", _clause_index(matched, matched_clauses)
-            ).withColumn("__bs", _clause_index(~matched, bs_clauses))
-            update_idx = [
-                i
-                for i, (_c, kind, _s) in enumerate(matched_clauses, 1)
-                if kind == "update"
-            ]
-            delete_idx = [
-                i
-                for i, (_c, kind, _s) in enumerate(matched_clauses, 1)
-                if kind == "delete"
-            ]
-            bs_update_idx = [
-                i for i, (_c, kind, _s) in enumerate(bs_clauses, 1) if kind == "update"
-            ]
-            bs_delete_idx = [
-                i for i, (_c, kind, _s) in enumerate(bs_clauses, 1) if kind == "delete"
-            ]
-            out_cols = []
-            for c in target_cols:
-                val = F.col(f"t.{c}")
-                for i, (_cond, kind, sets) in enumerate(matched_clauses, 1):
-                    if kind == "update" and c in sets:
-                        nv = sets[c]
-                        nv = nv if "Column" in str(type(nv)) else F.lit(nv)
-                        val = F.when(F.col("__clause") == i, nv).otherwise(val)
-                for i, (_cond, kind, sets) in enumerate(bs_clauses, 1):
-                    if kind == "update" and c in sets:
-                        nv = sets[c]
-                        nv = nv if "Column" in str(type(nv)) else F.lit(nv)
-                        val = F.when(F.col("__bs") == i, nv).otherwise(val)
-                out_cols.append(val.alias(c))
-            # lineage: rows keep their ids; updated rows' last_updated
-            # goes NULL -> resolves to the new file's seq at read
-            out_cols.append(F.col("t._row_id").alias("_row_id"))
-            upd_pred = None
-            if update_idx:
-                upd_pred = F.col("__clause").isin(update_idx)
-            if bs_update_idx:
-                bsp = F.col("__bs").isin(bs_update_idx)
-                upd_pred = bsp if upd_pred is None else (upd_pred | bsp)
-            upd_seq = (
-                F.when(upd_pred, F.lit(None).cast("long")).otherwise(
-                    F.col("t._last_updated_sequence_number")
-                )
-                if upd_pred is not None
-                else F.col("t._last_updated_sequence_number")
-            )
-            out_cols.append(upd_seq.alias("_last_updated_sequence_number"))
-            result = marked.select(
-                *out_cols,
-                F.col("__clause").alias("__cl"),
-                F.col("__bs").alias("__bscl"),
-            )
-            if delete_idx:
-                result = result.filter(~F.col("__cl").isin(delete_idx))
-            if bs_delete_idx:
-                result = result.filter(~F.col("__bscl").isin(bs_delete_idx))
-            result = result.drop("__cl", "__bscl")
-            rewritten = self._write_files(result)
-        # insert-only MERGE (or a probe that cleared every candidate):
-        # matched rows untouched, no rewrite.  Liveness still validates
-        # the candidates the probe READ; an insert-only merge read none.
-        validate_paths = (
-            candidates if (matched_clauses or bs_clauses) else []
-        )
-
-        inserted: list[dict] = []
-        if insert_clauses:
-            inserted = self._merge_insert_entries(
-                source, on_pairs, target_cols, insert_clauses, ref=to_branch
+        def mark(t: DataFrame) -> DataFrame:
+            marked = t.join(src, on=_on_condition(on_pairs), how="left")
+            hit = F.col("s.__s_exists").isNotNull()
+            return marked.withColumn(
+                "__clause",
+                _clause_index(
+                    [(hit, c) for c, _k, _s in matched_clauses]
+                    + [(~hit, c) for c, _k, _s in bs_clauses]
+                ),
             )
 
-        base_seq = self.meta.last_sequence_number
-
-        def build(current: pd.DataFrame, seq: int) -> pd.DataFrame:
-            _validate_files_still_live(current, validate_paths)
-            # serializable MERGE conflict check uses the source key-range
-            # predicate (a conservative superset of the ON condition)
-            self._validate_no_conflicting_appends(
-                current, base_seq, key_pred, "merge"
+        def inserts() -> list[dict]:
+            return self._merge_insert_entries(
+                source, on_pairs, insert_clauses, ref=to_branch
             )
-            kept = current[~current.file_path.isin(set(rewrite_paths))]
-            add = M.entries_dataframe(
-                [dict(e, sequence_number=seq, snapshot_id=0) for e in rewritten + inserted]
-            )
-            return M.concat_entries([kept, add])
 
-        return self._commit(
-            "overwrite",
-            build,
-            {
-                "candidate-files": len(validate_paths),
-                "merged-files": len(rewrite_paths),
-                "inserted-files": len(inserted),
-            },
-            to_branch=to_branch,
+        # serializable MERGE conflict check uses the source key-range
+        # predicate (a conservative superset of the ON condition)
+        return self._row_level(
+            "merge",
+            [(kind, sets) for _c, kind, sets in [*matched_clauses, *bs_clauses]],
+            key_pred,
+            key_pred,
+            mode,
+            to_branch,
+            mark=mark,
+            add=inserts if insert_clauses else None,
         )
 
     def _merge_insert_entries(
         self,
         source: DataFrame,
         on_pairs: list[tuple],
-        target_cols: list[str],
         insert_clauses: list[tuple],
         ref: str | None = None,
     ) -> list[dict]:
-        """Write the NOT-MATCHED insert rows (shared by CoW and MoR
-        merges): source rows whose key matches no target row elect the
+        """Write the NOT-MATCHED insert rows of a MERGE: source rows whose key matches no target row elect the
         FIRST insert clause whose condition holds (reference
         testMergeWithMultipleNotMatchedActions — ordered, first match
         wins, rows electing none drop); each clause projects either
@@ -2339,6 +2012,7 @@ class Table:
         as typed NULL."""
         t_on = [t for t, _ in on_pairs]
         s_on = [s for _, s in on_pairs]
+        target_cols = self.columns()
         existing_keys = (
             self.to_df(select=t_on, ref=ref).select(*t_on).distinct()
         )
@@ -2348,9 +2022,7 @@ class Table:
         anti = source.join(existing_keys, on=s_on, how="left_anti").alias("s")
         marked = anti.withColumn(
             "__ins",
-            _clause_index(
-                F.lit(True), [(c, "insert", v) for c, v in insert_clauses]
-            ),
+            _clause_index([(F.lit(True), c) for c, _v in insert_clauses]),
         )
         types = dict(self._ddl_types())
         parts = []
@@ -2363,8 +2035,7 @@ class Table:
                 cols = []
                 for c in target_cols:
                     if c in insert_values:
-                        v = insert_values[c]
-                        v = v if "Column" in str(type(v)) else F.lit(v)
+                        v = _as_column(insert_values[c])
                         cols.append(v.cast(types[c]).alias(c))
                     else:
                         cols.append(F.lit(None).cast(types[c]).alias(c))
@@ -2398,162 +2069,6 @@ class Table:
         if new_rows.limit(1).count():
             return self._write_files(new_rows)
         return []
-
-    def _merge_mor(
-        self,
-        source: DataFrame,
-        on_pairs: list[tuple],
-        matched_clauses: list[tuple],
-        insert_clauses: list[tuple],
-        bs_clauses: list[tuple] | None = None,
-        to_branch: str | None = None,
-    ) -> MD.Snapshot:
-        bs_clauses = bs_clauses or []
-        s_on = [s for _, s in on_pairs]
-        # by-source clauses can delete/update ANY target row — the
-        # source-key-range pruning (and the narrow conflict predicate)
-        # only apply without them
-        key_pred: E.Expr = E.AlwaysTrue()
-        if not bs_clauses:
-            bounds = source.agg(
-                *[F.min(s).alias(f"min_{s}") for s in s_on],
-                *[F.max(s).alias(f"max_{s}") for s in s_on],
-            ).collect()[0]
-            for tc, sc in on_pairs:
-                lo, hi = bounds[f"min_{sc}"], bounds[f"max_{sc}"]
-                if lo is not None:
-                    key_pred = key_pred & E.ge(tc, _plain(lo)) & E.le(tc, _plain(hi))
-        bentries = self._branch_entries(to_branch)
-        plan = self._plan_cow(key_pred, entries=bentries)
-        base_seq = self.meta.last_sequence_number
-        candidates = plan["full"] + plan["partial"]
-
-        target_cols = self.columns()
-
-        del_entries: list[dict] = []
-        data_entries: list[dict] = []
-        # one shared (and cached) positional read serves both the
-        # matched inner-join and the by-source anti-join — with
-        # by-source clauses candidates = ALL files, so a second read
-        # would scan and decode the whole table twice
-        tgt = (
-            self._read_files(
-                candidates, with_deletes=True, with_pos=True, entries=bentries
-            )
-            if candidates and (matched_clauses or bs_clauses)
-            else None
-        )
-        if tgt is not None and matched_clauses and bs_clauses:
-            tgt = tgt.persist()
-        if candidates and matched_clauses:
-            # only rows hitting SOME clause become position deletes: a
-            # matched row satisfying no clause condition stays untouched
-            matched_rows = (
-                tgt.alias("t")
-                .join(source.alias("s"), on=_on_condition(on_pairs), how="inner")
-                .withColumn(
-                    "__clause", _clause_index(F.lit(True), matched_clauses)
-                )
-                .filter(F.col("__clause") > 0)
-                .persist()
-            )
-            update_idx = [
-                i
-                for i, (_c, kind, _s) in enumerate(matched_clauses, 1)
-                if kind == "update"
-            ]
-            try:
-                del_entries = self._posdel_entries(matched_rows)
-                if del_entries and update_idx:
-                    upd_rows = matched_rows.filter(
-                        F.col("__clause").isin(update_idx)
-                    )
-                    out_cols = []
-                    for c in target_cols:
-                        val = F.col(f"t.{c}")
-                        for i, (_cond, kind, sets) in enumerate(
-                            matched_clauses, 1
-                        ):
-                            if kind == "update" and c in sets:
-                                nv = sets[c]
-                                nv = (
-                                    nv
-                                    if "Column" in str(type(nv))
-                                    else F.lit(nv)
-                                )
-                                val = F.when(
-                                    F.col("__clause") == i, nv
-                                ).otherwise(val)
-                        out_cols.append(val.alias(c))
-                    data_entries = self._write_files(upd_rows.select(*out_cols))
-            finally:
-                matched_rows.unpersist()
-
-        if candidates and bs_clauses:
-            # by-source: TARGET rows matching no source key; distinct
-            # source keys so duplicates cannot fan rows out
-            unmatched = (
-                tgt.alias("t")
-                .join(
-                    source.select(*s_on).distinct().alias("s"),
-                    on=_on_condition(on_pairs),
-                    how="left_anti",
-                )
-                .withColumn("__clause", _clause_index(F.lit(True), bs_clauses))
-                .filter(F.col("__clause") > 0)
-                .persist()
-            )
-            bs_update_idx = [
-                i for i, (_c, kind, _s) in enumerate(bs_clauses, 1) if kind == "update"
-            ]
-            try:
-                bs_dels = self._posdel_entries(unmatched)
-                del_entries = del_entries + bs_dels
-                if bs_dels and bs_update_idx:
-                    upd_rows = unmatched.filter(F.col("__clause").isin(bs_update_idx))
-                    out_cols = []
-                    for c in target_cols:
-                        val = F.col(f"t.{c}")
-                        for i, (_cond, kind, sets) in enumerate(bs_clauses, 1):
-                            if kind == "update" and c in sets:
-                                nv = sets[c]
-                                nv = (
-                                    nv
-                                    if "Column" in str(type(nv))
-                                    else F.lit(nv)
-                                )
-                                val = F.when(
-                                    F.col("__clause") == i, nv
-                                ).otherwise(val)
-                        out_cols.append(val.alias(c))
-                    data_entries = data_entries + self._write_files(
-                        upd_rows.select(*out_cols)
-                    )
-            finally:
-                unmatched.unpersist()
-
-        if tgt is not None and matched_clauses and bs_clauses:
-            tgt.unpersist()
-
-        inserted: list[dict] = []
-        if insert_clauses:
-            inserted = self._merge_insert_entries(
-                source, on_pairs, target_cols, insert_clauses, ref=to_branch
-            )
-
-        # row-delta fast commit; position deletes require the candidate
-        # files to still be live at commit time (revalidated per attempt)
-        return self._commit(
-            "overwrite",
-            summary={
-                "delete-files": len(del_entries),
-                "added-data-files": len(data_entries) + len(inserted),
-            },
-            append_entries=del_entries + data_entries + inserted,
-            validate_live_paths=candidates if del_entries else None,
-            validate_isolation=(key_pred, "merge", base_seq),
-            to_branch=to_branch,
-        )
 
     # ------------------------------------------------------------------
     # reading helpers
@@ -2908,16 +2423,23 @@ def _on_condition(on_pairs: list[tuple]):
     return cond
 
 
-def _clause_index(matched, clauses: list[tuple]):
-    """1-based index of the FIRST matched-clause whose condition holds
-    for the row, 0 when none does (MERGE clause-order semantics —
-    reference SparkMergeRows evaluates matched actions in order).
-    Conditions see the join under ``t``/``s`` aliases."""
-    expr = None
-    for i, (cond_sql, _kind, _sets) in enumerate(clauses, 1):
-        cond = matched if cond_sql is None else (matched & F.expr(cond_sql))
-        expr = F.when(cond, F.lit(i)) if expr is None else expr.when(cond, F.lit(i))
-    return expr.otherwise(F.lit(0)) if expr is not None else F.lit(0)
+def _clause_index(conds: list[tuple]):
+    """1-based index of the FIRST ``(gate, condition_sql)`` pair that
+    holds for the row, 0 when none does (clause-order semantics —
+    reference SparkMergeRows evaluates actions in order).  ``gate`` is a
+    boolean Column, ``condition_sql`` None or SQL over the join's
+    ``t``/``s`` aliases."""
+    expr = F.lit(0)
+    for i, (gate, cond_sql) in reversed(list(enumerate(conds, 1))):
+        cond = gate if cond_sql is None else (gate & F.expr(cond_sql))
+        expr = F.when(cond, F.lit(i)).otherwise(expr)
+    return expr
+
+
+def _as_column(v):
+    """A SET / INSERT VALUES value as a Column: a Column passes through,
+    any other value becomes a literal."""
+    return v if isinstance(v, Column) else F.lit(v)
 
 
 def _plain(v):
@@ -2963,20 +2485,20 @@ class Transaction:
         return self
 
     def delete(self, where: E.Expr | None) -> "Transaction":
-        if where is None:  # unconditional form, like Table.delete
-            where = E.AlwaysTrue()
+        """Stage a copy-on-write DELETE (None = every row).  It plans
+        inside the commit's build against the transaction's working
+        entries, drops strict full matches and rewrites partial files
+        through the table's rewrite step, so survivors keep their
+        ``_row_id``."""
+        t = self.table
+        where = E.AlwaysTrue() if where is None else where
+        mark = t._where_mark(where)
 
         def apply(cur: pd.DataFrame, seq: int) -> pd.DataFrame:
-            plan = self.table._plan_cow(where, entries=cur)
-            rewritten = []
-            if plan["partial"]:
-                df = self.table._read_files(plan["partial"], with_deletes=True)
-                # null-safe survivor filter: rows whose predicate is NULL
-                # do not match the delete and must survive (see
-                # Table._rewrite_files)
-                cond = where.to_spark_column(self.table.geo_fields)
-                kept = df.filter(~F.coalesce(cond, F.lit(False)))
-                rewritten = self.table._write_files(kept)
+            plan = t._plan_cow(where, entries=cur)
+            rewritten = t._cow_rewrite(
+                plan["partial"], mark, [("delete", None)], cur
+            )
             drop = set(plan["full"]) | set(plan["partial"])
             out = cur[~cur.file_path.isin(drop)]
             add = M.entries_dataframe(

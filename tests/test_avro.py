@@ -214,6 +214,20 @@ def test_avro_rejects_geometry(catalog):
         )
 
 
+def test_avro_rejects_unencodable_column_on_the_driver(catalog):
+    """A column type the avro codec cannot encode fails at create_table
+    and add_columns, naming the column, instead of inside every later
+    append's Python worker."""
+    with pytest.raises(ValueError, match="'price'"):
+        catalog.create_table(
+            "avdec", "k bigint, price decimal(10,2)", file_format="avro"
+        )
+    catalog.create_table("avdec2", "k bigint", file_format="avro")
+    with pytest.raises(ValueError, match="'price'"):
+        catalog.add_columns("avdec2", "price decimal(10,2)")
+    assert catalog.load_table("avdec2").columns() == ["k"]
+
+
 def test_avro_compaction(avro_table):
     from iceberg_geo_poc_spark.table.maintenance import rewrite_data_files
 

@@ -17,6 +17,7 @@ import pytest
 
 from iceberg_geo_poc_spark.table import Catalog
 from iceberg_geo_poc_spark.table.sql import SqlError
+from tests.frames import frame
 
 
 @pytest.fixture()
@@ -31,7 +32,7 @@ def _mk_interleaved(spark, catalog, name, props=None):
     t = catalog.create_table(name, "id BIGINT, v STRING", properties=props)
     for lo, hi in ((1, 100), (2, 99), (3, 98), (4, 97)):
         t.append(
-            spark.createDataFrame(
+            frame(spark, 
                 [(lo, f"lo{lo}"), (hi, f"hi{hi}")], "id BIGINT, v STRING"
             ).coalesce(1)
         )
@@ -54,7 +55,7 @@ def test_merge_rewrites_only_matched_files(spark, catalog):
     # source key range [50, 99] overlaps all four files' id ranges, so
     # min/max pruning keeps ALL of them as candidates; only the file
     # holding id=99 contains a matched row
-    src = spark.createDataFrame([(99, "UPD"), (50, "NEW")], "id BIGINT, v STRING")
+    src = frame(spark, [(99, "UPD"), (50, "NEW")], "id BIGINT, v STRING")
     snap = t.merge(
         src,
         on=["id"],
@@ -73,7 +74,7 @@ def test_merge_rewrites_only_matched_files(spark, catalog):
 
 def test_merge_no_match_rewrites_nothing(spark, catalog):
     t = _mk_interleaved(spark, catalog, "m2")
-    src = spark.createDataFrame([(50, "x")], "id BIGINT, v STRING")
+    src = frame(spark, [(50, "x")], "id BIGINT, v STRING")
     snap = t.merge(src, on=["id"], when_matched_update={"v": "x"},
                    when_not_matched_insert=True)
     assert snap.summary["merged-files"] == 0
@@ -85,7 +86,7 @@ def test_merge_no_match_rewrites_nothing(spark, catalog):
 def test_sql_delete_in_subquery_narrows(spark, catalog):
     _mk_interleaved(spark, catalog, "d1")
     k = catalog.create_table("d1_keys", "k BIGINT")
-    k.append(spark.createDataFrame([(98,)], "k BIGINT"))
+    k.append(frame(spark, [(98,)], "k BIGINT"))
     snap = catalog.sql("DELETE FROM d1 WHERE id IN (SELECT k FROM d1_keys)")
     # subquery-only WHERE: prune is always-true, all 4 files candidates
     assert snap.summary["candidate-files"] == 4
@@ -98,7 +99,7 @@ def test_sql_delete_in_subquery_narrows(spark, catalog):
 def test_sql_update_in_subquery_narrows(spark, catalog):
     _mk_interleaved(spark, catalog, "u1")
     k = catalog.create_table("u1_keys", "k BIGINT")
-    k.append(spark.createDataFrame([(97,)], "k BIGINT"))
+    k.append(frame(spark, [(97,)], "k BIGINT"))
     snap = catalog.sql(
         "UPDATE u1 SET v = 'updated' WHERE id IN (SELECT k FROM u1_keys)"
     )
@@ -132,6 +133,21 @@ def test_expression_update_narrows(spark, catalog):
     assert snap.summary["rewritten-files"] == 1
     assert (97, "X") in _rows(catalog, "u2")
     assert len(_rows(catalog, "u2")) == 8
+
+
+def test_unknown_row_level_mode_raises(spark, catalog):
+    """An unknown mode is refused, not silently run as copy-on-write."""
+    from iceberg_geo_poc_spark.table import expressions as E
+
+    t = catalog.create_table("badmode", "id BIGINT, v STRING")
+    src = frame(spark, [(1, "x")], "id BIGINT, v STRING")
+    for call in (
+        lambda: t.delete(E.eq("id", 1), mode="mor"),
+        lambda: t.update({"v": "y"}, E.eq("id", 1), mode="mor"),
+        lambda: t.merge(src, on=["id"], mode="mor"),
+    ):
+        with pytest.raises(ValueError, match="unknown row-level mode"):
+            call()
 
 
 # -- WAP-branch auto-create + read routing (ADVICE r12) ----------------------
@@ -177,7 +193,7 @@ def test_wap_branch_on_empty_table(spark, catalog):
 def test_wap_merge_auto_creates(spark, catalog):
     _mk_interleaved(spark, catalog, "w3")
     catalog.create_table("w3_src", "id BIGINT, v STRING").append(
-        spark.createDataFrame([(1, "B")], "id BIGINT, v STRING")
+        frame(spark, [(1, "B")], "id BIGINT, v STRING")
     )
     spark.conf.set("spark.wap.branch", "wb")
     try:
@@ -192,6 +208,29 @@ def test_wap_merge_auto_creates(spark, catalog):
     finally:
         spark.conf.unset("spark.wap.branch")
     assert (1, "lo1") in _rows(catalog, "w3")
+
+
+@pytest.mark.parametrize(
+    "mode", ["copy-on-write", "merge-on-read", "merge-on-read-dv"]
+)
+def test_wap_subquery_delete_lands_on_branch(spark, catalog, mode):
+    """A subquery DELETE under spark.wap.branch commits to the branch and
+    leaves main unchanged (it used to be refused), in every delete mode."""
+    name = "w6_" + mode.replace("-", "_")
+    t = _mk_interleaved(spark, catalog, name, {"write.delete.mode": mode})
+    main_head = t.meta.current_snapshot_id
+    catalog.create_table(f"{name}_keys", "k BIGINT").append(
+        frame(spark, [(98,), (1,)], "k BIGINT")
+    )
+    spark.conf.set("spark.wap.branch", "audit")
+    try:
+        catalog.sql(f"DELETE FROM {name} WHERE id IN (SELECT k FROM {name}_keys)")
+        ids = {r.id for r in catalog.sql(f"SELECT id FROM {name}").collect()}
+        assert ids == {2, 3, 4, 97, 99, 100}
+    finally:
+        spark.conf.unset("spark.wap.branch")
+    assert catalog.load_table(name).meta.current_snapshot_id == main_head
+    assert len(_rows(catalog, name)) == 8
 
 
 def test_wap_zero_match_dml_stays_on_branch(spark, catalog):
@@ -258,7 +297,7 @@ def test_touched_file_paths_bounded_by_file_count(spark, catalog):
 def test_correlated_exists_with_limit_rejected(spark, catalog):
     _mk_interleaved(spark, catalog, "e1")
     k = catalog.create_table("e1_keys", "k BIGINT")
-    k.append(spark.createDataFrame([(98,)], "k BIGINT"))
+    k.append(frame(spark, [(98,)], "k BIGINT"))
     with pytest.raises(SqlError, match="LIMIT"):
         catalog.sql(
             "DELETE FROM e1 t WHERE EXISTS "
@@ -276,7 +315,7 @@ def test_correlated_exists_having_needs_group_key(spark, catalog):
     _mk_interleaved(spark, catalog, "e2")
     k = catalog.create_table("e2_keys", "k BIGINT, g STRING")
     k.append(
-        spark.createDataFrame([(98, "x"), (98, "x")], "k BIGINT, g STRING")
+        frame(spark, [(98, "x"), (98, "x")], "k BIGINT, g STRING")
     )
     # correlation column IS a group key: sound, executes
     catalog.sql(

@@ -179,3 +179,21 @@ def test_stream_writer_epoch_commits_and_replay(spark, catalog, tmp_path):
     schema = spark.createDataFrame([], "a BIGINT, v DOUBLE").schema
     with pytest.raises(ValueError, match="streaming overwrite"):
         ds.streamWriter(schema, True)
+
+
+def test_stream_writer_keeps_nan_apart_from_null(spark, catalog):
+    """A streamed NaN stays a NaN: for a NaN row and a NULL row the
+    manifest counts one NaN and one NULL (a pandas round trip in the
+    write task stored the NaN as a second NULL)."""
+    from pyspark.sql import Row
+
+    from iceberg_geo_poc_spark.streaming.datasource import _StreamAppendWriter
+
+    t = catalog.create_table("dsnan", "a BIGINT, v DOUBLE")
+    w = _StreamAppendWriter(t.location, {}, query_token="nan")
+    rows = [Row(a=1, v=float("nan")), Row(a=2, v=None), Row(a=3, v=1.0)]
+    w.commit([w.write(iter(rows))], 0)
+    ent = catalog.load_table("dsnan")._entries()
+    data = ent[ent.content == "data"].iloc[0]
+    assert json.loads(data["nans"]).get("v") == 1
+    assert json.loads(data["nulls"]).get("v") == 1

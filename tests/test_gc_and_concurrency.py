@@ -24,6 +24,7 @@ from iceberg_geo_poc_spark.table.maintenance import (
     rewrite_data_files,
 )
 from iceberg_geo_poc_spark.table.table import ValidationException
+from tests.frames import frame
 
 
 @pytest.fixture()
@@ -33,7 +34,7 @@ def catalog(spark, tmp_path):
 
 def _append(spark, t, lo, hi):
     t.append(
-        spark.createDataFrame(
+        frame(spark, 
             [(i, f"r{i}") for i in range(lo, hi)], "a BIGINT, b STRING"
         ).coalesce(1)
     )
@@ -60,7 +61,7 @@ def test_snapshot_clone_gc_refuses_and_source_survives(spark, catalog):
 
 def test_add_files_sets_gc_disabled(spark, catalog, tmp_path):
     ext = str(tmp_path / "external")
-    spark.createDataFrame(
+    frame(spark, 
         [(i, f"x{i}") for i in range(5)], "a BIGINT, b STRING"
     ).coalesce(1).write.parquet(ext)
     files = [
@@ -96,6 +97,40 @@ def test_mor_ops_fail_on_concurrent_compaction(spark, catalog):
     # table still consistent: no rows lost or duplicated
     got = sorted(r.a for r in catalog.load_table("morconc").to_df().collect())
     assert got == list(range(30)) + list(range(100, 140))
+
+
+def test_overwrite_by_filter_fails_on_concurrent_compaction(spark, catalog):
+    """Overwrite-by-filter is a copy-on-write DELETE plus an append, so a
+    plan made against files a concurrent compaction replaced must not
+    commit: it kept the compacted copy of the matched rows and added the
+    rewritten survivors again (27 rows where 17 are right)."""
+    t = catalog.create_table("owconc", "a BIGINT, b STRING")
+    _append(spark, t, 0, 10)
+    _append(spark, t, 10, 20)
+    stale = catalog.load_table("owconc")
+    rewrite_data_files(catalog.load_table("owconc"), target_file_size=1 << 20)
+    new_rows = frame(spark, [(100, "n"), (101, "n")], "a BIGINT, b STRING")
+    with pytest.raises(ValidationException):
+        stale.overwrite(new_rows, where=E.lt("a", 5))
+    got = sorted(r.a for r in catalog.load_table("owconc").to_df().collect())
+    assert got == list(range(20))
+
+
+@pytest.mark.parametrize(
+    "mode", ["copy-on-write", "merge-on-read", "merge-on-read-dv"]
+)
+def test_stale_delete_conflicts_with_matching_append(spark, catalog, mode):
+    """Every delete mode enforces serializable isolation: a concurrent
+    append of rows matching the condition aborts a stale-handle DELETE
+    (the deletion-vector mode committed and left the appended rows)."""
+    name = "isodel_" + mode.replace("-", "_")
+    _append(spark, catalog.create_table(name, "a BIGINT, b STRING"), 0, 10)
+    stale = catalog.load_table(name)
+    _append(spark, catalog.load_table(name), 0, 5)
+    with pytest.raises(ValidationException, match="serializable isolation"):
+        stale.delete(E.lt("a", 3), mode=mode)
+    got = sorted(r.a for r in catalog.load_table(name).to_df().collect())
+    assert got == sorted(list(range(10)) + list(range(5)))
 
 
 def test_stream_raises_on_non_append_snapshot(spark, catalog, tmp_path):
@@ -154,7 +189,7 @@ def test_within_boundary_inclusive_both_paths(spark):
     register_geo_functions(spark)
     rect = "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"
     # boundary, interior, exterior points — all-point batch => fast path
-    df = spark.createDataFrame(
+    df = frame(spark, 
         [(0.0, 0.5), (0.5, 0.5), (2.0, 2.0), (1.0, 1.0)], "x DOUBLE, y DOUBLE"
     )
     got = (
@@ -175,8 +210,8 @@ def test_within_boundary_inclusive_both_paths(spark):
 def test_salted_join_rejects_outer_small_side(spark):
     from iceberg_geo_poc_spark.operators.skew import salted_join
 
-    big = spark.createDataFrame([(1, "a")], "k BIGINT, v STRING")
-    small = spark.createDataFrame([(1, "s")], "k BIGINT, w STRING")
+    big = frame(spark, [(1, "a")], "k BIGINT, v STRING")
+    small = frame(spark, [(1, "s")], "k BIGINT, w STRING")
     for how in ("right", "full", "outer", "left_anti"):
         with pytest.raises(ValueError, match="salted_join"):
             salted_join(big, small, ["k"], how=how)
@@ -214,7 +249,7 @@ def test_serializable_isolation_blocks_conflicting_appends(spark, catalog):
 
     def fresh(name, props=None):
         t = catalog.create_table(name, "a BIGINT, b STRING", properties=props)
-        t.append(spark.createDataFrame(
+        t.append(frame(spark, 
             [(i, f"r{i}") for i in range(10)], "a BIGINT, b STRING"
         ).coalesce(1))
         return t
@@ -222,21 +257,21 @@ def test_serializable_isolation_blocks_conflicting_appends(spark, catalog):
     # conflicting concurrent append -> ValidationException
     fresh("iso1")
     stale = catalog.load_table("iso1")
-    catalog.load_table("iso1").append(spark.createDataFrame(
+    catalog.load_table("iso1").append(frame(spark, 
         [(i, "x") for i in range(10, 20)], "a BIGINT, b STRING").coalesce(1))
     with pytest.raises(ValidationException, match="serializable isolation"):
         stale.delete(E.lt("a", 100))
     # MoR path enforces it too
     fresh("iso2")
     stale = catalog.load_table("iso2")
-    catalog.load_table("iso2").append(spark.createDataFrame(
+    catalog.load_table("iso2").append(frame(spark, 
         [(i, "x") for i in range(10, 20)], "a BIGINT, b STRING").coalesce(1))
     with pytest.raises(ValidationException, match="serializable isolation"):
         stale.delete(E.lt("a", 100), mode="merge-on-read")
     # stats-disjoint concurrent append does NOT conflict
     fresh("iso3")
     stale = catalog.load_table("iso3")
-    catalog.load_table("iso3").append(spark.createDataFrame(
+    catalog.load_table("iso3").append(frame(spark, 
         [(i, "x") for i in range(1000, 1010)], "a BIGINT, b STRING").coalesce(1))
     stale.delete(E.lt("a", 5))
     assert sorted(r.a for r in catalog.load_table("iso3").to_df().collect()) == (
@@ -245,7 +280,7 @@ def test_serializable_isolation_blocks_conflicting_appends(spark, catalog):
     # snapshot isolation opts out: stale plan applies, appended rows survive
     fresh("iso4", props={"write.delete.isolation-level": "snapshot"})
     stale = catalog.load_table("iso4")
-    catalog.load_table("iso4").append(spark.createDataFrame(
+    catalog.load_table("iso4").append(frame(spark, 
         [(i, "x") for i in range(10, 20)], "a BIGINT, b STRING").coalesce(1))
     stale.delete(E.lt("a", 100))
     assert sorted(r.a for r in catalog.load_table("iso4").to_df().collect()) == (
@@ -254,14 +289,14 @@ def test_serializable_isolation_blocks_conflicting_appends(spark, catalog):
     # UPDATE and MERGE enforce it too (CoW)
     fresh("iso5")
     stale = catalog.load_table("iso5")
-    catalog.load_table("iso5").append(spark.createDataFrame(
+    catalog.load_table("iso5").append(frame(spark, 
         [(i, "x") for i in range(10, 20)], "a BIGINT, b STRING").coalesce(1))
     import pyspark.sql.functions as F
     with pytest.raises(ValidationException, match="serializable isolation"):
         stale.update({"b": F.lit("z")}, where=E.lt("a", 100))
     with pytest.raises(ValidationException, match="serializable isolation"):
         stale.merge(
-            spark.createDataFrame([(15, "m")], "a BIGINT, b STRING"),
+            frame(spark, [(15, "m")], "a BIGINT, b STRING"),
             on=["a"],
             when_matched_update={"b": F.col("s.b")},
         )
@@ -270,14 +305,14 @@ def test_serializable_isolation_blocks_conflicting_appends(spark, catalog):
     # has no condition): any concurrent append conflicts
     fresh("iso6")
     stale = catalog.load_table("iso6")
-    catalog.load_table("iso6").append(spark.createDataFrame(
+    catalog.load_table("iso6").append(frame(spark, 
         [(i, "x") for i in range(10, 20)], "a BIGINT, b STRING").coalesce(1))
     with pytest.raises(ValidationException, match="serializable isolation"):
         stale.delete(None)
     # ... and the snapshot opt-out still applies to the unconditional form
     fresh("iso7", props={"write.delete.isolation-level": "snapshot"})
     stale = catalog.load_table("iso7")
-    catalog.load_table("iso7").append(spark.createDataFrame(
+    catalog.load_table("iso7").append(frame(spark, 
         [(i, "x") for i in range(10, 20)], "a BIGINT, b STRING").coalesce(1))
     stale.delete(None)
     assert sorted(r.a for r in catalog.load_table("iso7").to_df().collect()) == (
@@ -292,7 +327,7 @@ def test_serializable_isolation_blocks_conflicting_appends(spark, catalog):
     from iceberg_geo_poc_spark.table import maintenance as MT
     t = catalog.create_table("iso8", "a BIGINT, b STRING")
     for lo in (50, 60):
-        t.append(spark.createDataFrame(
+        t.append(frame(spark, 
             [(i, "x") for i in range(lo, lo + 10)], "a BIGINT, b STRING"
         ).coalesce(1))
     base_seq = t.meta.last_sequence_number
@@ -304,7 +339,7 @@ def test_serializable_isolation_blocks_conflicting_appends(spark, catalog):
     t2._validate_no_conflicting_appends(ent, base_seq, E.lt("a", 100), "delete")
     t2._validate_no_conflicting_appends(ent, base_seq, None, "delete")
     # a genuine append after the same base still conflicts
-    t2.append(spark.createDataFrame([(1, "y")], "a BIGINT, b STRING").coalesce(1))
+    t2.append(frame(spark, [(1, "y")], "a BIGINT, b STRING").coalesce(1))
     ent2 = catalog.load_table("iso8")._entries()
     with pytest.raises(ValidationException, match="serializable isolation"):
         t2._validate_no_conflicting_appends(ent2, base_seq, E.lt("a", 100), "delete")
@@ -319,14 +354,14 @@ def test_failed_commit_leaves_handle_clean(spark, catalog):
     conditional metadata write, so a failed op poisoned every later
     operation on the same handle."""
     t = catalog.create_table("handleclean", "a BIGINT, b STRING")
-    t.append(spark.createDataFrame([(1, "x")], "a BIGINT, b STRING").coalesce(1))
+    t.append(frame(spark, [(1, "x")], "a BIGINT, b STRING").coalesce(1))
     stale = catalog.load_table("handleclean")
     v0 = stale.meta.version
     seq0 = stale.meta.last_sequence_number
     nsnaps0 = len(stale.meta.snapshots)
     csnap0 = stale.meta.current_snapshot_id
     catalog.load_table("handleclean").append(
-        spark.createDataFrame([(2, "y")], "a BIGINT, b STRING").coalesce(1)
+        frame(spark, [(2, "y")], "a BIGINT, b STRING").coalesce(1)
     )
     with pytest.raises(ValidationException):
         stale.delete(E.lt("a", 100))
@@ -349,15 +384,15 @@ def test_by_source_merge_widens_conflict_predicate(spark, catalog):
     import pyspark.sql.functions as F
 
     t = catalog.create_table("isobs", "a BIGINT, b STRING")
-    t.append(spark.createDataFrame(
+    t.append(frame(spark, 
         [(i, f"r{i}") for i in range(10)], "a BIGINT, b STRING"
     ).coalesce(1))
     stale = catalog.load_table("isobs")
     # concurrent append far outside the source's key range [0, 5]
-    catalog.load_table("isobs").append(spark.createDataFrame(
+    catalog.load_table("isobs").append(frame(spark, 
         [(i, "x") for i in range(1000, 1010)], "a BIGINT, b STRING"
     ).coalesce(1))
-    src = spark.createDataFrame([(i, "s") for i in range(6)], "a BIGINT, b STRING")
+    src = frame(spark, [(i, "s") for i in range(6)], "a BIGINT, b STRING")
     with pytest.raises(ValidationException, match="serializable isolation"):
         stale.merge(
             src,
@@ -367,7 +402,7 @@ def test_by_source_merge_widens_conflict_predicate(spark, catalog):
         )
     # the SAME merge without by-source clauses accepts the disjoint append
     stale2 = catalog.load_table("isobs")
-    catalog.load_table("isobs").append(spark.createDataFrame(
+    catalog.load_table("isobs").append(frame(spark, 
         [(i, "x") for i in range(2000, 2010)], "a BIGINT, b STRING"
     ).coalesce(1))
     stale2.merge(

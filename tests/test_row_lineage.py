@@ -15,6 +15,7 @@ import pytest
 
 from iceberg_geo_poc_spark.table import Catalog, E
 from iceberg_geo_poc_spark.table import maintenance as MAINT
+from tests.frames import frame
 
 
 @pytest.fixture()
@@ -32,7 +33,7 @@ def _ids(t):
 def _mk(spark, catalog, name, n=30):
     t = catalog.create_table(name, "a BIGINT, b STRING")
     t.append(
-        spark.createDataFrame(
+        frame(spark, 
             [(i, f"r{i}") for i in range(n)], "a BIGINT, b STRING"
         ).coalesce(1)
     )
@@ -42,7 +43,7 @@ def _mk(spark, catalog, name, n=30):
 def test_append_assigns_unique_contiguous_ids(spark, catalog):
     t = _mk(spark, catalog, "rl1", n=10)
     t.append(
-        spark.createDataFrame(
+        frame(spark, 
             [(i, f"r{i}") for i in range(10, 25)], "a BIGINT, b STRING"
         ).coalesce(1)
     )
@@ -75,7 +76,7 @@ def test_ids_stable_under_cow_delete_and_compaction(spark, catalog):
     }, "CoW survivors keep their ids (materialized through the rewrite)"
     # a second file, then compaction
     t.append(
-        spark.createDataFrame(
+        frame(spark, 
             [(i, f"r{i}") for i in range(100, 110)], "a BIGINT, b STRING"
         ).coalesce(1)
     )
@@ -102,7 +103,7 @@ def test_last_updated_moves_only_for_updated_rows(spark, catalog):
 
 def test_ids_unique_after_merge_inserts(spark, catalog):
     t = _mk(spark, catalog, "rl5", n=10)
-    src = spark.createDataFrame(
+    src = frame(spark, 
         [(5, "upd"), (100, "new"), (101, "new2")], "a BIGINT, b STRING"
     )
     t.merge(src, on=["a"], when_matched_update={"b": "upd"})
@@ -110,3 +111,48 @@ def test_ids_unique_after_merge_inserts(spark, catalog):
     assert len(ids) == 12
     row_ids = [v[0] for v in ids.values()]
     assert len(set(row_ids)) == 12, "merge inserts allocate fresh unique ids"
+
+
+def _lineage_op(spark, t, how):
+    """Apply one row-preserving op that touches rows a < 3; returns the
+    rows it must leave (the transaction deletes them, the rest update)."""
+    import pyspark.sql.functions as F
+
+    src = frame(spark, [(i, f"s{i}") for i in range(3)], "a BIGINT, b STRING")
+    if how == "transaction-delete":
+        with t.new_transaction() as tx:
+            tx.delete(E.lt("a", 3))
+        return set(range(3, 30))
+    if how.startswith("update-"):
+        t.update({"b": "x"}, E.lt("a", 3), mode=how[len("update-"):])
+    else:
+        t.merge(
+            src, on=["a"], when_matched_update={"b": F.col("s.b")},
+            when_not_matched_insert=False, mode=how[len("merge-"):],
+        )
+    return set(range(30))
+
+
+@pytest.mark.parametrize(
+    "how",
+    [
+        "transaction-delete",
+        "update-merge-on-read",
+        "update-merge-on-read-dv",
+        "merge-copy-on-write",
+        "merge-merge-on-read",
+        "merge-merge-on-read-dv",
+    ],
+)
+def test_ids_stable_under_row_level_ops(spark, catalog, how):
+    """Every row-preserving op keeps ``_row_id``: survivors of a
+    transaction's delete and rows a merge-on-read MERGE updates (both
+    used to get fresh ids), as every other form already did."""
+    t = _mk(spark, catalog, "rl6_" + how.replace("-", "_"))
+    before = _ids(t)
+    left = _lineage_op(spark, t, how)
+    after = _ids(t)
+    assert set(after) == left
+    assert {a: v[0] for a, v in after.items()} == {
+        a: before[a][0] for a in left
+    }, "row-level ops must not move row ids"

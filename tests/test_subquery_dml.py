@@ -11,6 +11,7 @@ import pytest
 
 from iceberg_geo_poc_spark.table import Catalog
 from iceberg_geo_poc_spark.table.sql import SqlError
+from tests.frames import frame
 
 
 @pytest.fixture()
@@ -26,7 +27,7 @@ def _mk_target(spark, catalog, name, mode=None):
         name, "id BIGINT, grp STRING, v DOUBLE", properties=props or None
     )
     t.append(
-        spark.createDataFrame(
+        frame(spark, 
             [
                 (1, "a", 10.0),
                 (2, "a", 20.0),
@@ -42,7 +43,7 @@ def _mk_target(spark, catalog, name, mode=None):
 
 def _mk_keys(spark, catalog, name, rows, ddl="k BIGINT"):
     t = catalog.create_table(name, ddl)
-    t.append(spark.createDataFrame(rows, ddl))
+    t.append(frame(spark, rows, ddl))
     return t
 
 
@@ -146,7 +147,7 @@ def test_delete_scalar_subquery_decimal(spark, catalog):
 
     t = catalog.create_table("dct", "id BIGINT, price DECIMAL(10,2)")
     t.append(
-        spark.createDataFrame(
+        frame(spark, 
             [(1, Decimal("10.00")), (2, Decimal("20.00")), (3, Decimal("30.00"))],
             "id BIGINT, price DECIMAL(10,2)",
         )
@@ -168,10 +169,10 @@ def test_decimal_column_bounds_prune(spark, catalog):
     lo = [(i, Decimal(f"{i}.25")) for i in range(1, 6)]
     hi = [(i, Decimal(f"{i}.75")) for i in range(100, 106)]
     t.append(
-        spark.createDataFrame(lo, "id BIGINT, price DECIMAL(10,2)").coalesce(1)
+        frame(spark, lo, "id BIGINT, price DECIMAL(10,2)").coalesce(1)
     )
     t.append(
-        spark.createDataFrame(hi, "id BIGINT, price DECIMAL(10,2)").coalesce(1)
+        frame(spark, hi, "id BIGINT, price DECIMAL(10,2)").coalesce(1)
     )
     scan = t.scan(where=E.ge("price", 50.0))
     assert scan.total_data_files() == 2
@@ -282,11 +283,11 @@ def test_update_preserves_row_lineage(spark, catalog):
 def test_merge_with_schema_evolution(spark, catalog):
     t = catalog.create_table("m1", "id BIGINT, v DOUBLE")
     t.append(
-        spark.createDataFrame(
+        frame(spark, 
             [(1, 10.0), (2, 20.0), (3, 30.0)], "id BIGINT, v DOUBLE"
         )
     )
-    spark.createDataFrame(
+    frame(spark, 
         [(2, 200.0, "hot"), (9, 900.0, "new")],
         "id BIGINT, v DOUBLE, tag STRING",
     ).createOrReplaceTempView("m1_src")
@@ -315,8 +316,8 @@ def test_merge_without_evolution_still_rejects_extra_source_cols(
     """Plain MERGE does NOT silently evolve: INSERT * with an unknown
     source column must not add it to the target schema."""
     t = catalog.create_table("m2", "id BIGINT, v DOUBLE")
-    t.append(spark.createDataFrame([(1, 10.0)], "id BIGINT, v DOUBLE"))
-    spark.createDataFrame(
+    t.append(frame(spark, [(1, 10.0)], "id BIGINT, v DOUBLE"))
+    frame(spark, 
         [(5, 50.0, "x")], "id BIGINT, v DOUBLE, tag STRING"
     ).createOrReplaceTempView("m2_src")
     catalog.sql(
@@ -332,9 +333,9 @@ def test_merge_set_star_assigns_source_col_named_like_key(spark, catalog):
     SET * expansion; ADVICE r11 — only same-named keys are excluded)."""
     t = catalog.create_table("m3", "id BIGINT, b STRING")
     t.append(
-        spark.createDataFrame([(1, "x"), (2, "y")], "id BIGINT, b STRING")
+        frame(spark, [(1, "x"), (2, "y")], "id BIGINT, b STRING")
     )
-    spark.createDataFrame(
+    frame(spark, 
         [(1, 100, "s1")], "value BIGINT, id BIGINT, b STRING"
     ).createOrReplaceTempView("m3_src")
     catalog.sql(
@@ -446,3 +447,26 @@ def test_array_lit_escapes_quotes(spark):
         .collect()[0]
     )
     assert row.hit is True
+
+
+def test_sql_merge_follows_merge_mode(spark, catalog):
+    """SQL MERGE reads write.merge.mode, as DELETE and UPDATE read theirs:
+    under merge-on-read the matched row becomes a position delete."""
+    t = catalog.create_table(
+        "mmode", "id BIGINT, v STRING",
+        properties={"write.merge.mode": "merge-on-read"},
+    )
+    t.append(frame(spark, [(1, "a"), (2, "b"), (3, "c")], "id BIGINT, v STRING"))
+    frame(spark, [(2, "B"), (4, "D")], "id BIGINT, v STRING").createOrReplaceTempView(
+        "mmode_src"
+    )
+    catalog.sql(
+        "MERGE INTO mmode t USING mmode_src s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *"
+    )
+    t = catalog.load_table("mmode")
+    ent = t._entries()
+    assert int((ent.content == "posdel").sum()) == 1
+    assert sorted((r.id, r.v) for r in t.to_df().collect()) == [
+        (1, "a"), (2, "B"), (3, "c"), (4, "D")
+    ]
