@@ -22,6 +22,7 @@ per-row rest (codecs, st_area, st_buffer, ...) are ``pandas_udf``.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -537,6 +538,8 @@ def _poly_locate_vec(poly, px: np.ndarray, py: np.ndarray) -> np.ndarray:
     if isinstance(poly, G.MultiPolygon):
         out = np.zeros(len(px), dtype="int64")
         for p in poly.polygons:
+            if p.is_empty():
+                continue
             loc = _poly_locate_vec(p, px, py)
             out = np.where(out == 2, 2, np.maximum(out, loc))
         return out
@@ -640,48 +643,82 @@ def _fast_rect_rect_predicate(name: str, a: pa.Array, b: pa.Array):
     return _wrap_bool(res, ma & mb)
 
 
-def _fast_poly_predicate(name: str, a: pa.Array, b: pa.Array):
-    """Vectorized point-column vs constant (multi)polygon evaluation;
-    None when the batch shape doesn't apply.  Covers the polygon-window
-    workloads the rect fast path can't (concave shells, holes), with
-    locate semantics identical to the scalar kernel's _poly_locate."""
-    if name not in ("intersects", "disjoint", "covers", "within", "contains"):
+# A polygon column goes through the grouped point-in-polygon path when
+# its batch holds at most one distinct polygon per this many rows.  One
+# group's locate costs about 75 us and the scalar kernel about 9 us a
+# row (diamond zones, 1k and 10k-row batches), so the two break even
+# near 9 rows per group; 16 keeps the grouped path clearly ahead.
+_POLY_GROUP_MIN_ROWS = 16
+
+# which argument may be the polygon, per predicate: False = the second
+# (pred(point, poly)), True = the first (pred(poly, point))
+_POLY_SIDES = {
+    "intersects": (False, True),
+    "disjoint": (False, True),
+    "covers": (True,),
+    "within": (False,),
+    "contains": (True,),
+}
+
+
+def _poly_groups(s):
+    """(polys, codes) when the binary column ``s`` holds few distinct
+    values, each a (Multi)Polygon: the decoded distinct values and each
+    row's index into them (-1 at null rows).  None otherwise."""
+    if isinstance(s, pa.ChunkedArray):
+        s = s.combine_chunks()
+    if not (pa.types.is_binary(s.type) or pa.types.is_large_binary(s.type)):
         return None
-    for pts_side, const_side, swapped in ((a, b, False), (b, a, True)):
-        g = _const_geometry(const_side)
-        if g is None:
-            continue
+    enc = s.dictionary_encode()
+    k = len(enc.dictionary)
+    if k > 1 and k * _POLY_GROUP_MIN_ROWS > len(s):
+        return None
+    polys = []
+    for v in enc.dictionary.to_pylist():
+        g = geometry_from_wkb(v)
         if not isinstance(g, (G.Polygon, G.MultiPolygon)):
             return None
+        polys.append(g)
+    codes = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False)
+    return polys, codes
+
+
+def _fast_poly_predicate(name: str, a: pa.Array, b: pa.Array):
+    """Vectorized point column vs a (Multi)Polygon column of few distinct
+    values — a constant literal is the one-group case; None when the
+    batch shape doesn't apply.  Each distinct polygon decodes once and
+    locates its rows' points in one _poly_locate_vec, with semantics
+    identical to the scalar kernel's _poly_locate."""
+    sides = _POLY_SIDES.get(name, ())
+    for pts_side, poly_side, swapped in ((a, b, False), (b, a, True)):
+        if swapped not in sides:
+            continue
         pts = _points_xy(pts_side)
         if pts is None:
-            return None
+            continue
         x, y, mask = pts
         n = len(x)
-        if g.is_empty():
-            # kernel: anything vs empty -> False; disjoint -> True
-            res = np.full(n, name == "disjoint")
-        else:
-            # locate only the valid points (NaN point = empty, loc 0)
-            valid = mask & ~(np.isnan(x) | np.isnan(y))
-            loc = np.zeros(n, dtype="int64")
-            if valid.any():
-                loc[valid] = _poly_locate_vec(g, x[valid], y[valid])
-            if name == "intersects":
-                res = (loc != 0) & valid
-            elif name == "disjoint":
-                res = loc == 0  # empty point is disjoint, like the kernel
-            elif name == "covers":
-                # covers(poly, point) only when the poly is the receiver
-                res = ((loc != 0) & valid) if swapped else None
-            elif name == "within":
-                # within(point, poly) = covers(poly, point)
-                res = ((loc != 0) & valid) if not swapped else None
-            else:  # contains(poly, point): interior only
-                res = ((loc == 1) & valid) if swapped else None
-            if res is None:
-                return None
-        return _wrap_bool(res, mask)
+        groups = _poly_groups(poly_side)
+        if groups is None:
+            return None
+        polys, codes = groups
+        ok = mask & (codes >= 0)
+        # locate only rows with a point and a polygon (NaN point = empty,
+        # loc 0; an empty polygon locates nothing, loc 0)
+        rows = np.nonzero(ok & ~(np.isnan(x) | np.isnan(y)))[0]
+        rows = rows[np.argsort(codes[rows], kind="stable")]
+        cuts = np.searchsorted(codes[rows], np.arange(len(polys) + 1))
+        loc = np.zeros(n, dtype="int64")
+        for k, g in enumerate(polys):
+            r = rows[cuts[k]:cuts[k + 1]]
+            if len(r) and not g.is_empty():
+                loc[r] = _poly_locate_vec(g, x[r], y[r])
+        # within(point, poly) and covers(poly, point) are the closed
+        # test, contains(poly, point) the interior one
+        res = loc == 0 if name == "disjoint" else (
+            loc == 1 if name == "contains" else loc != 0
+        )
+        return _wrap_bool(res, ok)
     return None
 
 
@@ -1389,7 +1426,10 @@ def _fast_polypoly_predicate(name: str, a: pa.Array, b: pa.Array):
 
 
 def _predicate_fast(method: str, a, b):
-    """Chain of vectorized fast paths; None when no shape applies."""
+    """Chain of vectorized fast paths; None when no shape applies:
+    points vs a constant rectangle, rectangle vs rectangle columns,
+    points vs a (Multi)Polygon column of few distinct values (a literal
+    is one group), then simple polygon vs polygon columns."""
     fast = _fast_rect_predicate(method, a, b)
     if fast is None:
         fast = _fast_rect_rect_predicate(method, a, b)
@@ -1818,6 +1858,21 @@ def st_point_envelope_pair_intersects(px, py, x0, y0, x1, y1) -> Column:
     return _point_envelope_pair_intersects_udf(
         _c(px), _c(py), _c(x0), _c(y0), _c(x1), _c(y1)
     )
+
+
+@functools.cache
+def built_intersects_udf(ctor):
+    """st_intersects(g, ctor(*args)) as one kernel over ``(g, *args)``,
+    for a vectorized constructor UDF ``ctor`` (st_point_udf & co.): the
+    spatial join's exact test when it builds its build-side geometry
+    after the join.  Same constructor bytes, same predicate kernel."""
+    build = ctor.func
+
+    @arrow_udf(BooleanType())
+    def _built_intersects(g: pa.Array, *args: pa.Array) -> pa.Array:
+        return _pair_predicate("intersects", g, build(*args))
+
+    return _built_intersects
 
 
 @arrow_udf(DoubleType())

@@ -18,7 +18,12 @@ Shape: partition-based spatial merge —
    without a `distinct` shuffle: a pair is kept only in the cell that
    contains the top-left corner of the envelope intersection,
 6. the exact predicate (`st_intersects`) runs last, only on surviving
-   pairs.
+   pairs.  When the right geometry is built by a vectorized constructor
+   (st_point, st_makeenvelope, st_diamond) from plain columns and its
+   bounds are given, steps 1-5 never build it: the constructor's
+   arguments ride through the join, and one fused kernel builds the
+   geometry and tests each surviving pair, so the broadcast side runs
+   no Python at all.
 
 At 100 TB the cell id doubles as a hidden partition column (same
 substrate as bucket/hilbert), turning step 3 into a storage-partitioned
@@ -31,7 +36,63 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from iceberg_geo_poc_spark.geo.functions import st_bounds_udf, st_intersects
+from iceberg_geo_poc_spark.geo.functions import (
+    built_intersects_udf,
+    st_bounds_udf,
+    st_diamond_udf,
+    st_intersects,
+    st_makeenvelope_udf,
+    st_point_udf,
+)
+
+# vectorized constructors a build-side geometry can be built through
+# after the join, by the name its PythonUDF carries in a plan
+_DEFERRABLE = {
+    u.__name__: u for u in (st_point_udf, st_makeenvelope_udf, st_diamond_udf)
+}
+
+
+def _node(j) -> str:
+    return j.getClass().getSimpleName()
+
+
+def _seq(j) -> list:
+    return [j.apply(i) for i in range(j.size())]
+
+
+def _deferred_constructor(right: DataFrame, geom: str, left_cols: list[str]):
+    """(constructor UDF, argument column names) when ``right``'s
+    column ``geom`` is one of the `_DEFERRABLE` constructors applied to
+    columns that the same top ``Project`` passes through unchanged; None
+    otherwise, or when a column name of the two sides would clash.  A
+    read-only walk of the analyzed plan, matched by node class."""
+    names = [c.lower() for c in (*left_cols, *right.columns)]
+    if len(set(names)) != len(names):
+        return None
+    plan = right._jdf.queryExecution().analyzed()
+    if _node(plan) != "Project":
+        return None
+    items = [(_node(e), e.name(), e) for e in _seq(plan.projectList())]
+    passed = {
+        e.exprId().id(): name
+        for kind, name, e in items
+        if kind == "AttributeReference"
+    }
+    built = [(kind, e) for kind, name, e in items if name == geom]
+    if len(built) != 1 or built[0][0] != "Alias":
+        return None
+    udf = built[0][1].child()
+    if _node(udf) != "PythonUDF" or udf.name() not in _DEFERRABLE:
+        return None
+    ctor = _DEFERRABLE[udf.name()]
+    if udf.evalType() != ctor.evalType:
+        return None
+    args = []
+    for a in _seq(udf.children()):
+        if _node(a) != "AttributeReference" or a.exprId().id() not in passed:
+            return None
+        args.append(passed[a.exprId().id()])
+    return ctor, args
 
 
 def _cells_expr(pre: str, cell_size: float):
@@ -139,6 +200,21 @@ def grid_spatial_join(
     kernels by tests/test_geo_fused_pair.py); geometry columns need
     not exist on either input in this mode.
 
+    Deferred build side: when ``right_bounds`` is given, the default
+    ``st_intersects`` test applies (no ``exact_predicate``, ``distance``
+    or ``rect_exact``), the geometry names differ, and ``right_geom`` is
+    ``st_point`` / ``st_makeenvelope`` / ``st_diamond`` applied to
+    columns that ``right``'s last ``select`` passes through unchanged,
+    the geometry is built after the join instead of before it: the
+    join carries the constructor's arguments, the exact test is one
+    fused kernel ``st_intersects(left_geom, ctor(*args))`` per surviving
+    pair, and ``right_geom`` is added back as ``ctor(*args)`` in its
+    place.  The geometry bytes are identical (the same constructor on
+    the same values); a caller that uses ``right_geom`` afterwards gets
+    it built once per output pair, and Spark drops it when unused.  Any
+    other right side, or a column name on both sides, takes the plan
+    that builds the geometry first.
+
     ``rect_exact=True`` asserts both geometries ARE axis-aligned
     rectangles equal to their envelopes (e.g. both built with
     st_makeenvelope).  For rectangles the envelope-overlap prefilter is
@@ -154,6 +230,15 @@ def grid_spatial_join(
     is suffixed with `_r` when both sides use the same name).
     """
     d = float(distance) if distance is not None else 0.0
+    deferred = None
+    if (
+        right_bounds is not None
+        and exact_predicate is None
+        and distance is None
+        and not rect_exact
+        and right_geom != left_geom
+    ):
+        deferred = _deferred_constructor(right, right_geom, left.columns)
     rg = right_geom
     if right_geom == left_geom:
         rg = f"{right_geom}_r"
@@ -165,8 +250,8 @@ def grid_spatial_join(
     # pipeline was built from ~15 chained withColumn/filter calls.  The
     # same plan is now assembled from single select/filter calls per
     # logical step (identical physical plan, ~half the analysis work).
-    def _with_bounds(df, geom_col, prefix, bounds, dilate):
-        orig_cols = [F.col(c) for c in df.columns]
+    def _with_bounds(df, geom_col, prefix, bounds, dilate, keep_geom=True):
+        orig_cols = [F.col(c) for c in df.columns if keep_geom or c != geom_col]
         if bounds is not None:
             x0, y0, x1, y1 = (F.expr(b) if isinstance(b, str) else b for b in bounds)
             src = df
@@ -186,7 +271,7 @@ def grid_spatial_join(
         )
 
     L = _with_bounds(left, left_geom, "l", left_bounds, 0.0)
-    R = _with_bounds(right, rg, "r", right_bounds, d)
+    R = _with_bounds(right, rg, "r", right_bounds, d, keep_geom=deferred is None)
     if cell_size is None:
         # adaptive mode: one bounded aggregation per side picks the grid
         cell_size = _adaptive_cell_size(L, R)
@@ -211,6 +296,20 @@ def grid_spatial_join(
         out = joined.filter(exact_predicate)
     elif distance is None and rect_exact:
         out = joined  # rect x rect: bbox overlap == st_intersects
+    elif deferred is not None:
+        ctor, args = deferred
+        out = joined.filter(
+            built_intersects_udf(ctor)(F.col(left_geom), *map(F.col, args))
+        )
+        # right_geom comes back in its place, built once per output
+        # pair; Spark prunes it when the caller does not use it
+        return out.select(
+            *left.columns,
+            *(
+                ctor(*map(F.col, args)).alias(c) if c == rg else F.col(c)
+                for c in right.columns
+            ),
+        )
     elif distance is None:
         out = joined.filter(st_intersects(F.col(left_geom), F.col(rg)))
     else:

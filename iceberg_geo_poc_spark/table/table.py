@@ -233,22 +233,6 @@ class Table:
                 df = df.withColumnRenamed(log, phys)
         return df
 
-    def _file_stats(self, row) -> "M.FileStats":
-        """Manifest-entry stats with keys remapped physical -> logical so
-        predicates over renamed columns still prune (rename never
-        rewrites files or manifests; the map bridges old stats keys)."""
-        stats = M.file_stats_of(row)
-        ren = self.meta.renames
-        if not ren:
-            return stats
-        remap = lambda d: {ren.get(k, k): v for k, v in d.items()}  # noqa: E731
-        stats.lower = remap(stats.lower)
-        stats.upper = remap(stats.upper)
-        stats.nulls = remap(stats.nulls)
-        stats.bbox = remap(stats.bbox)
-        stats.nans = remap(stats.nans)
-        return stats
-
     def refresh(self) -> "Table":
         self.meta = MD.read_metadata(self.meta.location)
         return self
@@ -2189,6 +2173,14 @@ class Table:
         # limit as position deletes) — such tables still expose the
         # lineage columns to callers, but as untracked NULLs
         synth_lineage = with_lineage and fmt in ("parquet", "avro")
+        ent = entries
+        if ent is None and (with_deletes or synth_lineage):
+            ent = self._entries()
+        # only delete files need row positions: a read with none to
+        # apply references no _metadata column at all
+        with_deletes = with_deletes and bool(
+            ent.content.isin(("posdel", "dv", "eqdel")).any()
+        )
         # with_file_path keeps ONLY __file_path in the output (works on
         # every format — _metadata.file_path needs no row index), for
         # the CoW matched-file probes; with_pos keeps __file_path+__pos
@@ -2294,7 +2286,6 @@ class Table:
                 if c not in df.columns:
                     df = df.withColumn(c, F.lit(None).cast("long"))
         if with_deletes:
-            ent = entries if entries is not None else self._entries()
             dpaths = ent[ent.content == "posdel"].file_path.tolist()
             deletes = None
             if dpaths:
@@ -2334,15 +2325,20 @@ class Table:
             # synthesize from the manifest block for rows without a
             # materialized value: _row_id = first_row_id + position;
             # _last_updated defaults to the file's commit sequence
-            ent = entries if entries is not None else self._entries()
             data_ent = ent[ent.content == "data"]
-            rows = []
-            for r in data_ent.itertuples():
-                frid = getattr(r, "first_row_id", None)
-                frid = None if pd.isna(frid) else int(frid)
-                rows.append((r.file_path, frid, int(r.sequence_number)))
+            # built from pandas, the map is a local relation: a tuple
+            # list would be a Python RDD, and every job over it would
+            # start a Python worker (same for the two maps below)
+            frid = data_ent.get("first_row_id", pd.Series(pd.NA, data_ent.index))
             lmap = self.spark.createDataFrame(
-                rows, "__file_path string, __frid long, __fseq long"
+                pd.DataFrame(
+                    {
+                        "__file_path": data_ent.file_path,
+                        "__frid": frid.astype("Int64"),
+                        "__fseq": data_ent.sequence_number.astype("int64"),
+                    }
+                ),
+                "__file_path string, __frid long, __fseq long",
             )
             df = (
                 df.join(F.broadcast(lmap), "__file_path", "left")
@@ -2378,9 +2374,14 @@ class Table:
         eq = ent[ent.content == "eqdel"]
         if not len(eq):
             return df
-        data_ent = ent[ent.content == "data"][["file_path", "sequence_number"]]
+        data_ent = ent[ent.content == "data"]
         seq_df = self.spark.createDataFrame(
-            [(r.file_path, int(r.sequence_number)) for r in data_ent.itertuples()],
+            pd.DataFrame(
+                {
+                    "__file_path": data_ent.file_path,
+                    "__data_seq": data_ent.sequence_number.astype("int64"),
+                }
+            ),
             "__file_path string, __data_seq long",
         )
         df = df.join(F.broadcast(seq_df), on="__file_path", how="left")
@@ -2784,10 +2785,12 @@ class TableScan:
                 ent = self._kept_entries()
                 data_ent = ent[ent.content == "data"]
                 pmap = self.table.spark.createDataFrame(
-                    [
-                        (r.file_path, r.partition)
-                        for r in data_ent.itertuples()
-                    ],
+                    pd.DataFrame(
+                        {
+                            "__file_path": data_ent.file_path,
+                            "_partition": data_ent.partition,
+                        }
+                    ),
                     "__file_path string, _partition string",
                 )
                 df = (

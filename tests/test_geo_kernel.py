@@ -436,6 +436,75 @@ def test_fast_poly_predicate_matches_kernel():
                     )
 
 
+def test_grouped_poly_predicate_matches_generic():
+    """A point column against a polygon column of few distinct values
+    (one locate per distinct polygon) agrees with the per-pair generic
+    kernel on every predicate, in both argument orders: null rows on
+    either side, NaN and empty points, points on an edge, on a vertex
+    and on a hole's boundary, a polygon with a hole, a MultiPolygon
+    (with an empty member) and an empty polygon.  Orders the grouped
+    path does not serve (covers(point, poly) & co.) answer None."""
+    import random
+
+    from iceberg_geo_poc_spark.geo import functions as GF
+
+    polys = [
+        Polygon([(0, 0), (10, 0), (10, 10), (0, 10)],
+                holes=[[(4, 4), (6, 4), (6, 6), (4, 6)]]),
+        MultiPolygon([
+            Polygon([(0, 0), (3, 0), (3, 3), (0, 3)]),
+            Polygon([(6, 6), (9, 6), (9, 9), (6, 9)]),
+            Polygon([]),
+        ]),
+        Polygon([(5, -1), (11, 5), (5, 11), (-1, 5)]),
+        Polygon([]),
+    ]
+    poly_wkbs = [geometry_to_wkb(g) for g in polys]
+    rng = random.Random(7)
+    pts = [Point(rng.uniform(-2, 12), rng.uniform(-2, 12)) for _ in range(160)]
+    pts += [
+        Point(0.0, 0.0), Point(10.0, 10.0), Point(5.0, 0.0), Point(0.0, 5.0),
+        Point(4.0, 5.0), Point(5.0, 4.0), Point(4.0, 4.0), Point(3.0, 1.5),
+        Point(5.0, -1.0), Point(8.0, 2.0), Point(5.0, 5.0),
+        Point(float("nan"), float("nan")), Point(float("nan"), 1.0),
+    ]
+    n = len(pts) + 2
+    pt_wkbs = [geometry_to_wkb(p) for p in pts] + [None, geometry_to_wkb(Point(1, 1))]
+    # every polygon against every point, plus one null polygon row
+    gwkbs = [poly_wkbs[i % len(polys)] for i in range(n - 1)] + [None]
+    assert n >= len(polys) * GF._POLY_GROUP_MIN_ROWS
+    for layout, a in _layouts(pt_wkbs).items():
+        b = _layouts(gwkbs)[layout]
+        for name in ("intersects", "disjoint", "covers", "within", "contains"):
+            for args, poly_first in (((a, b), False), ((b, a), True)):
+                got = GF._fast_poly_predicate(name, *args)
+                served = poly_first in GF._POLY_SIDES[name]
+                assert (got is not None) == served, (layout, name, poly_first)
+                if got is not None:
+                    want = GF._predicate_generic(name, *args)
+                    assert got.to_pylist() == want.to_pylist(), (
+                        layout, name, poly_first,
+                    )
+
+
+def test_grouped_poly_predicate_falls_back_on_many_distinct():
+    """A polygon column with about one distinct value per row is not the
+    grouped path's shape: it answers None, and a constant column (one
+    group) is served even in a short batch."""
+    from iceberg_geo_poc_spark.geo import functions as GF
+
+    n = 64
+    pts = _bin([geometry_to_wkb(Point(i * 0.5, 0.5)) for i in range(n)])
+    many = _bin([geometry_to_wkb(box(i, 0, i + 1, 1)) for i in range(n)])
+    assert GF._fast_poly_predicate("intersects", pts, many) is None
+    assert GF._pair_predicate("intersects", pts, many).to_pylist() == (
+        GF._predicate_generic("intersects", pts, many).to_pylist()
+    )
+    one = _bin([geometry_to_wkb(box(0, 0, 1, 1))] * 3)
+    got = GF._fast_poly_predicate("intersects", pts.slice(0, 3), one)
+    assert got.to_pylist() == [True, True, True]
+
+
 def test_fast_rect_rect_predicate_matches_kernel():
     """Vectorized rectangle-vs-rectangle (both sides columns) must agree
     with the scalar kernel: overlapping, touching, contained, disjoint,

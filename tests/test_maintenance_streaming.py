@@ -20,6 +20,7 @@ from iceberg_geo_poc_spark.table.maintenance import (
 )
 from iceberg_geo_poc_spark.table.metadata_tables import inspect
 from iceberg_geo_poc_spark.table.stats_agg import try_stats_aggregate
+from tests.frames import frame
 
 
 @pytest.fixture()
@@ -32,7 +33,7 @@ def _mk(spark, catalog, name, n_appends=4, rows_per=10):
     base = 0
     for _ in range(n_appends):
         t.append(
-            spark.createDataFrame(
+            frame(spark,
                 [(i, f"r{i}") for i in range(base, base + rows_per)],
                 "a BIGINT, b STRING",
             ).coalesce(1)
@@ -60,7 +61,7 @@ def test_compaction_zorder(spark, catalog):
     t = catalog.create_table("cmpz", "x BIGINT, y BIGINT")
     for k in range(3):
         t.append(
-            spark.createDataFrame(
+            frame(spark,
                 [(i * 37 % 100, i * 61 % 100) for i in range(k * 20, k * 20 + 20)],
                 "x BIGINT, y BIGINT",
             ).coalesce(1)
@@ -82,7 +83,7 @@ def test_zvalue_interleave_properties(spark):
 
     from iceberg_geo_poc_spark.table.maintenance import _zvalue_column
 
-    df = spark.createDataFrame([(i, i) for i in range(100)], "x BIGINT, y BIGINT")
+    df = frame(spark, [(i, i) for i in range(100)], "x BIGINT, y BIGINT")
     vals = [
         r.z
         for r in df.select(F.col("x"), _zvalue_column(df, ["x", "y"]).alias("z"))
@@ -92,7 +93,7 @@ def test_zvalue_interleave_properties(spark):
     assert vals == sorted(vals)
     assert all(0 <= v < (1 << 62) for v in vals)
     # string columns fall back to hash bucketing: equal values equal z
-    df2 = spark.createDataFrame(
+    df2 = frame(spark,
         [("a", 1), ("a", 1), ("b", 2)], "s STRING, n BIGINT"
     )
     zs = [
@@ -125,7 +126,7 @@ def test_expire_snapshots_and_orphans(spark, catalog, tmp_path):
     import os
 
     stray = os.path.join(t.location, "data", "stray.parquet")
-    spark.createDataFrame([(1, "x")], "a BIGINT, b STRING").coalesce(1).write.mode(
+    frame(spark, [(1, "x")], "a BIGINT, b STRING").coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(t.location, "data", "straydir"))
     orphans = remove_orphan_files(t)
@@ -159,7 +160,7 @@ def test_stats_fastpath_bails_on_equality_deletes(spark, catalog):
     t = _mk(spark, catalog, "sfeq", n_appends=1, rows_per=10)
     assert try_stats_aggregate(t, ["count(*)"]) == [10]
     t.delete_by_keys(
-        spark.createDataFrame([(1,)], "a BIGINT"), key_cols=["a"]
+        frame(spark, [(1,)], "a BIGINT"), key_cols=["a"]
     )
     # equality deletes make manifest counts wrong -> must bail
     assert try_stats_aggregate(t, ["count(*)"]) is None
@@ -205,7 +206,7 @@ def test_incremental_stream_exactly_once(spark, catalog):
     seen = []
     for batch_no in range(3):
         t.append(
-            spark.createDataFrame(
+            frame(spark,
                 [(batch_no * 10 + i, "x") for i in range(10)], "a BIGINT, b STRING"
             ).coalesce(1)
         )
@@ -218,7 +219,7 @@ def test_incremental_stream_exactly_once(spark, catalog):
 def test_incremental_stream_admission_control(spark, catalog):
     t = catalog.create_table("stream2", "a BIGINT")
     for k in range(3):
-        t.append(spark.createDataFrame([(k,)], "a BIGINT").coalesce(1))
+        t.append(frame(spark, [(k,)], "a BIGINT").coalesce(1))
     stream = IncrementalStream(t, max_files_per_batch=1)
     batches = []
     while (df := stream.next_batch()) is not None:
@@ -229,9 +230,9 @@ def test_incremental_stream_admission_control(spark, catalog):
 
 def test_changelog(spark, catalog):
     t = catalog.create_table("cdc", "a BIGINT")
-    t.append(spark.createDataFrame([(1,), (2,)], "a BIGINT").coalesce(1))
+    t.append(frame(spark, [(1,), (2,)], "a BIGINT").coalesce(1))
     s1 = t.current_snapshot().snapshot_id
-    t.append(spark.createDataFrame([(3,)], "a BIGINT").coalesce(1))
+    t.append(frame(spark, [(3,)], "a BIGINT").coalesce(1))
     t.delete(E.eq("a", 1))  # rewrites file 1 -> delete + insert in changelog
     log = changelog(t, from_snapshot_id=s1)
     rows = [(r.a, r._change_type) for r in log.collect()]
@@ -290,7 +291,7 @@ def test_full_compaction_retires_equality_deletes(spark, catalog):
     from iceberg_geo_poc_spark.table.maintenance import rewrite_data_files
 
     t = _mk(spark, catalog, "ceq", n_appends=2, rows_per=10)
-    t.delete_by_keys(spark.createDataFrame([(0,), (19,)], "a BIGINT"))
+    t.delete_by_keys(frame(spark, [(0,), (19,)], "a BIGINT"))
     assert (t._entries().content == "eqdel").sum() == 1
     rewrite_data_files(t, target_file_size=10**9)
     t = catalog.load_table("ceq")
@@ -306,7 +307,7 @@ def test_runtime_filter_reprunes_files(spark, catalog):
     # 4 files with disjoint ranges of a
     for lo in (0, 100, 200, 300):
         t.append(
-            spark.createDataFrame(
+            frame(spark,
                 [(lo + i, f"r{lo+i}") for i in range(10)], "a BIGINT, b STRING"
             ).coalesce(1)
         )
@@ -331,7 +332,7 @@ def test_changelog_compute_updates(spark, catalog):
 
     t = catalog.create_table("cdcup", "a BIGINT, v DOUBLE")
     t.append(
-        spark.createDataFrame([(i, float(i)) for i in range(10)], "a BIGINT, v DOUBLE")
+        frame(spark, [(i, float(i)) for i in range(10)], "a BIGINT, v DOUBLE")
         .coalesce(1)
     )
     base = t.current_snapshot().snapshot_id
@@ -347,7 +348,7 @@ def test_changelog_compute_updates(spark, catalog):
     assert rows[(9, "update_postimage")] == 90.0
     # pure inserts stay inserts
     t2_base = t.current_snapshot().snapshot_id
-    t.append(spark.createDataFrame([(100, 1.0)], "a BIGINT, v DOUBLE"))
+    t.append(frame(spark, [(100, 1.0)], "a BIGINT, v DOUBLE"))
     net2 = compute_updates(
         changelog(t, from_snapshot_id=t2_base), identifier_columns=["a"]
     )
@@ -394,7 +395,7 @@ def test_apply_changelog_mirrors_source(spark, catalog):
     (last-writer-wins across the window, replayed via eq-delete+append)."""
     src = catalog.create_table("cdc_src", "k BIGINT, v STRING")
     mirror = catalog.create_table("cdc_dst", "k BIGINT, v STRING")
-    df0 = spark.createDataFrame(
+    df0 = frame(spark,
         [(i, f"v{i}") for i in range(10)], "k BIGINT, v STRING"
     )
     src.append(df0.coalesce(1))
@@ -403,7 +404,7 @@ def test_apply_changelog_mirrors_source(spark, catalog):
     src.delete(E.lt("k", 2))
     src.update({"v": "first"}, where=E.eq("k", 5))
     src.update({"v": "second"}, where=E.eq("k", 5))
-    src.append(spark.createDataFrame([(100, "new")], "k BIGINT, v STRING"))
+    src.append(frame(spark, [(100, "new")], "k BIGINT, v STRING"))
     stats = apply_changelog(src, mirror, ["k"], from_snapshot_id=s1)
     assert stats["deleted-keys"] >= 3
     want = sorted((r.k, r.v) for r in src.to_df().collect())
@@ -426,7 +427,7 @@ def test_python_datasource_batch_and_stream(spark, catalog, tmp_path):
     spark.dataSource.register(TableDataSource)
     t = catalog.create_table("dsrc", "a BIGINT, b STRING")
     t.append(
-        spark.createDataFrame(
+        frame(spark,
             [(i, f"r{i}") for i in range(10)], "a BIGINT, b STRING"
         ).coalesce(1)
     )
@@ -456,7 +457,7 @@ def test_python_datasource_batch_and_stream(spark, catalog, tmp_path):
     assert sorted(r.a for r in got.collect()) == list(range(10))
     # append more; a RESTARTED stream reads only the delta
     t.append(
-        spark.createDataFrame(
+        frame(spark,
             [(i, f"r{i}") for i in range(10, 15)], "a BIGINT, b STRING"
         ).coalesce(1)
     )
@@ -535,7 +536,7 @@ def test_changelog_mor_deletes_visible(spark, catalog):
     alone would miss them entirely."""
     t = catalog.create_table("cl_mor", "a BIGINT, b STRING")
     t.append(
-        spark.createDataFrame(
+        frame(spark,
             [(i, f"r{i}") for i in range(20)], "a BIGINT, b STRING"
         ).coalesce(1)
     )
@@ -555,9 +556,9 @@ def test_changelog_mixed_append_and_mor(spark, catalog):
     """Appends stay file-diff cheap; the delete commit uses the
     live-set diff; net result is exact row-level history."""
     t = catalog.create_table("cl_mix", "a BIGINT")
-    t.append(spark.createDataFrame([(i,) for i in range(5)], "a BIGINT").coalesce(1))
+    t.append(frame(spark, [(i,) for i in range(5)], "a BIGINT").coalesce(1))
     base = t.current_snapshot().snapshot_id
-    t.append(spark.createDataFrame([(i,) for i in range(5, 8)], "a BIGINT").coalesce(1))
+    t.append(frame(spark, [(i,) for i in range(5, 8)], "a BIGINT").coalesce(1))
     t.delete(E.eq("a", 6), mode="merge-on-read")
     log = changelog(t, from_snapshot_id=base).collect()
     ins = sorted(r.a for r in log if r._change_type == "insert")
@@ -571,13 +572,13 @@ def test_changelog_eq_delete_visible(spark, catalog):
     live-set diff."""
     t = catalog.create_table("cl_eq", "k BIGINT, v STRING")
     t.append(
-        spark.createDataFrame(
+        frame(spark,
             [(i, f"v{i}") for i in range(10)], "k BIGINT, v STRING"
         ).coalesce(1)
     )
     base = t.current_snapshot().snapshot_id
     t.delete_by_keys(
-        spark.createDataFrame([(2,), (7,)], "k BIGINT"), key_cols=["k"]
+        frame(spark, [(2,), (7,)], "k BIGINT"), key_cols=["k"]
     )
     log = changelog(t, from_snapshot_id=base).collect()
     assert sorted(r.k for r in log if r._change_type == "delete") == [2, 7]
@@ -617,11 +618,11 @@ def test_scd2_history_update_delete_reinsert(spark, catalog):
     from iceberg_geo_poc_spark.streaming.incremental import scd2_history
 
     t = catalog.create_table("scd2t", "k BIGINT, s STRING")
-    t.append(spark.createDataFrame(
+    t.append(frame(spark,
         [(1, "a"), (2, "b"), (3, "c")], "k BIGINT, s STRING").coalesce(1))
     t.update({"s": F.lit("a2")}, where=E.eq("k", 1), mode="merge-on-read")  # ord 2
     t.delete(E.eq("k", 2), mode="merge-on-read")                            # ord 3
-    t.append(spark.createDataFrame([(2, "b2")], "k BIGINT, s STRING").coalesce(1))  # ord 4
+    t.append(frame(spark, [(2, "b2")], "k BIGINT, s STRING").coalesce(1))  # ord 4
     hist = {
         (r.k, r.s): (r.valid_from_version, r.valid_to_version, r.is_current)
         for r in scd2_history(t, ["k"]).collect()
@@ -642,7 +643,7 @@ def test_call_create_scd2_view(spark, catalog):
     import pyspark.sql.functions as F
 
     t = catalog.create_table("scd2v", "k BIGINT, s STRING")
-    t.append(spark.createDataFrame([(1, "a"), (2, "b")], "k BIGINT, s STRING").coalesce(1))
+    t.append(frame(spark, [(1, "a"), (2, "b")], "k BIGINT, s STRING").coalesce(1))
     t.update({"s": F.lit("a2")}, where=E.eq("k", 1), mode="merge-on-read")
     df = catalog.sql(
         "CALL system.create_scd2_view(table => 'scd2v', key_cols => 'k')"
@@ -662,8 +663,8 @@ def test_streaming_overwrite_exactly_once(spark, catalog):
     import pyspark.sql.functions as F
 
     t = catalog.create_table("ow", "k STRING, n BIGINT")
-    df1 = spark.createDataFrame([("a", 1), ("b", 2)], "k STRING, n BIGINT")
-    df2 = spark.createDataFrame([("a", 5), ("b", 6), ("c", 7)], "k STRING, n BIGINT")
+    df1 = frame(spark, [("a", 1), ("b", 2)], "k STRING, n BIGINT")
+    df2 = frame(spark, [("a", 5), ("b", 6), ("c", 7)], "k STRING, n BIGINT")
     assert t.overwrite_streaming(df1, "q1", 0) is not None
     assert t.overwrite_streaming(df2, "q1", 1) is not None
     n_snaps = len(t.meta.snapshots)

@@ -486,3 +486,53 @@ def test_cow_probe_filter_pushed_to_scan(spark, tmp_path):
     probe = t._read_files(paths, with_deletes=True, with_file_path=True)
     plan = _plan(probe.filter(F.col("id") == 4))
     assert "PushedFilters: [IsNotNull(id), EqualTo(id,4)]" in plan
+
+
+def _three_file_table(spark, tmp_path, name):
+    from iceberg_geo_poc_spark.table import Catalog
+    from tests.frames import frame
+
+    cat = Catalog(str(tmp_path / "wh"), spark)
+    t = cat.create_table(name, "id BIGINT, v STRING")
+    for k in range(3):
+        t.append(frame(spark, [(3 * k + i, "abc"[i]) for i in range(3)],
+                       "id BIGINT, v STRING").coalesce(1))
+    return cat
+
+
+def test_scan_without_delete_files_reads_no_row_positions(spark, tmp_path):
+    """A scan whose files carry no delete file reads no ``_metadata``
+    columns (file path, row index); once a position delete applies, the
+    scan reads them and drops the deleted row."""
+    from iceberg_geo_poc_spark.table import E
+
+    cat = _three_file_table(spark, tmp_path, "nopos_t")
+    df = cat.load_table("nopos_t").scan().to_df()
+    assert "_metadata" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert df.count() == 9
+    cat.load_table("nopos_t").delete(E.eq("id", 4), mode="merge-on-read")
+    df = cat.load_table("nopos_t").scan().to_df()
+    assert "_metadata" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(r.id for r in df.collect()) == [0, 1, 2, 3, 5, 6, 7, 8]
+
+
+def test_per_file_broadcast_maps_are_local_relations(spark, tmp_path):
+    """The row-lineage map, the equality-delete sequence map and the
+    ``_partition`` map are built on the driver from pandas: local
+    relations, so no job over them starts a Python worker."""
+    from tests.frames import frame
+
+    cat = _three_file_table(spark, tmp_path, "maps_t")
+    t = cat.load_table("maps_t")
+    t.delete_by_keys(frame(spark, [(4,)], "id BIGINT"), key_cols=["id"])
+    t = cat.load_table("maps_t")
+    reads = {
+        "lineage": t.scan(lineage=True).to_df(),
+        "equality deletes": t.scan().to_df(),
+        "metadata columns": t.scan(metadata_columns=True).to_df(),
+    }
+    for what, df in reads.items():
+        assert sorted(r.id for r in df.collect()) == [0, 1, 2, 3, 5, 6, 7, 8], what
+        assert "ExistingRDD" not in _plan(df), what
+    ids = {r.id: r._row_id for r in reads["lineage"].collect()}
+    assert sorted(ids.values()) == sorted(set(ids.values()))
