@@ -287,6 +287,66 @@ def _fast_rect_predicate(name: str, a, b):
     return None
 
 
+# -- the same point-vs-rectangle test as a JVM expression -----------------
+#
+# When every non-null value of a column is known to be a plain point (the
+# manifest's per-file flag), st_intersects(column, rectangle) needs no
+# Python stage.  A coordinate is 8 little-endian IEEE-754 bytes at WKB
+# offset 5 (x) or 13 (y).  Decoded as ISO-8859-1 each byte becomes one
+# code point, and reversed the string reads the bits big-endian; UTF-8
+# keeps code-point order, so string order is the unsigned order of the
+# bits.  Non-negative doubles ascend with their bits and negative ones
+# descend, so a closed value range is at most two bit ranges, and NaN
+# (bits above either infinity) falls in none.
+
+
+def _bit_ranges(lo: float, hi: float) -> list[tuple[bytes, bytes]]:
+    """Closed ranges of big-endian IEEE-754 bit patterns, in unsigned
+    order, of the doubles ``v`` with ``lo <= v <= hi``: a negative part
+    ``[lo, min(hi, -0.0)]`` and a positive part ``[max(lo, +0.0), hi]``.
+    A bound at 0 of either sign admits both zeros, as ``<=`` does."""
+    def bits(v: float) -> bytes:
+        return struct.pack(">d", v)
+
+    out = []
+    if lo <= 0.0:
+        out.append((bits(-0.0 if hi >= 0.0 else hi), bits(-0.0 if lo == 0.0 else lo)))
+    if hi >= 0.0:
+        out.append((bits(0.0 if lo <= 0.0 else lo), bits(0.0 if hi == 0.0 else hi)))
+    return out
+
+
+def _coord_in(col: str, pos: int, lo: float, hi: float) -> str:
+    """SQL for ``lo <= coordinate <= hi``, the coordinate at 1-based
+    byte ``pos`` of a plain point in column ``col``.  The bounds are
+    string literals, which generated code holds by reference: one
+    compiled class serves every window with bounds of the same signs,
+    where inlined long literals would cost a compile per window."""
+    key = f"reverse(decode(substring(`{col.replace('`', '``')}`, {pos}, 8), 'ISO-8859-1'))"
+
+    def lit(b: bytes) -> str:
+        return f"decode(X'{b.hex()}', 'ISO-8859-1')"
+
+    return " OR ".join(
+        f"({key} >= {lit(a)} AND {key} <= {lit(b)})" for a, b in _bit_ranges(lo, hi)
+    )
+
+
+def st_intersects_points_rect(col: str, g: G.Geometry) -> Column | None:
+    """``st_intersects(col, g)`` as a codegen'd Catalyst expression, or
+    None when ``g`` is not an axis-aligned rectangle.  Valid only for a
+    column whose every non-null value is 21-byte little-endian point WKB
+    (header ``01 01000000``); it answers what ``_fast_rect_predicate``
+    answers for such rows, except that NULL rows give false, not NULL.
+    Built as one SQL string: one py4j call, not one per sub-expression."""
+    rect = _rect_bounds(g)
+    if rect is None or np.isnan(rect).any():
+        return None
+    xmin, ymin, xmax, ymax = rect
+    x, y = _coord_in(col, 6, xmin, xmax), _coord_in(col, 14, ymin, ymax)
+    return F.expr(f"coalesce(({x}) AND ({y}), false)")
+
+
 # -- constructors ----------------------------------------------------------
 
 def _point_arrow(x: pa.Array, y: pa.Array) -> pa.Array:

@@ -700,7 +700,7 @@ class Catalog:
             t = self.load_table(name)
 
         stats = M.harvest_stats(parquet_paths)
-        bboxes = M.compute_bboxes(self.spark, parquet_paths, t.meta.geo_fields)
+        geo = M.compute_bboxes(self.spark, parquet_paths, t.meta.geo_fields)
         # imported files come from unknown writers: pyarrow strips NaN
         # from bounds without any footer signal, so NaN counts must be
         # computed unconditionally (unlike Table._write_files, which
@@ -779,7 +779,7 @@ class Catalog:
                     "upper": canon(upper),
                     "nulls": canon(nulls),
                     "nans": canon(nan_counts.get(p, {c: 0 for c in float_cols})),
-                    "bbox": bboxes.get(p, {}),
+                    **geo.get(p, {}),
                 }
             )
         entries = M.data_entries(files, t.meta)

@@ -6,7 +6,9 @@ Expression.java:27-52 for the op set, incl. the fork's ST_INTERSECTS /
 ST_COVERS at :47-48) with three evaluators:
 
 - ``to_spark_column``  — residual row-level filter (Catalyst column;
-  geo predicates go through the pandas-UDF kernel), the analogue of
+  ``st_intersects`` of a point-only column and a rectangle is a JVM
+  comparison of the coordinate bytes, every other geo predicate goes
+  through the Arrow-UDF kernel), the analogue of
   api/.../expressions/Evaluator.java;
 - ``might_match_file`` — inclusive metrics evaluator over per-file
   stats incl. geometry bbox, the analogue of
@@ -45,7 +47,13 @@ class Expr:
     def negate(self) -> "Expr":
         return Not(self)
 
-    def to_spark_column(self, geo_encodings: "dict | None" = None) -> Column:
+    def to_spark_column(
+        self, geo_encodings: "dict | None" = None, points: frozenset = frozenset()
+    ) -> Column:
+        """The residual row filter.  ``geo_encodings`` maps geometry
+        columns to their encoding; ``points`` names the geometry columns
+        whose every non-null value in the scanned files is a plain WKB
+        point (the manifest's per-file flag)."""
         raise NotImplementedError
 
     def might_match_file(self, stats: "FileStats") -> bool:
@@ -78,7 +86,9 @@ class FileStats:
 
 @dataclass(frozen=True)
 class AlwaysTrue(Expr):
-    def to_spark_column(self, geo_encodings: "dict | None" = None) -> Column:
+    def to_spark_column(
+        self, geo_encodings: "dict | None" = None, points: frozenset = frozenset()
+    ) -> Column:
         return F.lit(True)
 
     def might_match_file(self, stats: FileStats) -> bool:
@@ -96,7 +106,9 @@ class AlwaysTrue(Expr):
 
 @dataclass(frozen=True)
 class AlwaysFalse(Expr):
-    def to_spark_column(self, geo_encodings: "dict | None" = None) -> Column:
+    def to_spark_column(
+        self, geo_encodings: "dict | None" = None, points: frozenset = frozenset()
+    ) -> Column:
         return F.lit(False)
 
     def might_match_file(self, stats: FileStats) -> bool:
@@ -117,8 +129,13 @@ class And(Expr):
     left: Expr
     right: Expr
 
-    def to_spark_column(self, geo_encodings: "dict | None" = None) -> Column:
-        return self.left.to_spark_column(geo_encodings) & self.right.to_spark_column(geo_encodings)
+    def to_spark_column(
+        self, geo_encodings: "dict | None" = None, points: frozenset = frozenset()
+    ) -> Column:
+        return (
+            self.left.to_spark_column(geo_encodings, points)
+            & self.right.to_spark_column(geo_encodings, points)
+        )
 
     def might_match_file(self, stats: FileStats) -> bool:
         return self.left.might_match_file(stats) and self.right.might_match_file(stats)
@@ -138,8 +155,13 @@ class Or(Expr):
     left: Expr
     right: Expr
 
-    def to_spark_column(self, geo_encodings: "dict | None" = None) -> Column:
-        return self.left.to_spark_column(geo_encodings) | self.right.to_spark_column(geo_encodings)
+    def to_spark_column(
+        self, geo_encodings: "dict | None" = None, points: frozenset = frozenset()
+    ) -> Column:
+        return (
+            self.left.to_spark_column(geo_encodings, points)
+            | self.right.to_spark_column(geo_encodings, points)
+        )
 
     def might_match_file(self, stats: FileStats) -> bool:
         return self.left.might_match_file(stats) or self.right.might_match_file(stats)
@@ -158,8 +180,10 @@ class Or(Expr):
 class Not(Expr):
     child: Expr
 
-    def to_spark_column(self, geo_encodings: "dict | None" = None) -> Column:
-        return ~self.child.to_spark_column(geo_encodings)
+    def to_spark_column(
+        self, geo_encodings: "dict | None" = None, points: frozenset = frozenset()
+    ) -> Column:
+        return ~self.child.to_spark_column(geo_encodings, points)
 
     def might_match_file(self, stats: FileStats) -> bool:
         # inclusive NOT: cannot prune unless the child strictly matches
@@ -210,7 +234,9 @@ class Predicate(Expr):
         return Not(self)
 
     # -- row-level (residual) -------------------------------------------
-    def to_spark_column(self, geo_encodings: "dict | None" = None) -> Column:
+    def to_spark_column(
+        self, geo_encodings: "dict | None" = None, points: frozenset = frozenset()
+    ) -> Column:
         c = F.col(self.column)
         op, v = self.op, self.value
         if op == "eq":
@@ -401,6 +427,12 @@ class SpatialPredicate(Expr):
     InclusiveMetricsEvaluator.java:485-542: intersects prunes when the
     file bbox is disjoint from the query envelope; covers prunes when
     the file bbox cannot cover the query envelope.
+
+    The row-level form is 2-valued: a NULL geometry row gives false, so
+    ``NOT`` is its exact complement (``_null_safe_complement``).
+    ``st_intersects`` of a column in ``points`` with an axis-aligned
+    rectangle runs in the JVM (``functions.st_intersects_points_rect``);
+    every other case runs the Arrow kernel, which gives the same rows.
     """
 
     op: str  # "st_intersects" | "st_covers"
@@ -410,14 +442,21 @@ class SpatialPredicate(Expr):
     def references(self) -> set[str]:
         return {self.column}
 
-    def to_spark_column(self, geo_encodings: "dict | None" = None) -> Column:
+    def to_spark_column(
+        self, geo_encodings: "dict | None" = None, points: frozenset = frozenset()
+    ) -> Column:
         from iceberg_geo_poc_spark.geo.functions import (
             as_wkb,
             geo_literal,
             st_covers_udf,
+            st_intersects_points_rect,
             st_intersects_udf,
         )
 
+        if self.op == "st_intersects" and self.column in points:
+            cond = st_intersects_points_rect(self.column, self.value)
+            if cond is not None:
+                return cond
         lit = geo_literal(self.value)
         # wkt/geojson columns are STRING physically: decode to WKB first
         # (reference readers decode by declared encoding the same way,
@@ -458,8 +497,9 @@ def _null_safe_complement(e: Expr) -> bool:
     """True when ``NOT(e)`` is an exact row-set complement even on NULL
     input — i.e. ``e`` is 2-valued: it evaluates NULL input to a definite
     boolean.  Spatial predicates qualify because ``to_spark_column``
-    wraps them as ``cond.isNotNull() & cond``; null-test predicates are
-    2-valued by definition."""
+    wraps them as ``cond.isNotNull() & cond`` (the JVM point form as
+    ``coalesce(cond, false)``); null-test predicates are 2-valued by
+    definition."""
     if isinstance(e, (AlwaysTrue, AlwaysFalse, SpatialPredicate)):
         return True
     if isinstance(e, Predicate):

@@ -19,7 +19,13 @@ Stats sourcing:
   reduction, ``arrow_bbox``: on the driver over the just-written files
   of a small write, inside the write task for Arrow-written files;
   a write above ``BBOX_DRIVER_MAX_BYTES`` of geometry runs one
-  distributed aggregation grouped by input file instead.
+  distributed aggregation grouped by input file instead;
+- the same pass records, per WKB/EWKB geometry column, whether every
+  non-null value is a plain point (21 bytes, little-endian XY, header
+  ``01 01000000``).  A scan whose kept files all carry the flag runs
+  ``st_intersects`` against a rectangle in the JVM instead of Python.
+  A missing flag (string encodings, other writers, older manifests)
+  means unknown.
 
 Whatever the source, ``data_entries`` is the one place a data file's
 raw stats become a manifest entry, under the table's metrics policy.
@@ -59,6 +65,7 @@ MANIFEST_COLUMNS = [
     "nulls",  # JSON {col: null_count}
     "nans",  # JSON {col: nan_count} — float/double columns only
     "bbox",  # JSON {geo_col: [xmin, ymin, xmax, ymax]}
+    "points",  # JSON {geo_col: bool} — every non-null value a plain XY point
     "eq_cols",  # JSON [col, ...] — equality-delete key columns (eqdel only)
     "dv",  # JSON {referenced, offset, length} — deletion-vector blob ref (dv only)
     "first_row_id",  # row-lineage block start (data entries; null until assigned)
@@ -328,6 +335,8 @@ def float_columns(df) -> list[str]:
 BBOX_DRIVER_MAX_BYTES = 64 << 20
 
 _BOUNDS = ("xmin", "ymin", "xmax", "ymax")
+# encodings stored as WKB bytes: the only ones with a point flag
+_WKB_ENCODINGS = (None, "wkb", "ewkb")
 
 
 def compute_bboxes(
@@ -336,9 +345,11 @@ def compute_bboxes(
     geo_fields: dict[str, str],
     schema_ddl: str | None = None,
 ):
-    """Per-file geometry bboxes of parquet files:
-    {file_path: {geo_col: [xmin, ymin, xmax, ymax] | None}}.  Files
-    without rows are left out.
+    """Per-file geometry stats of parquet files: {file_path: {"bbox":
+    {geo_col: [xmin, ymin, xmax, ymax] | None}, "points": {geo_col:
+    bool}}}, the two raw-stats fields :func:`data_entries` reads.
+    ``points`` covers the WKB/EWKB columns only (:func:`arrow_bbox`).
+    Files without rows are left out.
 
     Two paths give the same values:
 
@@ -367,10 +378,12 @@ def compute_bboxes(
             if not meta.num_rows:
                 continue
             with pq.ParquetFile(_parquet_source(p), metadata=meta) as f:
-                out[p] = {
-                    c: arrow_bbox(_row_group_chunks(f, c), enc)
-                    for c, enc in geo_fields.items()
-                }
+                out[p] = _geo_stats(
+                    {
+                        c: arrow_bbox(_row_group_chunks(f, c), enc)
+                        for c, enc in geo_fields.items()
+                    }
+                )
         return out
     import pyspark.sql.functions as F
 
@@ -382,12 +395,26 @@ def compute_bboxes(
     out = {}
     for row in _bbox_frame(df, geo_fields).collect():
         d = row.asDict()
-        bboxes = {}
-        for col in geo_fields:
+        per_col = {}
+        for col, enc in geo_fields.items():
             vals = [d[f"{col}__{k}"] for k in _BOUNDS]
-            bboxes[col] = None if None in vals else [float(v) for v in vals]
-        out[_strip_scheme(d["__file"])] = bboxes
+            bbox = None if None in vals else [float(v) for v in vals]
+            points = None
+            if enc in _WKB_ENCODINGS:
+                # min over no non-null row is NULL: vacuously point-only
+                points = d[f"{col}__points"] is not False
+            per_col[col] = (bbox, points)
+        out[_strip_scheme(d["__file"])] = _geo_stats(per_col)
     return out
+
+
+def _geo_stats(per_col: dict) -> dict:
+    """The raw-stats fields of {geo_col: (bbox, points)}: ``bbox`` for
+    every column, ``points`` where the flag is known."""
+    return {
+        "bbox": {c: b for c, (b, _) in per_col.items()},
+        "points": {c: p for c, (_, p) in per_col.items() if p is not None},
+    }
 
 
 def _parquet_source(path: str):
@@ -427,15 +454,18 @@ def _row_group_chunks(f: pq.ParquetFile, col: str):
         yield from f.read_row_group(i, columns=[col]).column(0).chunks
 
 
-def arrow_bbox(chunks, enc: str | None) -> list[float] | None:
-    """``[xmin, ymin, xmax, ymax]`` of one geometry column stored in
-    encoding ``enc``, or None when no row has an envelope.  ``chunks``
+def arrow_bbox(chunks, enc: str | None) -> tuple[list[float] | None, bool | None]:
+    """``([xmin, ymin, xmax, ymax], points)`` of one geometry column
+    stored in encoding ``enc``.  The bbox is None when no row has an
+    envelope; ``points`` says whether every non-null value is a plain
+    21-byte little-endian XY point (true when there is none), and is
+    None for wkt/geojson, whose stored strings are no WKB.  ``chunks``
     are its pa.Arrays: a ChunkedArray's ``.chunks``, or one array per
     row group.  wkt/geojson rows are re-encoded to WKB first; each
-    chunk's envelopes come from ``_bounds_cols``, the kernel of the
-    Hilbert key.  Null and empty rows reach it as NaN and are dropped,
-    and each bound reduces on its own, as the aggregate of
-    :func:`_bbox_frame` does.  Called on the driver by
+    chunk's envelopes come from ``_points_xy`` or ``_bounds_cols``, the
+    kernels of the Hilbert key.  Null and empty rows reach them as NaN
+    and are dropped, and each bound reduces on its own, as the
+    aggregate of :func:`_bbox_frame` does.  Called on the driver by
     :func:`compute_bboxes` and inside the modular-encryption write
     task."""
     import numpy as np
@@ -443,26 +473,33 @@ def arrow_bbox(chunks, enc: str | None) -> list[float] | None:
 
     from iceberg_geo_poc_spark.geo.functions import (
         _bounds_cols,
+        _points_xy,
         decode_enc,
         encode_enc,
     )
 
     acc = [np.nan] * 4
     reducers = (np.fmin, np.fmin, np.fmax, np.fmax)
+    points = True if enc in _WKB_ENCODINGS else None
     for arr in chunks:
         if not len(arr):
             continue
-        if enc not in (None, "wkb", "ewkb"):
+        if enc not in _WKB_ENCODINGS:
             arr = pa.array(
                 [encode_enc(decode_enc(v, enc), "wkb") for v in arr.to_pylist()],
                 type=pa.binary(),
             )
-        b = _bounds_cols(arr)
+        pts = _points_xy(arr)
+        points = points and pts is not None
+        if pts is None:
+            b = _bounds_cols(arr)
+        else:
+            x, y, _mask = pts
+            b = {"xmin": x, "ymin": y, "xmax": x, "ymax": y}
         # fmin/fmax skip NaN: an all-NaN chunk leaves the bound as it was
         acc = [f(a, f.reduce(b[k])) for a, f, k in zip(acc, reducers, _BOUNDS)]
-    if np.isnan(acc).any():
-        return None
-    return [float(v) for v in acc]
+    bbox = None if np.isnan(acc).any() else [float(v) for v in acc]
+    return bbox, points
 
 
 def arrow_stats(tbl) -> tuple[dict, dict, dict, dict]:
@@ -510,8 +547,8 @@ def write_data_file(
 ) -> dict:
     """Write ``tbl`` through ``write_file(path, tbl)`` and return the
     file's raw stats — the input of :func:`data_entries`: stats from
-    :func:`arrow_stats`, the bboxes of the ``geo_fields`` columns
-    ({column: encoding}) from :func:`arrow_bbox`."""
+    :func:`arrow_stats`, the bboxes and point flags of the
+    ``geo_fields`` columns ({column: encoding}) from :func:`arrow_bbox`."""
     write_file(path, tbl)
     lower, upper, nulls, nans = arrow_stats(tbl)
     return {
@@ -523,10 +560,12 @@ def write_data_file(
         "upper": upper,
         "nulls": nulls,
         "nans": nans,
-        "bbox": {
-            c: arrow_bbox(tbl.column(c).chunks, enc)
-            for c, enc in (geo_fields or {}).items()
-        },
+        **_geo_stats(
+            {
+                c: arrow_bbox(tbl.column(c).chunks, enc)
+                for c, enc in (geo_fields or {}).items()
+            }
+        ),
     }
 
 
@@ -602,9 +641,10 @@ METRICS_MAX_COLS_PROP = "write.metadata.metrics.max-inferred-column-defaults"
 def data_entries(files: list[dict], meta) -> list[dict]:
     """Manifest entries (no sequence number or snapshot) for written
     data files, from their raw stats (the dicts of
-    :func:`write_data_file`; ``partition``, ``nans`` and ``bbox`` may be
-    missing).  Every producer of data entries comes through here, so the
-    table's metrics policy holds whichever writer made the file:
+    :func:`write_data_file`; ``partition``, ``nans``, ``bbox`` and
+    ``points`` may be missing).  Every producer of data entries comes
+    through here, so the table's metrics policy holds whichever writer
+    made the file:
 
     - only the first ``write.metadata.metrics.max-inferred-column-defaults``
       (default 100) schema columns keep stats (reference TableProperties
@@ -645,6 +685,7 @@ def data_entries(files: list[dict], meta) -> list[dict]:
                 "nulls": json.dumps(nulls),
                 "nans": json.dumps(nans),
                 "bbox": json.dumps(f.get("bbox", {})),
+                "points": json.dumps(f.get("points", {})),
             }
         )
     return entries
@@ -657,7 +698,10 @@ def _bbox_frame(df, geo_fields: dict[str, str]):
     projection collapse cannot clone the decode per extracted field),
     then codegen min/max over its fields — the one-envelope-per-geometry
     shape of the reference's metrics writer
-    (core/.../havasu/GeometryFieldMetrics.java:58-88)."""
+    (core/.../havasu/GeometryFieldMetrics.java:58-88).  A WKB/EWKB
+    column also gets ``<col>__points``: the min of a per-row JVM test
+    for a plain point (NULL rows stay NULL, so a file of nulls reads
+    NULL)."""
     import pyspark.sql.functions as F
 
     from iceberg_geo_poc_spark.geo.functions import (
@@ -665,6 +709,7 @@ def _bbox_frame(df, geo_fields: dict[str, str]):
         st_bounds_once_udf,
     )
 
+    header = F.lit(bytearray(b"\x01\x01\x00\x00\x00"))
     bounds, aggs = [], []
     for i, (col, enc) in enumerate(geo_fields.items()):
         bounds.append(st_bounds_once_udf(as_wkb(col, enc)).alias(f"__bounds{i}"))
@@ -675,6 +720,11 @@ def _bbox_frame(df, geo_fields: dict[str, str]):
             F.max(b.getField("xmax")).alias(f"{col}__xmax"),
             F.max(b.getField("ymax")).alias(f"{col}__ymax"),
         ]
+        if enc in _WKB_ENCODINGS:
+            g = F.col(col)
+            is_point = (F.length(g) == 21) & (F.substring(g, 1, 5) == header)
+            bounds.append(is_point.alias(f"__points{i}"))
+            aggs.append(F.min(f"__points{i}").alias(f"{col}__points"))
     return df.select("__file", *bounds).groupBy("__file").agg(*aggs)
 
 
@@ -712,6 +762,7 @@ def entries_dataframe(entries: list[dict]) -> pd.DataFrame:
 #   lo__<col> / hi__<col>  — min/max (numbers, strings, bools)
 #   nu__<col>              — null count (float64; NaN = unknown)
 #   bb__<col>__{x0,y0,x1,y1} — geometry bbox corners (float64; NaN = none)
+#   pt__<col>              — point-only flag (float64 1/0; NaN = unknown)
 # Old manifests are upgraded transparently on read (once, cached).
 
 _FLAT_MARKER = "__flat"
@@ -801,6 +852,12 @@ def ensure_flat_stats(df: pd.DataFrame) -> pd.DataFrame:
         else [{} for _ in lowers]
     )
     bboxes = [json.loads(s) if s else {} for s in df["bbox"]]
+    pointss = (
+        # delete entries and manifests older than the flag hold no JSON
+        [json.loads(s) if isinstance(s, str) and s else {} for s in df["points"]]
+        if "points" in df.columns
+        else [{} for _ in lowers]
+    )
     cols: set[str] = set()
     for d in lowers:
         cols.update(d)
@@ -831,6 +888,8 @@ def ensure_flat_stats(df: pd.DataFrame) -> pd.DataFrame:
             flat[f"bb__{c}__{corner}"] = pd.array(
                 [None if v is None else v[i] for v in vals], dtype="float64"
             )
+    for c in sorted({c for d in pointss for c in d}):
+        flat[f"pt__{c}"] = pd.array([d.get(c) for d in pointss], dtype="float64")
     out = df.copy()
     for k, v in flat.items():
         out[k] = v

@@ -834,8 +834,8 @@ class Table:
     def _write_spark_files(self, df, out, stage, fmt, pcols) -> list[dict]:
         """Spark's own parquet/ORC writer; the raw stats of its files
         come from the footers (ORC: one distributed aggregation), the
-        bboxes from ``M.compute_bboxes``, the NaN counts from
-        ``M.compute_nan_counts``.  Empty task outputs are removed."""
+        bboxes and point flags from ``M.compute_bboxes``, the NaN counts
+        from ``M.compute_nan_counts``.  Empty task outputs are removed."""
         writer = out.write.format(fmt)
         if fmt == "parquet":
             # bloom-filter passthrough (reference TableProperties
@@ -868,7 +868,7 @@ class Table:
             # no cheap footer API for ORC under pyarrow: one distributed
             # per-file aggregation supplies the same manifest stats
             stats = M.harvest_stats_spark(self.spark, paths, fmt, self.meta.schema_ddl)
-        bboxes = M.compute_bboxes(
+        geo = M.compute_bboxes(
             self.spark, paths, self.meta.geo_fields, schema_ddl=self.meta.schema_ddl
         )
         # nan_value_counts for float/double columns (reference
@@ -907,7 +907,7 @@ class Table:
                     "upper": upper,
                     "nulls": nulls,
                     "nans": nan_counts.get(p, {}),
-                    "bbox": bboxes.get(p, {}),
+                    **geo.get(p, {}),
                 }
             )
         return files
@@ -2326,11 +2326,11 @@ class Table:
             # materialized value: _row_id = first_row_id + position;
             # _last_updated defaults to the file's commit sequence
             data_ent = ent[ent.content == "data"]
-            # built from pandas, the map is a local relation: a tuple
-            # list would be a Python RDD, and every job over it would
-            # start a Python worker (same for the two maps below)
+            # a local relation (``_local_frame``), as are the two maps
+            # below
             frid = data_ent.get("first_row_id", pd.Series(pd.NA, data_ent.index))
-            lmap = self.spark.createDataFrame(
+            lmap = _local_frame(
+                self.spark,
                 pd.DataFrame(
                     {
                         "__file_path": data_ent.file_path,
@@ -2375,7 +2375,8 @@ class Table:
         if not len(eq):
             return df
         data_ent = ent[ent.content == "data"]
-        seq_df = self.spark.createDataFrame(
+        seq_df = _local_frame(
+            self.spark,
             pd.DataFrame(
                 {
                     "__file_path": data_ent.file_path,
@@ -2573,6 +2574,10 @@ class TableScan:
         self._entries_cache: pd.DataFrame | None = None
         self._residual_noop: bool = False
         self._kept_manifests: list[str] | None = None
+        # geometry columns whose every kept file the manifest flags as
+        # point-only (the residual's JVM form); distributed planning
+        # leaves it empty
+        self._points: frozenset = frozenset()
 
     def with_runtime_filter(self, column: str, values) -> "TableScan":
         """Runtime re-pruning with an IN set discovered mid-query — the
@@ -2593,7 +2598,9 @@ class TableScan:
         file fully matches the predicate, the residual row filter is
         provably a no-op and ``to_df`` elides it (the reference's
         ResidualEvaluator returning alwaysTrue per file — SURVEY §2.2 —
-        collapsed to the whole-scan case)."""
+        collapsed to the whole-scan case).  And it reads the kept
+        files' point-only flags for the geometry columns the predicate
+        references."""
         if self._planned is None:
             import time as _time
 
@@ -2712,6 +2719,14 @@ class TableScan:
                 strict = V.all_match(self.where, sv)
                 self._planned = list(data.file_path.to_numpy()[keep])
                 self._residual_noop = bool(strict[keep].all())
+                if keep.any():
+                    geo_refs = self.where.references() & self.table.geo_fields.keys()
+                    flags = {c: sv.points(c) for c in geo_refs}
+                    self._points = frozenset(
+                        c
+                        for c, f in flags.items()
+                        if f is not None and (f[keep] == 1).all()
+                    )
                 kept_size = int(data.file_size.to_numpy()[keep].sum()) if len(data) else 0
             _report(
                 total_data_files=int(len(data)),
@@ -2784,7 +2799,8 @@ class TableScan:
                 # entry, attached with one broadcast map (n_files rows)
                 ent = self._kept_entries()
                 data_ent = ent[ent.content == "data"]
-                pmap = self.table.spark.createDataFrame(
+                pmap = _local_frame(
+                    self.table.spark,
                     pd.DataFrame(
                         {
                             "__file_path": data_ent.file_path,
@@ -2800,10 +2816,25 @@ class TableScan:
                 )
             if self.where is not None and not self._residual_noop:
                 # inclusive pruning => full predicate re-applied as residual
-                df = df.filter(self.where.to_spark_column(self.table.geo_fields))
+                df = df.filter(
+                    self.where.to_spark_column(self.table.geo_fields, self._points)
+                )
         if self.select:
             df = df.select(*self.select)
         return df
+
+
+def _local_frame(spark: SparkSession, pdf: pd.DataFrame, ddl: str) -> DataFrame:
+    """The rows of ``pdf`` under the schema ``ddl`` as a local relation.
+    A tuple list would be a Python RDD, and every job over it would
+    start a Python worker.  An EMPTY pandas frame becomes an RDD scan
+    too, and broadcasting it runs a job; without rows the frame is the
+    ``limit(0)`` of one all-null row, an empty local relation that the
+    optimizer folds out of a join."""
+    if len(pdf):
+        return spark.createDataFrame(pdf, ddl)
+    nulls = pd.DataFrame([[None] * len(pdf.columns)], columns=pdf.columns)
+    return spark.createDataFrame(nulls, ddl).limit(0)
 
 
 # Driver-side Arrow reads exist ONLY for stores Spark itself cannot

@@ -61,6 +61,11 @@ class StatsView:
         s = self._series("na", col)
         return None if s is None else s.to_numpy(dtype="float64")
 
+    def points(self, col: str) -> np.ndarray | None:
+        """Point-only flags (float64 1/0; NaN = unknown)."""
+        s = self._series("pt", col)
+        return None if s is None else s.to_numpy(dtype="float64")
+
     def bbox(self, col: str):
         phys = self._phys.get(col, col)
         out = []

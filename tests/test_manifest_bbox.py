@@ -1,7 +1,9 @@
-"""Manifest geometry bboxes: the driver-side Arrow reduction of a small
-write equals the distributed ``_bbox_frame`` aggregation, which stays
-the reference, on every shape, encoding and file layout; a write above
-``BBOX_DRIVER_MAX_BYTES`` takes the Spark path."""
+"""Manifest geometry bboxes and point-only flags: the driver-side Arrow
+reduction of a small write equals the distributed ``_bbox_frame``
+aggregation, which stays the reference, on every shape, encoding and
+file layout; a write above ``BBOX_DRIVER_MAX_BYTES`` takes the Spark
+path; the encrypted in-task writer records the same flags; a rename
+and a compaction keep them."""
 
 from __future__ import annotations
 
@@ -41,6 +43,14 @@ SHAPES = {
 @pytest.fixture()
 def catalog(spark, tmp_path):
     return Catalog(str(tmp_path / "wh"), spark)
+
+
+def _recorded(entries) -> dict:
+    """{file_path: the geometry stats its manifest entry records}."""
+    return {
+        r.file_path: {"bbox": json.loads(r.bbox), "points": json.loads(r.points)}
+        for r in entries.itertuples()
+    }
 
 
 def _jobs(spark, fn):
@@ -89,15 +99,28 @@ def test_driver_bboxes_equal_spark_aggregate(spark, catalog, monkeypatch, enc):
     fields, ddl = t.meta.geo_fields, t.meta.schema_ddl
     driver, jobs = _jobs(spark, lambda: M.compute_bboxes(spark, paths, fields, ddl))
     assert jobs == 0
-    # the write recorded the driver path's bboxes
-    assert {r.file_path: json.loads(r.bbox) for r in entries.itertuples()} == driver
+    # the write recorded the driver path's bboxes and flags
+    assert _recorded(entries) == driver
     monkeypatch.setattr(M, "BBOX_DRIVER_MAX_BYTES", 0)
     ref, jobs = _jobs(spark, lambda: M.compute_bboxes(spark, paths, fields, ddl))
     assert jobs > 0
     assert driver == ref
-    by_grp = {
-        json.loads(r.partition)["grp"]: driver[r.file_path] for r in entries.itertuples()
-    }
+    grp_of = {r.file_path: json.loads(r.partition)["grp"] for r in entries.itertuples()}
+    by_grp = {grp_of[p]: d["bbox"] for p, d in driver.items()}
+    flags = {grp_of[p]: d["points"] for p, d in driver.items()}
+    # g2 is plain wkb points everywhere (NaN coordinates included); g1
+    # has a flag only when stored as WKB bytes, and EWKB carries an SRID
+    assert all(f["g2"] is True for f in flags.values())
+    if enc == "wkb":
+        assert {g: f["g1"] for g, f in flags.items()} == {
+            "pts": True, "polys": False, "mixed": False, "nulls": True, "empties": True,
+        }
+    elif enc == "ewkb":
+        assert {g: f["g1"] for g, f in flags.items()} == {
+            "pts": False, "polys": False, "mixed": False, "nulls": True, "empties": False,
+        }
+    else:
+        assert all("g1" not in f for f in flags.values())
     assert by_grp["pts"]["g1"] == [-3.0, -3.0, 4.5, 2.0]
     assert by_grp["polys"]["g1"] == [-20.0, -1.0, 11.0, 11.0]
     assert by_grp["mixed"]["g1"] == [-1.0, -7.0, 7.0, 3.0]
@@ -114,7 +137,7 @@ def test_arrow_bbox_reduces_across_chunks():
     vals = [encode(g, "wkb") for g in SHAPES["pts"] + SHAPES["polys"]]
     vals += [None, encode(EMPTY, "wkb"), HALF_NAN["wkb"]]
     whole = M.arrow_bbox([pa.array(vals, type=pa.binary())], "wkb")
-    assert whole == [-20.0, -3.0, 11.0, 11.0]
+    assert whole == ([-20.0, -3.0, 11.0, 11.0], False)
     chunks = [
         pa.array(vals[:4], type=pa.binary()),
         pa.array([], type=pa.binary()),
@@ -122,8 +145,10 @@ def test_arrow_bbox_reduces_across_chunks():
         pa.array(vals[4:], type=pa.large_binary()),
     ]
     assert M.arrow_bbox(chunks, "wkb") == whole
-    assert M.arrow_bbox(pa.chunked_array(chunks[1:3]).chunks, "wkb") is None
-    assert M.arrow_bbox([], "wkt") is None
+    # only the point chunk and null ones: point-only, wherever they sit
+    assert M.arrow_bbox(chunks[:3], "wkb") == ([-3.0, -1.0, 1.5, 2.0], True)
+    assert M.arrow_bbox(pa.chunked_array(chunks[1:3]).chunks, "wkb") == (None, True)
+    assert M.arrow_bbox([], "wkt") == (None, None)
 
 
 def test_bbox_write_above_cap_takes_spark_path(spark, catalog, monkeypatch):
@@ -151,4 +176,75 @@ def test_bbox_write_above_cap_takes_spark_path(spark, catalog, monkeypatch):
     driver = M.compute_bboxes(
         spark, list(entries.file_path), t.meta.geo_fields, t.meta.schema_ddl
     )
-    assert {r.file_path: json.loads(r.bbox) for r in entries.itertuples()} == driver
+    assert _recorded(entries) == driver
+    assert all(d["points"] == {"geom": True} for d in driver.values())
+
+
+def _flag_table(spark, catalog, name, props=None):
+    """A wkb table partitioned by ``grp``: one file of points (with a
+    null and an empty point), one that also holds a polygon."""
+    from tests.frames import frame
+
+    ddl = "id BIGINT, grp STRING, geom BINARY"
+    t = catalog.create_table(
+        name,
+        ddl,
+        partition_by=[("grp", "identity")],
+        geometry_columns={"geom": "wkb"},
+        properties=props or {},
+    )
+    rows = [(i, "pts", encode(Point(i, -i), "wkb")) for i in range(4)]
+    rows += [(4, "pts", None), (5, "pts", encode(EMPTY, "wkb"))]
+    rows += [(6, "mixed", encode(Point(1.0, 1.0), "wkb")),
+             (7, "mixed", encode(box(0.0, 0.0, 1.0, 1.0), "wkb"))]
+    t.append(frame(spark, rows, ddl))
+    return catalog.load_table(name)
+
+
+def _flags_by_grp(t) -> dict:
+    ent = t._entries()
+    data = ent[ent.content == "data"]
+    return {
+        json.loads(r.partition)["grp"]: json.loads(r.points) for r in data.itertuples()
+    }
+
+
+def test_encrypted_writer_records_the_same_point_flags(spark, catalog):
+    """The modular-encryption writer computes the flags in its write
+    task; they equal the plain writer's for the same rows."""
+    from iceberg_geo_poc_spark.table import parquet_crypto as PC
+
+    PC.register_master_key("k_points", bytes(range(16)))
+    plain = _flag_table(spark, catalog, "flags_plain")
+    sealed = _flag_table(
+        spark, catalog, "flags_enc", {"write.parquet.encryption.footer-key": "k_points"}
+    )
+    want = {"pts": {"geom": True}, "mixed": {"geom": False}}
+    assert _flags_by_grp(plain) == want
+    assert _flags_by_grp(sealed) == want
+
+
+def test_rename_and_compaction_keep_point_flags(spark, catalog):
+    """Flags are keyed by physical name: a renamed geometry column still
+    finds them, and a compaction records them for the files it writes."""
+    from iceberg_geo_poc_spark.table import E
+    from iceberg_geo_poc_spark.table import maintenance as MT
+
+    _flag_table(spark, catalog, "flags_ren")
+    t = catalog.rename_column("flags_ren", "geom", "shape")
+    pts_only = E.eq("grp", "pts") & E.st_intersects("shape", box(0.5, -5.0, 5.0, -0.5))
+    scan = t.scan(where=pts_only)
+    scan.files()
+    assert scan._points == {"shape"}
+    assert sorted(r.id for r in scan.to_df().collect()) == [1, 2, 3]
+    before = set(t._entries().file_path)
+    MT.rewrite_data_files(t, strategy="binpack")
+    t = catalog.load_table("flags_ren")
+    ent = t._entries()
+    assert (ent.content == "data").sum() == 2
+    assert not before & set(ent.file_path)
+    assert _flags_by_grp(t) == {"pts": {"geom": True}, "mixed": {"geom": False}}
+    scan = t.scan(where=pts_only)
+    scan.files()
+    assert scan._points == {"shape"}
+    assert sorted(r.id for r in scan.to_df().collect()) == [1, 2, 3]

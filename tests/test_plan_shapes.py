@@ -536,3 +536,109 @@ def test_per_file_broadcast_maps_are_local_relations(spark, tmp_path):
         assert "ExistingRDD" not in _plan(df), what
     ids = {r.id: r._row_id for r in reads["lineage"].collect()}
     assert sorted(ids.values()) == sorted(set(ids.values()))
+
+
+def test_lineage_map_without_data_rows_runs_no_job(spark, tmp_path):
+    """A per-file broadcast map with no rows is an empty local relation:
+    the optimizer drops its join, so the read runs the jobs of a read
+    without the map."""
+    import uuid
+
+    cat = _three_file_table(spark, tmp_path, "nomap_t")
+    t = cat.load_table("nomap_t")
+    ent = t._entries()
+    paths = list(ent.file_path)
+    sc = spark.sparkContext
+
+    def jobs(df) -> int:
+        group = f"nomap-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "empty map")
+        try:
+            df.collect()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+
+    no_map = t._read_files(paths, with_pos=True)
+    empty_map = t._read_files(paths, entries=ent.iloc[:0], with_lineage=True)
+    assert "ExistingRDD" not in _plan(empty_map)
+    assert jobs(empty_map) == jobs(no_map)
+
+
+def _point_table(spark, tmp_path):
+    """A wkb point table of 2,000 rows in four files, with its
+    coordinates as columns."""
+    import numpy as np
+    import pandas as pd
+
+    from iceberg_geo_poc_spark.geo import Point, geometry_to_wkb
+    from iceberg_geo_poc_spark.table import Catalog
+
+    rng = np.random.default_rng(7)
+    x, y = rng.uniform(0, 20, 2000), rng.uniform(0, 20, 2000)
+    pdf = pd.DataFrame({
+        "id": np.arange(len(x)), "x": x, "y": y,
+        "geom": [bytearray(geometry_to_wkb(Point(a, b))) for a, b in zip(x, y)],
+    })
+    cat = Catalog(str(tmp_path / "wh"), spark)
+    t = cat.create_table(
+        "pts", "id BIGINT, x DOUBLE, y DOUBLE, geom BINARY",
+        geometry_columns={"geom": "wkb"},
+    )
+    t.append(spark.createDataFrame(pdf, "id BIGINT, x DOUBLE, y DOUBLE, geom BINARY")
+             .repartition(4))
+    return cat.load_table("pts"), x, y
+
+
+def test_window_count_over_points_runs_no_python(spark, tmp_path):
+    """The window residual over a point-only table is codegen'd JVM
+    comparison: no ArrowEvalPython node."""
+    import pyspark.sql.functions as F
+
+    from iceberg_geo_poc_spark.geo import box
+    from iceberg_geo_poc_spark.table import E
+
+    t, x, y = _point_table(spark, tmp_path)
+    counted = (
+        t.scan(where=E.st_intersects("geom", box(3.0, 4.0, 9.0, 8.5)))
+        .to_df()
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    assert counted.collect()[0]["n"] == int(
+        ((x >= 3) & (x <= 9) & (y >= 4) & (y <= 8.5)).sum()
+    )
+    assert _plan(counted).count("ArrowEvalPython") == 0
+
+
+def test_zone_join_keeps_one_python_node(spark, tmp_path):
+    """A zone join over a window scan of points: the window residual
+    runs in the JVM, so the one Python node is the fused pair kernel."""
+    import numpy as np
+    import pandas as pd
+
+    from iceberg_geo_poc_spark.geo import box
+    from iceberg_geo_poc_spark.geo import spatial_join as SJ
+    from iceberg_geo_poc_spark.geo.functions import st_diamond
+    from iceberg_geo_poc_spark.table import E
+
+    t, x, y = _point_table(spark, tmp_path)
+    zones = pd.DataFrame({"zid": np.arange(5), "cx": [5.0, 6, 7, 8, 9],
+                          "cy": [5.0, 7, 6, 8, 9], "r": [0.5, 1, 1.5, 0.7, 1.2]})
+    zones_df = spark.createDataFrame(zones).select(
+        "zid", "cx", "cy", "r", st_diamond("cx", "cy", "r").alias("zgeom")
+    )
+    scan = t.scan(where=E.st_intersects("geom", box(3.0, 3.0, 11.0, 11.0)))
+    joined = SJ.grid_spatial_join(
+        scan.to_df(), zones_df, "geom", "zgeom", cell_size=2.0,
+        left_bounds=("x", "y", "x", "y"),
+        right_bounds=("cx - r", "cy - r", "cx + r", "cy + r"),
+    )
+    per_zone = joined.groupBy("zid").count()
+    got = {r.zid: r["count"] for r in per_zone.collect()}
+    want = {
+        z.zid: int((np.abs(x - z.cx) + np.abs(y - z.cy) <= z.r).sum())
+        for z in zones.itertuples()
+    }
+    assert got == {k: v for k, v in want.items() if v}
+    plan = _plan(per_zone).split("== Initial Plan ==")[0]
+    assert plan.count("ArrowEvalPython") == 1, plan
